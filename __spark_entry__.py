@@ -2,13 +2,14 @@
 
 ``entry(spark)`` — flagship query smoke at sf0.001.
 ``queries()`` — every implemented operator (SURVEY §2.2 + extensions).
-``oracle_sql()`` — DuckDB-equivalent SQL per query (omitted only for
-ops whose semantics aren't SQL-expressible; driver then records a
-rows-only check).
+``oracle_sql()`` — DuckDB-equivalent SQL for every query.
+
+Both come from ``adhesive_spark.queries.registry()``.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,11 +75,10 @@ _GRADE_FIRST = [
 
 
 def _verified_queries() -> set[str]:
-    """Names with a fully-green row (rows+schema+hash) in any committed
-    round history file, unioned with the builder-maintained
-    VERIFIED.json ledger (consulted FIRST so rotation does not depend
-    on the driver's CORRECTNESS_r*.json artifacts being committed)."""
-    import glob
+    """Names in the committed VERIFIED.json ledger (so rotation does not
+    depend on the CORRECTNESS_r*.json round files being committed),
+    unioned with every name that has a fully-green row in a committed
+    round history file."""
     import json
     import os
 
@@ -91,23 +91,7 @@ def _verified_queries() -> set[str]:
             seen.update(n for n in ledger.get("verified", []) if isinstance(n, str))
     except (OSError, ValueError):
         pass
-    for p in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as f:
-                d = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(d, dict):
-            continue
-        for name, row in d.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                seen.add(name)
-    return seen
+    return seen | _last_green_rounds().keys()
 
 
 def _last_green_rounds() -> dict[str, int]:
@@ -118,7 +102,6 @@ def _last_green_rounds() -> dict[str, int]:
     import glob
     import json
     import os
-    import re
 
     here = os.path.dirname(os.path.abspath(__file__))
     last: dict[str, int] = {}
@@ -143,6 +126,12 @@ def _last_green_rounds() -> dict[str, int]:
     return last
 
 
+def _qnum(name: str) -> int:
+    """The query number in a ``qNNN_...`` name (unnumbered names last)."""
+    m = re.match(r"q(\d+)", name)
+    return int(m.group(1)) if m else 10**9
+
+
 def _reorder(d: dict) -> dict:
     """Rotate never-driver-verified queries into the graded first-50
     window, oldest query number first; verified queries follow in their
@@ -155,30 +144,24 @@ def _reorder(d: dict) -> dict:
     window re-proves the 50 longest-unchecked queries against drift
     instead of grading nothing new. Each driver round then bumps its
     window to newest and the cycle self-advances."""
-    import re
-
     verified = _verified_queries()
     if not verified:  # history unreadable — static round-5 fallback
         out = {k: d[k] for k in _GRADE_FIRST if k in d}
         out.update({k: v for k, v in d.items() if k not in out})
         return out
 
-    def qnum(name: str) -> int:
-        m = re.match(r"q(\d+)", name)
-        return int(m.group(1)) if m else 10**9
-
-    backlog = sorted((k for k in d if k not in verified), key=qnum)
+    backlog = sorted((k for k in d if k not in verified), key=_qnum)
     if not backlog:
         last = _last_green_rounds()
         return {
             k: d[k]
-            for k in sorted(d, key=lambda k: (last.get(k, 0), qnum(k)))
+            for k in sorted(d, key=lambda k: (last.get(k, 0), _qnum(k)))
         }
     out = {k: d[k] for k in backlog}
     # verified tail in query-number order too: queries() and
     # oracle_sql() then agree positionally regardless of each module
     # dict's registration order
-    for k in sorted((k for k in d if k not in out), key=qnum):
+    for k in sorted((k for k in d if k not in out), key=_qnum):
         out[k] = d[k]
     return out
 
@@ -192,148 +175,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from adhesive_spark.queries.relational import RELATIONAL_QUERIES
-    from adhesive_spark.queries.udf_queries import UDF_QUERIES
+    from adhesive_spark.queries import registry
 
-    out: dict[str, Callable] = {}
-    out.update(RELATIONAL_QUERIES)
-    out.update(UDF_QUERIES)
-    try:
-        from adhesive_spark.queries.pipeline_queries import PIPELINE_QUERIES
-
-        out.update(PIPELINE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.advanced_queries import ADVANCED_QUERIES
-
-        out.update(ADVANCED_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.curation_queries import CURATION_QUERIES
-
-        out.update(CURATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.scale_queries import SCALE_QUERIES
-
-        out.update(SCALE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.sketch_queries import SKETCH_QUERIES
-
-        out.update(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.eval_queries import EVAL_QUERIES
-
-        out.update(EVAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.training_queries import TRAINING_QUERIES
-
-        out.update(TRAINING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.audit_queries import AUDIT_QUERIES
-
-        out.update(AUDIT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.metrology_queries import (
-            METROLOGY_QUERIES,
-        )
-
-        out.update(METROLOGY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.estimator_queries import (
-            ESTIMATOR_QUERIES,
-        )
-
-        out.update(ESTIMATOR_QUERIES)
-    except ImportError:
-        pass
-    return _reorder(out)
+    return _reorder(registry()[0])
 
 
 def oracle_sql() -> dict[str, str]:
-    from adhesive_spark.queries.relational import RELATIONAL_ORACLES
-    from adhesive_spark.queries.udf_queries import UDF_ORACLES
+    from adhesive_spark.queries import registry
 
-    out: dict[str, str] = {}
-    out.update(RELATIONAL_ORACLES)
-    out.update(UDF_ORACLES)
-    try:
-        from adhesive_spark.queries.pipeline_queries import PIPELINE_ORACLES
-
-        out.update(PIPELINE_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.advanced_queries import ADVANCED_ORACLES
-
-        out.update(ADVANCED_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.curation_queries import CURATION_ORACLES
-
-        out.update(CURATION_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.scale_queries import SCALE_ORACLES
-
-        out.update(SCALE_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.sketch_queries import SKETCH_ORACLES
-
-        out.update(SKETCH_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.eval_queries import EVAL_ORACLES
-
-        out.update(EVAL_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.training_queries import TRAINING_ORACLES
-
-        out.update(TRAINING_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.audit_queries import AUDIT_ORACLES
-
-        out.update(AUDIT_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.metrology_queries import (
-            METROLOGY_ORACLES,
-        )
-
-        out.update(METROLOGY_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.estimator_queries import (
-            ESTIMATOR_ORACLES,
-        )
-
-        out.update(ESTIMATOR_ORACLES)
-    except ImportError:
-        pass
-    return _reorder(out)
+    return _reorder(registry()[1])

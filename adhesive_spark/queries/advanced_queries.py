@@ -18,6 +18,13 @@ from adhesive_spark.operators.grouped import (
     zscore_by_group,
 )
 from adhesive_spark.operators.text import fround, lang_id, quality_score, scaled_long
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _PAIR_CTES,
+    _TOKS,
+    _byte_from_hex,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
@@ -1192,11 +1199,6 @@ ADVANCED_QUERIES = {
     "q110_scd2_history": q110_scd2_history,
 }
 
-# Shared DuckDB fragments (mirror operators.text constant-for-constant).
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
-
-
 def _lang_sql() -> str:
     from adhesive_spark.operators.text import LANG_MARKERS
 
@@ -1218,28 +1220,8 @@ def _lang_sql() -> str:
     """
 
 
-def _quality_sql() -> str:
-    from adhesive_spark.operators.text import STOPWORDS_EN
-
-    stops = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
-    return f"""
-        floor((0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000
-                           THEN 1.0 ELSE 0.3 END)
-               + 0.4 * least(floor(len(list_filter(toks, t -> t IN ({stops})))
-                                   / greatest(len(toks), 1) * 10000) / 10000 * 4, 1.0)
-               + 0.2 * (1 - least(floor(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                                        / greatest(length(text), 1) * 10000) / 10000 * 5
-                                  + floor(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                                          / greatest(length(text), 1) * 10000) / 10000 * 2,
-                                  1.0)))
-              * 10000) / 10000
-    """
-
-
 def _md5_byte(hexpr: str, pos: int) -> str:
     """DuckDB int value of hex pair ``pos`` (1-based) of md5(expr)."""
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
     return _byte_from_hex(f"md5(CAST({hexpr} AS VARCHAR))", pos)
 
 
@@ -1250,8 +1232,6 @@ _PH_B2 = _md5_byte("doc_id", 2)
 def _media_embed_sql() -> str:
     """8-dim content-hash embedding over image media rows (mirrors
     multimodal.synthesize_media + decode_media + media_embedding)."""
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
     dims = ", ".join(
         f"{_byte_from_hex('sha', i + 1)} / 255.0" for i in range(8)
     )
@@ -1265,54 +1245,6 @@ def _media_embed_sql() -> str:
         e AS (SELECT media_id, [{dims}] AS v FROM m)
     """
 
-
-# n-gram-Jaccard pair edges (mirrors operators.dedup.ngram_jaccard_pairs
-# and the q33 oracle, parameterized) — input CTEs for the recursive
-# closure oracles.
-_PAIR_CTES = f"""
-        t AS (
-          SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
-          FROM documents WHERE doc_id < 300
-        ),
-        g AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) - 2 >= 1
-                      THEN list_distinct(list_transform(
-                             range(1, len(toks) - 2 + 1),
-                             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                      ELSE [norm] END AS grams
-          FROM t
-        ),
-        x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-        sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-        rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-        xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
-        c AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-          FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ),
-        pairs AS (
-          SELECT id_a, id_b
-          FROM c
-          JOIN sz sa ON c.id_a = sa.doc_id
-          JOIN sz sb ON c.id_b = sb.doc_id
-          WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.1
-        ),
-        e AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION ALL
-          SELECT id_b AS a, id_a AS b FROM pairs
-        ),
-        reach(node, r) AS (
-          SELECT a, a FROM e
-          UNION
-          SELECT e.a, reach.r FROM e JOIN reach ON reach.node = e.b
-        ),
-        comp AS (
-          SELECT node, MIN(r) AS component FROM reach GROUP BY node
-        )
-"""
 
 ADVANCED_ORACLES = {
     "q26_grouped_zscore": """

@@ -26,30 +26,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _PAIR_CTES,
+    _TOKS,
+    _byte_from_hex,
+    _h32,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 AUDIT_QUERIES: dict = {}
 AUDIT_ORACLES: dict = {}
-
-#: DuckDB twins of operators.text normalization (verbatim-identical to
-#: the other query modules).
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
-
-
-def _h32(hexpr: str) -> str:
-    """DuckDB twin of operators.dedup.portable_hash32 (the established
-    _byte_from_hex composition)."""
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
-    return (
-        f"({_byte_from_hex(hexpr, 1)} * 16777216 "
-        f"+ {_byte_from_hex(hexpr, 2)} * 65536 "
-        f"+ {_byte_from_hex(hexpr, 3)} * 256 "
-        f"+ {_byte_from_hex(hexpr, 4)})"
-    )
-
 
 # --- q306: Bradley–Terry preference ratings (fixed-point MM) -----------------
 
@@ -1125,8 +1114,6 @@ AUDIT_QUERIES["q314_license_propagation"] = q314_license_propagation
 
 
 def _license_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _PAIR_CTES
-
     return f"""
     WITH RECURSIVE {_PAIR_CTES},
     tagged AS (
@@ -1352,8 +1339,6 @@ AUDIT_QUERIES["q317_bbit_minhash_audit"] = q317_bbit_minhash_audit
 
 def _bbit_oracle() -> str:
     from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
     coeffs = _perm_coeffs(64, 42)
     coeff_rows = ", ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
@@ -1540,8 +1525,6 @@ def quantile_matched_report(docs):
 AUDIT_QUERIES["q318_quantile_matched_filter"] = q318_quantile_matched_filter
 
 def _qmf_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _quality_sql
-
     return f"""
     WITH t AS (
       SELECT source, text, {_TOKS} AS toks FROM documents
@@ -1900,8 +1883,6 @@ AUDIT_QUERIES["q321_cluster_aware_sharding"] = q321_cluster_aware_sharding
 
 
 def _sharding_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _PAIR_CTES
-
     return f"""
     WITH RECURSIVE {_PAIR_CTES},
     docs AS (SELECT doc_id FROM documents WHERE doc_id < 300),
@@ -2232,8 +2213,6 @@ AUDIT_QUERIES["q324_filter_length_bias"] = q324_filter_length_bias
 
 
 def _length_bias_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _quality_sql
-
     return f"""
     WITH t AS (
       SELECT n_chars, text, {_TOKS} AS toks FROM documents
@@ -3388,8 +3367,6 @@ AUDIT_QUERIES["q334_minhash_perm_ladder"] = q334_minhash_perm_ladder
 
 def _perm_ladder_oracle() -> str:
     from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
     coeffs = _perm_coeffs(64, 42)
     coeff_rows = ", ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)

@@ -35,6 +35,12 @@ from adhesive_spark.operators.text import (
     token_count,
     tokens,
 )
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _TOKS,
+    _byte_from_hex,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import load_table
 
 def _injected_text():
@@ -470,13 +476,7 @@ CURATION_QUERIES = {
 
 # --- oracles -----------------------------------------------------------------
 
-from adhesive_spark.queries.advanced_queries import (  # noqa: E402
-    _lang_sql,
-    _quality_sql,
-    _NORM,
-    _TOKS,
-)
-from adhesive_spark.queries.pipeline_queries import _byte_from_hex  # noqa: E402
+from adhesive_spark.queries.advanced_queries import _lang_sql  # noqa: E402
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 _PII_SQL = {name: PII_PATTERNS[name].replace("'", "''") for name in PII_ORDER}

@@ -28,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.queries.metrology_queries import _NORM, _TOKS, _h32
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _TOKS,
+    _h32,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
@@ -1008,14 +1013,12 @@ ESTIMATOR_QUERIES["q367_decile_lift"] = q367_decile_lift
 
 
 def _lift_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT text, n_chars, {_TOKS} AS toks FROM documents
     ),
     scored AS (
-      SELECT CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q_s,
+      SELECT CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s,
              CAST(n_chars < 100 OR n_chars > 20000 AS BIGINT) AS pos
       FROM t
     ),
@@ -2240,15 +2243,13 @@ ESTIMATOR_QUERIES["q377_simpson_reversal"] = q377_simpson_reversal
 
 
 def _simpson_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT source, text, n_chars, {_TOKS} AS toks FROM documents
     ),
     xy AS (
       SELECT source, CAST(n_chars AS BIGINT) AS x,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS y
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS y
       FROM t
     ),
     moments AS (
@@ -2699,15 +2700,13 @@ ESTIMATOR_QUERIES["q380_eb_shrinkage"] = q380_eb_shrinkage
 
 
 def _eb_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT source, text, {_TOKS} AS toks FROM documents
     ),
     scored AS (
       SELECT source,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q
       FROM t
     ),
     per AS (
@@ -2964,15 +2963,13 @@ ESTIMATOR_QUERIES["q382_design_effect"] = q382_design_effect
 
 
 def _deff_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT source, text, {_TOKS} AS toks FROM documents
     ),
     scored AS (
       SELECT source,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q
       FROM t
     ),
     per AS (
@@ -4797,8 +4794,6 @@ ESTIMATOR_QUERIES["q400_token_economics"] = q400_token_economics
 
 
 def _economics_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT doc_id, text, n_chars, {_NORM} AS norm, {_TOKS} AS toks
@@ -4808,7 +4803,7 @@ def _economics_oracle() -> str:
       SELECT doc_id,
              CAST(len(toks) AS BIGINT) AS toks,
              CAST(n_chars BETWEEN 100 AND 20000 AS BIGINT) AS len_ok,
-             CAST(({_quality_sql_()}) >= 0.3 AS BIGINT) AS q_ok,
+             CAST(({_quality_sql()}) >= 0.3 AS BIGINT) AS q_ok,
              md5(norm) AS fp
       FROM t
     ),
@@ -5183,15 +5178,13 @@ ESTIMATOR_QUERIES["q403_keep_policy_divergence"] = q403_keep_policy_divergence
 
 
 def _keep_policy_oracle() -> str:
-    from adhesive_spark.queries.metrology_queries import _quality_sql_
-
     return f"""
     WITH t AS (
       SELECT doc_id, text, {_TOKS} AS toks FROM documents
     ),
     scored AS (
       SELECT doc_id, toks,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q
       FROM t
     ),
     spans AS (

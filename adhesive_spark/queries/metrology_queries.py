@@ -27,29 +27,18 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _PAIR_CTES,
+    _TOKS,
+    _h32,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 METROLOGY_QUERIES: dict = {}
 METROLOGY_ORACLES: dict = {}
-
-#: DuckDB twins of operators.text normalization (verbatim-identical to
-#: the other query modules).
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
-
-
-def _h32(hexpr: str) -> str:
-    """DuckDB twin of operators.dedup.portable_hash32."""
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
-    return (
-        f"({_byte_from_hex(hexpr, 1)} * 16777216 "
-        f"+ {_byte_from_hex(hexpr, 2)} * 65536 "
-        f"+ {_byte_from_hex(hexpr, 3)} * 256 "
-        f"+ {_byte_from_hex(hexpr, 4)})"
-    )
-
 
 # --- q335: DoReMi-style domain reweighting (multiplicative weights) ----------
 
@@ -154,12 +143,6 @@ def _drw_round_sql(prev: str, cur: str) -> str:
     )"""
 
 
-def _quality_sql_() -> str:
-    from adhesive_spark.queries.advanced_queries import _quality_sql
-
-    return _quality_sql()
-
-
 def _drw_oracle() -> str:
     return f"""
     WITH t AS (
@@ -167,7 +150,7 @@ def _drw_oracle() -> str:
     ),
     dom AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT))
+             CAST(SUM(CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT))
                   AS BIGINT) AS sq
       FROM t GROUP BY source
     ),
@@ -443,7 +426,7 @@ def _neyman_oracle() -> str:
              CAST(SUM(q) AS BIGINT) AS s1,
              CAST(SUM(q * q) AS BIGINT) AS s2
       FROM (SELECT source,
-                   CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q
+                   CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q
             FROM t)
       GROUP BY source
     ),
@@ -651,7 +634,7 @@ def _ks_oracle() -> str:
     ),
     scored AS (
       SELECT source,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q_s
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s
       FROM t
     ),
     by_val AS (
@@ -801,7 +784,7 @@ def _mwu_oracle() -> str:
     ),
     scored AS (
       SELECT source,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q_s
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s
       FROM t
     ),
     by_val AS (
@@ -1056,7 +1039,7 @@ def _tclose_oracle() -> str:
     ),
     cells AS (
       SELECT lang, source, n_chars // 500 AS len_bucket,
-             LEAST(CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT)
+             LEAST(CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT)
                    // 1000, 9) AS bin,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM t GROUP BY 1, 2, 3, 4
@@ -2001,8 +1984,6 @@ METROLOGY_QUERIES["q350_dedup_survivorship"] = q350_dedup_survivorship
 
 
 def _survivorship_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _PAIR_CTES
-
     return f"""
     WITH RECURSIVE {_PAIR_CTES},
     t2 AS (
@@ -2011,7 +1992,7 @@ def _survivorship_oracle() -> str:
     ),
     scored AS (
       SELECT doc_id, source,
-             CAST(ROUND(({_quality_sql_()}) * 10000, 0) AS BIGINT) AS q_s
+             CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s
       FROM t2
     ),
     members AS (

@@ -33,13 +33,15 @@ from adhesive_spark.operators.similarity import (
     knn_lsh,
 )
 from adhesive_spark.operators.text import LANG_MARKERS, STOPWORDS_EN, text_profile
+from adhesive_spark.queries.oracle_fragments import (
+    _NORM,
+    _TOKS,
+    _byte_from_hex,
+)
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 # --- shared SQL fragments (DuckDB dialect) -----------------------------------
-
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
 
 
 def _sql_in_list(words) -> str:
@@ -207,16 +209,6 @@ PIPELINE_QUERIES = {
     "q40_multimodal_decode": q40_multimodal_decode,
     "q41_frame_sample": q41_frame_sample,
 }
-
-
-def _byte_from_hex(hexpr: str, pos: int) -> str:
-    """DuckDB int value of the byte at 1-based hex-pair position."""
-    c1 = f"substr({hexpr}, {2 * pos - 1}, 1)"
-    c2 = f"substr({hexpr}, {2 * pos}, 1)"
-    return (
-        f"((strpos('0123456789abcdef', {c1}) - 1) * 16 "
-        f"+ (strpos('0123456789abcdef', {c2}) - 1))"
-    )
 
 
 # DuckDB 1.0's sha256 takes VARCHAR only; the corpus is ASCII so hashing

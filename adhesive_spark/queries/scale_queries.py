@@ -20,17 +20,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import tokens
+from adhesive_spark.queries.oracle_fragments import _TOKS, _quality_sql
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 SCALE_QUERIES: dict = {}
 SCALE_ORACLES: dict = {}
-
-# --- shared SQL fragments (DuckDB dialect) -----------------------------------
-
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
-
 
 # --- q217: Z-order layout audit ----------------------------------------------
 
@@ -1559,8 +1554,6 @@ SCALE_QUERIES["q233_token_budget_fill"] = q233_token_budget_fill
 
 
 def _q233_oracle() -> str:
-    from adhesive_spark.queries.advanced_queries import _quality_sql
-
     return f"""
     WITH d AS (
       SELECT source, {_TOKS} AS toks, text FROM documents

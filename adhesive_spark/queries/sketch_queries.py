@@ -26,17 +26,12 @@ from adhesive_spark.operators.sketches import (
     hll_oracle_sql,
 )
 from adhesive_spark.operators.text import tokens
+from adhesive_spark.queries.oracle_fragments import _TOKS
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 SKETCH_QUERIES: dict = {}
 SKETCH_ORACLES: dict = {}
-
-# shared SQL fragments (DuckDB dialect) — same normalization as
-# scale_queries / the text operators
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-_TOKS = f"string_split({_NORM}, ' ')"
-
 
 # --- q241: HyperLogLog cardinality audit -------------------------------------
 

@@ -21,32 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
 from adhesive_spark.sources.registry import load_table
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 TRAINING_QUERIES: dict = {}
 TRAINING_ORACLES: dict = {}
-
-#: DuckDB twin of operators.text.tokens — kept verbatim-identical to the
-#: other query modules so the normalized token stream matches Spark's.
-_TOKS = (
-    "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-)
-
-
-def _h32(hexpr: str) -> str:
-    """DuckDB twin of operators.dedup.portable_hash32: the 32-bit value
-    of the first 4 hex pairs of the md5 hex string ``hexpr`` (the
-    established _byte_from_hex composition)."""
-    from adhesive_spark.queries.pipeline_queries import _byte_from_hex
-
-    return (
-        f"({_byte_from_hex(hexpr, 1)} * 16777216 "
-        f"+ {_byte_from_hex(hexpr, 2)} * 65536 "
-        f"+ {_byte_from_hex(hexpr, 3)} * 256 "
-        f"+ {_byte_from_hex(hexpr, 4)})"
-    )
-
 
 # --- q280: DSIR importance weights (hashed-bigram log-ratio) -----------------
 

@@ -15,6 +15,7 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
@@ -83,16 +84,49 @@ def test_oracle_and_query_registries_align():
         f"queries without oracle: {sorted(q - o)}; "
         f"oracles without query: {sorted(o - q)}"
     )
-    # symmetric-loss guard: a query module failing at import drops its
-    # entries from BOTH registries (matching except-ImportError blocks
-    # in __spark_entry__), so q == o alone would still pass — anchor
-    # the count against the static plan-audit list
-    from tools.plan_report import AUDITED
 
-    assert len(q) >= len(AUDITED), (
-        f"registry lost entries: {len(q)} < {len(AUDITED)} audited — "
-        "a query module probably failed to import"
+
+def test_broken_query_module_import_is_loud(monkeypatch):
+    """A query module that fails to import must fail queries(), not
+    silently drop that module's queries from the registry."""
+    import adhesive_spark.queries as pkg
+    import __spark_entry__ as entry_mod
+
+    name = "adhesive_spark.queries.estimator_queries"
+    monkeypatch.setitem(sys.modules, name, None)
+    monkeypatch.delattr(pkg, "estimator_queries", raising=False)
+    with pytest.raises(ImportError):
+        entry_mod.queries()
+
+
+def test_name_registered_twice_is_loud(monkeypatch):
+    """Two modules registering the same name must raise, not let the
+    later module silently replace the earlier query."""
+    from adhesive_spark.queries.relational import (
+        RELATIONAL_ORACLES,
+        RELATIONAL_QUERIES,
     )
+    from adhesive_spark.queries.udf_queries import UDF_ORACLES, UDF_QUERIES
+
+    import __spark_entry__ as entry_mod
+
+    name = next(iter(RELATIONAL_QUERIES))
+    monkeypatch.setitem(UDF_QUERIES, name, RELATIONAL_QUERIES[name])
+    monkeypatch.setitem(UDF_ORACLES, name, RELATIONAL_ORACLES[name])
+    with pytest.raises(ValueError, match="registered twice"):
+        entry_mod.queries()
+
+
+def test_query_without_oracle_is_loud(monkeypatch):
+    """A query registered without its oracle must raise at registry
+    time, not downgrade the correctness check to rows-only."""
+    from adhesive_spark.queries.udf_queries import UDF_ORACLES
+
+    import __spark_entry__ as entry_mod
+
+    monkeypatch.delitem(UDF_ORACLES, next(iter(UDF_ORACLES)))
+    with pytest.raises(ValueError, match="without oracle"):
+        entry_mod.oracle_sql()
 
 
 def test_complex_typed_cells_hard_fail_both_sides():

@@ -386,8 +386,6 @@ def test_plans_md_shuffle_ratchet(spark):
     import re
     from pathlib import Path
 
-    from tools.plan_report import AUDITED
-
     import __spark_entry__ as entry_mod
 
     plans_md = Path(__file__).resolve().parents[1] / "PLANS.md"
@@ -409,13 +407,14 @@ def test_plans_md_shuffle_ratchet(spark):
         }
         for row in row_re.finditer(text)
     }
-    missing = [q for q in AUDITED if q not in recorded]
+    qs = entry_mod.queries()
+    audited = sorted(qs, key=entry_mod._qnum)
+    missing = [q for q in audited if q not in recorded]
     assert not missing, f"PLANS.md is stale — audited but unrecorded: {missing}"
 
-    qs = entry_mod.queries()
     worse = {}
     complex_out = {}
-    for name in AUDITED:
+    for name in audited:
         df = qs[name](spark, sf_dir)
         bad_cols = [
             f.name
@@ -497,20 +496,23 @@ def test_interval_overlap_join_no_nested_loop(spark, sf):
 
 
 def test_every_registered_query_is_plan_audited():
-    """Coverage guard for the audit itself: a query registered in
-    queries() but missing from the AUDITED list would silently escape
-    both PLANS.md and the shuffle ratchet — adding a query REQUIRES
-    adding its audit row."""
-    from tools.plan_report import AUDITED
+    """Coverage guard for the audit itself: the registered names must
+    equal the PLANS.md row names. A registered query without a row
+    would escape the shuffle ratchet, so adding a query REQUIRES adding
+    its audit row; a row without a registered query means names were
+    lost from the registry."""
+    import re
+    from pathlib import Path
 
     import __spark_entry__ as entry_mod
 
+    text = (Path(__file__).resolve().parents[1] / "PLANS.md").read_text()
+    rows = set(re.findall(r"^\| (q\d+\w*) \|", text, re.M))
     registered = set(entry_mod.queries())
-    audited = set(AUDITED)
-    missing = sorted(registered - audited)
-    assert not missing, f"registered but not plan-audited: {missing}"
-    stale = sorted(audited - registered)
-    assert not stale, f"audited but no longer registered: {stale}"
+    missing = sorted(registered - rows)
+    assert not missing, f"registered but no PLANS.md row: {missing}"
+    stale = sorted(rows - registered)
+    assert not stale, f"PLANS.md row but no longer registered: {stale}"
 
 
 def test_cap_manifest_matches_code():

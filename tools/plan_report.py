@@ -1,4 +1,4 @@
-"""Generate PLANS.md: a physical-plan audit of the headline queries.
+"""Generate PLANS.md: a physical-plan audit of every registered query.
 
 For each query: shuffle (Exchange) count, join strategies, codegen span
 count, pushed-filter presence, and nested-loop/cartesian flags — the
@@ -17,420 +17,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from adhesive_spark.session import build_spark  # noqa: E402
-
-
-AUDITED = [
-    "q01_pricing_summary",
-    "q03_top_unshipped_orders",
-    "q05_regional_revenue",
-    "q09_theta_join",
-    "q10_window_rank",
-    "q13_cube",
-    "q22_tumbling_window",
-    "q26_grouped_zscore",
-    "q29_range_join",
-    "q30_dedup_exact",
-    "q31_text_profile",
-    "q35_knn_bruteforce",
-    "q36_asof_join",
-    "q37_minhash_pairs",
-    "q48_salted_join",
-    "q49_knn_ivf",
-    "q61_kmeans",
-    "q69_contamination_check",
-    "q80_embedding_neardup_lsh",
-    "q83_ivf_persisted_probe",
-    "q85_doc_chunking",
-    "q86_incremental_dedup",
-    "q87_sequence_packing",
-    "q88_semantic_dedup",
-    "q94_volume_shipping",
-    "q96_returned_items",
-    "q100_corpus_report",
-    "q101_knn_ivf_refined",
-    "q102_curation_pipeline",
-    "q109_canonical_dedup",
-    "q110_scd2_history",
-    "q111_fuzzy_name_join",
-    "q112_global_sales_opportunity",
-    "q113_equidepth_histogram",
-    "q114_group_exact_sample",
-    "q115_gap_fill_interpolate",
-    "q116_ppjoin_pairs",
-    "q117_late_shipment_check",
-    "q120_discounted_revenue",
-    "q121_nation_profit",
-    "q118_customer_distribution",
-    "q119_top_supplier",
-    "q122_weighted_sample",
-    "q123_mad_outliers",
-    "q124_top_p_sources",
-    "q125_lateral_topk",
-    "q126_temperature_mixture",
-    "q127_cluster_blocked_neardup",
-    "q128_winsorize",
-    "q129_corpus_diff",
-    "q130_boilerplate_spans",
-    "q131_triangle_count",
-    "q132_char_diversity",
-    "q133_paragraph_dedup",
-    "q134_vocab_growth",
-    "q135_skew_profile",
-    "q136_length_bucketing",
-    "q137_important_parts",
-    "q138_priority_shipping",
-    "q139_supplier_part_counts",
-    "q140_latency_bands",
-    "q141_inverted_index",
-    "q142_freq_spectrum",
-    "q143_media_batch_plan",
-    "q144_udf_pandas_aggregate",
-    "q145_udf_table_function",
-    "q146_rarity_score",
-    "q147_leakage_safe_split",
-    "q148_deletion_propagation",
-    "q149_inverted_index_persisted",
-    "q150_drift_monitor",
-    "q151_hard_negatives",
-    "q152_ann_recall",
-    "q153_retrieval_mrr",
-    "q154_minhash_persisted_probe",
-    "q155_media_dedup",
-    "q156_oov_rate",
-    "q157_semantic_drift",
-    "q158_embedding_qa",
-    "q159_event_transitions",
-    "q160_dup_cluster_sizes",
-    "q161_langid_confusion",
-    "q162_cdc_chunking",
-    "q163_lsh_banding_eval",
-    "q164_quality_dup_deciles",
-    "q165_span_savings",
-    "q166_join_blowup_preflight",
-    "q167_boilerplate_position",
-    "q168_rfm_segments",
-    "q169_error_bursts",
-    "q170_ship_latency",
-    "q171_revenue_momentum",
-    "q172_basket_lift",
-    "q173_supplier_hhi",
-    "q174_rolling_wau",
-    "q175_discount_elasticity",
-    "q176_return_rates",
-    "q177_embedding_coverage",
-    "q178_syndication",
-    "q02_filter_project",
-    "q04_semi_join",
-    "q06_revenue_forecast",
-    "q07_broadcast_dims",
-    "q08_anti_join",
-    "q11_window_running",
-    "q12_rollup",
-    "q14_grouping_sets",
-    "q15_distinct_agg",
-    "q16_set_ops",
-    "q17_scalar_functions",
-    "q18_datetime_json",
-    "q19_scalar_subquery",
-    "q20_topk",
-    "q21_case_expr",
-    "q23_udf_python_agg",
-    "q24_udf_vectorized",
-    "q25_udf_sql_macro",
-    "q27_udaf_weighted_mean",
-    "q28_udtf_sentences",
-    "q32_lang_quality_rollup",
-    "q33_ngram_jaccard",
-    "q34_embedding_neardup",
-    "q38_simhash_pairs",
-    "q39_knn_lsh",
-    "q40_multimodal_decode",
-    "q41_frame_sample",
-    "q42_sketch_distinct",
-    "q43_percentiles",
-    "q44_histogram",
-    "q45_hash_sample",
-    "q46_connected_components",
-    "q47_dedup_transitive",
-    "q50_tfidf_top_terms",
-    "q51_pivot",
-    "q52_unpivot",
-    "q53_sessionize",
-    "q54_winnow_fingerprints",
-    "q55_correlated_exists",
-    "q56_pii_redact",
-    "q57_rolling_window",
-    "q58_column_profile",
-    "q59_fk_integrity",
-    "q60_label_centroids",
-    "q62_hopping_window",
-    "q63_analytic_functions",
-    "q64_media_knn",
-    "q65_null_semantics",
-    "q66_decimal_exact",
-    "q67_dataset_split",
-    "q68_incremental_rollup",
-    "q70_stratified_sample",
-    "q71_domain_cap",
-    "q72_embedding_quantize",
-    "q73_corpus_filter",
-    "q74_heavy_hitters",
-    "q75_approx_quantile_contract",
-    "q76_token_shards",
-    "q77_small_qty_revenue",
-    "q78_large_volume_orders",
-    "q79_waiting_suppliers",
-    "q81_audio_chunks",
-    "q82_mixture_sample",
-    "q84_udf_inline_java",
-    "q89_hll_merge",
-    "q90_theta_overlap",
-    "q91_recursive_month_spine",
-    "q92_variant_shred",
-    "q93_repetition_quality",
-    "q95_market_share",
-    "q97_promo_revenue",
-    "q98_udtf_table_profile",
-    "q99_array_analytics",
-    "q103_bloom_incremental_dedup",
-    "q104_cohort_retention",
-    "q105_funnel",
-    "q106_pagerank",
-    "q107_min_cost_supplier",
-    "q108_excess_share_suppliers",
-    "q179_k_anonymity",
-    "q180_cdc_merge_apply",
-    "q181_bigram_lm",
-    "q182_attribution",
-    "q183_expectation_suite",
-    "q184_entity_resolution",
-    "q185_weighted_median",
-    "q186_bigram_familiarity",
-    "q187_fd_suite",
-    "q188_rrf_fusion",
-    "q189_top_paths",
-    "q190_bpe_merge_step",
-    "q191_asof_nearest",
-    "q192_pareto_front",
-    "q193_masked_export",
-    "q194_scd2_lookup",
-    "q195_rollup_cascade",
-    "q196_feature_hashing",
-    "q197_calendar_dim",
-    "q198_budget_allocation",
-    "q199_source_copy_matrix",
-    "q200_governed_release",
-    "q201_longest_streak",
-    "q202_cohens_kappa",
-    "q203_session_incident_overlap",
-    "q204_ols_trend",
-    "q205_sketch_cube",
-    "q206_neardup_evidence",
-    "q207_table_diff",
-    "q208_quality_calibration",
-    "q209_ablation_ladder",
-    "q210_wav_decode_real",
-    "q211_ppm_decode_real",
-    "q212_y4m_decode_real",
-    "q213_media_corruption_audit",
-    "q214_image_channel_stats",
-    "q215_video_scene_stats",
-    "q216_wav_head_energy",
-    "q217_zorder_layout",
-    "q218_compaction_plan",
-    "q219_interval_union",
-    "q220_epoch_shuffle",
-    "q221_lang_token_affinity",
-    "q222_source_tv_drift",
-    "q223_dedup_aware_mixture",
-    "q224_tokenizer_apply",
-    "q225_exact_median_twophase",
-    "q226_watermark_lateness_audit",
-    "q227_maxsim_late_interaction",
-    "q228_label_propagation",
-    "q229_ndcg_eval",
-    "q230_masked_span_plan",
-    "q231_exact_quantile_ladder",
-    "q232_matryoshka_rank_audit",
-    "q233_token_budget_fill",
-    "q234_windowed_dedup_audit",
-    "q235_conversion_latency",
-    "q236_source_minhash_matrix",
-    "q237_simpson_diversity",
-    "q238_bucketed_colocated_join",
-    "q239_zipf_audit",
-    "q240_hierarchical_share",
-    "q241_hll_cardinality",
-    "q242_cms_heavyhitters",
-    "q243_bm25_retrieval",
-    "q244_pmi_collocations",
-    "q245_kcore_peel",
-    "q246_pq_ann",
-    "q247_attribution",
-    "q248_ivfpq_ann",
-    "q249_hll_per_group",
-    "q250_basket_affinity",
-    "q251_forecast_eval",
-    "q252_chisq_independence",
-    "q253_delta_join_view",
-    "q254_decay_momentum",
-    "q255_bitmap_index",
-    "q256_roc_auc",
-    "q257_calibration_bins",
-    "q258_bloom_join_prefilter",
-    "q259_cusum_changepoint",
-    "q260_grid_density_clusters",
-    "q261_stump_split_gain",
-    "q262_l_diversity",
-    "q263_link_prediction",
-    "q264_dow_seasonality",
-    "q265_benford_audit",
-    "q266_abtest_srm",
-    "q267_negative_sampling",
-    "q268_changepoint_segments",
-    "q269_vocab_coverage",
-    "q270_feature_matrix",
-    "q271_cuped_audit",
-    "q272_quantile_treatment_effect",
-    "q273_wav_resample_audit",
-    "q274_grid_clusters_star",
-    "q275_theil_sen_trend",
-    "q276_bfs_frontier",
-    "q277_ppm_downscale_audit",
-    "q278_y4m_subsample_audit",
-    "q279_media_reduction_pipeline",
-    "q280_dsir_importance",
-    "q281_gopher_repetition",
-    "q282_shard_manifest",
-    "q283_ivf_occupancy",
-    "q284_pass_at_k",
-    "q285_dedup_policy_delta",
-    "q286_epoch_shuffle_audit",
-    "q287_tokenizer_fertility",
-    "q288_hrw_rebalance",
-    "q289_sequence_windows",
-    "q290_disorder_audit",
-    "q291_class_rebalance",
-    "q292_preference_pairs",
-    "q293_context_overflow",
-    "q294_mixture_waterfill",
-    "q295_epoch_budget",
-    "q296_chisq_independence",
-    "q297_rank_agreement",
-    "q298_dispersion_index",
-    "q299_lsh_label_purity",
-    "q300_training_funnel",
-    "q301_ppm_grayscale_audit",
-    "q302_harmonic_closeness",
-    "q303_token_gini",
-    "q304_logkeep_dedup",
-    "q305_purged_time_split",
-    "q306_bradley_terry",
-    "q307_cdc_chunk_dedup",
-    "q308_flesch_readability",
-    "q309_krippendorff_alpha",
-    "q310_acf_daily",
-    "q311_linear_quality_scorer",
-    "q312_packing_policy_ladder",
-    "q313_dedup_threshold_calibration",
-    "q314_license_propagation",
-    "q315_annotation_panel_planner",
-    "q316_wav_pad_align_audit",
-    "q317_bbit_minhash_audit",
-    "q318_quantile_matched_filter",
-    "q319_halfsample_bootstrap_ci",
-    "q320_prefix_cache_estimate",
-    "q321_cluster_aware_sharding",
-    "q322_retention_sweep_plan",
-    "q323_feature_staleness_audit",
-    "q324_filter_length_bias",
-    "q325_multiprobe_lsh",
-    "q326_hubness_audit",
-    "q327_hll_precision_ladder",
-    "q328_cms_geometry_ladder",
-    "q329_ab_sample_size_planner",
-    "q330_ivf_nprobe_ladder",
-    "q331_isotropy_audit",
-    "q332_index_cost_ledger",
-    "q333_ingest_dedup_pressure",
-    "q334_minhash_perm_ladder",
-    "q335_domain_reweight",
-    "q336_good_turing_mass",
-    "q337_priority_sample",
-    "q338_neyman_allocation",
-    "q339_containment_pairs",
-    "q340_ks_drift",
-    "q341_mannwhitney_auc",
-    "q342_dead_dimensions",
-    "q343_t_closeness",
-    "q344_tfcos_allpairs",
-    "q345_conformal_threshold",
-    "q346_permutation_test",
-    "q347_code_switch_audit",
-    "q348_pq_distortion",
-    "q349_style_affinity",
-    "q350_dedup_survivorship",
-    "q351_corpus_saturation",
-    "q352_markov_steady_state",
-    "q353_burstiness_fano",
-    "q354_quantization_fidelity",
-    "q355_diff_in_diff",
-    "q356_hll_union_overlap",
-    "q357_aa_null_calibration",
-    "q358_capture_recapture",
-    "q359_chao1_richness",
-    "q360_kish_ess",
-    "q361_tv_distance",
-    "q362_source_concentration",
-    "q363_bloom_geometry",
-    "q364_reshard_churn",
-    "q365_runs_test",
-    "q366_ngram_novelty",
-    "q367_decile_lift",
-    "q368_jl_distortion",
-    "q369_contribution_bounding",
-    "q370_hash_uniformity",
-    "q371_dow_seasonality",
-    "q372_decile_psi",
-    "q373_median_of_means",
-    "q374_birthday_collisions",
-    "q375_lorenz_deciles",
-    "q376_topk_sample_stability",
-    "q377_simpson_reversal",
-    "q378_wip_profile",
-    "q379_fulfillment_hazard",
-    "q380_eb_shrinkage",
-    "q381_ratio_estimator",
-    "q382_design_effect",
-    "q383_load_factor",
-    "q384_priority_slo",
-    "q385_rfm_segments",
-    "q386_region_supply_hhi",
-    "q387_ttr_ladder",
-    "q388_session_gap_sweep",
-    "q389_order_interarrival",
-    "q390_stride_overlap_ladder",
-    "q391_delta_encoding_roi",
-    "q392_cohort_retention",
-    "q393_partition_size_planner",
-    "q394_watermark_planner",
-    "q395_winsor_impact",
-    "q396_key_cardinality_ladder",
-    "q397_revenue_bridge",
-    "q398_zipf_product_ladder",
-    "q399_discount_response",
-    "q400_token_economics",
-    "q401_dow_anova",
-    "q402_mix_shift_canary",
-    "q403_keep_policy_divergence",
-    "q404_autoscale_lag_cost",
-    "q405_dict_encoding_roi",
-    "q406_degree_assortativity",
-    "q407_shingle_size_ladder",
-    "q408_quantile_control_chart",
-    "q409_session_spans",
-    "q410_session_spans_salted",
-]
 
 
 _CAP_RE = re.compile(
@@ -492,7 +78,7 @@ def detect_cap(fn) -> str:
 
 def input_caps(qs: dict) -> dict[str, str]:
     """The cap manifest: query name → detected input cap (or '-')."""
-    return {name: detect_cap(qs[name]) for name in AUDITED}
+    return {name: detect_cap(fn) for name, fn in qs.items()}
 
 
 def main() -> None:
@@ -548,7 +134,7 @@ def main() -> None:
     print("| query | shuffles | BHJ | SMJ | pushed | BNL | cap | dupPy |")
     print("|---|---|---|---|---|---|---|---|")
     caps = input_caps(qs)
-    for name in AUDITED:
+    for name in sorted(qs, key=entry_mod._qnum):
         df = qs[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         fmt = df._sc._jvm.PythonSQLUtils.explainString(
