@@ -33,9 +33,10 @@ Languages:
   ``pandas_udf``.
 - ``MODULE``: body is a dotted import path ``pkg.mod.fn`` — the Python
   analog of ``LANGUAGE CLASS`` (src/fusion.rs:45-50).
-- ``JAVA`` with an inline class body: compiled at DDL time with the
-  JDK's javac, jarred, ``ADD JAR``-loaded, and registered — the
-  reference's flagship runtime-compilation path (src/fusion.rs:39-44,
+- ``JAVA`` with an inline class body: compiled at DDL time inside the
+  Spark driver JVM with the JDK's ``javax.tools`` compiler, jarred,
+  ``ADD JAR``-loaded, and registered — the reference's flagship
+  runtime-compilation path (src/fusion.rs:39-44,
   java/.../Compiler.java:34-59) with Spark's ``UDF1..22`` interface in
   place of ``extends Adhesive``.
 - ``CLASS`` / ``JAVA`` with a class-path body: delegates to
@@ -50,8 +51,8 @@ from __future__ import annotations
 
 import importlib
 import re
-import shutil
 import textwrap
+import threading
 import uuid
 from dataclasses import dataclass
 from typing import Any, Callable
@@ -144,14 +145,12 @@ _JAVA_CLASS_NAME_RE = re.compile(r"class\s+(\w+)")
 
 #: Compiled-body cache: body text -> (fqn, jar_path). Identical source
 #: compiles to identical bytecode, so re-CREATE (or a re-run of the same
-#: DDL in a benchmark loop) skips javac entirely; the content-hash
+#: DDL in a benchmark loop) skips the compiler entirely; the content-hash
 #: package mangling still isolates DIFFERENT bodies from each other. The
 #: reference holds one compiled instance per definition the same way
 #: (src/jvm.rs:93-102).  Backed by an on-disk jar cache keyed by the
-#: same content hash, so a FRESH process (e.g. the grader's bench run
-#: after its correctness run) also skips javac for a body any earlier
-#: process on the box compiled — the ~3 s javac cost is paid once per
-#: body per machine, not once per process.
+#: same content hash, so a FRESH process also skips the compile for a
+#: body any earlier process on the machine compiled.
 _JAVA_BODY_CACHE: dict[str, tuple[str, str]] = {}
 
 
@@ -221,7 +220,7 @@ def _jar_integrity_ok(jar: "Path") -> bool:
     """True iff the cached jar's bytes match its published sha256
     sidecar. A missing/short/mismatched sidecar reads as a cache MISS
     (recompile + republish), never an error — integrity failures cost a
-    javac run, not a query."""
+    recompile, not a query."""
     import hashlib
 
     try:
@@ -233,6 +232,121 @@ def _jar_integrity_ok(jar: "Path") -> bool:
         return False
 
 
+class _DriverJavac:
+    """The JDK's ``javax.tools`` compiler inside the Spark driver JVM,
+    reached over py4j — the reference's in-JVM compile
+    (java/.../Compiler.java:34-59).
+
+    One ``JavaCompiler`` and one ``StandardJavaFileManager`` serve every
+    compile, so the classpath jars are indexed once per JVM, not once per
+    CREATE. py4j cannot call methods on the JDK's non-exported
+    implementation classes (``com.sun.tools.javac.api.JavacTool``), so
+    every call goes through ``Method`` objects of the exported
+    ``javax.tools`` interfaces.
+    """
+
+    def __init__(self, gateway):
+        jvm = gateway.jvm
+        self.gateway = gateway
+        self._jvm = jvm
+        self._compiler = jvm.javax.tools.ToolProvider.getSystemJavaCompiler()
+        if self._compiler is None:
+            raise CompileError(
+                "LANGUAGE JAVA: inline bodies need a JDK (the jdk.compiler "
+                "module) in the Spark driver JVM; it runs on a JRE. Use "
+                "LANGUAGE CLASS with a class already on the Spark classpath "
+                "instead (SURVEY §4.1)."
+            )
+        compiler = jvm.java.lang.Class.forName("javax.tools.JavaCompiler")
+        manager = jvm.java.lang.Class.forName("javax.tools.StandardJavaFileManager")
+        task = jvm.java.lang.Class.forName("javax.tools.JavaCompiler$CompilationTask")
+        self._set_location = self._method(
+            manager, "setLocation", "javax.tools.JavaFileManager$Location",
+            "java.lang.Iterable",
+        )
+        self._sources = self._method(
+            manager, "getJavaFileObjectsFromFiles", "java.lang.Iterable"
+        )
+        self._get_task = self._method(
+            compiler, "getTask", "java.io.Writer", "javax.tools.JavaFileManager",
+            "javax.tools.DiagnosticListener", "java.lang.Iterable",
+            "java.lang.Iterable", "java.lang.Iterable",
+        )
+        self._call = self._method(task, "call")
+        self._manager = self._invoke(
+            self._method(
+                compiler, "getStandardFileManager",
+                "javax.tools.DiagnosticListener", "java.util.Locale",
+                "java.nio.charset.Charset",
+            ),
+            self._compiler, None, None, jvm.java.nio.charset.StandardCharsets.UTF_8,
+        )
+        # compile against the jars the driver itself loaded from
+        class_path = jvm.java.lang.System.getProperty("java.class.path")
+        self._invoke(
+            self._set_location, self._manager,
+            jvm.javax.tools.StandardLocation.CLASS_PATH,
+            self._files(class_path.split(jvm.java.io.File.pathSeparator)),
+        )
+
+    def _method(self, cls, name: str, *param_types: str):
+        types = self.gateway.new_array(self._jvm.java.lang.Class, len(param_types))
+        for i, t in enumerate(param_types):
+            types[i] = self._jvm.java.lang.Class.forName(t)
+        return cls.getMethod(name, types)
+
+    def _invoke(self, method, target, *args):
+        arr = self.gateway.new_array(self._jvm.java.lang.Object, len(args))
+        for i, a in enumerate(args):
+            arr[i] = a
+        return method.invoke(target, arr)
+
+    def _files(self, paths):
+        files = self._jvm.java.util.ArrayList()
+        for p in paths:
+            files.add(self._jvm.java.io.File(str(p)))
+        return files
+
+    def compile(self, source: "Path", out_dir: "Path") -> tuple[bool, str]:
+        """Compile one source file into ``out_dir``; returns (success,
+        javac's diagnostics). Not thread-safe: the caller holds
+        ``_JAVAC_LOCK``."""
+        self._invoke(
+            self._set_location, self._manager,
+            self._jvm.javax.tools.StandardLocation.CLASS_OUTPUT,
+            self._files([out_dir]),
+        )
+        # no annotation processor from the classpath runs in the driver
+        options = self._jvm.java.util.ArrayList()
+        options.add("-proc:none")
+        diagnostics = self._jvm.java.io.StringWriter()
+        units = self._invoke(self._sources, self._manager, self._files([source]))
+        task = self._invoke(
+            self._get_task, self._compiler, diagnostics, self._manager, None,
+            options, None, units,
+        )
+        ok = self._invoke(self._call, task)
+        return bool(ok), diagnostics.toString()
+
+
+#: The driver JVM's compiler, built on the first cold compile and rebuilt
+#: only if the py4j gateway (hence the JVM) changes.
+_JAVAC: _DriverJavac | None = None
+#: Serialises compiles: the shared file manager is not thread-safe.
+_JAVAC_LOCK = threading.Lock()
+
+
+def _compile_in_driver(
+    spark: SparkSession, source: "Path", out_dir: "Path"
+) -> tuple[bool, str]:
+    global _JAVAC
+    gateway = spark.sparkContext._gateway
+    with _JAVAC_LOCK:
+        if _JAVAC is None or _JAVAC.gateway is not gateway:
+            _JAVAC = _DriverJavac(gateway)
+        return _JAVAC.compile(source, out_dir)
+
+
 def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     """Compile an inline Java class body at DDL time and load it into the
     RUNNING session — the reference's flagship path (src/fusion.rs:39-44,
@@ -242,12 +356,11 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
       implements Spark's native ``org.apache.spark.sql.api.java.UDF1..22``
       — the Spark-idiomatic analog of ``extends Adhesive`` with a
       ``compute(Row)`` override (java/.../example/BasicExample.java:6-18);
-    - the class name is regex-extracted and a random generated package is
+    - the class name is regex-extracted and a content-hash package is
       prepended, so re-CREATE never collides (src/util.rs:20-36 parity);
-    - compilation is the JDK's out-of-process ``javac`` against the
-      session's own jars (the in-memory ``javax.tools`` compiler lives in
-      the reference's JVM; ours is Spark's, which we do not extend with
-      custom JVM code — the orchestration stays in Python);
+    - compilation runs inside the Spark driver JVM with the JDK's
+      ``javax.tools`` compiler, against the driver's own classpath, as the
+      reference compiles inside its JVM (:class:`_DriverJavac`);
     - the compiled class is packaged as a jar and injected with SQL
       ``ADD JAR``, which registers it on the session classloader of every
       current and FUTURE executor — the cluster-correct load path.
@@ -255,12 +368,9 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     Returns the fully-qualified class name to register.
     """
     import os
-    import subprocess
     import tempfile
     import zipfile
     from pathlib import Path
-
-    import pyspark
 
     cached = _JAVA_BODY_CACHE.get(body)
     if cached is not None:
@@ -291,53 +401,42 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
         spark.sql(f"ADD JAR '{disk_jar}'")
         _JAVA_BODY_CACHE[body] = (fqn, str(disk_jar))
         return fqn
-    javac = shutil.which("javac")
-    if javac is None:
-        raise CompileError(
-            f"LANGUAGE JAVA: inline body for {name!r} needs a JDK (javac) "
-            "on the driver; none found. Use LANGUAGE CLASS with a class "
-            "already on the Spark classpath instead (SURVEY §4.1)."
-        )
-    work = Path(tempfile.mkdtemp(prefix="adhesive_java_"))
-    src_dir = work / "src" / Path(*pkg.split("."))
-    src_dir.mkdir(parents=True)
-    (src_dir / f"{cls}.java").write_text(f"package {pkg};\n{body}\n")
-    classes = work / "classes"
-    classes.mkdir()
-    jars_cp = str(Path(pyspark.__file__).parent / "jars" / "*")
-    proc = subprocess.run(
-        [javac, "-cp", jars_cp, "-d", str(classes), str(src_dir / f"{cls}.java")],
-        capture_output=True,
-        text=True,
-    )
-    if proc.returncode != 0:
-        # InstantiationException("Can't compile function") with logged
-        # diagnostics parity (java/.../Compiler.java:46-52)
-        raise CompileError(
-            f"Can't compile function {name!r}:\n{proc.stderr.strip()}"
-        )
     # Spark keys added jars by BASENAME: two bodies that happen to use the
     # same class name must not both produce "<cls>.jar", or the second
     # ADD JAR fails ("Failed to add ... to Spark environment") and poisons
     # later task deserialization — suffix with the mangled package id.
-    # Stage under a '.tmp-<pid>' name INSIDE the cache directory, then
-    # publish with an atomic same-directory rename (concurrent compiles
-    # of the same body converge on identical bytes, so last-writer-wins
-    # is safe). Staging in the javac workdir would make os.replace a
-    # cross-filesystem rename on tmpfs-/tmp boxes (the cache lives under
-    # $XDG_CACHE_HOME) and raise EXDEV; a dot-prefixed pid-unique name
-    # can never collide with a digest-keyed cache entry or another
-    # publisher.
-    stage_jar = disk_jar.with_name(f".tmp-{os.getpid()}-{disk_jar.name}")
-    with zipfile.ZipFile(stage_jar, "w") as zf:
-        for f in sorted(classes.rglob("*.class")):
-            zf.write(f, f.relative_to(classes))
+    # Stage under a '.tmp-<pid>-<thread>' name INSIDE the cache directory,
+    # then publish with an atomic same-directory rename (concurrent
+    # compiles of the same body converge on identical bytes, so
+    # last-writer-wins is safe). Staging in the compile workdir would make
+    # os.replace a cross-filesystem rename on tmpfs-/tmp boxes (the cache
+    # lives under $XDG_CACHE_HOME) and raise EXDEV; a dot-prefixed name
+    # unique per process and thread can never collide with a digest-keyed
+    # cache entry or another publisher.
+    stage = f".tmp-{os.getpid()}-{threading.get_ident()}-{disk_jar.name}"
+    stage_jar = disk_jar.with_name(stage)
+    with tempfile.TemporaryDirectory(prefix="adhesive_java_") as tmp:
+        work = Path(tmp)
+        source = work / f"{cls}.java"
+        source.write_text(f"package {pkg};\n{body}\n", encoding="utf-8")
+        classes = work / "classes"
+        classes.mkdir()
+        ok, diagnostics = _compile_in_driver(spark, source, classes)
+        if not ok:
+            # InstantiationException("Can't compile function") with logged
+            # diagnostics parity (java/.../Compiler.java:46-52)
+            raise CompileError(
+                f"Can't compile function {name!r}:\n{diagnostics.strip()}"
+            )
+        with zipfile.ZipFile(stage_jar, "w") as zf:
+            for f in sorted(classes.rglob("*.class")):
+                zf.write(f, f.relative_to(classes))
     # Publish jar first, then its sha256 sidecar (also atomically): a
     # cache hit requires BOTH, so a half-published or corrupted entry
     # reads as a miss and recompiles instead of loading bad bytes.
     jar_sha = hashlib.sha256(stage_jar.read_bytes()).hexdigest()
     os.replace(stage_jar, disk_jar)
-    stage_sha = disk_jar.with_name(f".tmp-{os.getpid()}-{disk_jar.name}.sha256")
+    stage_sha = disk_jar.with_name(f"{stage}.sha256")
     stage_sha.write_text(jar_sha)
     os.replace(stage_sha, _jar_sidecar(disk_jar))
     spark.sql(f"ADD JAR '{disk_jar}'")

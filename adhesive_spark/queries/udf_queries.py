@@ -92,8 +92,9 @@ def q25_udf_sql_macro(spark, sf_dir):
 
 def q84_udf_inline_java(spark, sf_dir):
     """Inline LANGUAGE JAVA (the reference's flagship runtime-compilation
-    path, src/fusion.rs:39-44): body implements Spark's UDF1, compiled by
-    javac at CREATE, loaded via ADD JAR; execution is wholly JVM-side.
+    path, src/fusion.rs:39-44): body implements Spark's UDF1, compiled at
+    CREATE inside the driver JVM by the JDK's javax.tools compiler, as in
+    the reference, loaded via ADD JAR; execution is wholly JVM-side.
     Integer-cents quantization keeps the SUM order-independent and the
     oracle exact."""
     sess = _sess(spark)

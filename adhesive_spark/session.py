@@ -17,6 +17,7 @@ worker reuse (the daemon-attached-thread analog, src/jvm.rs:271-274).
 from __future__ import annotations
 
 import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,16 +90,21 @@ class AdhesiveSession:
         self.spark = spark or build_spark()
         self.factory = FunctionFactory(self.spark)
 
+    @cached_property
+    def _ddl_ok(self) -> DataFrame:
+        """The empty OK relation a factory DDL returns, like DataFusion's
+        DDL result; built once and shared by every CREATE and DROP."""
+        return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
+
     def sql(self, query: str, **kwargs) -> DataFrame:
         if is_create_function(query):
             self.factory.create_function(query)
-            # DDL returns an empty OK relation, like DataFusion's DDL result.
-            return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
+            return self._ddl_ok
         if is_drop_function(query):
             name, if_exists = parse_drop_function(query)
             if name in self.factory.registry:
                 self.factory.drop_function(name, if_exists=if_exists)
-                return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
+                return self._ddl_ok
             # not a factory function: pass through so catalog/temp
             # functions created outside the factory keep Spark's native
             # DROP semantics (pre-interceptor behavior)

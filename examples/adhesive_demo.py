@@ -3,8 +3,9 @@ user of milenkovicm/adhesive runs after switching engines
 (examples/adhesive.rs:1-56, step for step).
 
 The reference registers an in-memory Arrow batch and creates two
-functions: an inline-source one (LANGUAGE JAVA — compiled at CREATE by
-javac exactly like the reference's in-memory javax.tools path, with a
+functions: an inline-source one (LANGUAGE JAVA — compiled at CREATE
+inside the driver JVM by the JDK's javax.tools compiler, like the
+reference's in-memory path, with a
 LANGUAGE PYTHON twin showing the idiomatic inline body) and a
 precompiled lookup (LANGUAGE CLASS there → LANGUAGE MODULE here).
 

@@ -155,11 +155,14 @@ def test_inline_java_compile_error_diagnostics(sess):
     """Broken Java fails the CREATE with javac's diagnostics — the
     InstantiationException('Can't compile function') analog with logged
     errors (Compiler.java:46-52, basicFailCompileTest)."""
-    with pytest.raises(CompileError, match="Can't compile function"):
+    with pytest.raises(CompileError, match="Can't compile function") as err:
         sess.sql(
             "CREATE FUNCTION jbad(BIGINT) RETURNS BIGINT LANGUAGE JAVA "
             "AS $$ public class JBad implements NoSuchInterface { } $$"
         )
+    # javac's own message, not only the prefix
+    assert "cannot find symbol" in str(err.value)
+    assert "NoSuchInterface" in str(err.value)
     # no class keyword at all → the class-name extraction error
     # (src/util.rs:25-27 JavaCodeError parity)
     with pytest.raises(CompileError, match="class name"):
@@ -627,6 +630,27 @@ def test_udf_state_is_per_worker_not_shared(sess):
     assert len(set(all_ns)) < len(all_ns)
 
 
+def _evict_java_body(body):
+    """Force the next compile of ``body`` down the cold path: drop its
+    in-memory entry and its published jar + sidecar. Returns the jar path."""
+    import hashlib
+
+    from adhesive_spark.functions.factory import (
+        _JAVA_BODY_CACHE,
+        _JAVA_CLASS_NAME_RE,
+        _jar_sidecar,
+        _java_disk_cache_dir,
+    )
+
+    _JAVA_BODY_CACHE.pop(body, None)
+    cls = _JAVA_CLASS_NAME_RE.search(body).group(1)
+    digest = hashlib.sha256(body.encode()).hexdigest()[:12]
+    jar = _java_disk_cache_dir() / f"{cls}-p{digest}.jar"
+    jar.unlink(missing_ok=True)
+    _jar_sidecar(jar).unlink(missing_ok=True)
+    return jar
+
+
 def _reset_disk_cache():
     import adhesive_spark.functions.factory as fac
 
@@ -713,15 +737,12 @@ def test_jar_publish_is_same_filesystem_rename(sess, monkeypatch):
     making any cross-directory os.replace raise EXDEV during a fresh
     compile+publish — the publish must still succeed."""
     import errno
-    import hashlib
     import os
     from pathlib import Path
 
     from adhesive_spark.functions.factory import (
         _JAVA_BODY_CACHE,
         _jar_integrity_ok,
-        _jar_sidecar,
-        _java_disk_cache_dir,
         compile_java_body,
     )
 
@@ -730,13 +751,7 @@ def test_jar_publish_is_same_filesystem_rename(sess, monkeypatch):
         "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
         "  public Long call(Long a) { return a + 77; } }"
     )
-    # force the compile+publish path: evict both the in-memory and the
-    # persistent disk entry for this body
-    _JAVA_BODY_CACHE.pop(body, None)
-    digest = hashlib.sha256(body.encode()).hexdigest()[:12]
-    jar = _java_disk_cache_dir() / f"JExdev-p{digest}.jar"
-    jar.unlink(missing_ok=True)
-    _jar_sidecar(jar).unlink(missing_ok=True)
+    jar = _evict_java_body(body)
 
     real_replace = os.replace
 
@@ -780,3 +795,91 @@ def test_java_disk_cache_cross_process_hit(sess):
     fqn2 = compile_java_body(sess.spark, "jdisk", body)
     assert fqn2 == fqn1
     assert Path(_JAVA_BODY_CACHE[body][1]) == jar1
+
+
+def test_java_compile_leaves_no_workdir(sess, tmp_path, monkeypatch):
+    """The compile's work directory is removed after a successful cold
+    compile and after a failed one: nothing named adhesive_java_* is left
+    in the temporary directory."""
+    import tempfile
+
+    from adhesive_spark.functions.factory import compile_java_body
+
+    body = (
+        "public class JNoLitter implements "
+        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+        "  public Long call(Long a) { return a + 3; } }"
+    )
+    _evict_java_body(body)  # resolves the jar cache before tempdir moves
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert compile_java_body(sess.spark, "jnolitter", body).endswith(".JNoLitter")
+    assert not list(tmp_path.glob("adhesive_java_*"))
+    with pytest.raises(CompileError, match="cannot find symbol"):
+        compile_java_body(
+            sess.spark, "jlitter", "public class JLitter implements Nope { }"
+        )
+    assert not list(tmp_path.glob("adhesive_java_*"))
+
+
+def test_ddl_returns_empty_ok_frame(sess):
+    """Every factory CREATE returns an empty relation whose only column
+    is ``ok``."""
+    for k in (1, 2):
+        df = sess.sql(
+            f"CREATE OR REPLACE FUNCTION fok{k}(BIGINT) RETURNS BIGINT "
+            f"DETERMINISTIC LANGUAGE PYTHON AS 'return arg0 + {k}'"
+        )
+        assert df.columns == ["ok"]
+        assert df.collect() == []
+    assert sess.sql("SELECT fok1(1) + fok2(1) AS v").collect()[0].v == 5
+
+
+def test_java_concurrent_cold_compiles(sess):
+    """Threads CREATE new Java bodies at once through one session, two
+    different bodies and each body twice; every function compiles and
+    returns its own values."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def body(k):
+        return (
+            f"public class JPar{k} implements "
+            "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+            f"  public Long call(Long a) {{ return a * {k}; }} }}"
+        )
+
+    for k in (3, 5):
+        _evict_java_body(body(k))
+
+    def create(fn):
+        sess.sql(
+            f"CREATE OR REPLACE FUNCTION jpar{fn}(BIGINT) RETURNS BIGINT "
+            f"LANGUAGE JAVA AS $$ {body(fn[0])} $$"
+        )
+
+    names = ("3a", "5a", "3b", "5b")
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        list(pool.map(create, names))
+    row = sess.sql(
+        "SELECT jpar3a(7) AS a, jpar5a(7) AS b, jpar3b(7) AS c, jpar5b(7) AS d"
+    ).collect()[0]
+    assert tuple(row) == (21, 35, 21, 35)
+
+
+def test_java_compiles_without_javac_binary(sess, monkeypatch):
+    """The compile runs inside the driver JVM: a new body compiles with
+    no javac executable reachable."""
+    import shutil
+
+    body = (
+        "public class JNoBin implements "
+        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+        "  public Long call(Long a) { return a - 9; } }"
+    )
+    _evict_java_body(body)
+    monkeypatch.setattr(shutil, "which", lambda *a, **k: None)
+    monkeypatch.setenv("PATH", "")
+    sess.sql(
+        "CREATE OR REPLACE FUNCTION jnobin(BIGINT) RETURNS BIGINT "
+        f"LANGUAGE JAVA AS $$ {body} $$"
+    )
+    assert sess.sql("SELECT jnobin(10) AS v").collect()[0].v == 1
