@@ -17,8 +17,9 @@ This is the PySpark-native rebuild of the reference's ``JvmFunctionFactory``
   Arrow IPC channel.
 - reference constructs ONE instance per CREATE and reuses it for every
   batch (src/jvm.rs:93-102); our compiled function object is captured once
-  at registration and shipped to each worker (per-worker copy — a
-  documented semantic difference, SURVEY §7 risk 3).
+  at registration and shipped with every task, which unpickles its own
+  (per-task copy, even in a reused worker — a documented semantic
+  difference, SURVEY §7 risk 3).
 
 Languages:
 

@@ -10,14 +10,27 @@ exactly as the reference inherits it from DataFusion (SURVEY §2.2).
 
 ``build_spark`` centralizes the scale-oriented defaults: AQE (runtime
 re-planning + skew-join handling), Arrow-batched Python UDF transport
-(the reference's zero-copy FFI analog, src/jvm.rs:183-219), and Python
-worker reuse (the daemon-attached-thread analog, src/jvm.rs:271-274).
+(the reference's zero-copy FFI analog, src/jvm.rs:183-219), Python
+worker reuse (the daemon-attached-thread analog, src/jvm.rs:271-274), and,
+for local masters, the repo's own Python worker daemon.
+
+The daemon (``adhesive_spark.pyworker``) exists because PySpark's worker
+invalidates every import cache at the start of each task, which makes
+CPython re-read the whole directory of ``pyspark.zip`` and the spark-core
+jar, about 0.15-0.2 s of fixed cost per Python task.  The daemon keeps
+those launch-time archives cached and hands over to PySpark's stock daemon.
+It is set only for ``local``/``local[...]`` masters, whose workers run on
+this host and can import this package from the directory ``build_spark``
+adds to ``spark.executorEnv.PYTHONPATH``; a cluster master keeps Spark's
+stock daemon.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from functools import cached_property
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,6 +45,7 @@ from adhesive_spark.functions.factory import FunctionFactory
 #: On a real cluster the shuffle-partition count should track
 #: 2-3× total executor cores and target 100-200 MB per shuffle partition —
 #: AQE coalescing makes over-provisioning cheap, so err high.
+#: Local masters also get ``LOCAL_MASTER_CONFIGS`` below.
 DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -52,6 +66,16 @@ DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
 }
 
+#: Python workers run under ``adhesive_spark.pyworker``, which spares every
+#: Python task the ~0.15-0.2 s re-read of Spark's own zip archives; the
+#: package's parent directory goes on the workers' path so the daemon
+#: imports whatever the driver's cwd.  Local masters only: a cluster's
+#: workers cannot import this checkout, so they keep Spark's stock daemon.
+LOCAL_MASTER_CONFIGS: dict[str, str] = {
+    "spark.python.daemon.module": "adhesive_spark.pyworker",
+    "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parents[1]),
+}
+
 
 def build_spark(
     app_name: str = "adhesive-spark",
@@ -62,10 +86,11 @@ def build_spark(
     """Build (or get) the singleton SparkSession — the JVM-singleton analog
     (src/jvm.rs:27 ``OnceCell``: one engine per process)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONFIGS)
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        conf.update(LOCAL_MASTER_CONFIGS)
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else int(cpus)
     )

@@ -591,42 +591,44 @@ def test_udf_state_is_per_worker_not_shared(sess):
     contract (factory.py:18-21): the reference holds ONE shared UDF
     instance per definition (src/jvm.rs:93-102 GlobalRef), so instance
     state is globally visible across every batch; Spark ships a
-    cloudpickled COPY of the compiled function to each Python worker
-    process, so closure/global state is per-worker.
+    cloudpickled COPY of the compiled function with every task, and each
+    task unpickles its own, so closure/global state is per task copy (a
+    reused worker process runs many tasks, each with a fresh copy).
 
-    Proof shape: a counter UDF tagging each call with its worker PID.
-    Per-worker-copy semantics mean each PID's counter sequence starts at
-    1 and covers exactly that PID's rows — and with 32 concurrent
-    partitions on local[32], several distinct PIDs appear, so counter
-    values DUPLICATE across workers (a single shared instance would
-    yield globally unique 1..N)."""
+    Proof shape: a counter UDF tagging each call with its worker PID and
+    partition id, which together name one task's copy.  Per-task-copy
+    semantics mean each copy's counter sequence is a dense 1..k over
+    exactly that copy's rows, and with 32 partitions counter values
+    REPEAT across copies (a single shared instance would yield globally
+    unique 1..N)."""
     from collections import defaultdict
 
     sess.sql(
         "CREATE OR REPLACE FUNCTION tally(BIGINT) RETURNS STRING "
         "DETERMINISTIC LANGUAGE PYTHON AS '"
         "import os\n"
+        "from pyspark import TaskContext\n"
         "st = globals().setdefault(\"_st\", {\"n\": 0})\n"
         "st[\"n\"] += 1\n"
-        "return str(os.getpid()) + \":\" + str(st[\"n\"])'"
+        "return \":\".join(map(str, [os.getpid(), "
+        "TaskContext.get().partitionId(), st[\"n\"]]))'"
     )
     df = sess.spark.range(0, 256, 1, 32).selectExpr("tally(id) AS tag")
     tags = [r.tag for r in df.collect()]
     assert len(tags) == 256
-    per_pid = defaultdict(list)
+    per_copy = defaultdict(list)
     for t in tags:
-        pid, n = t.split(":")
-        per_pid[pid].append(int(n))
-    # state never leaks across workers: every PID's counters are a
-    # dense 1..k — each copy counted only its own rows
-    for pid, ns in per_pid.items():
-        assert sorted(ns) == list(range(1, len(ns) + 1)), (pid, sorted(ns)[:5])
-    assert sum(len(v) for v in per_pid.values()) == 256
-    # 32 concurrent tasks -> multiple worker processes -> duplicated
-    # counter values across PIDs (the observable difference from the
-    # reference's shared single instance, which would never duplicate)
-    assert len(per_pid) >= 2, per_pid.keys()
-    all_ns = [n for v in per_pid.values() for n in v]
+        pid, part, n = t.split(":")
+        per_copy[(pid, part)].append(int(n))
+    # state never leaks across copies: every copy's counters are a
+    # dense 1..k, each copy counted only its own rows
+    for copy, ns in per_copy.items():
+        assert sorted(ns) == list(range(1, len(ns) + 1)), (copy, sorted(ns)[:5])
+    assert len({part for _, part in per_copy}) == 32
+    # 32 task copies -> duplicated counter values across copies (the
+    # observable difference from the reference's shared single instance,
+    # which would never duplicate)
+    all_ns = [n for v in per_copy.values() for n in v]
     assert len(set(all_ns)) < len(all_ns)
 
 
