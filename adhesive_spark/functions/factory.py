@@ -14,7 +14,9 @@ This is the PySpark-native rebuild of the reference's ``JvmFunctionFactory``
 - reference ships batches zero-copy over the Arrow C Data Interface
   (src/jvm.rs:183-219); Spark's Arrow-optimized Python UDF path
   (``useArrow=True``) is the same architecture over the executor↔worker
-  Arrow IPC channel.
+  Arrow IPC channel.  On local masters the worker daemon
+  (``adhesive_spark.pyworker``) turns each Arrow argument column into
+  Python values a column at a time, not value by value.
 - reference constructs ONE instance per CREATE and reuses it for every
   batch (src/jvm.rs:93-102); our compiled function object is captured once
   at registration and shipped with every task, which unpickles its own

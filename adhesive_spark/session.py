@@ -14,15 +14,18 @@ re-planning + skew-join handling), Arrow-batched Python UDF transport
 worker reuse (the daemon-attached-thread analog, src/jvm.rs:271-274), and,
 for local masters, the repo's own Python worker daemon.
 
-The daemon (``adhesive_spark.pyworker``) exists because PySpark's worker
-invalidates every import cache at the start of each task, which makes
-CPython re-read the whole directory of ``pyspark.zip`` and the spark-core
-jar, about 0.15-0.2 s of fixed cost per Python task.  The daemon keeps
-those launch-time archives cached and hands over to PySpark's stock daemon.
-It is set only for ``local``/``local[...]`` masters, whose workers run on
-this host and can import this package from the directory ``build_spark``
-adds to ``spark.executorEnv.PYTHONPATH``; a cluster master keeps Spark's
-stock daemon.
+The daemon (``adhesive_spark.pyworker``) does two jobs before it hands over
+to PySpark's stock daemon.  PySpark's worker invalidates every import cache
+at the start of each task, which makes CPython re-read the whole directory
+of ``pyspark.zip`` and the spark-core jar, about 0.15-0.2 s of fixed cost
+per Python task; the daemon keeps those launch-time archives cached.  And
+PySpark converts the arguments of a row-at-a-time Arrow UDF one value at a
+time (``to_pylist``); the daemon converts integer, float, bool and string
+columns a column at a time, to the same Python objects.  It is set only
+for ``local``/``local[...]`` masters, whose workers run on this host and
+can import this package from the directory ``build_spark`` adds to
+``spark.executorEnv.PYTHONPATH``; a cluster master keeps Spark's stock
+daemon and both of those costs.
 """
 
 from __future__ import annotations
@@ -67,7 +70,8 @@ DEFAULT_CONFIGS: dict[str, str] = {
 }
 
 #: Python workers run under ``adhesive_spark.pyworker``, which spares every
-#: Python task the ~0.15-0.2 s re-read of Spark's own zip archives; the
+#: Python task the ~0.15-0.2 s re-read of Spark's own zip archives and
+#: converts row-at-a-time UDF arguments a column at a time; the
 #: package's parent directory goes on the workers' path so the daemon
 #: imports whatever the driver's cwd.  Local masters only: a cluster's
 #: workers cannot import this checkout, so they keep Spark's stock daemon.
