@@ -514,6 +514,11 @@ def _strict_wrap_series(name: str, fn: Callable, arg_types: list[str]) -> Callab
     return wrapper
 
 
+def _java_impl_name(name: str) -> str:
+    """Name of the JVM UDF behind the JAVA/CLASS function ``name``."""
+    return f"__adh_{name}_impl"
+
+
 class FunctionFactory:
     """Session-scoped factory — the ``FunctionFactory`` hook analog
     (src/fusion.rs:23-27 ``FunctionFactory::create``)."""
@@ -606,8 +611,9 @@ class FunctionFactory:
             # signature (Signature::exact, src/fusion.rs:72), so: register
             # the JVM impl under a mangled name and expose the declared
             # name as a Catalyst-native SQL wrapper that CASTs each arg —
-            # inlined + codegen'd, zero overhead.
-            impl = f"__adh_{d.name}_impl_{uuid.uuid4().hex[:8]}"
+            # inlined + codegen'd, zero overhead.  The impl name is
+            # stable, so OR REPLACE overwrites it and DROP can find it.
+            impl = _java_impl_name(d.name)
             try:
                 self.spark.udf.registerJavaFunction(impl, target, ret_type)
             except Exception as e:  # Py4J wraps ClassNotFound etc.
@@ -634,20 +640,20 @@ class FunctionFactory:
     def drop_function(self, name: str, *, if_exists: bool = False) -> None:
         """DROP FUNCTION [IF EXISTS] name — the lifecycle complement of
         the CREATE path: removes the registry entry and Spark's temporary
-        function registration, so a later call fails resolution and a
-        plain re-CREATE (no OR REPLACE) succeeds again."""
+        function registrations (a JAVA function's impl included), so a
+        later call fails resolution and a plain re-CREATE (no OR REPLACE)
+        succeeds again. A failing Spark DROP propagates."""
         if name not in self.registry:
             if if_exists:
                 return
             raise UnknownFunctionError(f"function {name!r} does not exist")
         del self.registry[name]
-        try:
-            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
-        except Exception:
-            # SQL-macro registrations drop via the same statement; UDF
-            # registrations may predate Spark's temp-function catalog —
-            # the registry removal above is the source of truth
-            pass
+        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+        # a JAVA/CLASS registration's JVM impl (an OR REPLACE may since
+        # have switched the name to another language, so always drop it)
+        self.spark.sql(
+            f"DROP TEMPORARY FUNCTION IF EXISTS {_java_impl_name(name)}"
+        )
 
     def _register_python(
         self,

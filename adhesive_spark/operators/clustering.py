@@ -24,8 +24,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from adhesive_spark.operators.similarity import cosine
 from adhesive_spark.operators.text import fround
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
@@ -47,72 +47,56 @@ def label_centroids(
     )
 
 
-def _assign(
-    vectors: DataFrame, centroids: DataFrame, engine: str = "vectorized"
-) -> DataFrame:
+def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment. Ties resolve to the lowest cid,
     same contract as ORDER BY sim DESC, cid. vectors: (vec_id, v);
     centroids: (cid, cv) → (vec_id, v, cid).
 
-    ``engine="vectorized"`` (default since round 10): the k centroids
-    (tiny by contract — they were broadcast before) are materialized
-    into an Arrow kernel that computes the RAW cosine of each vector
-    against all of them in one trip, replaying the HOF fold's
-    per-dimension IEEE order; rounding to 6 dp and the argmax stay
-    SPARK-side (``round``'s HALF_UP must come from one engine, or the
-    DuckDB-oracle trajectory contract breaks), via an in-row zip_with +
-    array_max over k elements.  Assignment is thereby MAP-ONLY — the
-    crossJoin×k expansion and the vec_id re-aggregation shuffle are
-    gone.  ``engine="hof"``: the original broadcast crossJoin + HOF
-    cosine + max(struct(sim, -cid)) aggregate (map-side combined),
-    kept as the reference twin; bit-equality machine-checked
+    The k centroids (tiny by contract) are materialized into an Arrow
+    kernel that computes the RAW cosine of each vector against all of
+    them in one trip, replaying the HOF fold's per-dimension IEEE
+    order; rounding to 6 dp and the argmax stay SPARK-side (``round``'s
+    HALF_UP must come from one engine, or the DuckDB-oracle trajectory
+    contract breaks), via an in-row zip_with + array_max over k
+    elements.  Assignment is thereby MAP-ONLY: no crossJoin×k
+    expansion, no vec_id re-aggregation shuffle.  Its labels equal the broadcast crossJoin + HOF cosine +
+    max(struct(sim, -cid)) reference in tests/_twins.py
     (test_scale_ops::test_kmeans_assign_vectorized_matches_hof).
 
-    NOTE: the vectorized engine EAGERLY collects the centroid block at
-    plan-construction time (a Spark job runs inside this call) — the
-    returned plan snapshots the centroids rather than recomputing them
-    per execution, the same bytes a broadcast would pin."""
-    if engine == "vectorized":
-        crows = (
-            centroids.select(
-                "cid", F.col("cv").cast("array<double>").alias("cv")
-            )
-            .orderBy("cid")
-            .collect()
+    NOTE: the centroid block is collected EAGERLY at plan-construction
+    time (a Spark job runs inside this call) — the returned plan
+    snapshots the centroids rather than recomputing them per execution,
+    the same bytes a broadcast would pin. Zero centroids return an
+    empty frame with the same columns."""
+    crows = (
+        centroids.select("cid", F.col("cv").cast("array<double>").alias("cv"))
+        .orderBy("cid")
+        .collect()
+    )
+    if not crows:
+        return vectors.sparkSession.createDataFrame(
+            [],
+            StructType(
+                [
+                    vectors.schema["vec_id"],
+                    vectors.schema["v"],
+                    centroids.schema["cid"],
+                ]
+            ),
         )
-        if crows:
-            return _assign_vectorized(vectors, crows)
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "v",
-        F.struct(
-            F.round(
-                cosine(
-                    F.col("v").cast("array<double>"),
-                    F.col("cv").cast("array<double>"),
-                ),
-                6,
-            ).alias("sim"),
-            (-F.col("cid")).alias("neg_cid"),
-        ).alias("__cand"),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.first("v").alias("v"), F.max("__cand").alias("__best"))
-        .select("vec_id", "v", (-F.col("__best.neg_cid")).alias("cid"))
-    )
+    return _assign_vectorized(vectors, crows)
 
 
 def _assign_vectorized(vectors: DataFrame, crows) -> DataFrame:
     """Map-only assignment core: kernel emits raw sims (bit-exact with
     the HOF fold), Spark rounds and argmaxes in-row over k elements.
 
-    Corner inputs mirror the HOF twin (r10 ADVICE): null or ragged
-    vectors and zero-norm pairs emit null sims (the crossJoin twin's
-    try_divide/null-fold results) instead of crashing np.stack or
-    leaking NaN; the homogeneous no-null batch — every committed
-    caller — takes the original byte-identical fast path. Both engines
-    compute in float64 regardless of stored element width."""
+    Corner inputs mirror the HOF fold (r10 ADVICE): null or ragged
+    vectors and zero-norm pairs emit null sims (the crossJoin
+    reference's try_divide/null-fold results) instead of crashing
+    np.stack or leaking NaN; the homogeneous no-null batch — every
+    committed caller — takes the original byte-identical fast path.
+    Sims are computed in float64 regardless of stored element width."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

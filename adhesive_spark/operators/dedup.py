@@ -203,7 +203,7 @@ def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
     Exactness is structural, not approximate: base hashes are < 2³¹ and
     coefficients a < 2³⁰, so h·a+b < 2⁶² fits int64 with no overflow,
     `%` on non-negatives equals pmod, and min over ints is order-free —
-    the signature longs are IDENTICAL to the HOF twin's (machine-checked
+    the signature longs are IDENTICAL to the HOF form's (machine-checked
     bit-equal, tests/test_operators.py). Null/empty shingle sets yield
     the HOF plan's [null]×num_perm. Measured 1.9× on the full 1.5 M-doc
     signature stage (61.1 s → 32.8 s — the shared md5 shingle-hash
@@ -266,7 +266,6 @@ def minhash_base_and_bands(
     bands: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    engine: str = "vectorized",
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature stage of the LSH pipeline: returns
     ``(base, band_rows)`` where base = (id, shingles, sig) and
@@ -274,13 +273,12 @@ def minhash_base_and_bands(
     :func:`minhash_lsh_pairs` and by the persisted-index pair
     (:func:`persist_minhash_index` / :func:`probe_minhash_index`).
 
-    ``engine="vectorized"`` (default since round 10) computes the
-    permutation minimums with :func:`minhash_signature_kernel` —
-    identical longs, 1.9× on the signature pass (61.1 s→32.8 s at the
-    1.5 M-doc rung — the one measured number, see
-    :func:`minhash_signature_kernel`); ``engine="hof"``
-    keeps the pure-Catalyst HOF twin.  The md5 shingle hashing stays
-    JVM-side in both (it is what keeps the pipeline oracle-portable)."""
+    The permutation minimums come from :func:`minhash_signature_kernel`
+    — the same longs as :func:`minhash_signature`'s HOF scans, 1.9× on
+    the signature pass (61.1 s→32.8 s at the 1.5 M-doc rung — the one
+    measured number, see :func:`minhash_signature_kernel`).  The md5
+    shingle hashing stays JVM-side (it is what keeps the pipeline
+    oracle-portable)."""
     rows_per_band = num_perm // bands
     assert rows_per_band * bands == num_perm, "bands must divide num_perm"
 
@@ -305,10 +303,7 @@ def minhash_base_and_bands(
         ),
     ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
 
-    if engine == "vectorized":
-        sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
-    else:
-        sig = minhash_signature_from_base(F.col("base"), num_perm, seed)
+    sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
     base = hashed.select("id", "shingles", sig.alias("sig"))
 
     # Second boundary ABOVE the signature kernel: an id-keyed exchange

@@ -79,7 +79,6 @@ def apply_cdc(
     *,
     base: DataFrame | None = None,
     delete_op: str = "delete",
-    engine: str = "window",
 ) -> DataFrame:
     """MERGE-INTO semantics over a CDC log: latest-op-per-key wins,
     surviving deletes drop the key.  The reconciliation step every
@@ -91,25 +90,20 @@ def apply_cdc(
       key or "latest" is undefined);
     - drop keys whose winning op is ``delete_op``.
 
-    ``engine="window"`` (default — measured, r11): Spark 4 plans the
-    ``row_number()==1`` filter as WindowGroupLimit with a PARTIAL
+    Latest-per-key is a ``row_number()==1`` window (measured, r11):
+    Spark 4 plans the filter as WindowGroupLimit with a PARTIAL
     map-side pass, so each map partition forwards at most one row per
     key before the exchange — the shape is already map-combined, and
-    its only linear term is the per-partition local sort.
-    ``engine="agg"``: latest-per-key as one ``max(struct(seq...,
-    payload))`` aggregate. Sounds like the map-combine win, but a
-    struct-max plans as SortAggregate (no mutable hash buffer for
-    structs): partial AND final phases sort the full log by key — 5×
-    SLOWER than the window at the 1000× rung (179.2 s vs 34.5 s over
-    100 M rows). Kept as the machine-checked twin (identical winners —
-    struct null ordering == the window's DESC NULLS LAST, and unique
-    ``seq_cols`` mean the payload never decides a comparison) and as
-    the recorded negative result. Restriction the window engine does
-    not share: the payload rides inside the comparison struct, so
-    every payload column must be ORDERABLE — a map-typed column fails
-    analysis under ``engine="agg"`` (use the default window engine for
-    such schemas), and were ``seq_cols`` ever non-unique per key the
-    payload would act as an implicit tiebreaker.
+    its only linear term is the per-partition local sort.  The
+    recorded negative result is one ``max(struct(seq..., payload))``
+    aggregate: a struct-max plans as SortAggregate (no mutable hash
+    buffer for structs), so partial AND final phases sort the full log
+    by key — 5× SLOWER than the window at the 1000× rung (179.2 s vs
+    34.5 s over 100 M rows) — and it needs every payload column to be
+    orderable.  It survives only as the equality reference in
+    tests/_twins.py (identical winners: struct null ordering == the
+    window's DESC NULLS LAST, and unique ``seq_cols`` mean the payload
+    never decides a comparison).
 
     With ``base`` given, base rows join in as lowest-priority upserts
     (a log entry for the key always supersedes), implemented by a
@@ -122,40 +116,12 @@ def apply_cdc(
     which keeps every version; this operator materializes only the
     current snapshot.
     """
-    if engine == "agg":
-        from adhesive_spark.sources.registry import ensure_parallelism
-
-        # The partial combine runs INSIDE the scan stage — on a
-        # single-split input (compacted file, or the stress harness's
-        # map-side explode) the whole pre-shuffle reduction would
-        # serialize in one task. No-op when input splits >= cores.
-        log = ensure_parallelism(log)
-        payload_cols = [c for c in log.columns if c not in key_cols]
-        best = log.groupBy(*key_cols).agg(
-            F.max(
-                F.struct(
-                    *[F.col(c) for c in seq_cols],
-                    F.struct(*[F.col(c) for c in payload_cols]).alias(
-                        "__row"
-                    ),
-                )
-            ).alias("__best")
+    w = F.row_number().over(
+        Window.partitionBy(*key_cols).orderBy(
+            *[F.col(c).desc() for c in seq_cols]
         )
-        latest = best.select(
-            *key_cols,
-            *[F.col(f"__best.__row.{c}").alias(c) for c in payload_cols],
-        ).select(*log.columns)
-    else:
-        w = F.row_number().over(
-            Window.partitionBy(*key_cols).orderBy(
-                *[F.col(c).desc() for c in seq_cols]
-            )
-        )
-        latest = (
-            log.withColumn("__rn", w)
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    )
+    latest = log.withColumn("__rn", w).where(F.col("__rn") == 1).drop("__rn")
     # only an EXPLICIT delete drops the key: a NULL/missing op is a
     # malformed upsert, not a tombstone (a bare != would null out
     # and silently delete such keys)

@@ -23,6 +23,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from adhesive_spark.sources.registry import ensure_parallelism
@@ -60,7 +66,6 @@ def knn_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    engine: str = "vectorized",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
@@ -68,78 +73,68 @@ def knn_bruteforce(
     the contract (the corpus is the scale side).  Ranking window
     partitioned by query id; ties broken by corpus id for determinism.
 
-    ``engine="vectorized"`` (default since round 10): the query block
-    is materialized into the kernel's closure (the same driver-side
-    footprint the broadcast already implies) and each corpus vector is
+    The query block is materialized into the kernel's closure (the same
+    driver-side footprint a broadcast implies) and each corpus vector is
     shipped over Arrow ONCE, scored against every query inside a numpy
-    kernel whose per-dimension loop replays the HOF fold's IEEE
-    operation order exactly — bit-equality with the ``engine="hof"``
-    twin is machine-checked (test_scale_ops) and measured 4× faster at
-    the 1000× ladder rung (2 M × 25 pairs: 32.8 s HOF → 8.1 s).
-    NOTE: the vectorized engine EAGERLY collects the query block at
-    plan-construction time (a Spark job runs inside this call), so
-    upstream errors surface here and later changes to the ``queries``
-    DataFrame's inputs are NOT picked up by re-executing the returned
-    plan — snapshot semantics, matching what broadcasting a collected
-    block implies.
-    ``engine="hof"``: the original pure-Catalyst crossJoin + HOF-fold
-    cosine, kept as the reference twin (also the lazy path for zero
-    queries).
+    kernel whose per-dimension loop replays the Catalyst HOF cosine
+    fold's IEEE operation order exactly — bit-equality with that fold
+    (the crossJoin reference in tests/_twins.py) is machine-checked in
+    test_scale_ops, and the kernel measured 4× faster at the 1000×
+    ladder rung (2 M × 25 pairs: 32.8 s HOF → 8.1 s).
+    NOTE: the query block is collected EAGERLY at plan-construction
+    time (a Spark job runs inside this call), so upstream errors
+    surface here and later changes to the ``queries`` DataFrame's
+    inputs are NOT picked up by re-executing the returned plan —
+    snapshot semantics, matching what broadcasting a collected block
+    implies. Zero queries return an empty frame with the same columns.
 
-    Corner-input semantics (both engines agree; see
-    test_scale_ops::test_knn_corner_inputs): null or ragged vectors —
-    on either side — and zero-norm pairs score ``sim = null`` (ranked
-    last under the DESC ordering); the one documented delta is a null
-    ELEMENT inside an otherwise non-null corpus vector, which Arrow
-    hands the kernel as NaN (sim NaN, ranked first like any NaN) while
-    the HOF fold yields null. Both engines compute in float64
+    Corner-input semantics (equal to the reference; see
+    test_scale_ops::test_knn_corner_inputs_match_hof): null or ragged
+    vectors — on either side — and zero-norm pairs score ``sim = null``
+    (ranked last under the DESC ordering); the one documented delta is
+    a null ELEMENT inside an otherwise non-null corpus vector, which
+    Arrow hands the kernel as NaN (sim NaN, ranked first like any NaN)
+    while the HOF fold yields null. Sims are computed in float64
     regardless of the stored element width, so array<float> callers
-    get identical sims from either engine.
+    get the reference's sims.
     """
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).cast("array<double>").alias("__qvec"),
     )
-    if engine == "vectorized":
-        qrows = q.collect()
-        if qrows:
-            return _knn_bruteforce_vectorized(
-                corpus, qrows, k=k, id_col=id_col, vec_col=vec_col,
-                query_id_col=query_id_col,
-            )
-        # zero queries: fall through to the HOF plan (empty result,
-        # correct schema)
-    scored = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cvec")
-    ).crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    qrows = q.collect()
+    if not qrows:
+        return corpus.sparkSession.createDataFrame(
+            [],
+            StructType(
+                [
+                    q.schema[query_id_col],
+                    corpus.schema[id_col],
+                    StructField("sim", DoubleType()),
+                    StructField("rank", IntegerType(), False),
+                ]
+            ),
+        )
+    return _knn_bruteforce_vectorized(
+        corpus, qrows, k=k, id_col=id_col, vec_col=vec_col,
+        query_id_col=query_id_col,
     )
 
 
 def _knn_bruteforce_vectorized(
     corpus, qrows, *, k, id_col, vec_col, query_id_col
 ):
-    """Batched scorer behind knn_bruteforce(engine="vectorized"):
+    """Batched scorer behind knn_bruteforce:
     one Arrow trip per CORPUS vector (not per pair), all queries scored
     in-kernel, positions mapped back to query ids via a literal array.
 
-    Bit-exactness with the HOF twin: the kernel accumulates dot and
+    Bit-exactness with the HOF fold: the kernel accumulates dot and
     both norms dimension-by-dimension in the same order as the left
     fold (``acc += A[:, j] * B[:, j]`` for j ascending), so every
     float64 add/mul happens in the identical IEEE sequence and the
     rounded sims are byte-identical.
 
-    Corner inputs mirror the HOF twin (r10 ADVICE): null queries, null
+    Corner inputs mirror the HOF fold (r10 ADVICE): null queries, null
     or ragged corpus rows, and zero-norm pairs all emit ``null`` sims
     instead of crashing ``np.stack``/``list(...)`` or leaking kernel
     NaNs where the fold yields null. Rows are grouped by length and
@@ -149,7 +144,7 @@ def _knn_bruteforce_vectorized(
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
+    from pyspark.sql.types import ArrayType
 
     qids = [r[0] for r in qrows]
     qn = len(qids)
@@ -215,7 +210,7 @@ def _knn_bruteforce_vectorized(
                 ):
                     return pd.Series(list(_score_block(A, Q)))
         # SLOW PATH (corner inputs only): per-length groups, null sims
-        # for null/ragged/zero-norm pairs — the HOF twin's semantics.
+        # for null/ragged/zero-norm pairs — the HOF fold's semantics.
         out = np.full((n, qn), np.nan)
         valid = np.zeros((n, qn), dtype=bool)
         for L in np.unique(lens):

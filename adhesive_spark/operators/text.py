@@ -547,17 +547,17 @@ def gopher_masses_kernel() -> Column:
     frequent gram and ``dup`` the total char mass of grams occurring
     ≥ 2 times — gram length counts characters plus the n−1 joining
     spaces, exactly like the ``concat_ws(' ', …)`` the HOF reference
-    twin builds.
+    (tests/_twins.py) builds.
 
-    Why a Python kernel on the hot path: the twin computes the same
+    Why a Python kernel on the hot path: the reference computes the same
     masses with built-in higher-order aggregates (sort + run-scan fully
     in-row), but Catalyst interprets HOF lambda expressions per
     element — measured ~3 ms/doc (10 k docs/s on local[32], STRESS.md
     round 10).  This Counter-based kernel is the same exact integers at
     ~2.3 k docs/s/core, ~7× the whole-box throughput, and keeps the
     scale contract: map-only, zero shuffle, no gram rows ever leave
-    their document.  Equality with the HOF twin is machine-checked
-    (tests/test_training.py::test_gopher_vectorized_matches_hof_twin).
+    their document.  Equality with the HOF reference is machine-checked
+    by tests/test_training.py::test_gopher_vectorized_matches_hof_twin.
     """
     from collections import Counter
 

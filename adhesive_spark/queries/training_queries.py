@@ -165,121 +165,40 @@ TRAINING_ORACLES["q280_dsir_importance"] = f"""
 # --- q281: Gopher repetition rules --------------------------------------------
 
 
-def gopher_repetition_report(docs, engine: str = "vectorized"):
+def gopher_repetition_report(docs):
     """DF-level core of q281 (takes any documents DataFrame with
     doc_id/source/text) — shared with the stress harness, which drives
     it over the N×-replicated corpus.
 
-    ``engine``: ``"vectorized"`` (default) computes the per-lane gram
-    masses with the Arrow-batched kernel
-    (operators/text.gopher_masses_kernel — measured ~7× the HOF path's
-    whole-box throughput, STRESS.md round 10); ``"hof"`` keeps the
-    original pure-Catalyst higher-order-aggregate lanes as the exact
-    reference twin.  Both are map-only with the source rollup as the
-    single shuffle, and bit-equal on every corpus (machine-checked)."""
-    from adhesive_spark.operators.text import normalize_text, tokens
+    The per-lane gram masses come from the Arrow-batched kernel
+    (operators/text.gopher_masses_kernel — measured ~7× the
+    pure-Catalyst higher-order-aggregate lanes' whole-box throughput,
+    STRESS.md round 10; those lanes survive as the bit-equal reference
+    in tests/_twins.py).  Map-only, with the source rollup as the
+    single shuffle."""
+    from adhesive_spark.operators.text import (
+        gopher_masses_kernel,
+        normalize_text,
+        tokens,
+    )
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    docs = ensure_parallelism(docs).select(
+    base = ensure_parallelism(docs).select(
         "doc_id",
         "source",
         F.length(normalize_text(F.col("text"))).cast("long").alias(
             "n_chars"
         ),
         tokens(F.col("text")).alias("toks"),
+    ).select(
+        "doc_id",
+        "source",
+        "n_chars",
+        gopher_masses_kernel()(F.col("toks")).alias("mm"),
     )
-
-    # ENTIRELY IN-ROW per-document metric: each lane's grams are built,
-    # SORTED, and run-length-scanned inside one higher-order aggregate
-    # per n — equal grams are adjacent after the sort, so one linear
-    # pass yields the top-run mass (max cnt·len) and the duplicated-run
-    # mass (Σ cnt·len where cnt ≥ 2). NO gram rows are ever exploded or
-    # shuffled; the only shuffle in the whole query is the source
-    # rollup. toks is bound once per row via the single-element
-    # transform scope (house pattern — a raw tokens(col) argument would
-    # be re-inlined per element by CollapseProject, O(len²)/doc).
-    def _run_masses(grams):
-        """(top_mass, dup_mass) over a sorted gram array via one
-        aggregate: acc carries the current run (prev, cnt) and the two
-        masses; finish folds the final run in."""
-        sg = F.array_sort(grams)
-        init = F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).cast("long").alias("cnt"),
-            F.lit(0).cast("long").alias("top"),
-            F.lit(0).cast("long").alias("dup"),
-        )
-
-        def close_run(acc):
-            mass = acc["cnt"] * F.length(acc["prev"]).cast("long")
-            return (
-                F.greatest(acc["top"], mass),
-                acc["dup"]
-                + F.when(acc["cnt"] >= 2, mass).otherwise(F.lit(0).cast("long")),
-            )
-
-        def step(acc, g):
-            top2, dup2 = close_run(acc)
-            return F.when(
-                g == acc["prev"],
-                F.struct(
-                    acc["prev"].alias("prev"),
-                    (acc["cnt"] + 1).alias("cnt"),
-                    acc["top"].alias("top"),
-                    acc["dup"].alias("dup"),
-                ),
-            ).otherwise(
-                F.struct(
-                    g.alias("prev"),
-                    F.lit(1).cast("long").alias("cnt"),
-                    top2.alias("top"),
-                    dup2.alias("dup"),
-                )
-            )
-
-        def finish(acc):
-            top2, dup2 = close_run(acc)
-            return F.struct(top2.alias("top"), dup2.alias("dup"))
-
-        return F.aggregate(sg, init, step, finish)
-
-    def _lane_masses(toks):
-        def lane(n):
-            k = F.size(toks) - (n - 1)
-            grams = F.when(
-                k >= 1,
-                F.transform(
-                    F.sequence(F.lit(0), k - 1),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-            return _run_masses(grams)
-
-        return F.struct(
-            *[lane(n).alias(f"m{n}") for n in (2, 3, 4, 5, 6, 7)]
-        )
-
-    if engine == "hof":
-        masses = F.element_at(
-            F.transform(F.array(F.col("toks")), _lane_masses), 1
-        )
-        base = docs.select(
-            "doc_id", "source", "n_chars", masses.alias("m")
-        )
-        top_of = {n: f"m.m{n}.top" for n in (2, 3, 4)}
-        dup_of = {n: f"m.m{n}.dup" for n in (5, 6, 7)}
-    else:
-        from adhesive_spark.operators.text import gopher_masses_kernel
-
-        base = docs.select(
-            "doc_id",
-            "source",
-            "n_chars",
-            gopher_masses_kernel()(F.col("toks")).alias("mm"),
-        )
-        # kernel layout: [top2, dup2, top3, dup3, …, top7, dup7]
-        top_of = {n: f"element_at(mm, {(n - 2) * 2 + 1})" for n in (2, 3, 4)}
-        dup_of = {n: f"element_at(mm, {(n - 2) * 2 + 2})" for n in (5, 6, 7)}
+    # kernel layout: [top2, dup2, top3, dup3, …, top7, dup7]
+    top_of = {n: f"element_at(mm, {(n - 2) * 2 + 1})" for n in (2, 3, 4)}
+    dup_of = {n: f"element_at(mm, {(n - 2) * 2 + 2})" for n in (5, 6, 7)}
     fails = base.select(
         "source",
         # greatest(n_chars, 1): a 0-char doc has zero gram mass in every
@@ -330,10 +249,10 @@ def q281_gopher_repetition(spark, sf_dir):
     Scale shape: the per-document metric is ENTIRELY IN-ROW — the six
     lanes' gram masses are computed by the Arrow-batched kernel
     (operators/text.gopher_masses_kernel; measured ~9× the pure-HOF
-    twin's whole-box throughput, STRESS.md round 10), so no gram row is
+    lanes' whole-box throughput, STRESS.md round 10), so no gram row is
     ever exploded or shuffled; the ONLY shuffle in the query is the
-    final source rollup. Corpus-linear, no joins; the HOF twin remains
-    available (engine="hof") and bit-equality is machine-checked."""
+    final source rollup. Corpus-linear, no joins; bit-equality with the
+    pure-HOF reference in tests/_twins.py is machine-checked."""
     return gopher_repetition_report(load_table(spark, sf_dir, "documents"))
 
 

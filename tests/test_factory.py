@@ -358,7 +358,7 @@ def test_drop_function_lifecycle(sess):
     """DROP FUNCTION completes the DDL lifecycle: dropped functions fail
     resolution, re-CREATE without OR REPLACE succeeds after a drop,
     IF EXISTS swallows the missing case, and a bare drop of a missing
-    function errors."""
+    function errors. PYTHON, SQL and JAVA kinds."""
     sess.sql(
         "CREATE FUNCTION fdrop(BIGINT) RETURNS BIGINT "
         "DETERMINISTIC LANGUAGE PYTHON AS 'return arg0 + 1'"
@@ -384,6 +384,67 @@ def test_drop_function_lifecycle(sess):
     sess.sql("DROP TEMPORARY FUNCTION fdrop_native")
     with pytest.raises(Exception):
         sess.sql("SELECT fdrop_native(5)").collect()
+    # the same lifecycle for the Catalyst-native kinds: a SQL macro and
+    # an inline JAVA class behind its CAST wrapper
+    java = (
+        "LANGUAGE JAVA AS $$ public class FDropJ implements "
+        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+        "  public Long call(Long a) { return a + %d; } } $$"
+    )
+    for kind, body_1, body_2 in (
+        ("SQL", "LANGUAGE SQL AS 'a + 1'", "LANGUAGE SQL AS 'a + 10'"),
+        ("JAVA", java % 1, java % 10),
+    ):
+        sess.sql(f"CREATE FUNCTION fdrop(a BIGINT) RETURNS BIGINT {body_1}")
+        assert sess.sql("SELECT fdrop(1) AS v").collect()[0].v == 2, kind
+        sess.sql("DROP FUNCTION fdrop")
+        with pytest.raises(Exception):
+            sess.sql("SELECT fdrop(1)").collect()
+        sess.sql(f"CREATE FUNCTION fdrop(a BIGINT) RETURNS BIGINT {body_2}")
+        assert sess.sql("SELECT fdrop(1) AS v").collect()[0].v == 11, kind
+        sess.sql("DROP FUNCTION IF EXISTS fdrop")
+        with pytest.raises(Exception):
+            sess.sql("SELECT fdrop(1)").collect()
+
+
+def test_drop_leaves_no_impl_registration(sess):
+    """DROP FUNCTION removes every temporary function a CREATE
+    registered, for all six factory kinds — including the hidden
+    ``__adh_<name>_impl`` JVM UDF behind a JAVA function, which OR
+    REPLACE overwrites rather than duplicates."""
+    ddl = {
+        "fleak_py": "CREATE FUNCTION fleak_py(BIGINT) RETURNS BIGINT "
+        "LANGUAGE PYTHON AS 'return arg0'",
+        "fleak_pd": "CREATE FUNCTION fleak_pd(BIGINT) RETURNS BIGINT "
+        "LANGUAGE PANDAS AS 'return arg0'",
+        "fleak_sql": "CREATE FUNCTION fleak_sql(a BIGINT) RETURNS BIGINT "
+        "LANGUAGE SQL AS 'a'",
+        "fleak_jv": "CREATE OR REPLACE FUNCTION fleak_jv(BIGINT) "
+        "RETURNS BIGINT LANGUAGE JAVA AS $$ public class FLeakJ implements "
+        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+        "  public Long call(Long a) { return a; } } $$",
+        "fleak_agg": "CREATE AGGREGATE FUNCTION fleak_agg(BIGINT) "
+        "RETURNS BIGINT LANGUAGE PANDAS AS 'return int(arg0.sum())'",
+        "fleak_tbl": "CREATE FUNCTION fleak_tbl(n BIGINT) "
+        "RETURNS TABLE (i BIGINT) LANGUAGE PYTHON AS $$\n"
+        "for i in range(int(n)):\n    yield (i,)\n$$",
+    }
+
+    def user_functions():
+        return {
+            r[0].split(".")[-1]
+            for r in sess.sql("SHOW USER FUNCTIONS").collect()
+        }
+
+    before = user_functions()
+    for sql in ddl.values():
+        sess.sql(sql)
+    sess.sql(ddl["fleak_jv"])  # OR REPLACE: still one impl
+    created = user_functions() - before
+    assert created == set(ddl) | {"__adh_fleak_jv_impl"}
+    for name in ddl:
+        sess.sql(f"DROP FUNCTION {name}")
+    assert user_functions() == before
 
 
 def test_inline_java_or_replace_changed_body(sess):

@@ -1201,14 +1201,15 @@ def test_pad_wav_roundtrip_through_strict_codec(spark, sf_dir):
 
 
 def test_minhash_kernel_matches_hof_twin(spark, sf_dir):
-    """The Arrow minhash-signature kernel (default engine since round
-    10) must produce bit-identical array<long> signatures to the
-    pure-Catalyst HOF twin — the affine-min is exact int64 math in
+    """The Arrow minhash-signature kernel must produce bit-identical
+    array<long> signatures to the pure-Catalyst HOF twin
+    (tests/_twins.py) — the affine-min is exact int64 math in
     both, so this is full equality over the real corpus plus
     empty/short edge docs."""
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from _twins import minhash_sig_hof
     from adhesive_spark.operators.dedup import minhash_base_and_bands
     from adhesive_spark.sources.registry import load_table
 
@@ -1222,20 +1223,22 @@ def test_minhash_kernel_matches_hof_twin(spark, sf_dir):
         )
     )
     both = docs.unionByName(edge)
-    hof, _ = minhash_base_and_bands(both, engine="hof")
-    vec, _ = minhash_base_and_bands(both, engine="vectorized")
+    hof = minhash_sig_hof(both)
+    vec, _ = minhash_base_and_bands(both)
     h = {r.id: tuple(r.sig) for r in hof.select("id", "sig").collect()}
     v = {r.id: tuple(r.sig) for r in vec.select("id", "sig").collect()}
     assert h == v and len(h) == both.count()
 
 
 def test_apply_cdc_agg_matches_window_twin(spark, sf_dir):
-    """The map-combinable max(struct) engine (round 11 default) must
-    produce IDENTICAL snapshots to the window twin on the real event
-    log — including null-seq rows (struct null ordering == the window's
-    DESC NULLS LAST) and delete drops."""
+    """apply_cdc's window engine must produce IDENTICAL snapshots to
+    the map-combinable max(struct) twin (tests/_twins.py; the measured
+    negative result) on the real event log — including null-seq rows
+    (struct null ordering == the window's DESC NULLS LAST) and delete
+    drops."""
     from pyspark.sql import functions as F
 
+    from _twins import apply_cdc_agg
     from adhesive_spark.operators.incremental import apply_cdc
     from adhesive_spark.sources.registry import load_table
 
@@ -1250,21 +1253,19 @@ def test_apply_cdc_agg_matches_window_twin(spark, sf_dir):
         "value",
     )
     # inject null-seq rows: a copy of a few events with null ts (must
-    # lose to any non-null ts in both engines)
+    # lose to any non-null ts in both)
     nulled = log.where(F.col("event_id") % 97 == 0).withColumn(
         "ts", F.lit(None).cast("timestamp")
     )
     log = log.unionByName(nulled)
 
-    def snap(engine):
+    def snap(cdc):
         return {
             r["user_id"]: (r["ts"], r["event_id"], r["op"], r["value"])
-            for r in apply_cdc(
-                log, ["user_id"], ["ts", "event_id"], "op", engine=engine
-            ).collect()
+            for r in cdc(log, ["user_id"], ["ts", "event_id"], "op").collect()
         }
 
-    agg, win = snap("agg"), snap("window")
+    agg, win = snap(apply_cdc_agg), snap(apply_cdc)
     assert agg == win and len(agg) > 0
 
 def test_media_byte_builders_match_scalar_reference():

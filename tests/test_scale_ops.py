@@ -497,13 +497,14 @@ def test_salted_sweep_rejects_degenerate_salts(spark):
 
 
 def test_knn_vectorized_matches_hof_twin(spark, sf_dir):
-    """knn_bruteforce's default batched-kernel engine (round 10) must be
-    BYTE-equal to the pure-Catalyst HOF twin — same (query, id, sim,
+    """knn_bruteforce's batched-kernel engine must be BYTE-equal to the
+    pure-Catalyst HOF twin (tests/_twins.py) — same (query, id, sim,
     rank) rows including the 6-dp rounded sims, on the real embedding
     table.  The kernel replays the HOF fold's per-dimension IEEE
     operation order, so this is exact equality, not approximate."""
     from pyspark.sql import functions as F
 
+    from _twins import knn_bruteforce_hof
     from adhesive_spark.operators.similarity import knn_bruteforce
     from adhesive_spark.sources.registry import load_table
 
@@ -515,25 +516,24 @@ def test_knn_vectorized_matches_hof_twin(spark, sf_dir):
     )
     vec = {
         (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in knn_bruteforce(
-            emb, queries, k=5, engine="vectorized"
-        ).collect()
+        for r in knn_bruteforce(emb, queries, k=5).collect()
     }
     hof = {
         (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in knn_bruteforce(emb, queries, k=5, engine="hof").collect()
+        for r in knn_bruteforce_hof(emb, queries, k=5).collect()
     }
     assert vec == hof and len(vec) == 35
 
 
 def test_kmeans_assign_vectorized_matches_hof(spark, sf_dir):
-    """The map-only kernel assignment (round 10 default) must produce
-    the IDENTICAL (vec_id -> cid) labeling as the crossJoin+HOF twin —
-    rounding and argmax semantics live Spark-side in both engines, and
+    """The map-only kernel assignment must produce the IDENTICAL
+    (vec_id -> cid) labeling as the crossJoin+HOF twin (tests/_twins.py)
+    — rounding and argmax semantics live Spark-side in both, and
     the kernel's raw sims replay the fold's IEEE order, so this is
     exact equality on the full embedding table."""
     from pyspark.sql import functions as F
 
+    from _twins import assign_hof
     from adhesive_spark.operators.clustering import _assign
     from adhesive_spark.sources.registry import load_table
 
@@ -546,22 +546,17 @@ def test_kmeans_assign_vectorized_matches_hof(spark, sf_dir):
         .limit(6)
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-    vec = {
-        r.vec_id: r.cid
-        for r in _assign(vectors, cents, engine="vectorized").collect()
-    }
-    hof = {
-        r.vec_id: r.cid
-        for r in _assign(vectors, cents, engine="hof").collect()
-    }
+    vec = {r.vec_id: r.cid for r in _assign(vectors, cents).collect()}
+    hof = {r.vec_id: r.cid for r in assign_hof(vectors, cents).collect()}
     assert vec == hof and len(vec) == vectors.count()
 
 
 def test_knn_corner_inputs_match_hof(spark):
     """r10 ADVICE: null query vectors, null/ragged corpus rows, and
-    zero-norm pairs must not crash either engine and must produce the
-    SAME rows from both — null sims rank last, never kernel NaNs that
+    zero-norm pairs must not crash the kernel or the HOF twin and must
+    produce the SAME rows from both — null sims rank last, never kernel NaNs that
     sort first. Exercises every corner the advice listed."""
+    from _twins import knn_bruteforce_hof
     from adhesive_spark.operators.similarity import knn_bruteforce
 
     corpus = spark.createDataFrame(
@@ -580,15 +575,13 @@ def test_knn_corner_inputs_match_hof(spark):
         "query_id long, embedding array<double>",
     )
 
-    def rows(engine):
+    def rows(knn):
         return sorted(
             (r.query_id, r.rank, r.vec_id, r.sim)
-            for r in knn_bruteforce(
-                corpus, queries, k=6, engine=engine
-            ).collect()
+            for r in knn(corpus, queries, k=6).collect()
         )
 
-    vec, hof = rows("vectorized"), rows("hof")
+    vec, hof = rows(knn_bruteforce), rows(knn_bruteforce_hof)
     assert vec == hof
     # valid pairs score; null/ragged/zero-norm pairs are null sims
     byq = {}
@@ -602,10 +595,11 @@ def test_knn_corner_inputs_match_hof(spark):
 
 def test_knn_float32_width_independent(spark):
     """r10 ADVICE: array<float> embeddings must produce IDENTICAL sims
-    from both engines (both promote to float64 before the fold), so the
-    default-engine choice can never silently change float32 results."""
+    from the kernel and the HOF twin (both promote to float64 before the
+    fold), so the kernel can never silently change float32 results."""
     from pyspark.sql import functions as F
 
+    from _twins import knn_bruteforce_hof
     from adhesive_spark.operators.similarity import knn_bruteforce
 
     corpus = spark.createDataFrame(
@@ -618,24 +612,23 @@ def test_knn_float32_width_independent(spark):
     ).withColumn("embedding", F.col("embedding").cast("array<float>"))
     vec = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim)
-        for r in knn_bruteforce(
-            corpus, queries, k=4, engine="vectorized"
-        ).collect()
+        for r in knn_bruteforce(corpus, queries, k=4).collect()
     )
     hof = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim)
-        for r in knn_bruteforce(corpus, queries, k=4, engine="hof").collect()
+        for r in knn_bruteforce_hof(corpus, queries, k=4).collect()
     )
     assert vec == hof and len(vec) == 8
 
 
 def test_kmeans_assign_corner_inputs_match_hof(spark):
-    """Null/ragged/zero-norm vectors flow through BOTH assignment
-    engines without crashing and land on the same cid (the all-null-sim
+    """Null/ragged/zero-norm vectors flow through the assignment kernel
+    and its HOF twin without crashing and land on the same cid (the all-null-sim
     tie resolves to the lowest cid via the shared struct comparator);
     float32 input assigns identically too."""
     from pyspark.sql import functions as F
 
+    from _twins import assign_hof
     from adhesive_spark.operators.clustering import _assign
 
     vectors = spark.createDataFrame(
@@ -651,8 +644,8 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
     cents = spark.createDataFrame(
         [(7, [1.0, 1.0]), (9, [0.0, 1.0])], "cid long, cv array<double>"
     )
-    vec = {r.vec_id: r.cid for r in _assign(vectors, cents, "vectorized").collect()}
-    hof = {r.vec_id: r.cid for r in _assign(vectors, cents, "hof").collect()}
+    vec = {r.vec_id: r.cid for r in _assign(vectors, cents).collect()}
+    hof = {r.vec_id: r.cid for r in assign_hof(vectors, cents).collect()}
     assert vec == hof and len(vec) == 5
     assert vec[2] == 7 and vec[3] == 7 and vec[4] == 7  # all-null -> min cid
     # float32 twin agreement
@@ -660,6 +653,96 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
         "v", F.col("v").cast("array<float>")
     )
     c32 = cents.withColumn("cv", F.col("cv").cast("array<float>"))
-    vec32 = {r.vec_id: r.cid for r in _assign(v32, c32, "vectorized").collect()}
-    hof32 = {r.vec_id: r.cid for r in _assign(v32, c32, "hof").collect()}
+    vec32 = {r.vec_id: r.cid for r in _assign(v32, c32).collect()}
+    hof32 = {r.vec_id: r.cid for r in assign_hof(v32, c32).collect()}
     assert vec32 == hof32 and len(vec32) == 3
+
+
+def test_knn_and_assign_zero_inputs_return_empty_frames(spark):
+    """Zero queries (knn_bruteforce) and zero centroids (k-means
+    _assign) return an empty frame with the usual column names and
+    types."""
+    from adhesive_spark.operators.clustering import _assign
+    from adhesive_spark.operators.similarity import knn_bruteforce
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    no_queries = spark.createDataFrame(
+        [], "query_id long, embedding array<double>"
+    )
+    knn = knn_bruteforce(corpus, no_queries, k=3)
+    assert knn.dtypes == [
+        ("query_id", "bigint"),
+        ("vec_id", "bigint"),
+        ("sim", "double"),
+        ("rank", "int"),
+    ]
+    assert knn.collect() == []
+
+    vectors = corpus.withColumnRenamed("embedding", "v")
+    no_cents = spark.createDataFrame([], "cid long, cv array<double>")
+    assigned = _assign(vectors, no_cents)
+    assert assigned.dtypes == [
+        ("vec_id", "bigint"),
+        ("v", "array<double>"),
+        ("cid", "bigint"),
+    ]
+    assert assigned.collect() == []
+
+
+def _engine_switch_calls(spark):
+    """One call per operator that used to take ``engine=``, each with
+    that switch's non-default value and otherwise valid inputs."""
+    from adhesive_spark.operators.clustering import _assign
+    from adhesive_spark.operators.dedup import minhash_base_and_bands
+    from adhesive_spark.operators.incremental import apply_cdc
+    from adhesive_spark.operators.similarity import knn_bruteforce
+    from adhesive_spark.queries.training_queries import (
+        gopher_repetition_report,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    docs = spark.createDataFrame(
+        [(1, "web", "a b c a b c")], "doc_id long, source string, text string"
+    )
+    log = spark.createDataFrame(
+        [(1, 10, "upsert")], "k long, ts long, op string"
+    )
+    return {
+        "knn_bruteforce": lambda: knn_bruteforce(
+            vecs, vecs.withColumnRenamed("vec_id", "query_id"), engine="hof"
+        ),
+        "_assign": lambda: _assign(
+            vecs.withColumnRenamed("embedding", "v"),
+            vecs.toDF("cid", "cv"),
+            engine="hof",
+        ),
+        "minhash_base_and_bands": lambda: minhash_base_and_bands(
+            docs, engine="hof"
+        ),
+        "gopher_repetition_report": lambda: gopher_repetition_report(
+            docs, engine="hof"
+        ),
+        "apply_cdc": lambda: apply_cdc(log, ["k"], ["ts"], engine="agg"),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "knn_bruteforce",
+        "_assign",
+        "minhash_base_and_bands",
+        "gopher_repetition_report",
+        "apply_cdc",
+    ],
+)
+def test_removed_engine_switch_raises(spark, op):
+    """Each of these operators has one engine; asking for another by
+    name is an error, never a silent pick."""
+    with pytest.raises(TypeError, match="engine"):
+        _engine_switch_calls(spark)[op]()

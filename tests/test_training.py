@@ -254,13 +254,14 @@ def test_gopher_counts_zero_gram_docs(spark):
 
 
 def test_gopher_vectorized_matches_hof_twin(spark, sf_dir):
-    """The Arrow-batched gopher kernel (default engine since round 10 —
-    ~7× the HOF lanes' whole-box throughput) must be bit-equal to the
-    pure-Catalyst HOF reference twin: same per-source n_docs and all six
+    """The Arrow-batched gopher kernel (~7× the HOF lanes' whole-box
+    throughput) must be bit-equal to the pure-Catalyst HOF reference
+    twin (tests/_twins.py): same per-source n_docs and all six
     fail counters, on the real corpus AND on the adversarial edge docs
     (0/1-token, heavy repeater) from the zero-gram test."""
     import pandas as pd
 
+    from _twins import gopher_repetition_report_hof
     from adhesive_spark.queries.training_queries import (
         gopher_repetition_report,
     )
@@ -283,10 +284,10 @@ def test_gopher_vectorized_matches_hof_twin(spark, sf_dir):
     both = docs.select("doc_id", "source", "text").unionByName(edge)
     vec = {
         r.source: tuple(r)
-        for r in gopher_repetition_report(both, engine="vectorized").collect()
+        for r in gopher_repetition_report(both).collect()
     }
     hof = {
         r.source: tuple(r)
-        for r in gopher_repetition_report(both, engine="hof").collect()
+        for r in gopher_repetition_report_hof(both).collect()
     }
     assert vec == hof

@@ -600,7 +600,7 @@ def main() -> None:
 
     # Gopher repetition rules at N×: deliberately fully in-row — no gram
     # explode, no shuffle (see the q281 docstring). The 6 n-gram lanes
-    # are sort + run-scan HOFs widening each task's per-row work, so
+    # are one Arrow kernel widening each task's per-row work, so
     # replication multiplies only embarrassingly-parallel map work —
     # wall must stay FLAT per row.
     from adhesive_spark.queries.training_queries import (
