@@ -35,9 +35,10 @@ string-level pre-parser (SURVEY §7).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from adhesive_spark.errors import DdlParseError
+from adhesive_spark.functions.typemap import TYPE_WORDS
 
 _HEAD_RE = re.compile(
     r"""^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?(?P<agg>AGGREGATE\s+)?FUNCTION\s+
@@ -56,20 +57,12 @@ _CREATE_FN_PROBE = re.compile(
 
 _ARG_RE = re.compile(r"^(?:(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s+)?(?P<type>.+)$", re.S)
 
-# Type keywords that could be mistaken for an argument name when the DDL uses
-# the positional form `f(BIGINT, BIGINT)` (reference: tests/factory.rs:24).
-_TYPE_WORDS = {
-    "BIGINT", "LONG", "INT", "INTEGER", "SMALLINT", "TINYINT", "FLOAT", "REAL",
-    "DOUBLE", "VARCHAR", "STRING", "TEXT", "CHAR", "BOOLEAN", "BOOL", "DATE",
-    "TIMESTAMP", "BINARY", "BLOB", "BYTEA", "DECIMAL", "NUMERIC", "ARRAY", "MAP",
-    "INT4", "INT8",
-}
-
-
 @dataclass
 class FunctionDefinition:
-    """Parsed + retained DDL, mirroring the reference's
-    ``FunctionDefinition`` retention for serialization (src/fusion.rs:142-153).
+    """One parsed CREATE FUNCTION statement.  The factory registers the
+    function from it and keeps nothing; the reference's
+    ``FunctionDefinition`` also holds the raw DDL for serialization
+    (src/fusion.rs:142-153), which this rebuild does not do.
     """
 
     name: str
@@ -83,7 +76,6 @@ class FunctionDefinition:
     aggregate: bool = False
     returns_table: bool = False
     or_replace: bool = False
-    raw: str = field(default="", repr=False)
 
 
 def is_create_function(sql: str) -> bool:
@@ -144,13 +136,10 @@ def parse_create_function(sql: str) -> FunctionDefinition:
             if not am:
                 raise DdlParseError(f"cannot parse argument: {piece!r}")
             aname, atype = am.group("name"), am.group("type").strip()
-            # Positional form: the "name" token is actually a bare type.
-            if aname is not None and aname.upper() in _TYPE_WORDS and not atype:
-                aname, atype = None, aname
-            if aname is not None and aname.upper() in _TYPE_WORDS:
-                # e.g. "DOUBLE PRECISION" — treat whole piece as a type.
-                atype = piece.strip()
-                aname = None
+            # Positional form whose type has a space ("DOUBLE PRECISION"):
+            # the "name" token is the type's first word.
+            if aname is not None and aname.upper() in TYPE_WORDS:
+                aname, atype = None, piece.strip()
             arg_names.append(aname or f"arg{i}")
             arg_types.append(atype)
     ret = m.group("ret").strip()
@@ -177,7 +166,6 @@ def parse_create_function(sql: str) -> FunctionDefinition:
         aggregate=bool(m.group("agg")),
         returns_table=returns_table,
         or_replace=bool(m.group("replace")),
-        raw=sql,
     )
 
 

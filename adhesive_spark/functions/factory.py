@@ -52,16 +52,17 @@ Languages:
 
 from __future__ import annotations
 
+import decimal
 import importlib
 import re
 import textwrap
 import threading
 import uuid
-from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from adhesive_spark.errors import (
     CompileError,
@@ -74,12 +75,6 @@ from adhesive_spark.functions.ddl import (
     parse_create_function,
 )
 from adhesive_spark.functions.typemap import sql_type_to_spark
-
-
-@dataclass
-class RegisteredFunction:
-    definition: FunctionDefinition
-    fn: Callable | None  # None for JVM-class / SQL-expression registrations
 
 
 def compile_python_body(
@@ -145,17 +140,6 @@ _CLASS_PATH_RE = re.compile(r"^[A-Za-z_$][\w$]*(\.[A-Za-z_$][\w$]*)*$")
 
 #: Same class-name extraction contract as the reference (src/util.rs:13-18).
 _JAVA_CLASS_NAME_RE = re.compile(r"class\s+(\w+)")
-
-#: Compiled-body cache: body text -> (fqn, jar_path). Identical source
-#: compiles to identical bytecode, so re-CREATE (or a re-run of the same
-#: DDL in a benchmark loop) skips the compiler entirely; the content-hash
-#: package mangling still isolates DIFFERENT bodies from each other. The
-#: reference holds one compiled instance per definition the same way
-#: (src/jvm.rs:93-102).  Backed by an on-disk jar cache keyed by the
-#: same content hash, so a FRESH process also skips the compile for a
-#: body any earlier process on the machine compiled.
-_JAVA_BODY_CACHE: dict[str, tuple[str, str]] = {}
-
 
 #: Resolved-once cache-dir handle (the ownership probes below stat the
 #: filesystem; no reason to repeat them per CREATE FUNCTION).
@@ -366,7 +350,13 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
       reference compiles inside its JVM (:class:`_DriverJavac`);
     - the compiled class is packaged as a jar and injected with SQL
       ``ADD JAR``, which registers it on the session classloader of every
-      current and FUTURE executor — the cluster-correct load path.
+      current and FUTURE executor — the cluster-correct load path;
+    - the jar is published in the per-user cache directory under its
+      content hash, and that directory is the only record of compiled
+      bodies: a body whose jar is there with a matching sha256 sidecar
+      is loaded without compiling, in this process or any later one (the
+      reference's one compiled instance per definition,
+      src/jvm.rs:93-102).
 
     Returns the fully-qualified class name to register.
     """
@@ -375,16 +365,6 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     import zipfile
     from pathlib import Path
 
-    cached = _JAVA_BODY_CACHE.get(body)
-    if cached is not None:
-        fqn, jar_path = cached
-        if Path(jar_path).exists():
-            # ADD JAR is idempotent per session and re-arms a fresh session
-            spark.sql(f"ADD JAR '{jar_path}'")
-            return fqn
-        # the cached jar was cleaned under us (e.g. /tmp sweep during a
-        # long-lived process) — recompile instead of a jar-not-found error
-        del _JAVA_BODY_CACHE[body]
     m = _JAVA_CLASS_NAME_RE.search(body)
     if m is None:
         # JavaCodeError("Can't find class name") parity (src/util.rs:25-27)
@@ -400,9 +380,9 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     pkg = f"adhesive.generated.p{digest}"
     fqn = f"{pkg}.{cls}"
     disk_jar = _java_disk_cache_dir() / f"{cls}-p{digest}.jar"
-    if disk_jar.exists() and _jar_integrity_ok(disk_jar):
+    if _jar_integrity_ok(disk_jar):
+        # ADD JAR is idempotent per session and arms a fresh one
         spark.sql(f"ADD JAR '{disk_jar}'")
-        _JAVA_BODY_CACHE[body] = (fqn, str(disk_jar))
         return fqn
     # Spark keys added jars by BASENAME: two bodies that happen to use the
     # same class name must not both produce "<cls>.jar", or the second
@@ -443,27 +423,23 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     stage_sha.write_text(jar_sha)
     os.replace(stage_sha, _jar_sidecar(disk_jar))
     spark.sql(f"ADD JAR '{disk_jar}'")
-    _JAVA_BODY_CACHE[body] = (fqn, str(disk_jar))
     return fqn
 
 
 def _strict_checker(sql_type: str):
     """Value predicate for one declared arg type, or None if the type is
     outside the strict matrix (then it's not checked)."""
-    base = re.split(r"[\s(<]", sql_type.strip(), maxsplit=1)[0].upper()
-    if base in ("BIGINT", "LONG", "INT", "INTEGER", "SMALLINT", "TINYINT",
-                "INT4", "INT8"):
-        return lambda v: isinstance(v, int) and not isinstance(v, bool)
-    if base in ("DOUBLE", "FLOAT", "REAL"):
-        return lambda v: isinstance(v, float)
-    if base in ("VARCHAR", "STRING", "TEXT", "CHAR"):
-        return lambda v: isinstance(v, str)
-    if base in ("BOOLEAN", "BOOL"):
-        return lambda v: isinstance(v, bool)
-    if base in ("DECIMAL", "NUMERIC"):
-        import decimal
-
+    dt = sql_type_to_spark(sql_type)
+    if isinstance(dt, T.DecimalType):
         return lambda v: isinstance(v, decimal.Decimal)
+    if isinstance(dt, T.IntegralType):
+        return lambda v: isinstance(v, int) and not isinstance(v, bool)
+    if isinstance(dt, T.FractionalType):
+        return lambda v: isinstance(v, float)
+    if isinstance(dt, T.StringType):
+        return lambda v: isinstance(v, str)
+    if isinstance(dt, T.BooleanType):
+        return lambda v: isinstance(v, bool)
     return None
 
 
@@ -521,15 +497,30 @@ def _java_impl_name(name: str) -> str:
 
 class FunctionFactory:
     """Session-scoped factory — the ``FunctionFactory`` hook analog
-    (src/fusion.rs:23-27 ``FunctionFactory::create``)."""
+    (src/fusion.rs:23-27 ``FunctionFactory::create``).
+
+    It keeps no record of its own, as the reference's factory hands back
+    ``RegisterFunction::Scalar`` and leaves the record to DataFusion's
+    session registry (src/fusion.rs:78): every function it makes is a
+    temporary function in the SparkSession's catalog, and that catalog
+    alone says which functions exist.  Any number of factories on one
+    SparkSession therefore agree."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.registry: dict[str, RegisteredFunction] = {}
+
+    def exists(self, name: str) -> bool:
+        """True iff ``name`` is a temporary function of the SparkSession,
+        as every kind this factory makes is; builtins and persistent
+        catalog functions are not."""
+        jvm = self.spark._jvm
+        ident = jvm.org.apache.spark.sql.catalyst.FunctionIdentifier.apply(name)
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        return catalog.isTemporaryFunction(ident)
 
     def create_function(self, sql: str) -> None:
         d = parse_create_function(sql)
-        if d.name in self.registry and not d.or_replace:
+        if not d.or_replace and self.exists(d.name):
             raise DdlParseError(
                 f"function {d.name!r} already exists (use CREATE OR REPLACE)"
             )
@@ -557,10 +548,8 @@ class FunctionFactory:
                 )
             fn = compile_python_body(d.name, d.arg_names, d.body)
             self._register_udtf(d, fn)
-            self.registry[d.name] = RegisteredFunction(definition=d, fn=fn)
             return
 
-        fn: Callable | None = None
         if d.strict and lang not in ("PYTHON", "PANDAS", "MODULE"):
             raise DdlParseError(
                 "STRICT (exact-signature enforcement) is only supported for "
@@ -620,35 +609,30 @@ class FunctionFactory:
                 raise UnknownFunctionError(
                     f"cannot register JVM class {target!r}: {e}"
                 ) from e
-            args = ", ".join(
-                f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types)
-            )
             casts = ", ".join(
                 f"CAST({n} AS {t})"
                 for n, t in zip(d.arg_names, d.arg_types)
             )
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
-                f"RETURNS {d.return_type} RETURN {impl}({casts})"
-            )
+            self._create_sql_function(d, f"{impl}({casts})")
         elif lang == "SQL":
-            self._register_sql_macro(d)
+            try:
+                self._create_sql_function(d, d.body)
+            except Exception as e:
+                raise CompileError(
+                    f"Can't compile SQL function {d.name!r}: {e}"
+                ) from e
         else:
             raise DdlParseError(f"unsupported LANGUAGE {lang!r}")
-        self.registry[d.name] = RegisteredFunction(definition=d, fn=fn)
 
     def drop_function(self, name: str, *, if_exists: bool = False) -> None:
         """DROP FUNCTION [IF EXISTS] name — the lifecycle complement of
-        the CREATE path: removes the registry entry and Spark's temporary
-        function registrations (a JAVA function's impl included), so a
-        later call fails resolution and a plain re-CREATE (no OR REPLACE)
-        succeeds again. A failing Spark DROP propagates."""
-        if name not in self.registry:
-            if if_exists:
-                return
-            raise UnknownFunctionError(f"function {name!r} does not exist")
-        del self.registry[name]
-        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+        the CREATE path: removes Spark's temporary function registrations
+        (a JAVA function's impl included), so a later call fails
+        resolution and a plain re-CREATE (no OR REPLACE) succeeds again.
+        Spark's error for a missing name (without ``if_exists``) and any
+        other failing DROP propagate."""
+        guard = "IF EXISTS " if if_exists else ""
+        self.spark.sql(f"DROP TEMPORARY FUNCTION {guard}{name}")
         # a JAVA/CLASS registration's JVM impl (an OR REPLACE may since
         # have switched the name to another language, so always drop it)
         self.spark.sql(
@@ -713,18 +697,16 @@ class FunctionFactory:
         # deterministic (documented deviation from the scalar default).
         self.spark.udf.register(d.name, udf)
 
-    def _register_sql_macro(self, d: FunctionDefinition) -> None:
-        """LANGUAGE SQL — registered through Spark's own CREATE FUNCTION
-        (SQL-body UDFs are Catalyst-native in Spark 3.5+/4.x: inlined into
-        the plan, fully codegen'd)."""
+    def _create_sql_function(self, d: FunctionDefinition, expr: str) -> None:
+        """``CREATE OR REPLACE TEMPORARY FUNCTION`` ``d.name`` over the
+        DDL's named arguments, returning the SQL expression ``expr``.
+        Spark's SQL-body functions are Catalyst-native (inlined into the
+        plan, fully codegen'd), so the SQL kind and the JAVA/CLASS cast
+        wrapper cost nothing at run time."""
         args = ", ".join(
             f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types)
         )
-        stmt = (
+        self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
-            f"RETURNS {d.return_type} RETURN {d.body}"
+            f"RETURNS {d.return_type} RETURN {expr}"
         )
-        try:
-            self.spark.sql(stmt)
-        except Exception as e:
-            raise CompileError(f"Can't compile SQL function {d.name!r}: {e}") from e

@@ -40,6 +40,13 @@ _SIMPLE: dict[str, T.DataType] = {
     "BYTEA": T.BinaryType(),
 }
 
+#: First word of every type name ``sql_type_to_spark`` accepts.  The DDL
+#: parser uses it to tell a positional argument (``f(DOUBLE PRECISION)``)
+#: from a named one (``f(x DOUBLE)``), reference tests/factory.rs:24.
+TYPE_WORDS = frozenset(n.split()[0] for n in _SIMPLE) | {
+    "DECIMAL", "NUMERIC", "ARRAY", "MAP",
+}
+
 _DECIMAL_RE = re.compile(r"^(?:DECIMAL|NUMERIC)\s*(?:\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?$", re.I)
 _ARRAY_RE = re.compile(r"^ARRAY\s*<(.+)>$", re.I | re.S)
 _MAP_RE = re.compile(r"^MAP\s*<(.+),(.+)>$", re.I | re.S)

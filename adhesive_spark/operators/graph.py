@@ -24,8 +24,6 @@ UDF kernel, java/.../Adhesive.java:68-70); this is north-star surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
@@ -38,22 +36,12 @@ from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 #: linear pass.  At 100 TB the pair graph enters the distributed loop
 #: and drops to the local finish only once the star rounds have
 #: contracted it below the gate (each round shrinks the edge set toward
-#: the star forest).  Parameterised for clusters with bigger drivers.
+#: the star forest).  A cluster with a bigger driver passes its own
+#: ``local_threshold``.
 #: String-keyed graphs are additionally BYTE-gated (see :func:`_cc_gate`):
 #: the count threshold assumes 16-byte long pairs, and 1M fat string
 #: keys can be far more than that budget.
-_CC_LOCAL_EDGES_DEFAULT = 1_000_000
-
-
-def _cc_local_threshold() -> int:
-    try:
-        return int(
-            os.environ.get(
-                "SPARK_GRAFT_CC_LOCAL_EDGES", _CC_LOCAL_EDGES_DEFAULT
-            )
-        )
-    except ValueError:
-        return _CC_LOCAL_EDGES_DEFAULT
+_CC_LOCAL_EDGES = 1_000_000
 
 
 def _cc_gate(e: DataFrame, max_edges: int) -> tuple[int, bool]:
@@ -153,19 +141,17 @@ def connected_components(
     dst: str = "id_b",
     *,
     max_iter: int = 25,
-    local_threshold: int | None = None,
+    local_threshold: int = _CC_LOCAL_EDGES,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id reachable from the node.
 
-    ``local_threshold`` (default: $SPARK_GRAFT_CC_LOCAL_EDGES, 1M):
+    ``local_threshold`` (default ``_CC_LOCAL_EDGES``, 1M edges):
     when the deduplicated edge set is at most this many edges, the
     closure is computed in one driver-side union-find pass over the
     collected pairs instead of iterating cluster-wide label rounds —
     identical output, none of the per-round shuffle/fixed-job cost.
     0 disables the local finish (the distributed loop always runs)."""
-    if local_threshold is None:
-        local_threshold = _cc_local_threshold()
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -417,7 +403,7 @@ def connected_components_star(
     dst: str = "id_b",
     *,
     max_rounds: int = 12,
-    local_threshold: int | None = None,
+    local_threshold: int = _CC_LOCAL_EDGES,
 ) -> DataFrame:
     """(node, component) via alternating LARGE-STAR / SMALL-STAR rounds
     — the MapReduce-optimal connected-components algorithm (Kiveris et
@@ -442,7 +428,7 @@ def connected_components_star(
     :func:`connected_components` by test on both a dense pair graph
     and a deep path graph.
 
-    ``local_threshold`` (default: $SPARK_GRAFT_CC_LOCAL_EDGES, 1M):
+    ``local_threshold`` (default ``_CC_LOCAL_EDGES``, 1M edges):
     whenever the current non-self-loop edge set is at most this many
     edges — at entry, or after any round has contracted it that far —
     the remaining closure is finished in one driver-side union-find
@@ -451,8 +437,6 @@ def connected_components_star(
     O(log² n) further full-shuffle rounds with one Arrow collect the
     size of a broadcast side.  0 disables the local finish.
     """
-    if local_threshold is None:
-        local_threshold = _cc_local_threshold()
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # ONE canonical materialization (orient high→low, KEEP self-loops,
     # dedup): both the node set and the working edge set derive from

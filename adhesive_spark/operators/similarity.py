@@ -338,72 +338,6 @@ def knn_lsh(
     )
 
 
-def knn_lsh_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Multi-probe sign-LSH top-k (Lv et al. 2007, "Multi-Probe LSH"):
-    each query probes its own bucket PLUS every Hamming-1 perturbation
-    (one sign bit flipped), recovering most of the recall lost to
-    near-boundary vectors WITHOUT more hash tables — the standard
-    memory/recall lever. A corpus vector lives in exactly one bucket
-    and the probe set is distinct by construction, so no candidate is
-    scored twice (no dedup stage needed).
-
-    Scale shape: identical to :func:`knn_lsh` — the corpus is bucketed
-    once and joined against a BROADCAST probe list that is only
-    ``(n_planes + 1)×`` the query count; candidate cost grows with the
-    probed buckets' occupancy, never the corpus."""
-    cb = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cvec"),
-        lsh_bucket(F.col(vec_col), dim, n_planes=n_planes, seed=seed).alias(
-            "__bucket"
-        ),
-    )
-    qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        lsh_bucket(F.col(vec_col), dim, n_planes=n_planes, seed=seed).alias(
-            "__b0"
-        ),
-    )
-    probes = qb.select(
-        query_id_col,
-        "__qvec",
-        F.explode(
-            F.array(
-                F.col("__b0"),
-                *[
-                    F.expr(f"__b0 ^ {1 << i}").alias(f"p{i}")
-                    for i in range(n_planes)
-                ],
-            )
-        ).alias("__bucket"),
-    )
-    scored = cb.join(F.broadcast(probes), "__bucket").select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
-
-
 def build_ivf_index(
     corpus: DataFrame,
     *,

@@ -273,13 +273,6 @@ def cms_col(col: Column, salt: str) -> Column:
     )
 
 
-def cms_col_sql(expr: str, salt: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5('{salt}' || {expr}), 1, 8)) AS BIGINT)"
-        f" % {CMS_WIDTH}"
-    )
-
-
 def cms_build(
     items: DataFrame, col: str, *, weight_col: str | None = None
 ) -> DataFrame:

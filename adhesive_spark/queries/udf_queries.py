@@ -26,8 +26,9 @@ def _lineitem_view(spark, sf_dir) -> None:
 
 
 def _sess(spark: SparkSession) -> AdhesiveSession:
-    # AdhesiveSession is a thin stateless wrapper; the UDF registry lives
-    # in the SparkSession, so re-wrapping per query is free.
+    # AdhesiveSession is a thin stateless wrapper; the SparkSession's
+    # catalog is the only record of the functions, so re-wrapping per
+    # query is free and every wrapper sees the same functions.
     return AdhesiveSession(spark)
 
 

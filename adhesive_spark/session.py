@@ -4,9 +4,12 @@
 ``SessionContext::new().with_function_factory(...)``
 (examples/adhesive.rs:11-13): a thin wrapper whose ``sql()`` recognizes the
 inline-body ``CREATE FUNCTION`` DDL (which Spark's grammar lacks) and routes
-it to the factory; every other statement passes through to Spark SQL /
-Catalyst untouched — the rebuild inherits the relational surface from Spark
-exactly as the reference inherits it from DataFusion (SURVEY §2.2).
+it to the factory, as it does a ``DROP FUNCTION`` of a temporary function;
+every other statement passes through to Spark SQL / Catalyst untouched — the
+rebuild inherits the relational surface from Spark exactly as the reference
+inherits it from DataFusion (SURVEY §2.2).  The wrapper holds no state of
+its own: the SparkSession's catalog is the only record of the functions, so
+any number of wrappers on one SparkSession see the same ones.
 
 ``build_spark`` centralizes the scale-oriented defaults: AQE (runtime
 re-planning + skew-join handling), Arrow-batched Python UDF transport
@@ -61,6 +64,9 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # TIMESTAMP at the scan (UTC session => instant-preserving) so ts
     # predicates stay pushdown-eligible and watermarks/windows are legal
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # older testdata stores ns-unit timestamps, which Spark's reader
+    # rejects; read them as INT64 nanos (load_table truncates to us)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.python.worker.reuse": "true",
     # sources/pydatasource.SyntheticDocsReader implements pushFilters();
     # Spark 4.1 REFUSES such a reader unless pushdown is enabled
@@ -131,12 +137,11 @@ class AdhesiveSession:
             return self._ddl_ok
         if is_drop_function(query):
             name, if_exists = parse_drop_function(query)
-            if name in self.factory.registry:
+            if self.factory.exists(name):
                 self.factory.drop_function(name, if_exists=if_exists)
                 return self._ddl_ok
-            # not a factory function: pass through so catalog/temp
-            # functions created outside the factory keep Spark's native
-            # DROP semantics (pre-interceptor behavior)
+            # not a temporary function: pass through so persistent catalog
+            # functions keep Spark's native DROP semantics
             return self.spark.sql(query, **kwargs)
         return self.spark.sql(query, **kwargs)
 

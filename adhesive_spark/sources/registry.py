@@ -28,18 +28,10 @@ TABLES = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Timestamp normalization, robust to either testdata vintage:
-    #  - ns-unit parquet (old generator): Spark's reader rejects ns; read
-    #    as raw INT64 nanos and truncate to microsecond TIMESTAMP
-    #    (identical to DuckDB's ns→us cast, so oracles agree).
-    #  - us-unit parquet without timezone (current generator): would read
-    #    as TIMESTAMP_NTZ; turning off NTZ inference reads it as plain
-    #    TIMESTAMP at the SCAN (session TZ is UTC, instant-preserving),
-    #    keeping ts predicates pushdown-eligible — a post-scan cast would
-    #    strip PushedFilters — and keeping watermarks/windows legal.
-    # Both confs are dynamic, safe to set per-load.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # Old-vintage testdata stores ``ts`` as ns-unit parquet, which Spark
+    # reads as raw INT64 nanos (``spark.sql.legacy.parquet.nanosAsLong``,
+    # set with the scan options in ``session.DEFAULT_CONFIGS``); truncate
+    # it to a microsecond TIMESTAMP, identical to DuckDB's ns->us cast.
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.typeName() == "long":

@@ -241,6 +241,82 @@ def test_duplicate_without_replace(sess):
         )
 
 
+def test_two_wrappers_share_one_function_record(spark):
+    """Two AdhesiveSessions on one SparkSession see the same functions,
+    because the session catalog is the only record of them: a plain
+    re-CREATE through the second raises and leaves the first's body in
+    place, and a DROP through the second removes a SQL function the
+    first made."""
+    from adhesive_spark import AdhesiveSession
+
+    first, second = AdhesiveSession(spark), AdhesiveSession(spark)
+    first.sql(
+        "CREATE FUNCTION wrap_py(BIGINT) RETURNS BIGINT "
+        "DETERMINISTIC LANGUAGE PYTHON AS 'return arg0 + 1'"
+    )
+    try:
+        with pytest.raises(DdlParseError, match="already exists"):
+            second.sql(
+                "CREATE FUNCTION wrap_py(BIGINT) RETURNS BIGINT "
+                "DETERMINISTIC LANGUAGE PYTHON AS 'return arg0 + 2'"
+            )
+        assert second.sql("SELECT wrap_py(1) AS v").collect()[0].v == 2
+    finally:
+        first.sql("DROP FUNCTION IF EXISTS wrap_py")
+    first.sql("CREATE FUNCTION wrap_sql(a BIGINT) RETURNS BIGINT "
+              "LANGUAGE SQL AS 'a * 3'")
+    assert second.sql("SELECT wrap_sql(2) AS v").collect()[0].v == 6
+    second.sql("DROP FUNCTION wrap_sql")
+    with pytest.raises(AnalysisException):
+        first.sql("SELECT wrap_sql(2)").collect()
+
+
+#: Python values a STRICT argument of each declared type accepts (None:
+#: the type is not checked).  Keys: every typemap name plus three
+#: parametrised spellings.
+_STRICT_ACCEPTS = {
+    **dict.fromkeys(
+        ["BIGINT", "LONG", "INT8", "INT", "INTEGER", "INT4", "SMALLINT",
+         "TINYINT"], "int"),
+    **dict.fromkeys(["FLOAT", "REAL", "DOUBLE", "DOUBLE PRECISION"], "float"),
+    **dict.fromkeys(["VARCHAR", "STRING", "TEXT", "CHAR", "VARCHAR(10)"], "str"),
+    **dict.fromkeys(["BOOLEAN", "BOOL"], "bool"),
+    "DECIMAL(10,2)": "decimal",
+    **dict.fromkeys(
+        ["DATE", "TIMESTAMP", "BINARY", "BLOB", "BYTEA", "ARRAY<INT>"], None),
+}
+
+
+def _type_names():
+    from adhesive_spark.functions.typemap import _SIMPLE
+
+    return sorted(set(_SIMPLE) | {"DECIMAL(10,2)", "VARCHAR(10)", "ARRAY<INT>"})
+
+
+@pytest.mark.parametrize("sql_type", _type_names())
+def test_type_name_parse_and_strict_values(sql_type):
+    """Every type name parses as a positional argument and as a named
+    one, and STRICT either accepts exactly one kind of Python value for
+    it or leaves it unchecked."""
+    from decimal import Decimal
+
+    from adhesive_spark.functions.ddl import parse_create_function
+    from adhesive_spark.functions.factory import _strict_checker
+
+    d = parse_create_function(
+        f"CREATE FUNCTION f({sql_type}, x {sql_type}) RETURNS BIGINT AS '1'"
+    )
+    assert (d.arg_names, d.arg_types) == (["arg0", "x"], [sql_type, sql_type])
+    samples = {"int": 7, "float": 1.5, "str": "s", "bool": True,
+               "decimal": Decimal("1.25")}
+    want = _STRICT_ACCEPTS[sql_type]
+    check = _strict_checker(sql_type)
+    if want is None:
+        assert check is None
+    else:
+        assert {k for k, v in samples.items() if check(v)} == {want}
+
+
 def test_type_matrix(sess):
     """M1: the wider RETURNS matrix implied by Adhesive.java:79-199."""
     cases = [
@@ -449,10 +525,9 @@ def test_drop_leaves_no_impl_registration(sess):
 
 def test_inline_java_or_replace_changed_body(sess):
     """OR REPLACE of a JAVA function with a CHANGED body must dispatch to
-    the new bytecode — guards the body-keyed compile cache
-    (factory.py _JAVA_BODY_CACHE) against serving a stale class, the
-    Java-path twin of the reference's re-CREATE mangling guarantee
-    (src/util.rs:20-36)."""
+    the new bytecode — guards the jar cache directory, keyed by the body's
+    content hash, against serving a stale class, the Java-path twin of
+    the reference's re-CREATE mangling guarantee (src/util.rs:20-36)."""
     sess.sql(
         "CREATE OR REPLACE FUNCTION jver(BIGINT) RETURNS BIGINT LANGUAGE JAVA "
         "AS $$ public class JVer implements "
@@ -471,7 +546,7 @@ def test_inline_java_or_replace_changed_body(sess):
 
 def test_inline_java_same_body_two_names(sess):
     """Two functions CREATEd from the IDENTICAL Java body share one
-    compiled jar (the body cache) but register independently — both
+    compiled jar (the jar cache directory) but register independently — both
     callable, and dropping one leaves the other live."""
     body = (
         "AS $$ public class JTwin implements "
@@ -502,34 +577,6 @@ def test_java_declared_signature_coerces_args(sess):
     assert sess.sql("SELECT jco(2, 3) AS v").collect()[0].v == 6
     # and a DOUBLE-typed call still coerces (truncating cast semantics)
     assert sess.sql("SELECT jco(CAST(2.9 AS DOUBLE), 2) AS v").collect()[0].v == 4
-
-
-def test_java_jar_cache_stale_path_recompiles(sess):
-    """A cache entry whose jar no longer exists on disk (e.g. /tmp swept
-    between sessions — the cache is process-wide, sessions are not) must
-    fall through to recompilation, not fail ADD JAR with jar-not-found.
-    The stale path is injected directly: actually deleting a jar that a
-    LIVE SparkContext already added would poison every later stage (tasks
-    re-fetch all session jars; Spark has no REMOVE JAR), which is exactly
-    why the validation must happen BEFORE the ADD JAR."""
-    from adhesive_spark.functions.factory import _JAVA_BODY_CACHE, compile_java_body
-
-    body = (
-        "public class JGone implements "
-        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
-        "  public Long call(Long a) { return a + 1; } }"
-    )
-    assert body not in _JAVA_BODY_CACHE
-    _JAVA_BODY_CACHE[body] = ("stale.pkg.JGone", "/nonexistent/JGone.jar")
-    fqn = compile_java_body(sess.spark, "jgone", body)  # must NOT raise
-    assert fqn != "stale.pkg.JGone"
-    cached_fqn, cached_jar = _JAVA_BODY_CACHE[body]
-    assert cached_fqn == fqn and cached_jar != "/nonexistent/JGone.jar"
-    sess.sql(
-        f"CREATE OR REPLACE FUNCTION jgone(BIGINT) RETURNS BIGINT "
-        f"LANGUAGE CLASS AS '{fqn}'"
-    )
-    assert sess.sql("SELECT jgone(41) AS v").collect()[0].v == 42
 
 
 def test_create_aggregate_function(sess):
@@ -694,18 +741,18 @@ def test_udf_state_is_per_worker_not_shared(sess):
 
 
 def _evict_java_body(body):
-    """Force the next compile of ``body`` down the cold path: drop its
-    in-memory entry and its published jar + sidecar. Returns the jar path."""
+    """Force the next compile of ``body`` down the cold path: delete its
+    published jar + sidecar from the jar cache directory. Returns the jar
+    path. Only for a body this JVM has not loaded yet: Spark has no
+    REMOVE JAR, and every later task re-fetches the session's jars."""
     import hashlib
 
     from adhesive_spark.functions.factory import (
-        _JAVA_BODY_CACHE,
         _JAVA_CLASS_NAME_RE,
         _jar_sidecar,
         _java_disk_cache_dir,
     )
 
-    _JAVA_BODY_CACHE.pop(body, None)
     cls = _JAVA_CLASS_NAME_RE.search(body).group(1)
     digest = hashlib.sha256(body.encode()).hexdigest()[:12]
     jar = _java_disk_cache_dir() / f"{cls}-p{digest}.jar"
@@ -804,7 +851,6 @@ def test_jar_publish_is_same_filesystem_rename(sess, monkeypatch):
     from pathlib import Path
 
     from adhesive_spark.functions.factory import (
-        _JAVA_BODY_CACHE,
         _jar_integrity_ok,
         compile_java_body,
     )
@@ -828,36 +874,41 @@ def test_jar_publish_is_same_filesystem_rename(sess, monkeypatch):
     monkeypatch.setattr(os, "replace", same_dir_only)
     fqn = compile_java_body(sess.spark, "jexdev", body)
     assert fqn.endswith(".JExdev")
-    published = Path(_JAVA_BODY_CACHE[body][1])
-    assert published == jar and _jar_integrity_ok(published)
+    assert _jar_integrity_ok(jar)
     # no staging litter left behind in the cache directory
-    assert not list(published.parent.glob(".tmp-*"))
+    assert not list(jar.parent.glob(".tmp-*"))
 
 
-def test_java_disk_cache_cross_process_hit(sess):
-    """Disk-cache hit path end-to-end: a second 'process' (simulated by
-    clearing the in-memory body cache) must reuse the published jar —
-    same FQN, no recompile — and the published entry must carry a valid
-    integrity sidecar."""
-    from adhesive_spark.functions.factory import (
-        _JAVA_BODY_CACHE,
-        _jar_integrity_ok,
-        compile_java_body,
-    )
-    from pathlib import Path
+def test_java_disk_cache_cross_process_hit(sess, monkeypatch):
+    """The jar cache directory is the only record of compiled bodies: a
+    body whose jar and sha256 sidecar are published there is loaded
+    without compiling and without republishing, exactly as a fresh
+    process finds a body an earlier one compiled."""
+    import adhesive_spark.functions.factory as fac
 
     body = (
         "public class JDiskHit implements "
         "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
         "  public Long call(Long a) { return a - 5; } }"
     )
-    fqn1 = compile_java_body(sess.spark, "jdisk", body)
-    jar1 = Path(_JAVA_BODY_CACHE[body][1])
-    assert _jar_integrity_ok(jar1)
-    del _JAVA_BODY_CACHE[body]  # simulate a fresh process
-    fqn2 = compile_java_body(sess.spark, "jdisk", body)
-    assert fqn2 == fqn1
-    assert Path(_JAVA_BODY_CACHE[body][1]) == jar1
+    jar = _evict_java_body(body)
+    fqn = fac.compile_java_body(sess.spark, "jdisk", body)
+    assert fac._jar_integrity_ok(jar)
+    published = [(f.name, f.stat().st_ino, f.stat().st_mtime_ns)
+                 for f in (jar, fac._jar_sidecar(jar))]
+
+    def no_compile(*args):
+        raise AssertionError("a published body must not be compiled again")
+
+    monkeypatch.setattr(fac, "_compile_in_driver", no_compile)
+    assert fac.compile_java_body(sess.spark, "jdisk", body) == fqn
+    assert [(f.name, f.stat().st_ino, f.stat().st_mtime_ns)
+            for f in (jar, fac._jar_sidecar(jar))] == published
+    sess.sql(
+        "CREATE OR REPLACE FUNCTION jdisk(BIGINT) RETURNS BIGINT "
+        f"LANGUAGE JAVA AS $$ {body} $$"
+    )
+    assert sess.sql("SELECT jdisk(8) AS v").collect()[0].v == 3
 
 
 def test_java_compile_leaves_no_workdir(sess, tmp_path, monkeypatch):
