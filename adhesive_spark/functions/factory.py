@@ -58,6 +58,7 @@ import re
 import textwrap
 import threading
 import uuid
+from functools import cached_property
 from typing import Any, Callable
 
 from pyspark.sql import SparkSession
@@ -509,18 +510,35 @@ class FunctionFactory:
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
+    @cached_property
+    def _function_identifier(self):
+        # py4j resolves a class name one package at a time, a JVM round
+        # trip each; resolve it once per factory, not once per lookup
+        return self.spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+
+    def _catalog_ident(self, name: str):
+        """(Spark session catalog, ``FunctionIdentifier`` of ``name``)."""
+        ident = self._function_identifier.apply(name)
+        return self.spark._jsparkSession.sessionState().catalog(), ident
+
     def exists(self, name: str) -> bool:
         """True iff ``name`` is a temporary function of the SparkSession,
         as every kind this factory makes is; builtins and persistent
         catalog functions are not."""
-        jvm = self.spark._jvm
-        ident = jvm.org.apache.spark.sql.catalyst.FunctionIdentifier.apply(name)
-        catalog = self.spark._jsparkSession.sessionState().catalog()
+        catalog, ident = self._catalog_ident(name)
         return catalog.isTemporaryFunction(ident)
 
     def create_function(self, sql: str) -> None:
         d = parse_create_function(sql)
-        if not d.or_replace and self.exists(d.name):
+        catalog, ident = self._catalog_ident(d.name)
+        if catalog.isBuiltinFunction(ident):
+            # a temporary function of a builtin's name would shadow the
+            # builtin for the Python kinds, and Spark refuses it for the
+            # SQL kind; refuse it for every kind
+            raise DdlParseError(
+                f"function {d.name!r} is a Spark builtin; choose another name"
+            )
+        if not d.or_replace and catalog.isTemporaryFunction(ident):
             raise DdlParseError(
                 f"function {d.name!r} already exists (use CREATE OR REPLACE)"
             )
@@ -610,7 +628,7 @@ class FunctionFactory:
                     f"cannot register JVM class {target!r}: {e}"
                 ) from e
             casts = ", ".join(
-                f"CAST({n} AS {t})"
+                f"CAST({n} AS {sql_type_to_spark(t).simpleString()})"
                 for n, t in zip(d.arg_names, d.arg_types)
             )
             self._create_sql_function(d, f"{impl}({casts})")
@@ -702,11 +720,14 @@ class FunctionFactory:
         DDL's named arguments, returning the SQL expression ``expr``.
         Spark's SQL-body functions are Catalyst-native (inlined into the
         plan, fully codegen'd), so the SQL kind and the JAVA/CLASS cast
-        wrapper cost nothing at run time."""
+        wrapper cost nothing at run time.  Types are written as Spark
+        spells them, so every name ``typemap`` accepts works here too."""
         args = ", ".join(
-            f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types)
+            f"{n} {sql_type_to_spark(t).simpleString()}"
+            for n, t in zip(d.arg_names, d.arg_types)
         )
+        ret = sql_type_to_spark(d.return_type).simpleString()
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
-            f"RETURNS {d.return_type} RETURN {expr}"
+            f"RETURNS {ret} RETURN {expr}"
         )

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from adhesive_spark.operators.text import fround
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus
 
 
 def label_centroids(
@@ -210,7 +210,7 @@ def kmeans(
     """
     vectors = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     centroids = (
         vectors.orderBy("vec_id")
         .limit(k)

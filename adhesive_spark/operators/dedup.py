@@ -36,8 +36,7 @@ from pyspark.sql.window import Window
 from pyspark.sql.types import LongType
 
 from adhesive_spark.operators.text import fingerprint, normalize_text
-from adhesive_spark.sources.registry import ensure_parallelism
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
 
 # Mersenne prime 2^31-1: affine minhash permutations stay in 31-bit
 # space so a*h+b (< 2^61) never overflows ANSI-mode BIGINT arithmetic.
@@ -301,7 +300,7 @@ def minhash_base_and_bands(
         F.transform(
             "shingles", lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE))
         ),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
 
     sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
     base = hashed.select("id", "shingles", sig.alias("sig"))
@@ -502,7 +501,7 @@ def simhash_pairs(
     4 chunks guarantees a shared chunk only for ≤3 differing chunks —
     standard SimHash banding recall).
     """
-    sigs = simhash_signatures(df, text_col, id_col).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    sigs = simhash_signatures(df, text_col, id_col).transform(checkpoint_corpus)
     chunks = sigs.select(
         "id",
         "simhash",
@@ -590,7 +589,7 @@ def ngram_jaccard_pairs(
             "__df",
             F.count("*").over(Window.partitionBy("shingle")),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     sizes = occ.groupBy("id").agg(F.count("*").alias("n_sh"))
     joinable = occ
@@ -658,7 +657,7 @@ def containment_pairs(
             "__df",
             F.count("*").over(Window.partitionBy("shingle")),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     sizes = occ.groupBy("id").agg(F.count("*").alias("n_sh"))
     joinable = occ
@@ -834,7 +833,7 @@ def bloom_membership_dedup(
     # set is exactly what the exact verify joins against, so a single
     # eager materialization (the same bytes the verify's distinct
     # shuffle writes anyway) now feeds both consumers.
-    idx_fp = index.select("doc_fp").distinct().localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    idx_fp = index.select("doc_fp").distinct().transform(checkpoint_corpus)
     words = bloom_build(idx_fp, n_words=n_words, k=k)
     n_bits = 32 * n_words
     b = batch.select(
@@ -939,7 +938,7 @@ def ppjoin_pairs(
         # used three times (prefix generation + both verify sides):
         # materialize once or the scan→freq-join→collect subtree runs
         # 3× and triples the exchange count
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     prefix_len = (
         F.size("sh_arr")

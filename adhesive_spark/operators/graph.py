@@ -3,20 +3,19 @@ dedup closure.
 
 ``dedup_minhash`` (operators/dedup.py) is single-linkage one level deep;
 the exact variant needs the transitive closure of the near-dup pair
-graph. This is the classic iterative min-label propagation:
-
-- each node starts labeled with its own id;
-- every round, a node takes the min label among itself and its
-  neighbors (one shuffle per round: join on neighbor + groupBy node);
-- converges in O(component diameter) rounds — near-dup clusters are
-  shallow (dup rings around a source doc), so 3-5 rounds in practice.
+graph. :func:`connected_components` computes it with alternating
+large-star / small-star rounds (Kiveris et al., "Connected Components
+in MapReduce and Beyond"): every round rewires each node toward its
+neighborhood minimum, so components collapse in O(log² n) rounds
+whatever their diameter. Near-dup chains (A~B~C~…) are deep paths, the
+shape on which diameter-bound label propagation needs one round per
+hop.
 
 Scale notes: lineage is cut with ``localCheckpoint`` every round —
 without it the plan doubles per iteration and the driver dies planning
-round ~15 long before data size matters. For graphs with whale
-components (diameter ≫ 10) the two-phase large-star/small-star
-algorithm halves the round count; this min-propagation loop is the
-right shape for dedup graphs, which are wide and flat.
+round ~15 long before data size matters. Once the edge set is small
+enough (at entry, or after rounds have contracted it), the rest of the
+closure is one driver-side union-find pass.
 
 The reference has no iterative operators (its only loop is the per-row
 UDF kernel, java/.../Adhesive.java:68-70); this is north-star surface.
@@ -26,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus
 
 #: Edge-count gate below which the component closure finishes on the
 #: driver (union-find over the collected edge list) instead of running
@@ -78,7 +77,7 @@ def _solve_components_locally(e: DataFrame) -> DataFrame:
     """Union-find finish for a SMALL edge set (the caller gates on a
     measured count): collect the two edge columns via Arrow, label every
     node that appears with the MINIMUM node id of its component —
-    exactly the min-label / star fixpoint semantics (UTF-8 byte order
+    exactly the star fixpoint semantics (UTF-8 byte order
     and Python code-point order agree for strings, so min is
     engine-identical) — and return a (node, component) DataFrame.
     Self-loops and duplicate/bidirectional edges are tolerated."""
@@ -140,87 +139,146 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     *,
-    max_iter: int = 25,
+    max_rounds: int = 12,
     local_threshold: int = _CC_LOCAL_EDGES,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id reachable from the node.
 
-    ``local_threshold`` (default ``_CC_LOCAL_EDGES``, 1M edges):
-    when the deduplicated edge set is at most this many edges, the
-    closure is computed in one driver-side union-find pass over the
-    collected pairs instead of iterating cluster-wide label rounds —
-    identical output, none of the per-round shuffle/fixed-job cost.
-    0 disables the local finish (the distributed loop always runs)."""
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = sym.union(
-        sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    sym = sym.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
-    _, fits = _cc_gate(sym, 2 * local_threshold)
-    if fits:
-        # one canonical direction (plus self-loops) is enough for the
-        # union-find, and halves the bytes collected
-        return _solve_components_locally(sym.where(F.col("a") >= F.col("b")))
+    Alternating LARGE-STAR / SMALL-STAR rounds:
 
-    labels = (
-        sym.select(F.col("a").alias("node"))
+    - large-star(u): every neighbor v > u rewires to min(Γ(u) ∪ {u});
+    - small-star(u): u and its smaller neighbors rewire to their min.
+
+    Each is one groupBy + one equi-join per round, and the rounds
+    needed grow as O(log² n), not with component diameter: a 10⁹-node
+    path needs ~30 rounds, where min-label propagation would need 10⁹.
+    Fixpoint = the edge set is a star forest (child → component min);
+    non-convergence within ``max_rounds`` raises loudly (never a
+    silently-partial labeling). Self-loops are tolerated: they pin
+    isolated nodes into the output (the q260 grid convention).
+
+    ``local_threshold`` (default ``_CC_LOCAL_EDGES``, 1M edges): when
+    the set about to be collected is at most this many edges, the
+    closure finishes in one driver-side union-find pass instead of
+    more cluster-wide rounds — identical labels, since star rounds
+    preserve the component partition.  At entry that set is the
+    canonical edge set with its self-loops, which names every node, so
+    the union-find result is the answer as it stands.  After some
+    rounds it is the contracted edge set, which has lost its isolated
+    nodes, so the result is joined back to the node set.  0 disables
+    the local finish.
+    """
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # ONE canonical materialization (orient high→low, KEEP self-loops,
+    # dedup): the entry-time local finish, the node set and the working
+    # edge set all derive from it, so the — possibly expensive —
+    # upstream pair source is evaluated exactly once.
+    canon = (
+        raw.select(
+            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
+        )
         .distinct()
-        .withColumn("component", F.col("node"))
+        .transform(checkpoint_corpus)
     )
-    # ``max_iter`` bounds CHANGING rounds; convergence is detected by a
-    # quiescent round, so up to max_iter+1 joins run. Counting changing
-    # rounds (not loop trips) avoids a spurious failure when the final
-    # allowed round makes the last change and the next one merely
-    # confirms quiescence.
+    _, fits = _cc_gate(canon, local_threshold)  # cached scan — cheap
+    if fits:
+        return _solve_components_locally(canon)
+
+    nodes = (
+        canon.select(F.col("a").alias("node"))
+        .union(canon.select(F.col("b").alias("node")))
+        .distinct()
+    )
+
+    def _attach(labels: DataFrame, *, broadcast: bool) -> DataFrame:
+        lab = F.broadcast(labels) if broadcast else labels
+        return nodes.join(lab, "node", "left").select(
+            "node", F.coalesce("component", "node").alias("component")
+        )
+
+    def _sym(df: DataFrame) -> DataFrame:
+        return df.union(
+            df.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+
+    e = canon.where(F.col("a") != F.col("b"))
+    n_e = e.count()
     converged = False
-    changing_rounds = 0
-    for _ in range(max_iter + 1):
-        nb = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("component").alias("nb_comp")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nb_comp").alias("nb_min"))
+    for _ in range(max_rounds):
+        # LARGE-STAR: v > u rewires to m(u) = min(Γ(u) ∪ {u})
+        sym = _sym(e)
+        mins = sym.groupBy("a").agg(
+            F.least(F.min("b"), F.first("a")).alias("m")
         )
-        new_labels = (
-            labels.join(nb.withColumnRenamed("a", "node"), "node", "left")
+        large = (
+            sym.where(F.col("b") > F.col("a"))
+            .join(mins, "a")
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        # SMALL-STAR: u and its smaller neighbors rewire to their min
+        sym2 = _sym(large)
+        small_nbrs = sym2.where(F.col("b") < F.col("a"))
+        smins = small_nbrs.groupBy("a").agg(F.min("b").alias("m"))
+        new_e = (
+            small_nbrs.join(smins, "a")
             .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nb_min", "component")
-                ).alias("component"),
+                F.col("b").alias("child"), F.col("m").alias("root"), F.col("a")
             )
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("child").alias("a"), F.col("root").alias("b")
+                        ),
+                        F.struct(
+                            F.col("a").alias("a"), F.col("root").alias("b")
+                        ),
+                    )
+                ).alias("p")
+            )
+            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+            .transform(checkpoint_corpus)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
+        n_new, fits = _cc_gate(new_e, local_threshold)  # cached scan
+        if fits:
+            return _attach(
+                _solve_components_locally(new_e), broadcast=True
+            )
+        if n_new != n_e:
+            changed = 1
+        else:
+            # equal counts: sets are equal iff the symmetric difference
+            # is empty — ONE tagged-union aggregate over the two cached
+            # distinct sets
+            changed = (
+                new_e.select("a", "b", F.lit(1).alias("__s"))
+                .union(e.select("a", "b", F.lit(-1).alias("__s")))
+                .groupBy("a", "b")
+                .agg(F.sum("__s").alias("__d"))
+                .where(F.col("__d") != 0)
+                .limit(1)
+                .count()
+            )
+        e = new_e
+        n_e = n_new
         if changed == 0:
             converged = True
             break
-        changing_rounds += 1
-        if changing_rounds > max_iter:
-            break
     if not converged:
-        # Silently returning partial labels would make downstream dedup
-        # KEEP duplicates with no signal at all — fail loudly instead;
-        # component diameter > max_iter means the caller should raise it
-        # (or switch to large-star/small-star for whale components).
         raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds; the graph has a component with diameter "
-            f"> {max_iter} — raise max_iter"
+            f"connected_components did not converge within "
+            f"max_rounds={max_rounds} alternating rounds — raise max_rounds"
         )
-    return labels
+    # fixpoint edge set is a star forest: child -> component min
+    labels = e.groupBy(F.col("a").alias("node")).agg(
+        F.min("b").alias("component")
+    )
+    return _attach(labels, broadcast=False)
 
 
 def dedup_transitive(
@@ -230,24 +288,10 @@ def dedup_transitive(
     *,
     src: str = "id_a",
     dst: str = "id_b",
-    algo: str = "star",
 ) -> DataFrame:
     """Exact fuzzy dedup: keep one doc (the min id) per connected
-    component of the near-dup pair graph; docs in no pair survive.
-
-    ``algo="star"`` (default) closes the pair graph with the
-    O(log² n)-round large-star/small-star CC — at 100 TB, component
-    DIAMETER is the round-count enemy, and near-dup chains (A~B~C~…)
-    are exactly the deep-path shape min-label propagation is worst at.
-    ``algo="minlabel"`` keeps the simpler diameter-bound closure; both
-    produce identical labels (equality-tested on dense and deep-path
-    graphs in tests/test_graph_stateful.py)."""
-    if algo == "star":
-        comp = connected_components_star(pairs, src, dst)
-    elif algo == "minlabel":
-        comp = connected_components(pairs, src, dst)
-    else:
-        raise ValueError(f"unknown algo: {algo!r} (star|minlabel)")
+    component of the near-dup pair graph; docs in no pair survive."""
+    comp = connected_components(pairs, src, dst)
     losers = comp.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -276,20 +320,20 @@ def pagerank_integer(
     for undirected graphs — a dangling node would leak its rank).
 
     Per iteration: one equi-join of ranks onto edges (both sides hash on
-    the node key) + one sum aggregate on dst — the same two keyed
-    shuffles as :func:`connected_components`, with lineage cut per round.
+    the node key) + one sum aggregate on dst — two keyed shuffles, with
+    lineage cut per round.
     The teleport term and N come from a 1-row count relation
     cross-joined in (broadcast), not a driver collect.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    e = e.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    e = e.transform(checkpoint_corpus)
     deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    ed = e.join(deg, "s").localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ed = e.join(deg, "s").transform(checkpoint_corpus)
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select("d"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     n_rel = nodes.agg(F.count("*").alias("n"))
     # init: 1/N, scaled; teleport base: (1-d)/N, scaled
@@ -322,7 +366,7 @@ def pagerank_integer(
                     )
                 ).alias("rank_scaled"),
             )
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .transform(checkpoint_corpus)
         )
     return ranks
 
@@ -384,7 +428,7 @@ def triangle_count(
             F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
         )
     # the oriented edge list feeds three join sides — materialize once
-    e = e.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    e = e.transform(checkpoint_corpus)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     return (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -395,160 +439,3 @@ def triangle_count(
         )
         .agg(F.count("*").alias("n_triangles"))
     )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    *,
-    max_rounds: int = 12,
-    local_threshold: int = _CC_LOCAL_EDGES,
-) -> DataFrame:
-    """(node, component) via alternating LARGE-STAR / SMALL-STAR rounds
-    — the MapReduce-optimal connected-components algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond"): each round
-    rewires every node toward its neighborhood minimum, so components
-    collapse in O(log² n) rounds REGARDLESS OF DIAMETER. This is the
-    whale-component escape hatch the min-label propagation guard
-    (:func:`connected_components`) points at: a 10⁹-node path costs
-    min-label 10⁹ rounds but star ~30 — at 100 TB, diameter is the
-    enemy, not node count.
-
-    large-star(u): every neighbor v > u rewires to min(Γ(u) ∪ {u});
-    small-star(u): u and its smaller neighbors rewire to their min.
-    Both are one groupBy + one equi-join per round (the same two keyed
-    shuffles as a min-label round — you pay the SAME per-round price
-    but exponentially fewer rounds). Fixpoint = the edge set is a star
-    forest (child → component min); non-convergence within
-    ``max_rounds`` raises loudly (never a silently-partial labeling).
-
-    Self-loops are tolerated (they pin isolated nodes into the output,
-    the q260 grid convention); results are proven equal to
-    :func:`connected_components` by test on both a dense pair graph
-    and a deep path graph.
-
-    ``local_threshold`` (default ``_CC_LOCAL_EDGES``, 1M edges):
-    whenever the current non-self-loop edge set is at most this many
-    edges — at entry, or after any round has contracted it that far —
-    the remaining closure is finished in one driver-side union-find
-    pass (star rounds preserve the component partition over the node
-    set, so finishing early yields identical labels), replacing
-    O(log² n) further full-shuffle rounds with one Arrow collect the
-    size of a broadcast side.  0 disables the local finish.
-    """
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # ONE canonical materialization (orient high→low, KEEP self-loops,
-    # dedup): both the node set and the working edge set derive from
-    # this cache, so the — possibly expensive — upstream pair source is
-    # evaluated exactly once.  The previous shape checkpointed nodes
-    # and e separately, which evaluated the upstream twice and paid two
-    # distinct shuffles.
-    canon = (
-        raw.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
-    )
-    nodes = (
-        canon.select(F.col("a").alias("node"))
-        .union(canon.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    e = canon.where(F.col("a") != F.col("b"))
-    n_e, fits = _cc_gate(e, local_threshold)  # cached scan — cheap
-
-    def _attach(labels: DataFrame, *, broadcast: bool) -> DataFrame:
-        lab = F.broadcast(labels) if broadcast else labels
-        return nodes.join(lab, "node", "left").select(
-            "node", F.coalesce("component", "node").alias("component")
-        )
-
-    if fits:
-        return _attach(_solve_components_locally(e), broadcast=True)
-
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.union(
-            df.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-
-    converged = False
-    for _ in range(max_rounds):
-        # LARGE-STAR: v > u rewires to m(u) = min(Γ(u) ∪ {u})
-        sym = _sym(e)
-        mins = sym.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
-        )
-        large = (
-            sym.where(F.col("b") > F.col("a"))
-            .join(mins, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # SMALL-STAR: u and its smaller neighbors rewire to their min
-        sym2 = _sym(large)
-        small_nbrs = sym2.where(F.col("b") < F.col("a"))
-        smins = small_nbrs.groupBy("a").agg(F.min("b").alias("m"))
-        new_e = (
-            small_nbrs.join(smins, "a")
-            .select(
-                F.col("b").alias("child"), F.col("m").alias("root"), F.col("a")
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("child").alias("a"), F.col("root").alias("b")
-                        ),
-                        F.struct(
-                            F.col("a").alias("a"), F.col("root").alias("b")
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
-        )
-        n_new, fits = _cc_gate(new_e, local_threshold)  # cached scan
-        if fits:
-            # the rounds so far contracted the graph below the gate;
-            # star rounds preserve the component partition, so the
-            # local finish over the current edge set is exact
-            return _attach(
-                _solve_components_locally(new_e), broadcast=True
-            )
-        if n_new != n_e:
-            changed = 1
-        else:
-            # equal counts: sets are equal iff the symmetric difference
-            # is empty — ONE tagged-union aggregate over the two cached
-            # distinct sets (the old shape paid two exceptAll jobs,
-            # each itself a shuffle of both sides, every round)
-            changed = (
-                new_e.select("a", "b", F.lit(1).alias("__s"))
-                .union(e.select("a", "b", F.lit(-1).alias("__s")))
-                .groupBy("a", "b")
-                .agg(F.sum("__s").alias("__d"))
-                .where(F.col("__d") != 0)
-                .limit(1)
-                .count()
-            )
-        e = new_e
-        n_e = n_new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"max_rounds={max_rounds} alternating rounds — raise max_rounds"
-        )
-    # fixpoint edge set is a star forest: child -> component min
-    labels = e.groupBy(F.col("a").alias("node")).agg(
-        F.min("b").alias("component")
-    )
-    return _attach(labels, broadcast=False)

@@ -34,7 +34,6 @@ def batch_infer(
     output_schema: str,
     *,
     id_col: str | None = None,
-    min_parts: int | None = None,
 ) -> DataFrame:
     """Run ``model = model_factory()`` ONCE per task, then
     ``model(batch[input_col])`` per Arrow batch; each call returns a
@@ -53,7 +52,7 @@ def batch_infer(
     anything built before the loop lives for the task.
     """
     if id_col is not None:
-        df = ensure_parallelism(df, id_col, min_parts=min_parts)
+        df = ensure_parallelism(df, id_col)
 
     carried = df.columns
 

@@ -31,8 +31,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from adhesive_spark.sources.registry import ensure_parallelism
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
 
 
 def dot(a, b):
@@ -370,7 +369,7 @@ def build_ivf_index(
 
         vectors = corpus.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-        ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ).transform(checkpoint_corpus)
         cents = (
             vectors.orderBy("vec_id")
             .limit(n_lists)
@@ -726,7 +725,7 @@ def embedding_neardup_pairs(
     # upstream scans, 0 reused), so an upstream pipeline (IVF
     # assignment, casts, the LSH bucket kernel) would run twice; the
     # checkpointed rows are exactly the bytes the join shuffle carries
-    base = base.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    base = base.transform(checkpoint_corpus)
     if use_lsh:
         l, r = base.alias("l"), base.alias("r")
         cond = (F.col("l.__bucket") == F.col("r.__bucket")) & (

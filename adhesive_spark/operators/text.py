@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus
 
 #: Tiny per-language marker lexicons for the heuristic language scorer.
 #: Deliberately small and SQL-expressible so the same scoring is
@@ -248,7 +248,7 @@ def tfidf_top_terms(
     tf = (
         raw.groupBy("id", "token")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     # corpus size as a broadcast scalar relation — keeps the operator
     # fully lazy (no driver-side count() action in the plan build)

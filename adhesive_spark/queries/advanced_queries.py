@@ -25,8 +25,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _byte_from_hex,
     _quality_sql,
 )
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 
 def _session_no_col(gap_s: int = 1800):
@@ -447,18 +446,18 @@ def q45_hash_sample(spark, sf_dir):
 
 
 def q46_connected_components(spark, sf_dir):
-    """Transitive closure of the near-dup graph via alternating
-    large-star/small-star rounds (O(log² n) rounds regardless of
-    component diameter — the 100 TB-safe default, same per-round
-    shuffle price as min-label; proven output-equal to the min-label
-    closure by test). Edges are the exact n-gram-Jaccard pairs so the
-    oracle (recursive CTE) sees the identical graph."""
+    """Transitive closure of the near-dup graph via
+    ``graph.connected_components`` (alternating large-star/small-star
+    rounds: O(log² n) rounds regardless of component diameter, with a
+    driver-side union-find finish for small graphs). Edges are the
+    exact n-gram-Jaccard pairs so the oracle (recursive CTE) sees the
+    identical graph."""
     from adhesive_spark.operators.dedup import ngram_jaccard_pairs
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    return connected_components_star(pairs)
+    return connected_components(pairs)
 
 
 def q47_dedup_transitive(spark, sf_dir):
@@ -957,7 +956,7 @@ def q104_cohort_retention(spark, sf_dir):
         )
         .groupBy("user_id", "aw")
         .agg(F.min("ts").alias("mts"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     # narrow re-agg over the checkpointed grain; its two consumers
     # (cohort sizes, the cell join) re-run only this one exchange
@@ -1078,13 +1077,12 @@ def q109_canonical_dedup(spark, sf_dir):
     against winners, so adding "pick the best" costs a single hash agg
     over n rows."""
     from adhesive_spark.operators.dedup import ngram_jaccard_pairs
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    # star-CC default (r8 judge directive 6) — output-equal to min-label
-    # by operator test; O(log² n) rounds on deep near-dup chains.
-    comp = connected_components_star(pairs).withColumnRenamed(
+    # O(log² n) rounds on deep near-dup chains
+    comp = connected_components(pairs).withColumnRenamed(
         "node", "doc_id"
     )
     labeled = docs.join(comp, "doc_id", "left").select(
@@ -2524,7 +2522,7 @@ def q131_triangle_count(spark, sf_dir):
         # re-derives the orderkey self-join per consumer (~21 shuffles
         # vs 7 with the boundary). At 100 TB this materialized edge
         # list IS the production artifact every graph pass starts from.
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -4181,7 +4179,7 @@ def q203_session_incident_overlap(spark, sf_dir):
             F.min(F.unix_micros("ts")).alias("s_start"),
             F.max(F.unix_micros("ts")).alias("s_end"),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     incidents = ev.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("incident_id"),

@@ -34,8 +34,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _h32,
     _quality_sql,
 )
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 AUDIT_QUERIES: dict = {}
 AUDIT_ORACLES: dict = {}
@@ -793,7 +792,7 @@ def q312_packing_policy_ladder(spark, sf_dir):
     # per consumer is then a broadcast crossJoin of longs, not the kernel
     docs = load_table(spark, sf_dir, "documents").select(
         token_estimate_bpe(F.col("text")).alias("l")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     ctx = F.broadcast(
         spark.range(1).select(
             F.explode(
@@ -1061,7 +1060,7 @@ def q314_license_propagation(spark, sf_dir):
         ngram_jaccard_pairs,
         portable_hash32,
     )
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 300
@@ -1080,7 +1079,7 @@ def q314_license_propagation(spark, sf_dir):
         .alias("restricted"),
     )
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    comp = connected_components_star(pairs).withColumnRenamed(
+    comp = connected_components(pairs).withColumnRenamed(
         "node", "doc_id"
     )
     labeled = tagged.join(comp, "doc_id", "left").select(
@@ -1818,13 +1817,13 @@ def q321_cluster_aware_sharding(spark, sf_dir):
         ngram_jaccard_pairs,
         portable_hash32,
     )
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 300
     )
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    comp = connected_components_star(pairs).withColumnRenamed(
+    comp = connected_components(pairs).withColumnRenamed(
         "node", "doc_id"
     )
     labeled = (
@@ -1846,7 +1845,7 @@ def q321_cluster_aware_sharding(spark, sf_dir):
         # materialization boundary: BOTH policies read this once —
         # without it each policy() aggregate re-executes the whole
         # pair-graph + closure tail
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
 
     def policy(col, name):
@@ -2308,7 +2307,7 @@ def q325_multiprobe_lsh(spark, sf_dir):
         "vec_id",
         "orig",
         F.round(cosine(F.col("cvec"), F.col("qvec")), 6).alias("sim"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
 
     def topk(df, mode):
         w = Window.partitionBy("query_id").orderBy(
@@ -2910,7 +2909,7 @@ def q330_ivf_nprobe_ladder(spark, sf_dir):
                 "sim"
             ),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     brute = knn_bruteforce(corpus, queries, k=5).select(
         "query_id", "vec_id"
@@ -3240,7 +3239,7 @@ def q333_ingest_dedup_pressure(spark, sf_dir):
     docs = (
         ensure_parallelism(load_table(spark, sf_dir, "documents"))
         .select("doc_id", fingerprint(F.col("text")).alias("fp"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     first = docs.groupBy("fp").agg(F.min("doc_id").alias("first_id"))
     mx = F.broadcast(docs.agg(F.max("doc_id").alias("max_id")))

@@ -477,7 +477,7 @@ CURATION_QUERIES = {
 # --- oracles -----------------------------------------------------------------
 
 from adhesive_spark.queries.advanced_queries import _lang_sql  # noqa: E402
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus
 
 _PII_SQL = {name: PII_PATTERNS[name].replace("'", "''") for name in PII_ORDER}
 
@@ -1260,7 +1260,7 @@ def q136_length_bucketing(spark, sf_dir):
     # batching strategies each re-ran the corpus tokenize kernel
     toks = docs.select(
         "doc_id", token_count(F.col("text")).alias("n_tok")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
 
     def plan(order_cols, label):
         w = Window.orderBy(*order_cols)
@@ -1470,7 +1470,7 @@ def q146_rarity_score(spark, sf_dir):
     grain = (
         tok.groupBy("word", "doc_id", "source")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     vocab = grain.groupBy("word").agg(F.sum("cnt").alias("cnt"))
     ranked = vocab.select(
@@ -1772,7 +1772,7 @@ def q150_drift_monitor(spark, sf_dir):
             F.count_if(F.col("even")).alias("n_even"),
             F.count_if(~F.col("even")).alias("n_odd"),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     per_source_tot = wc.groupBy("source").agg(
         F.sum("n_even").alias("t_even"), F.sum("n_odd").alias("t_odd")
@@ -1854,7 +1854,7 @@ def q156_oov_rate(spark, sf_dir):
     grain = (
         tok.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     vocab = (
         grain.groupBy("word")
@@ -2269,7 +2269,7 @@ def q167_boilerplate_position(spark, sf_dir):
             F.col("w.gram").alias("gram"),
             F.expr("(w.idx * 3) div w.n").alias("pos_bucket"),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     df_counts = grams.groupBy("gram").agg(
         F.countDistinct("doc_id").alias("gram_docs")
@@ -2738,7 +2738,7 @@ def q199_source_copy_matrix(spark, sf_dir):
     grain = (
         fps.groupBy("fp", "source")
         .agg(F.min("doc_id").alias("min_id"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     origin = grain.groupBy("fp").agg(
         F.min_by("source", "min_id").alias("origin_source")

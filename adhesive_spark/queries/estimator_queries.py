@@ -34,8 +34,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _h32,
     _quality_sql,
 )
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 ESTIMATOR_QUERIES: dict = {}
 ESTIMATOR_ORACLES: dict = {}
@@ -208,7 +207,7 @@ def tv_distance_report(docs):
         docs.select("source", F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("source", "w")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     totals = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     # 190-row pair spine (20 sources), broadcast everywhere
@@ -409,7 +408,7 @@ def q363_bloom_geometry(spark, sf_dir):
     fps = (
         docs.select(fingerprint(F.col("text")).alias("fp"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     geoms = spark.range(1).select(
         F.explode(
@@ -845,7 +844,7 @@ def q366_ngram_novelty(spark, sf_dir):
             F.explode(word_shingles(F.col("text"), 5)).alias("g"),
         )
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     per_gram = grams.groupBy("g").agg(
         F.count("*").cast("long").alias("n_src")
@@ -1274,7 +1273,7 @@ def q369_contribution_bounding(spark, sf_dir):
         )
         .groupBy("event_type", "user_id")
         .agg(F.sum("cents").cast("long").alias("tot"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     # exact lower p95 of per-user totals, per type (distinct-value cum)
     cnts = per_user.groupBy("event_type", "tot").agg(
@@ -1849,7 +1848,7 @@ def q374_birthday_collisions(spark, sf_dir):
         .select(
             portable_hash32(F.concat(F.lit("bd:"), F.col("fp"))).alias("h")
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     bspine = spark.range(1).select(
         F.explode(
@@ -1953,7 +1952,7 @@ def q375_lorenz_deciles(spark, sf_dir):
         )
         .groupBy("o_custkey")
         .agg(F.sum("cents").cast("long").alias("tot"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     by_val = per_cust.groupBy("tot").agg(
         F.count("*").cast("long").alias("cnt")
@@ -3283,7 +3282,7 @@ def rfm_report(orders):
             "freq",
             "monet",
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     n_all = F.broadcast(
         per_cust.agg(F.count("*").cast("long").alias("n_cust_all"))
@@ -3593,7 +3592,7 @@ def q388_session_gap_sweep(spark, sf_dir):
     gaps = ev.select(
         "user_id",
         (F.col("es") - F.lag("es").over(wu)).alias("gap_s"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     spine = spark.range(1).select(
         F.explode(
             F.array(
@@ -3971,7 +3970,7 @@ def q392_cohort_retention(spark, sf_dir):
             ).cast("long").alias("ym"),
         )
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     cohorts = om.groupBy("o_custkey").agg(
         F.min("ym").cast("long").alias("cohort_ym")
@@ -5133,7 +5132,7 @@ def q403_keep_policy_divergence(spark, sf_dir):
         )
         .where(F.size("toks") >= 20)
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     per = (
         spans.groupBy("fp")
@@ -5395,7 +5394,7 @@ def q406_degree_assortativity(spark, sf_dir):
         load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     pdeg = edges.groupBy("l_partkey").agg(
         F.count("*").cast("long").alias("dp")
@@ -5502,7 +5501,7 @@ def q407_shingle_size_ladder(spark, sf_dir):
         )
         .select("doc_id", F.col("g.n").alias("n"), F.col("g.s").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     sizes = sh.groupBy("n", "doc_id").agg(
         F.count("*").cast("long").alias("sz")

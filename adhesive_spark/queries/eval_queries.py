@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 EVAL_QUERIES: dict = {}
 EVAL_ORACLES: dict = {}
@@ -468,14 +467,14 @@ def q260_grid_density_clusters(spark, sf_dir):
     """Grid-density clustering of the embedding space — the DBSCAN
     shape with NO pair term: points quantize to 0.025-wide grid cells
     (exact milli integers, q72 policy), cells with >= 3 points are
-    core, 8-neighbor-adjacent core cells union into clusters via the
-    shared min-label machinery (operators/graph.py), and the output is
+    core, 8-neighbor-adjacent core cells union into clusters via
+    ``graph.connected_components``, and the output is
     the top-10 clusters by contained points. Embedding-space density
     clusters are how a curation stack finds over-represented content
     regions WITHOUT an O(n²) similarity join.
 
     Scale shape: one (cell) aggregate collapses the corpus; everything
-    after — the 9-offset neighbor join, the label propagation, the
+    after — the 9-offset neighbor join, the component closure, the
     final rollup — runs on the CELL table (bounded by the grid, not
     the corpus). Self-edges keep isolated core cells as their own
     singleton clusters. The +1e6 shift keeps cell ids positive so both
@@ -830,11 +829,7 @@ def link_prediction_report(edges):
     2.5× slower at bench scale (the triple `distinct` subtree does NOT
     runtime-reuse its exchange), DISK_ONLY costs ~1 s of disk
     round-trip per bench rep."""
-    from pyspark import StorageLevel
-
-    edges = edges.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    edges = edges.transform(checkpoint_corpus)
     part_deg = edges.groupBy("p").agg(
         F.count("*").cast("long").alias("pd")
     )
@@ -844,7 +839,7 @@ def link_prediction_report(edges):
     # aggregate scans the edge set once instead of once per broadcast
     supp_deg = edges.groupBy("s").agg(
         F.count("*").cast("long").alias("sd")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     # hub parts dropped BEFORE pair generation; merge-pinned (r12):
     # part_deg is corpus-scaled (one row per part), so it is never
     # contractually broadcastable — yet its rows are narrow and
@@ -1210,7 +1205,7 @@ def q267_negative_sampling(spark, sf_dir):
             ).alias("item"),
         )
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     items = clicks.select("item").distinct()
     users = clicks.select("user_id").where(F.col("user_id") < 20).distinct()
@@ -1437,7 +1432,7 @@ def q269_vocab_coverage(spark, sf_dir):
         .alias("rank"),
         F.sum("cnt").over(w).alias("cum_cnt"),
     )
-    ranked = ranked.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 2 consumers
+    ranked = ranked.transform(checkpoint_corpus)  # feeds 2 consumers
     tot = ranked.agg(
         F.max("cum_cnt").alias("total_occ"),
         F.max("rank").cast("long").alias("n_types"),
@@ -1859,83 +1854,18 @@ EVAL_ORACLES["q272_quantile_treatment_effect"] = """
 """
 
 
-# --- q274: grid clustering via large-star/small-star ---------------------------
+# --- q274: grid clustering (the q260 query) -----------------------------------
 
 
 def q274_grid_clusters_star(spark, sf_dir):
-    """The q260 grid-density clustering with its component step swapped
-    to LARGE-STAR/SMALL-STAR (operators/graph.py
-    `connected_components_star`) — the O(log² n)-round CC that stays
-    cheap when a dense region forms one whale component (min-label
-    pays the component DIAMETER per q260; star pays ~log rounds).
-    Identical output contract and identical recursive-CTE oracle as
-    q260: the two algorithms must agree cell-for-cell, and the driver
-    checks this one independently.
-    """
-    from adhesive_spark.operators.graph import connected_components_star
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pts = emb.select(
-        F.expr(
-            "(CAST(ROUND(CAST(element_at(embedding, 1) AS DOUBLE) * 1000, 0)"
-            f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
-        ).alias("cx"),
-        F.expr(
-            "(CAST(ROUND(CAST(element_at(embedding, 2) AS DOUBLE) * 1000, 0)"
-            f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
-        ).alias("cy"),
-    )
-    core = (
-        pts.groupBy("cx", "cy")
-        .agg(F.count("*").cast("long").alias("n"))
-        .where(F.col("n") >= _GRID_MINPTS)
-        .withColumn("cell_id", F.col("cx") * 100000 + F.col("cy"))
-        .localCheckpoint(eager=True)
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probes = core.select(
-        F.col("cell_id").alias("id_a"),
-        F.explode(offsets).alias("o"),
-        "cx",
-        "cy",
-    ).select(
-        "id_a",
-        (F.col("cx") + F.col("o.dx")).alias("nx"),
-        (F.col("cy") + F.col("o.dy")).alias("ny"),
-    )
-    edges = probes.join(
-        core.select(
-            F.col("cx").alias("nx"),
-            F.col("cy").alias("ny"),
-            F.col("cell_id").alias("id_b"),
-        ),
-        ["nx", "ny"],
-    ).select("id_a", "id_b")
-    comps = connected_components_star(edges, "id_a", "id_b")
-    return (
-        comps.join(
-            core.select(F.col("cell_id").alias("node"), "n"), "node"
-        )
-        .groupBy(F.col("component").alias("cluster_rep"))
-        .agg(
-            F.count("*").cast("long").alias("n_cells"),
-            F.sum("n").cast("long").alias("n_points"),
-        )
-        .orderBy(F.col("n_points").desc(), F.col("cluster_rep"))
-        .limit(10)
-    )
+    """The q260 grid-density clustering under its own name (a bench
+    headliner). ``graph.connected_components`` is the package's only CC
+    engine, so there is nothing left to vary; the oracle is q260's."""
+    return q260_grid_density_clusters(spark, sf_dir)
 
 
 EVAL_QUERIES["q274_grid_clusters_star"] = q274_grid_clusters_star
 
-# identical contract, identical oracle: both CC algorithms must land on
-# the same (component-min, sizes) table
 EVAL_ORACLES["q274_grid_clusters_star"] = EVAL_ORACLES[
     "q260_grid_density_clusters"
 ]
@@ -2066,7 +1996,7 @@ def q276_bfs_frontier(spark, sf_dir):
         .where(F.col("a.s") != F.col("b.s"))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 3 BFS rounds + node count
+        .transform(checkpoint_corpus)  # feeds 3 BFS rounds + node count
     )
     nodes = adj.select(F.col("u").alias("node")).distinct()
     src = nodes.agg(F.min("node").alias("node")).withColumn(
@@ -2084,7 +2014,7 @@ def q276_bfs_frontier(spark, sf_dir):
             dist.unionByName(frontier)
             .groupBy("node")
             .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .transform(checkpoint_corpus)
         )
     reached = dist.groupBy("dist").agg(
         F.count("*").cast("long").alias("n_suppliers")

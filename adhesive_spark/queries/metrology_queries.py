@@ -34,8 +34,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _h32,
     _quality_sql,
 )
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 METROLOGY_QUERIES: dict = {}
 METROLOGY_ORACLES: dict = {}
@@ -1123,7 +1122,7 @@ def tfcos_allpairs_report(tf, df_cap: int = 50):
     """The q344 core over a caller-supplied ``(doc_id, tok, tf)`` table —
     split out so tools/stress.py can ladder the df-capped inverted-index
     join on replicated corpora without re-tokenizing through the query."""
-    tf = tf.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    tf = tf.transform(checkpoint_corpus)
     norms = tf.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).cast("long").alias("nrm")
     )
@@ -1826,7 +1825,7 @@ def q349_style_affinity(spark, sf_dir):
         )
         .groupBy("source", "word")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     tots = counts.groupBy("source").agg(
         F.sum("c").cast("long").alias("tot")
@@ -1939,12 +1938,12 @@ def q350_dedup_survivorship(spark, sf_dir):
     Scale shape: the q46 pair/closure machinery (shingle then node
     shuffles, never all-pairs) + one broadcast-joined quality rollup."""
     from adhesive_spark.operators.dedup import ngram_jaccard_pairs
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
     from adhesive_spark.operators.text import quality_score, scaled_long
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    comp = connected_components_star(pairs).withColumnRenamed(
+    comp = connected_components(pairs).withColumnRenamed(
         "node", "doc_id"
     )
     scored = docs.select(
@@ -2062,7 +2061,7 @@ def q351_corpus_saturation(spark, sf_dir):
             .cast("long")
             .alias("novel"),
         )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     mx = F.broadcast(per_doc.agg(F.max("doc_id").alias("max_id")))
     return (

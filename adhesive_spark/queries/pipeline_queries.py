@@ -38,8 +38,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _TOKS,
     _byte_from_hex,
 )
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 # --- shared SQL fragments (DuckDB dialect) -----------------------------------
 
@@ -1395,7 +1394,7 @@ def q184_entity_resolution(spark, sf_dir):
     edges (O(log² n) rounds regardless of chain depth), and the final
     grouping shuffles one row per word — nothing quadratic, nothing
     driver-side."""
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     part = load_table(spark, sf_dir, "part")
     names = (
@@ -1419,11 +1418,10 @@ def q184_entity_resolution(spark, sf_dir):
         )
         .distinct()
     )
-    # star-CC default (r8 judge directive 6): O(log² n) rounds regardless
-    # of chain depth — fuzzy word chains are exactly the deep-path shape
-    # min-label is worst at; output-equal by operator test AND by the
+    # O(log² n) rounds regardless of chain depth — fuzzy word chains
+    # are deep paths; output-equal to the min-label reference by the
     # q184-specific equality pytest (tests/test_graph_stateful.py).
-    comp = connected_components_star(pairs, "word_a", "word_b")
+    comp = connected_components(pairs, "word_a", "word_b")
     words = names.select("word").distinct()
     labeled = words.join(
         comp.withColumnRenamed("node", "word"), "word", "left"
@@ -1638,7 +1636,7 @@ def q206_neardup_evidence(spark, sf_dir):
     sh = docs.select(
         F.col("doc_id"),
         F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("global_df"))
     shared = (
         pairs.join(sh.withColumnRenamed("doc_id", "id_a"), "id_a")
@@ -2243,7 +2241,7 @@ def q279_media_reduction_pipeline(spark, sf_dir):
     )
 
     media = synthesize_real_media(load_table(spark, sf_dir, "documents"))
-    media = media.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 3 transforms + input ledger
+    media = media.transform(checkpoint_corpus)  # feeds 3 transforms + input ledger
     out = (
         resample_wav(media, factor=2)
         .unionByName(downscale_ppm(media, factor=2))

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1751,7 +1750,7 @@ def q172_basket_lift(spark, sf_dir):
         _t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     n_orders = li.select("l_orderkey").distinct().agg(
         F.count("*").alias("n_orders")
@@ -1759,7 +1758,7 @@ def q172_basket_lift(spark, sf_dir):
     # catalog-sized marginal, joined twice
     part_counts = li.groupBy("l_partkey").agg(
         F.count("*").alias("n_part")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import tokens
 from adhesive_spark.queries.oracle_fragments import _TOKS, _quality_sql
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SCALE_QUERIES: dict = {}
 SCALE_ORACLES: dict = {}
@@ -386,7 +385,7 @@ def q221_lang_token_affinity(spark, sf_dir):
     # corpus explode kernel
     lt = toks.groupBy("lang", "tok").agg(
         F.count("*").alias("n_lt")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     lg = lt.groupBy("lang").agg(F.sum("n_lt").alias("n_l"))
     tk = lt.groupBy("tok").agg(F.sum("n_lt").alias("n_t"))
     grand = lt.agg(F.sum("n_lt").alias("n_all"))
@@ -471,7 +470,7 @@ def q222_source_tv_drift(spark, sf_dir):
     # (source, tok) grain once; the marginals are sums of it
     sc = toks.groupBy("source", "tok").agg(
         F.count("*").alias("n_st")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     st = sc.groupBy("source").agg(F.sum("n_st").alias("n_s"))
     cc = sc.groupBy("tok").agg(F.sum("n_st").alias("n_c"))
     grand = sc.agg(F.sum("n_st").alias("n_all"))
@@ -664,7 +663,7 @@ def q224_tokenizer_apply(spark, sf_dir):
     grain = (
         words.groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     distinct_w = grain.select("w").distinct()
     seg = distinct_w.withColumn("n_pieces", n_pieces_col(F.col("w")))
@@ -1018,7 +1017,7 @@ def q228_label_propagation(spark, sf_dir):
             ),
         )
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     edges = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))

@@ -27,8 +27,7 @@ from adhesive_spark.operators.sketches import (
 )
 from adhesive_spark.operators.text import tokens
 from adhesive_spark.queries.oracle_fragments import _TOKS
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SKETCH_QUERIES: dict = {}
 SKETCH_ORACLES: dict = {}
@@ -86,7 +85,7 @@ def q242_cms_heavyhitters(spark, sf_dir):
     counts = (
         toks.groupBy("tok")
         .agg(F.count("*").cast("long").alias("true_cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     sketch = cms_build(counts, "tok", weight_col="true_cnt")
     top = (
@@ -197,7 +196,7 @@ def q243_bm25_retrieval(spark, sf_dir):
             .alias(f"tf{i}")
             for i, t in enumerate(_BM25_TERMS)
         ],
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     stats = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.expr("CAST(sum(dl) * 1000 div count(*) AS BIGINT)").alias(
@@ -311,7 +310,7 @@ def q244_pmi_collocations(spark, sf_dir):
     # it, where four separate aggregates each re-ran the zip/explode
     pair = bi.groupBy("x", "y").agg(
         F.count("*").cast("long").alias("c_xy")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     left = pair.groupBy("x").agg(F.sum("c_xy").cast("long").alias("c_x"))
     right = pair.groupBy("y").agg(F.sum("c_xy").cast("long").alias("c_y"))
     total = pair.agg(F.sum("c_xy").cast("long").alias("n_bi"))
@@ -393,7 +392,7 @@ def q245_kcore_peel(spark, sf_dir):
     to the edge list — 2 shuffles per round, never a pair join. At
     100 TB the fixed round count is the budget guard the recursive
     formulation lacks (same policy as graph.connected_components'
-    max-iteration guard).
+    max-round guard).
     """
     li = (
         load_table(spark, sf_dir, "lineitem")
@@ -411,7 +410,7 @@ def q245_kcore_peel(spark, sf_dir):
     # blow-up; 15 s -> ~3 s at sf0.01). Same policy as q131's oriented
     # edge list: at 100 TB the per-round edge list is the artifact an
     # iterative graph job persists anyway.
-    edges = li.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    edges = li.transform(checkpoint_corpus)
     out = []
     for rnd in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -431,7 +430,7 @@ def q245_kcore_peel(spark, sf_dir):
                 "v",
                 "semi",
             )
-        ).select("u", "v").localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ).select("u", "v").transform(checkpoint_corpus)
         stats = edges.agg(
             F.lit(rnd).cast("long").alias("round"),
             F.count("*").cast("long").alias("n_edges"),
@@ -1164,7 +1163,7 @@ def q250_basket_affinity(spark, sf_dir):
             .alias("item"),
         )
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     a, b = clicks.alias("a"), clicks.alias("b")
     pairs = (
@@ -1179,7 +1178,7 @@ def q250_basket_affinity(spark, sf_dir):
     # item-cardinality rows, broadcast twice (x and y attach): compute once
     pop = clicks.groupBy("item").agg(
         F.count("*").cast("long").alias("c_i")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    ).transform(checkpoint_corpus)
     n_users = clicks.select("user_id").distinct().agg(
         F.count("*").cast("long").alias("n_users")
     )
@@ -1638,7 +1637,7 @@ def q255_bitmap_index(spark, sf_dir):
         # exact AND audit) — materialize the tiny (doc, tok) presence
         # set once or Catalyst re-derives the corpus explode per
         # consumer (23 s -> ~4 s at sf0.01; q131/q245 policy)
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .transform(checkpoint_corpus)
     )
     words = toked.select(
         "tok",

@@ -22,8 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
-from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 TRAINING_QUERIES: dict = {}
 TRAINING_ORACLES: dict = {}
@@ -2155,7 +2154,7 @@ def q302_harmonic_closeness(spark, sf_dir):
         .where(F.col("a.s") != F.col("b.s"))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 3 BFS rounds
+        .transform(checkpoint_corpus)  # feeds 3 BFS rounds
     )
     nodes = adj.select(F.col("u").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(5).select(
@@ -2172,7 +2171,7 @@ def q302_harmonic_closeness(spark, sf_dir):
             dist.unionByName(frontier)
             .groupBy("seed", "node")
             .agg(F.min("d").cast("long").alias("d"))
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .transform(checkpoint_corpus)
         )
     return dist.where(F.col("d") >= 1).groupBy("seed").agg(
         F.count("*").cast("long").alias("n_reached_3hop"),

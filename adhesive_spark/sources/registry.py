@@ -9,6 +9,7 @@ formats are delegated to the embedded engine. Here both are Spark-native:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +43,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def ensure_parallelism(
     df: DataFrame,
     *cols: str,
-    min_parts: int | None = None,
     by_size: bool = False,
 ) -> DataFrame:
     """Repartition iff the plan has fewer partitions than the cluster has
@@ -65,7 +65,7 @@ def ensure_parallelism(
     fans out by its true bytes. Use for Arrow-kernel stages whose
     per-task overhead dominates on small inputs."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     if by_size and cols:
@@ -73,19 +73,7 @@ def ensure_parallelism(
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-def _corpus_ckpt_level():
-    from pyspark import StorageLevel
-
-    return StorageLevel.MEMORY_AND_DISK
-
-
-#: Storage level for CORPUS-SCALED localCheckpoints (see
-#: :func:`checkpoint_corpus`): PySpark's MEMORY_AND_DISK maps to the
-#: JVM's SERIALIZED memory+disk level — bounded bytes, disk-spillable.
-CORPUS_CKPT_LEVEL = _corpus_ckpt_level()
-
-
-def checkpoint_corpus(df: DataFrame, eager: bool = True) -> DataFrame:
+def checkpoint_corpus(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` pinned to SERIALIZED, disk-spillable storage
     for CORPUS-SCALED grains (rows proportional to input docs / events /
     edges / tokens).
@@ -102,7 +90,9 @@ def checkpoint_corpus(df: DataFrame, eager: bool = True) -> DataFrame:
     tiny tables (rung spines, K×K matrices, centroid sets, per-source
     rollups) keep the plain default — deserialized reads are cheaper
     and the bytes are bounded by the schema, not the corpus."""
-    return df.localCheckpoint(eager=eager, storageLevel=CORPUS_CKPT_LEVEL)
+    return df.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
 
 
 def register_tables(

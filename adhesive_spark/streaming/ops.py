@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import checkpoint_corpus
 
 
 def tumbling_counts(
@@ -339,7 +339,7 @@ def streaming_incremental_dedup(
         survivors = (
             b.join(keep, [id_col, "__fp"])
             .dropDuplicates(["__fp"])
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .transform(checkpoint_corpus)
         )
         survivors.drop("__fp").write.mode("overwrite").parquet(
             f"{output_path}/__epoch={epoch_id}"
@@ -492,7 +492,7 @@ def streaming_quality_router(
             return  # replayed micro-batch: epoch already committed
         scored = batch_df.withColumn(
             "quality", quality_score(F.col(text_col))
-        ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ).transform(checkpoint_corpus)
         ok = F.col("quality") >= min_quality
         scored.where(~ok).withColumn(
             "reject_reason", F.lit("low_quality")
@@ -567,7 +567,7 @@ def compact_streamed_index(
     if spark.catalog.tableExists(table):
         # materialize the current base OUT of the table before the
         # overwrite (reading the table while overwriting it is illegal)
-        base = spark.table(table).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        base = spark.table(table).transform(checkpoint_corpus)
         merged = base.unionByName(fresh)
     else:
         merged = fresh

@@ -103,8 +103,7 @@ HEADLINE = [
     # round-6 batch 3 (evaluation family): exact ROC-AUC off the
     # per-score aggregate, the bit-level bloom join-prefilter audit,
     # and link prediction through the df-capped affiliation graph.
-    # (q260 grid-density is NOT a headliner: its wall time is fixed
-    # min-label-round overhead, measured in STRESS.md instead.)
+    # (q260 grid-density is benched under its q274 name below.)
     "q256_roc_auc",
     "q258_bloom_join_prefilter",
     "q263_link_prediction",

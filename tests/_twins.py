@@ -11,7 +11,8 @@ for row. Not collected by pytest (no ``test_`` prefix).
   ``dedup.minhash_base_and_bands``;
 - :func:`gopher_repetition_report_hof` —
   ``training_queries.gopher_repetition_report``;
-- :func:`apply_cdc_agg` — ``incremental.apply_cdc`` (without ``base``).
+- :func:`apply_cdc_agg` — ``incremental.apply_cdc`` (without ``base``);
+- :func:`connected_components_minlabel` — ``graph.connected_components``.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql.window import Window
 from adhesive_spark.operators.dedup import minhash_signature
 from adhesive_spark.operators.similarity import cosine
 from adhesive_spark.operators.text import normalize_text, tokens
-from adhesive_spark.sources.registry import ensure_parallelism
+from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
 
 
 def knn_bruteforce_hof(
@@ -224,3 +225,77 @@ def apply_cdc_agg(
     return latest.where(
         ~F.coalesce(F.col(op_col) == F.lit(delete_op), F.lit(False))
     )
+
+
+def connected_components_minlabel(
+    edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    *,
+    max_iter: int = 25,
+) -> DataFrame:
+    """(node, component) by min-label propagation: each node starts
+    labeled with its own id and every round takes the min label among
+    itself and its neighbors (one join on neighbor + groupBy node), so
+    it needs O(component diameter) rounds. Always runs the distributed
+    loop; raises when a component's diameter exceeds ``max_iter``."""
+    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = sym.union(
+        sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).distinct()
+    sym = sym.transform(checkpoint_corpus)
+
+    labels = (
+        sym.select(F.col("a").alias("node"))
+        .distinct()
+        .withColumn("component", F.col("node"))
+    )
+    # ``max_iter`` bounds CHANGING rounds; convergence is detected by a
+    # quiescent round, so up to max_iter+1 joins run. Counting changing
+    # rounds (not loop trips) avoids a spurious failure when the final
+    # allowed round makes the last change and the next one merely
+    # confirms quiescence.
+    converged = False
+    changing_rounds = 0
+    for _ in range(max_iter + 1):
+        nb = (
+            sym.join(
+                labels.select(
+                    F.col("node").alias("b"), F.col("component").alias("nb_comp")
+                ),
+                "b",
+            )
+            .groupBy("a")
+            .agg(F.min("nb_comp").alias("nb_min"))
+        )
+        new_labels = (
+            labels.join(nb.withColumnRenamed("a", "node"), "node", "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("component"), F.coalesce("nb_min", "component")
+                ).alias("component"),
+            )
+            .transform(checkpoint_corpus)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .where(F.col("n.component") != F.col("o.component"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            converged = True
+            break
+        changing_rounds += 1
+        if changing_rounds > max_iter:
+            break
+    if not converged:
+        raise RuntimeError(
+            f"connected_components_minlabel did not converge within "
+            f"max_iter={max_iter} rounds; the graph has a component with "
+            f"diameter > {max_iter} — raise max_iter"
+        )
+    return labels

@@ -317,6 +317,63 @@ def test_type_name_parse_and_strict_values(sql_type):
         assert {k for k, v in samples.items() if check(v)} == {want}
 
 
+_BUILTIN_NAMED = {
+    "PYTHON": "CREATE OR REPLACE FUNCTION abs(BIGINT) RETURNS BIGINT "
+    "LANGUAGE PYTHON AS 'return 7'",
+    "PANDAS": "CREATE OR REPLACE FUNCTION abs(BIGINT) RETURNS BIGINT "
+    "LANGUAGE PANDAS AS 'return arg0 * 0 + 7'",
+    "MODULE": "CREATE OR REPLACE FUNCTION abs(BIGINT) RETURNS BIGINT "
+    'LANGUAGE MODULE AS "operator.neg"',
+    "SQL": "CREATE OR REPLACE FUNCTION abs(a BIGINT) RETURNS BIGINT "
+    "LANGUAGE SQL AS '7'",
+    "JAVA": "CREATE OR REPLACE FUNCTION abs(BIGINT) RETURNS BIGINT "
+    "LANGUAGE JAVA AS $$ public class AbsShadow implements "
+    "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+    "public Long call(Long a) { return 7L; } } $$",
+    "AGGREGATE": "CREATE OR REPLACE AGGREGATE FUNCTION abs(BIGINT) "
+    "RETURNS BIGINT LANGUAGE PANDAS AS 'return 7'",
+    "TABLE": "CREATE OR REPLACE FUNCTION abs(n BIGINT) RETURNS TABLE "
+    "(i BIGINT) LANGUAGE PYTHON AS 'yield (7,)'",
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_BUILTIN_NAMED))
+def test_builtin_name_refused(sess, kind):
+    """A function named like a Spark builtin is refused at CREATE for
+    every kind, OR REPLACE included: the builtin keeps answering."""
+    with pytest.raises(DdlParseError, match="builtin"):
+        sess.sql(_BUILTIN_NAMED[kind])
+    assert sess.sql("SELECT abs(-3) AS v").collect()[0].v == 3
+    assert not sess.factory.exists("abs")
+
+
+@pytest.mark.parametrize("sql_type", _type_names())
+def test_sql_kind_accepts_every_type_name(sess, sql_type):
+    """The SQL kind takes every type name the DDL parser and typemap
+    accept, aliases such as TEXT, INT8 or DOUBLE PRECISION included."""
+    from adhesive_spark.functions.typemap import sql_type_to_spark
+
+    sess.sql(
+        f"CREATE OR REPLACE FUNCTION tyid(x {sql_type}) RETURNS {sql_type} "
+        "LANGUAGE SQL AS 'x'"
+    )
+    out = sess.sql("SELECT tyid(NULL) AS v")
+    assert out.schema["v"].dataType == sql_type_to_spark(sql_type)
+    assert out.collect()[0].v is None
+
+
+def test_java_kind_accepts_type_alias(sess):
+    """The JAVA kind's cast wrapper takes typemap aliases (INT8 is
+    BIGINT)."""
+    sess.sql(
+        "CREATE OR REPLACE FUNCTION jint8(INT8) RETURNS INT8 "
+        "LANGUAGE JAVA AS $$ public class JInt8 implements "
+        "org.apache.spark.sql.api.java.UDF1<Long, Long> { "
+        "public Long call(Long a) { return a + 1; } } $$"
+    )
+    assert sess.sql("SELECT jint8(20) AS v").collect()[0].v == 21
+
+
 def test_type_matrix(sess):
     """M1: the wider RETURNS matrix implied by Adhesive.java:79-199."""
     cases = [

@@ -42,14 +42,6 @@ def test_dedup_transitive(spark):
     )
     # 1,2 fold into 0; 5 folds into 4; 3 untouched
     assert kept == [0, 3, 4]
-    # both closures (star default / min-label) keep identical survivors
-    kept_ml = sorted(
-        r.doc_id
-        for r in dedup_transitive(docs, pairs, algo="minlabel").collect()
-    )
-    assert kept_ml == kept
-    with pytest.raises(ValueError):
-        dedup_transitive(docs, pairs, algo="bogus")
 
 
 @pytest.fixture(scope="module")
@@ -241,27 +233,22 @@ def test_star_components_equal_min_label_on_pair_graph(spark, sf_dir):
     pair graph (same component minimum per node)."""
     from pyspark.sql import functions as F
 
+    from _twins import connected_components_minlabel
     from adhesive_spark.operators.dedup import ngram_jaccard_pairs
-    from adhesive_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
     from adhesive_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
     pairs = pairs.localCheckpoint(eager=True)
-    # gate DISABLED on the min-label side so this compares the real
-    # distributed propagation against star's default (local-finish)
-    # path — with both defaulted, tiny graphs would route both calls
-    # through the same local solver and the equality would be vacuous
+    # the twin always runs the distributed propagation; star runs its
+    # default (local-finish) path, so the two share no solver
     want = {
         (r.node, r.component)
-        for r in connected_components(pairs, local_threshold=0).collect()
+        for r in connected_components_minlabel(pairs).collect()
     }
     got = {
         (r.node, r.component)
-        for r in connected_components_star(pairs).collect()
+        for r in connected_components(pairs).collect()
     }
     # equality must hold at EVERY sf; the pair graph is non-empty at
     # the default test sf (0.001) but may legitimately be empty at
@@ -277,8 +264,6 @@ def test_star_components_beat_diameter_on_path_graph(spark):
     (non-convergence raises, so passing proves the round count)."""
     from pyspark.sql import functions as F
 
-    from adhesive_spark.operators.graph import connected_components_star
-
     chains = 5
     edges = (
         spark.range(0, chains * 32)
@@ -288,7 +273,7 @@ def test_star_components_beat_diameter_on_path_graph(spark):
     # local_threshold=0 pins the DISTRIBUTED loop: the round-count
     # contract is exactly what this test proves, so the driver-side
     # local finish (covered by its own equality tests) must not fire
-    labels = connected_components_star(edges, max_rounds=8, local_threshold=0)
+    labels = connected_components(edges, max_rounds=8, local_threshold=0)
     rows = labels.collect()
     assert len(rows) == chains * 32
     for r in rows:
@@ -298,7 +283,6 @@ def test_star_components_beat_diameter_on_path_graph(spark):
 def test_star_components_keep_self_loop_singletons(spark):
     """Self-loops (the q260 grid convention for isolated core cells)
     must yield singleton components, not vanish."""
-    from adhesive_spark.operators.graph import connected_components_star
 
     edges = spark.createDataFrame(
         [(7, 7), (1, 2), (9, 9)], ["id_a", "id_b"]
@@ -308,11 +292,11 @@ def test_star_components_keep_self_loop_singletons(spark):
     # distributed star loop (gate disabled) must each pin singletons
     got_local = {
         (r.node, r.component)
-        for r in connected_components_star(edges).collect()
+        for r in connected_components(edges).collect()
     }
     got_dist = {
         (r.node, r.component)
-        for r in connected_components_star(edges, local_threshold=0).collect()
+        for r in connected_components(edges, local_threshold=0).collect()
     }
     assert got_local == want
     assert got_dist == want
@@ -325,7 +309,6 @@ def test_cc_local_finish_matches_distributed_on_path_forest(spark):
     rounds, so local_threshold=150 < |e|=195 skips the entry gate and
     exercises the MID-LOOP re-gate (rounds contract the edge set below
     the gate before convergence)."""
-    from adhesive_spark.operators.graph import connected_components_star
 
     chains, length = 5, 40
     edges = (
@@ -335,17 +318,17 @@ def test_cc_local_finish_matches_distributed_on_path_forest(spark):
     )
     want = {
         (r.node, r.component)
-        for r in connected_components_star(edges, local_threshold=0).collect()
+        for r in connected_components(edges, local_threshold=0).collect()
     }
     got_entry = {
         (r.node, r.component)
-        for r in connected_components_star(
+        for r in connected_components(
             edges, local_threshold=1_000_000
         ).collect()
     }
     got_midloop = {
         (r.node, r.component)
-        for r in connected_components_star(edges, local_threshold=150).collect()
+        for r in connected_components(edges, local_threshold=150).collect()
     }
     assert got_entry == want
     assert got_midloop == want
@@ -355,10 +338,7 @@ def test_cc_local_finish_matches_distributed_on_path_forest(spark):
 def test_cc_local_finish_string_nodes(spark):
     """String node ids (the q184 word-graph shape): the local finish's
     Python min and Spark's UTF-8 min must agree."""
-    from adhesive_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from _twins import connected_components_minlabel
 
     edges = spark.createDataFrame(
         [
@@ -371,15 +351,15 @@ def test_cc_local_finish_string_nodes(spark):
     )
     want_star = {
         (r.node, r.component)
-        for r in connected_components_star(edges, local_threshold=0).collect()
+        for r in connected_components(edges, local_threshold=0).collect()
     }
     got_star = {
         (r.node, r.component)
-        for r in connected_components_star(edges).collect()
+        for r in connected_components(edges).collect()
     }
     got_minlabel = {
         (r.node, r.component)
-        for r in connected_components(edges).collect()
+        for r in connected_components_minlabel(edges).collect()
     }
     assert got_star == want_star
     assert got_minlabel == {
@@ -395,10 +375,7 @@ def test_cc_gate_bytes_long_vs_string(spark):
     bytes/edge exactly), while string ids must also fit
     ``max_edges * 16`` measured bytes — a handful of fat string edges
     must stay on the distributed loop even when the count fits."""
-    from adhesive_spark.operators.graph import (
-        _cc_gate,
-        connected_components_star,
-    )
+    from adhesive_spark.operators.graph import _cc_gate
 
     longs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "a long, b long"
@@ -431,13 +408,13 @@ def test_cc_gate_bytes_long_vs_string(spark):
     )
     via_distributed = {
         (r.node, r.component)
-        for r in connected_components_star(
+        for r in connected_components(
             edges, local_threshold=1
         ).collect()
     }
     via_local = {
         (r.node, r.component)
-        for r in connected_components_star(
+        for r in connected_components(
             edges, local_threshold=10**6
         ).collect()
     }
@@ -456,7 +433,7 @@ def test_q184_star_flip_matches_min_label_closure(spark, sf_dir):
     min-label closure over the same fuzzy word pairs."""
     from pyspark.sql import functions as F
 
-    from adhesive_spark.operators.graph import connected_components
+    from _twins import connected_components_minlabel
     from adhesive_spark.queries.pipeline_queries import (
         q184_entity_resolution,
     )
@@ -489,7 +466,7 @@ def test_q184_star_flip_matches_min_label_closure(spark, sf_dir):
         )
         .distinct()
     )
-    comp = connected_components(pairs, "word_a", "word_b")
+    comp = connected_components_minlabel(pairs, "word_a", "word_b")
     labeled = (
         names.select("word")
         .distinct()

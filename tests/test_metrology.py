@@ -358,11 +358,11 @@ def test_dedup_survivorship_partitions_clusters(spark, sf_dir):
     """Kept + dropped partition the clustered docs; exactly one kept
     per component (the star-CC representative count)."""
     from adhesive_spark.operators.dedup import ngram_jaccard_pairs
-    from adhesive_spark.operators.graph import connected_components_star
+    from adhesive_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    comp = connected_components_star(pairs)
+    comp = connected_components(pairs)
     n_components = comp.select("component").distinct().count()
     n_members = comp.count()
     out = M.q350_dedup_survivorship(spark, sf_dir).collect()

@@ -86,7 +86,8 @@ def test_connected_components_raises_when_unconverged(spark):
     import pytest
     from adhesive_spark.operators.graph import connected_components
 
-    # a path graph 0-1-2-...-9 needs ~diameter rounds; max_iter=1 must
+    # a path graph 0-1-2-...-9 is no star forest, so one alternating
+    # round cannot reach (and confirm) the fixpoint; max_rounds=1 must
     # fail loudly instead of returning partial labels
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
@@ -95,8 +96,8 @@ def test_connected_components_raises_when_unconverged(spark):
     # DISTRIBUTED loop — with the default gate this tiny graph would be
     # solved on the driver and (correctly) never raise
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1, local_threshold=0)
-    full = connected_components(edges, max_iter=25, local_threshold=0)
+        connected_components(edges, max_rounds=1, local_threshold=0)
+    full = connected_components(edges, local_threshold=0)
     assert {r.component for r in full.collect()} == {0}
 
 
@@ -687,16 +688,16 @@ def test_batch_infer_init_once_per_task(spark):
         "text",
         "doc_id long, text string, n_chars long",
         id_col="doc_id",
-        min_parts=8,
     )
     rows = {r.doc_id: r.n_chars for r in out.collect()}
     assert rows[7] == len("doc 7")
     assert len(rows) == 64
-    # one init per non-empty task: > 1 proves the fan-out, <= 8 proves
-    # per-task (64 rows in >=2 Arrow batches per task would double it
-    # if init ran per batch — pin the upper bound)
-    assert 1 < init_marker.value <= 8
-    assert out.rdd.getNumPartitions() == 8
+    # one init per non-empty task: > 1 proves the fan-out, <= cores
+    # proves per-task (64 rows in >=2 Arrow batches per task would
+    # double it if init ran per batch — pin the upper bound)
+    cores = spark.sparkContext.defaultParallelism
+    assert 1 < init_marker.value <= cores
+    assert out.rdd.getNumPartitions() == cores
 
 
 def test_span_dedup_reassembles(spark):

@@ -658,23 +658,21 @@ def test_star_cc_equals_min_label_on_random_graphs(spark, edges):
     """Large-star/small-star and min-label propagation must label every
     random graph identically (component = min reachable node), self
     loops and duplicate edges included."""
-    from adhesive_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from _twins import connected_components_minlabel
+    from adhesive_spark.operators.graph import connected_components
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    # reference = the REAL distributed min-label propagation (gate off);
-    # star runs with the default gate, i.e. the driver-side union-find
-    # finish — so every random example proves local == distributed
-    # labeling, not the local solver against itself
+    # reference = the distributed min-label propagation; star runs with
+    # the default gate, i.e. the driver-side union-find finish — so
+    # every random example proves local == distributed labeling, not
+    # the local solver against itself
     want = {
         (r.node, r.component)
-        for r in connected_components(df, local_threshold=0).collect()
+        for r in connected_components_minlabel(df).collect()
     }
     got = {
         (r.node, r.component)
-        for r in connected_components_star(df).collect()
+        for r in connected_components(df).collect()
     }
     assert got == want
 

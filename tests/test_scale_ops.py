@@ -693,10 +693,12 @@ def test_knn_and_assign_zero_inputs_return_empty_frames(spark):
 
 
 def _engine_switch_calls(spark):
-    """One call per operator that used to take ``engine=``, each with
-    that switch's non-default value and otherwise valid inputs."""
+    """One call per operator that used to take an engine switch
+    (``engine=``, or ``algo=`` for ``dedup_transitive``), each with that
+    switch's non-default value and otherwise valid inputs."""
     from adhesive_spark.operators.clustering import _assign
     from adhesive_spark.operators.dedup import minhash_base_and_bands
+    from adhesive_spark.operators.graph import dedup_transitive
     from adhesive_spark.operators.incremental import apply_cdc
     from adhesive_spark.operators.similarity import knn_bruteforce
     from adhesive_spark.queries.training_queries import (
@@ -712,6 +714,7 @@ def _engine_switch_calls(spark):
     log = spark.createDataFrame(
         [(1, 10, "upsert")], "k long, ts long, op string"
     )
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     return {
         "knn_bruteforce": lambda: knn_bruteforce(
             vecs, vecs.withColumnRenamed("vec_id", "query_id"), engine="hof"
@@ -728,6 +731,9 @@ def _engine_switch_calls(spark):
             docs, engine="hof"
         ),
         "apply_cdc": lambda: apply_cdc(log, ["k"], ["ts"], engine="agg"),
+        "dedup_transitive": lambda: dedup_transitive(
+            docs, pairs, algo="minlabel"
+        ),
     }
 
 
@@ -739,10 +745,13 @@ def _engine_switch_calls(spark):
         "minhash_base_and_bands",
         "gopher_repetition_report",
         "apply_cdc",
+        "dedup_transitive",
     ],
 )
 def test_removed_engine_switch_raises(spark, op):
     """Each of these operators has one engine; asking for another by
     name is an error, never a silent pick."""
-    with pytest.raises(TypeError, match="engine"):
+    with pytest.raises(
+        TypeError, match="unexpected keyword argument '(engine|algo)'"
+    ):
         _engine_switch_calls(spark)[op]()

@@ -44,46 +44,15 @@ from adhesive_spark.sources.registry import (  # noqa: E402
 )
 
 
-import re
-
-_FN_TOKEN = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\(")
-
-
-def _plan_fn_tokens(df) -> set:
-    """Function-call tokens appearing in a DataFrame's OPTIMIZED plan —
-    the post-pruning truth of what would execute."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return set(_FN_TOKEN.findall(plan))
-
-
-def count_prunes(df) -> set:
-    """Tokens of df's optimized plan that VANISH when the same result is
-    driven through ``.count()`` instead of a materializing sink.
-
-    Nonempty means a counted timing does NOT measure those expressions:
-    Catalyst prunes aggregate functions (and whole Window/Project
-    subtrees) that a bare count never references — the round-10 audit's
-    gopher artifact, 1.9 s counted vs 50.5 s executed. Run this when
-    adding a ladder to the harness; if it returns tokens, the shape
-    must be timed under the noop sink (the default), never count-mode."""
-    return _plan_fn_tokens(df) - _plan_fn_tokens(df.groupBy().count())
-
-
-def execute_timed(out, exec_mode: str = "noop"):
-    """The harness's measurement core, extracted for its own audit
-    tests: returns ``(rows_out, sec)`` where ``sec`` times either the
-    zero-materialization noop sink (honest — every expression executes)
-    or a bare ``.count()`` (legacy comparison mode; subject to the
-    pruning described in :func:`count_prunes`). The noop path counts
-    UNTIMED afterwards so both modes report identical rows_out."""
+def execute_timed(out):
+    """The harness's measurement core: returns ``(rows_out, sec)``,
+    where ``sec`` times the zero-materialization noop sink (every
+    expression executes) and ``rows_out`` is counted untimed
+    afterwards."""
     t0 = time.perf_counter()
-    if exec_mode == "count":
-        n_out = out.count()
-        sec = time.perf_counter() - t0
-    else:
-        out.write.format("noop").mode("overwrite").save()
-        sec = time.perf_counter() - t0
-        n_out = out.count()  # untimed, for the record only
+    out.write.format("noop").mode("overwrite").save()
+    sec = time.perf_counter() - t0
+    n_out = out.count()  # untimed, for the record only
     return n_out, sec
 
 
@@ -156,9 +125,7 @@ def main() -> None:
     # GLOBAL aggregate OptimizeOneRowPlan answers "1 row" with no
     # execution at all (the feature_matrix artifact).  Ladders whose
     # count-vs-noop walls agreed in the audit keep their historical
-    # numbers; SPARK_GRAFT_STRESS_EXEC=count restores the old mode for
-    # comparison.
-    exec_mode = os.environ.get("SPARK_GRAFT_STRESS_EXEC", "noop")
+    # numbers.
 
     def run(name: str, build, n_in: int) -> None:
         if only and name not in only:
@@ -167,16 +134,7 @@ def main() -> None:
         out = build()
         build_sec = time.perf_counter() - t0
         if hasattr(out, "count"):
-            if exec_mode == "count":
-                pruned = count_prunes(out)
-                if pruned:
-                    print(
-                        f"WARNING {name}: count-mode prunes "
-                        f"{sorted(pruned)[:8]} — timing is NOT honest, "
-                        "use the default noop mode",
-                        file=sys.stderr,
-                    )
-            n_out, exec_sec = execute_timed(out, exec_mode)
+            n_out, exec_sec = execute_timed(out)
             # plan-construction time (incl. any eager collects a builder
             # does) stays inside the ladder wall, as it always has
             sec = build_sec + exec_sec
@@ -330,14 +288,14 @@ def main() -> None:
         rows_in,
     )
 
-    # Connected components on a deliberately LONG path graph: min-label
-    # propagation converges in O(diameter) ROUNDS, a cost axis that
-    # replicating wide/flat dedup graphs never exercises. reps·10
-    # parallel 32-node paths: the round count is set by the worst
-    # diameter (31), not the component count, so this measures per-round
-    # overhead × depth; the max_iter guard (graph.py) fails loudly if
-    # the diameter ever exceeds the bound instead of returning a
-    # silently-partial labeling.
+    # Connected components on deliberately LONG path graphs: reps·10
+    # parallel 32-node paths (diameter 31), a cost axis that replicating
+    # wide/flat dedup graphs never exercises. Large-star/small-star
+    # (graph.py connected_components) converges in ~7 alternating
+    # rounds where diameter-bound label propagation would need 31;
+    # max_rounds=10 makes that a hard assert on rungs whose edge set is
+    # above the local-finish gate (1M edges) — below it one driver-side
+    # union-find pass answers.
     from adhesive_spark.operators.graph import connected_components
 
     chain_len = 32
@@ -351,26 +309,11 @@ def main() -> None:
         )
     )
 
-    def _cc_long_path():
-        labels = connected_components(path_edges, max_iter=40)
+    def _cc_star():
+        labels = connected_components(path_edges, max_rounds=10)
         # sanity INSIDE the stress: every 32-node path collapses to one
         # component labeled by its min node — wrong round accounting
         # would surface as a component-count mismatch here
-        n_comp = labels.select("component").distinct().count()
-        assert n_comp == reps * 10, f"expected {reps * 10} components, got {n_comp}"
-        return labels
-
-    run("cc_long_path_d31", _cc_long_path, reps * 10 * (chain_len - 1))
-
-    # Same adversarial path graphs through LARGE-STAR/SMALL-STAR
-    # (graph.py connected_components_star): converges in ~7 alternating
-    # rounds vs min-label's 31 diameter-bound rounds — max_rounds=10
-    # makes the log-round contract a hard assert, and the component
-    # count must agree with the min-label run above.
-    from adhesive_spark.operators.graph import connected_components_star
-
-    def _cc_star():
-        labels = connected_components_star(path_edges, max_rounds=10)
         n_comp = labels.select("component").distinct().count()
         assert n_comp == reps * 10, f"expected {reps * 10} components, got {n_comp}"
         return labels
@@ -473,11 +416,9 @@ def main() -> None:
     # Grid-density clustering (q260 shape) over the N×-replicated
     # embedding space: the first aggregate collapses the corpus onto
     # the FIXED grid (~300 occupied cells at sf0.1 regardless of N), so
-    # the neighbor join + label propagation cost is replication-
+    # the neighbor join + component closure cost is replication-
     # invariant — rows/s must RISE roughly linearly with reps. A pair
     # term or a corpus-sized post-aggregate stage would flatline here.
-    from adhesive_spark.operators.graph import connected_components
-
     def _grid_density():
         pts = big_emb.select(
             F.expr(
