@@ -160,44 +160,12 @@ def portable_hash63(s):
     return hi * F.lit(4294967296) + lo
 
 
-def _coeff_array(num_perm: int, seed: int = 42):
-    """The permutation coefficients as ONE literal array<struct<a,b>>
-    column, so the whole signature is a single nested higher-order
-    expression — NOT num_perm copies of the transform. 64 unrolled
-    copies were observed to produce a codegen unit whose first-run
-    Janino+JIT compile cost tens of seconds; the HOF form is a loop in
-    one tiny compiled class with identical per-row work."""
-    return F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _perm_coeffs(num_perm, seed)
-        ]
-    )
-
-
-def minhash_signature_from_base(base_col, num_perm: int = 64, seed: int = 42):
-    """Array<long> MinHash signature over an already-materialized column
-    of base hashes (array<long>).
-
-    ``base_col`` MUST be a plain column reference (cached/projected), not
-    a subtree: it is referenced inside the per-coefficient lambda, so an
-    inline expression would be re-evaluated num_perm times.
-    """
-    return F.transform(
-        _coeff_array(num_perm, seed),
-        lambda c: F.array_min(
-            F.transform(
-                base_col, lambda h: (h * c["a"] + c["b"]) % _MERSENNE
-            )
-        ),
-    )
-
-
 def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
-    """Arrow-batched twin of :func:`minhash_signature_from_base`: the
-    same affine-permutation minimum over the SAME materialized base
-    hashes, computed as one int64 numpy matrix op per document instead
-    of num_perm interpreted HOF scans.
+    """The package's MinHash engine: the affine-permutation minimum
+    over materialized base hashes, computed as one int64 numpy matrix
+    op per document instead of num_perm interpreted HOF scans. The HOF
+    formulation (``minhash_signature`` / ``minhash_signature_from_base``)
+    is the equality reference in ``tests/_twins.py``.
 
     Exactness is structural, not approximate: base hashes are < 2³¹ and
     coefficients a < 2³⁰, so h·a+b < 2⁶² fits int64 with no overflow,
@@ -230,32 +198,6 @@ def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
     return _sig
 
 
-def minhash_signature(
-    col,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-):
-    """Array<long> MinHash signature, entirely in built-in expressions.
-
-    The shingle set is hashed ONCE (portable md5-prefix hash) into a
-    named lambda variable (so it is NOT recomputed per permutation);
-    each permutation is an affine transform (a*h+b) mod M₃₁ over the
-    base hashes."""
-    shingles = word_shingles(col, shingle_n)
-    base = F.transform(shingles, lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE)))
-    # Bind base once via a single-element transform scope: the outer
-    # lambda variable `bs` is evaluated once per row, then reused by all
-    # num_perm inner scans.
-    return F.element_at(
-        F.transform(
-            F.array(base),
-            lambda bs: minhash_signature_from_base(bs, num_perm, seed),
-        ),
-        1,
-    )
-
-
 def minhash_base_and_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -273,7 +215,8 @@ def minhash_base_and_bands(
     (:func:`persist_minhash_index` / :func:`probe_minhash_index`).
 
     The permutation minimums come from :func:`minhash_signature_kernel`
-    — the same longs as :func:`minhash_signature`'s HOF scans, 1.9× on
+    — the same longs as the HOF scans of ``minhash_signature`` in
+    ``tests/_twins.py`` (``minhash_sig_hof``), 1.9× on
     the signature pass (61.1 s→32.8 s at the 1.5 M-doc rung — the one
     measured number, see :func:`minhash_signature_kernel`).  The md5
     shingle hashing stays JVM-side (it is what keeps the pipeline
@@ -406,14 +349,29 @@ def minhash_lsh_pairs(
     )
 
     sh = base.select("id", "shingles")
-    # |A∪B| = |A|+|B|-|A∩B| exactly: word_shingles emits array_distinct
-    # grams, so computing the union SIZE arithmetically skips
-    # materializing the union array per pair (~10% off the verify
-    # stage at the sf1 rung, r13) — same integer operands, same double
-    # division, same round.
-    verified = (
-        candidates.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), "id_b")
+    return _verify_jaccard(
+        candidates,
+        sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}),
+        sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}),
+        threshold,
+    )
+
+
+def _verify_jaccard(
+    candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate (id_a, id_b) pairs against the
+    shingle sets ``sh_a`` (id_a, sh_a) and ``sh_b`` (id_b, sh_b): the
+    pairs with Jaccard (rounded to 4 places) ≥ ``threshold``.
+
+    |A∪B| = |A|+|B|-|A∩B| exactly: word_shingles emits array_distinct
+    grams, so computing the union SIZE arithmetically skips
+    materializing the union array per pair (~10% off the verify stage
+    at the sf1 rung, r13) — same integer operands, same double
+    division, same round."""
+    return (
+        candidates.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
         .withColumn("__i", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
@@ -426,7 +384,6 @@ def minhash_lsh_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
 
 
 def dedup_minhash(
@@ -1059,15 +1016,10 @@ def persist_minhash_index(
     :func:`probe_minhash_index` batch then signatures only ITSELF and
     joins the persisted bands."""
     from adhesive_spark.sources.formats import write_bucketed_table
-    from adhesive_spark.sources.fsutil import hadoop_fs
+    from adhesive_spark.sources.fsutil import reset_table
 
-    spark = docs.sparkSession
-    wh = spark.conf.get("spark.sql.warehouse.dir")
     for t in (table, f"{table}__shingles"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        fs, loc, _ = hadoop_fs(spark, f"{wh}/{t}")
-        if fs.exists(loc):
-            fs.delete(loc, True)
+        reset_table(docs.sparkSession, t)
     base, band_rows = minhash_base_and_bands(
         docs,
         num_perm=num_perm,
@@ -1157,20 +1109,6 @@ def probe_minhash_index(
     )
     psh = sh_all.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     ish = sh_all.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        candidates.join(psh.hint("merge"), "id_a")
-        .join(ish.hint("merge"), "id_b")
-        # union size arithmetically (shingle arrays are distinct) —
-        # same rewrite as minhash_lsh_pairs' verify, same values
-        .withColumn("__i", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__i")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("__i")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_jaccard(
+        candidates, psh.hint("merge"), ish.hint("merge"), threshold
     )

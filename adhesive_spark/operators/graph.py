@@ -43,34 +43,31 @@ from adhesive_spark.sources.registry import checkpoint_corpus
 _CC_LOCAL_EDGES = 1_000_000
 
 
-def _cc_gate(e: DataFrame, max_edges: int) -> tuple[int, bool]:
-    """``(edge_count, fits_local)`` for a CACHED edge set.
+def _cc_gate(e: DataFrame, max_edges: int, *extra) -> tuple:
+    """``(edge_count, fits_local, *extra_values)`` for a CACHED edge
+    set, from ONE aggregate over it; ``extra`` aggregates ride along.
 
     The local-finish budget was always a BYTE budget in disguise: the
     ``max_edges`` comment assumes long pairs (16 bytes/edge, ~16 MB at
-    the 1M default).  Numeric node ids really are 16 bytes/edge, so one
-    ``count()`` decides.  String ids can be arbitrarily wide (entity
-    resolution collects name keys), so for them ONE aggregate over the
-    cached set measures actual key bytes and the gate additionally
-    requires ``key_bytes + 16·n ≤ max_edges·16`` (the 16/edge term
-    covers Arrow offsets / Python object overhead) — a 1M-edge set of
-    fat string keys now correctly stays on the distributed loop.  Same
-    single job over the cached set either way."""
+    the 1M default).  Numeric node ids really are 16 bytes/edge, so the
+    count decides.  String ids can be arbitrarily wide (entity
+    resolution collects name keys), so for them the same aggregate
+    measures actual key bytes and the gate additionally requires
+    ``key_bytes + 16·n ≤ max_edges·16`` (the 16/edge term covers Arrow
+    offsets / Python object overhead) — a 1M-edge set of fat string
+    keys correctly stays on the distributed loop."""
     from pyspark.sql import types as T
 
-    node_t = e.schema[0].dataType
     a, b = e.columns[0], e.columns[1]
-    if max_edges > 0 and isinstance(node_t, T.StringType):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.octet_length(a) + F.octet_length(b)), F.lit(0)
-            ).alias("kb"),
-        ).first()
-        n, kb = int(row[0]), int(row[1])
-        return n, n <= max_edges and kb + 16 * n <= max_edges * 16
-    n = e.count()
-    return n, max_edges > 0 and n <= max_edges
+    kb = []
+    if max_edges > 0 and isinstance(e.schema[0].dataType, T.StringType):
+        kb = [F.coalesce(F.sum(F.octet_length(a) + F.octet_length(b)), F.lit(0))]
+    row = e.agg(F.count(F.lit(1)), *kb, *extra).first()
+    n = int(row[0])
+    fits = max_edges > 0 and n <= max_edges
+    if kb:
+        fits = fits and int(row[1]) + 16 * n <= max_edges * 16
+    return (n, fits, *(int(v) for v in row[1 + len(kb) :]))
 
 
 def _solve_components_locally(e: DataFrame) -> DataFrame:
@@ -181,7 +178,11 @@ def connected_components(
         .distinct()
         .transform(checkpoint_corpus)
     )
-    _, fits = _cc_gate(canon, local_threshold)  # cached scan — cheap
+    # one cached scan gives the gate AND the self-loop-free edge count
+    # the round loop's change test starts from
+    _, fits, n_e = _cc_gate(
+        canon, local_threshold, F.count(F.when(F.col("a") != F.col("b"), 1))
+    )
     if fits:
         return _solve_components_locally(canon)
 
@@ -203,7 +204,6 @@ def connected_components(
         )
 
     e = canon.where(F.col("a") != F.col("b"))
-    n_e = e.count()
     converged = False
     for _ in range(max_rounds):
         # LARGE-STAR: v > u rewires to m(u) = min(Γ(u) ∪ {u})

@@ -24,9 +24,16 @@ formats in pure stdlib Python (struct/wave):
   ``n_frames`` (no substring counting — raster bytes may alias).
 
 Compressed codecs (JPEG/MP3/H.264 via PIL/ffmpeg/soundfile) are not
-in this container; payloads that are not one of the formats above fall
+available here; payloads that are not one of the formats above fall
 back to a deterministic hash-derived pseudo-decode (``codec="auto"``,
 the default) so the plumbing stays exercisable on arbitrary binaries.
+
+The eight single-codec kernels (three feature extractors, five
+``MEDIA_SCHEMA`` transforms) are strict: a payload that does not parse
+is dropped, never featurized or re-emitted. That contract, with the
+batch loop, the typed output frame and the ``mapInPandas`` call, lives
+in one helper, :func:`_strict_codec_map`; each kernel supplies only its
+magic, parser, schema and a per-payload row function.
 """
 
 from __future__ import annotations
@@ -473,10 +480,76 @@ def decode_media(df: DataFrame, *, codec: str = "auto") -> DataFrame:
     return df.mapInPandas(_decode, schema=DECODED_SCHEMA)
 
 
+def _strict_codec_map(
+    media: DataFrame, magic: bytes, parse, schema: T.StructType, row_fn
+) -> DataFrame:
+    """The one Arrow pass behind every strict-codec kernel.
+
+    Rows whose payload does not start with ``magic`` never leave the
+    JVM (:func:`_codec_prefilter`); the rest fan out and run, per Arrow
+    batch, the strict-codec contract: skip null payloads, ``parse`` the
+    bytes, drop what does not parse, and call ``row_fn(payload,
+    parsed)`` for the output row after ``media_id`` — ``None`` drops a
+    payload the kernel cannot use. A kernel never featurizes or
+    re-emits bytes it could not decode.
+
+    ``LongType`` columns of ``schema`` are built as int64, the others
+    are handed to Arrow as lists. A batch whose rows were all dropped
+    yields nothing (an empty object column cannot be serialized as the
+    ``meta`` struct: pyarrow 'Expected struct array'), so an input
+    where every row is dropped gives an empty frame with ``schema``.
+    The batch function carries ``row_fn``'s name, which is the name
+    the kernel's ``MapInPandas`` node shows in the plan."""
+    from adhesive_spark.sources.registry import ensure_parallelism
+
+    names = schema.fieldNames()
+    longs = {f.name for f in schema.fields if isinstance(f.dataType, T.LongType)}
+
+    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                if payload is None:
+                    continue
+                b = bytes(payload)
+                parsed = parse(b)
+                if parsed is None:
+                    continue
+                row = row_fn(b, parsed)
+                if row is not None:
+                    rows.append((int(mid), *row))
+            if not rows:
+                continue
+            yield pd.DataFrame(
+                {
+                    n: pd.array(list(c), dtype="int64") if n in longs else list(c)
+                    for n, c in zip(names, zip(*rows))
+                }
+            )
+
+    _kernel.__name__ = row_fn.__name__
+    return ensure_parallelism(_codec_prefilter(media, magic)).mapInPandas(
+        _kernel, schema=schema
+    )
+
+
+def _media_row(media_type: str, mime: str, payload: bytes, source: str):
+    """A re-emitted payload as the ``MEDIA_SCHEMA`` row after media_id."""
+    return (
+        media_type,
+        payload,
+        {"mime": mime, "n_bytes": len(payload), "source": source},
+    )
+
+
+def _long_schema(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.LongType(), False) for n in names])
+
+
 def image_channel_stats(media: DataFrame) -> DataFrame:
     """REAL feature extraction off genuine image bytes: parse the PPM
     raster and compute exact per-channel statistics with one vectorized
-    numpy pass per Arrow batch — the actual shape of a production
+    numpy pass per image — the actual shape of a production
     image-featurizer stage (decode → ndarray → reduce), minus only the
     compressed codec. Means are returned as exact milli-scaled integers
     (``sum*1000 DIV n_pixels``) so the result is engine-portable.
@@ -485,62 +558,21 @@ def image_channel_stats(media: DataFrame) -> DataFrame:
     contract: never featurize bytes you could not decode)."""
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
+    def _stats(b, pp):
+        w, h = pp
+        # raster is the trailing 3*w*h bytes (validated by the parser);
+        # one zero-copy numpy view, one reduction
+        arr = np.frombuffer(
+            b, dtype=np.uint8, count=3 * w * h, offset=len(b) - 3 * w * h
+        ).reshape(-1, 3)
+        sums = arr.sum(axis=0, dtype=np.int64)
+        return (w, h, *(int(s) * 1000 // (w * h) for s in sums))
 
-    media = ensure_parallelism(_codec_prefilter(media, b'P6'))
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("width", T.LongType(), False),
-            T.StructField("height", T.LongType(), False),
-            T.StructField("mean_r_milli", T.LongType(), False),
-            T.StructField("mean_g_milli", T.LongType(), False),
-            T.StructField("mean_b_milli", T.LongType(), False),
-        ]
+    schema = _long_schema(
+        "media_id", "width", "height",
+        "mean_r_milli", "mean_g_milli", "mean_b_milli",
     )
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, mr, mg, mb = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                pp = _parse_ppm(b)
-                if pp is None:
-                    continue
-                w, h = pp
-                # raster is the trailing 3*w*h bytes (validated by the
-                # parser); one zero-copy numpy view, one reduction
-                arr = np.frombuffer(
-                    b, dtype=np.uint8, count=3 * w * h, offset=len(b) - 3 * w * h
-                ).reshape(-1, 3)
-                sums = arr.sum(axis=0, dtype=np.int64)
-                n_px = w * h
-                ids.append(int(mid))
-                ws.append(w)
-                hs.append(h)
-                mr.append(int(sums[0]) * 1000 // n_px)
-                mg.append(int(sums[1]) * 1000 // n_px)
-                mb.append(int(sums[2]) * 1000 // n_px)
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "mean_r_milli": pd.array(mr, dtype="int64"),
-                    "mean_g_milli": pd.array(mg, dtype="int64"),
-                    "mean_b_milli": pd.array(mb, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(_stats, schema=schema)
+    return _strict_codec_map(media, b"P6", _parse_ppm, schema, _stats)
 
 
 def video_luma_stats(media: DataFrame) -> DataFrame:
@@ -556,58 +588,26 @@ def video_luma_stats(media: DataFrame) -> DataFrame:
     payloads are dropped (strict-codec contract)."""
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
-
-    media = ensure_parallelism(_codec_prefilter(media, b'YUV4MPEG2'))
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("n_frames", T.LongType(), False),
-            T.StructField("first_luma_milli", T.LongType(), False),
-            T.StructField("max_delta_milli", T.LongType(), False),
-        ]
-    )
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, firsts, deltas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                ym = _parse_y4m(b)
-                if ym is None:
-                    continue
-                w, h, n, offs = ym
-                lumas = []
-                for _hdr, body in offs:
-                    y = np.frombuffer(b, dtype=np.uint8, count=w * h, offset=body)
-                    lumas.append(int(y.sum(dtype=np.int64)) * 1000 // (w * h))
-                ids.append(int(mid))
-                nfs.append(n)
-                firsts.append(lumas[0])
-                deltas.append(
-                    max(
-                        (abs(lumas[i] - lumas[i - 1]) for i in range(1, n)),
-                        default=0,
-                    )
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "n_frames": pd.array(nfs, dtype="int64"),
-                    "first_luma_milli": pd.array(firsts, dtype="int64"),
-                    "max_delta_milli": pd.array(deltas, dtype="int64"),
-                }
+    def _stats(b, ym):
+        w, h, n, offs = ym
+        lumas = [
+            int(
+                np.frombuffer(b, dtype=np.uint8, count=w * h, offset=body)
+                .sum(dtype=np.int64)
             )
+            * 1000
+            // (w * h)
+            for _hdr, body in offs
+        ]
+        delta = max(
+            (abs(lumas[i] - lumas[i - 1]) for i in range(1, n)), default=0
+        )
+        return n, lumas[0], delta
 
-    return media.mapInPandas(_stats, schema=schema)
+    schema = _long_schema(
+        "media_id", "n_frames", "first_luma_milli", "max_delta_milli"
+    )
+    return _strict_codec_map(media, b"YUV4MPEG2", _parse_y4m, schema, _stats)
 
 
 def wav_head_energy(media: DataFrame, head_samples: int = 256) -> DataFrame:
@@ -616,54 +616,21 @@ def wav_head_energy(media: DataFrame, head_samples: int = 256) -> DataFrame:
     mean-absolute-amplitude integer — the head-window energy gate of an
     audio curation stage (silence/clipping detection on the clip head
     before paying for a full-sequence encoder). One vectorized numpy
-    pass per Arrow batch, no shuffle; non-WAV payloads are dropped."""
+    pass per clip, no shuffle; non-WAV payloads are dropped."""
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
+    def _energy(b, wv):
+        if wv[6] != 16:
+            return None  # energy stat is defined on 16-bit PCM
+        _dur, n_samples, _rate, data_off = wv[:4]
+        k = min(head_samples, n_samples)
+        # slice at the PARSED data offset (extra RIFF chunks shift it
+        # past the canonical 44)
+        pcm = np.frombuffer(b, dtype="<i2", count=k, offset=data_off)
+        return n_samples, int(np.abs(pcm.astype(np.int64)).sum()) // k
 
-    media = ensure_parallelism(_codec_prefilter(media, b'RIFF'))
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("n_samples", T.LongType(), False),
-            T.StructField("head_mean_abs", T.LongType(), False),
-        ]
-    )
-
-    def _energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, eng = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                wv = _parse_wav(b)
-                if wv is None or wv[6] != 16:
-                    continue  # energy stat is defined on 16-bit PCM
-                _dur, n_samples, _rate, data_off = wv[:4]
-                k = min(head_samples, n_samples)
-                # slice at the PARSED data offset (extra RIFF chunks
-                # shift it past the canonical 44)
-                pcm = np.frombuffer(b, dtype="<i2", count=k, offset=data_off)
-                s = int(np.abs(pcm.astype(np.int64)).sum())
-                ids.append(int(mid))
-                ns.append(n_samples)
-                eng.append(s // k)
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                    "head_mean_abs": pd.array(eng, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(_energy, schema=schema)
+    schema = _long_schema("media_id", "n_samples", "head_mean_abs")
+    return _strict_codec_map(media, b"RIFF", _parse_wav, schema, _energy)
 
 
 def media_embedding(decoded: DataFrame, dim: int = 8) -> DataFrame:
@@ -731,8 +698,8 @@ def resample_wav(media: DataFrame, factor: int = 2) -> DataFrame:
     WAV payload's PCM16 samples by ``factor`` and re-emit a VALID
     RIFF/WAVE byte stream at ``rate div factor`` — the downsample
     stage of an audio curation pipeline (rate-normalize before an
-    encoder), done zero-copy per Arrow batch with numpy stride
-    slicing. The output is bytes-parseable by the same strict codec
+    encoder), done zero-copy per clip with numpy stride slicing. The
+    output is bytes-parseable by the same strict codec
     (``decode_media(codec="real")``), which is the round-trip
     contract the test asserts: duration is preserved (same wall-clock
     audio, fewer samples), sample count divides exactly by the
@@ -744,65 +711,30 @@ def resample_wav(media: DataFrame, factor: int = 2) -> DataFrame:
     """
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
-
     if factor < 1:
         raise ValueError("factor must be >= 1")
-    media = ensure_parallelism(_codec_prefilter(media, b'RIFF'))
 
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, metas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                wv = _parse_wav(b)
-                if wv is None:
-                    continue
-                _dur, n_samples, rate, data_off, blk, ch, bits = wv
-                if bits % 8 or blk != ch * (bits // 8):
-                    continue  # layout the wave writer can't re-emit
-                # decimate by whole PCM BLOCKS at the PARSED data
-                # offset — channel-count- and chunk-layout-agnostic
-                # (for canonical mono-16 this is exactly pcm[::factor])
-                blocks = np.frombuffer(
-                    b, dtype=np.uint8, count=n_samples * blk, offset=data_off
-                ).reshape(n_samples, blk)
-                out = io.BytesIO()
-                with wave.open(out, "wb") as w:
-                    w.setnchannels(ch)
-                    w.setsampwidth(bits // 8)
-                    w.setframerate(max(1, rate // factor))
-                    w.writeframes(
-                        np.ascontiguousarray(blocks[::factor]).tobytes()
-                    )
-                nb = out.getvalue()
-                ids.append(int(mid))
-                mtypes.append("audio")
-                payloads.append(nb)
-                metas.append(
-                    {
-                        "mime": "audio/wav",
-                        "n_bytes": len(nb),
-                        "source": f"resampled/{factor}",
-                    }
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
+    def _resample(b, wv):
+        _dur, n_samples, rate, data_off, blk, ch, bits = wv
+        if bits % 8 or blk != ch * (bits // 8):
+            return None  # layout the wave writer can't re-emit
+        # decimate by whole PCM BLOCKS at the PARSED data offset —
+        # channel-count- and chunk-layout-agnostic (for canonical
+        # mono-16 this is exactly pcm[::factor])
+        blocks = np.frombuffer(
+            b, dtype=np.uint8, count=n_samples * blk, offset=data_off
+        ).reshape(n_samples, blk)
+        out = io.BytesIO()
+        with wave.open(out, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(bits // 8)
+            w.setframerate(max(1, rate // factor))
+            w.writeframes(np.ascontiguousarray(blocks[::factor]).tobytes())
+        return _media_row(
+            "audio", "audio/wav", out.getvalue(), f"resampled/{factor}"
+        )
 
-    return media.mapInPandas(_resample, schema=MEDIA_SCHEMA)
+    return _strict_codec_map(media, b"RIFF", _parse_wav, MEDIA_SCHEMA, _resample)
 
 
 def downscale_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -818,57 +750,25 @@ def downscale_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
     """
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
-
     if factor < 1:
         raise ValueError("factor must be >= 1")
-    media = ensure_parallelism(_codec_prefilter(media, b'P6'))
 
-    def _down(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, metas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                pp = _parse_ppm(b)
-                if pp is None:
-                    continue
-                w, h = pp
-                raster = np.frombuffer(
-                    b, dtype=np.uint8, count=3 * w * h, offset=len(b) - 3 * w * h
-                ).reshape(h, w, 3)
-                small = raster[::factor, ::factor, :]
-                nh, nw = small.shape[0], small.shape[1]
-                nb = (
-                    f"P6\n{nw} {nh}\n255\n".encode("ascii")
-                    + np.ascontiguousarray(small).tobytes()
-                )
-                ids.append(int(mid))
-                mtypes.append("image")
-                payloads.append(nb)
-                metas.append(
-                    {
-                        "mime": "image/x-portable-pixmap",
-                        "n_bytes": len(nb),
-                        "source": f"downscaled/{factor}",
-                    }
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
+    def _down(b, pp):
+        w, h = pp
+        raster = np.frombuffer(
+            b, dtype=np.uint8, count=3 * w * h, offset=len(b) - 3 * w * h
+        ).reshape(h, w, 3)
+        small = raster[::factor, ::factor, :]
+        nh, nw = small.shape[0], small.shape[1]
+        nb = (
+            f"P6\n{nw} {nh}\n255\n".encode("ascii")
+            + np.ascontiguousarray(small).tobytes()
+        )
+        return _media_row(
+            "image", "image/x-portable-pixmap", nb, f"downscaled/{factor}"
+        )
 
-    return media.mapInPandas(_down, schema=MEDIA_SCHEMA)
+    return _strict_codec_map(media, b"P6", _parse_ppm, MEDIA_SCHEMA, _down)
 
 
 def grayscale_ppm(media: DataFrame) -> DataFrame:
@@ -883,57 +783,19 @@ def grayscale_ppm(media: DataFrame) -> DataFrame:
     contract), linear mapInPandas, no shuffle."""
     import numpy as np
 
-    from adhesive_spark.sources.registry import ensure_parallelism
+    def _gray(b, pp):
+        w, h = pp
+        raster = np.frombuffer(
+            b, dtype=np.uint8, count=3 * w * h, offset=len(b) - 3 * w * h
+        ).reshape(h, w, 3)
+        luma = (raster.astype(np.uint16).sum(axis=2) // 3).astype(np.uint8)
+        nb = (
+            f"P6\n{w} {h}\n255\n".encode("ascii")
+            + np.repeat(luma[:, :, None], 3, axis=2).tobytes()
+        )
+        return _media_row("image", "image/x-portable-pixmap", nb, "grayscaled")
 
-    media = ensure_parallelism(_codec_prefilter(media, b'P6'))
-
-    def _gray(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, metas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                pp = _parse_ppm(b)
-                if pp is None:
-                    continue
-                w, h = pp
-                raster = np.frombuffer(
-                    b, dtype=np.uint8, count=3 * w * h,
-                    offset=len(b) - 3 * w * h,
-                ).reshape(h, w, 3)
-                luma = (
-                    raster.astype(np.uint16).sum(axis=2) // 3
-                ).astype(np.uint8)
-                nb = (
-                    f"P6\n{w} {h}\n255\n".encode("ascii")
-                    + np.repeat(luma[:, :, None], 3, axis=2).tobytes()
-                )
-                ids.append(int(mid))
-                mtypes.append("image")
-                payloads.append(nb)
-                metas.append(
-                    {
-                        "mime": "image/x-portable-pixmap",
-                        "n_bytes": len(nb),
-                        "source": "grayscaled",
-                    }
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    return media.mapInPandas(_gray, schema=MEDIA_SCHEMA)
+    return _strict_codec_map(media, b"P6", _parse_ppm, MEDIA_SCHEMA, _gray)
 
 
 def subsample_y4m(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -947,59 +809,27 @@ def subsample_y4m(media: DataFrame, every_n: int = 2) -> DataFrame:
     oracle. Non-Y4M payloads are dropped (strict-codec contract);
     linear mapInPandas, no shuffle, bytes shrink ~every_n×.
     """
-    from adhesive_spark.sources.registry import ensure_parallelism
-
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-    media = ensure_parallelism(_codec_prefilter(media, b'YUV4MPEG2'))
 
-    def _sub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, metas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                ym = _parse_y4m(b)
-                if ym is None:
-                    continue
-                w, h, n, offs = ym
-                frame_sz = w * h + 2 * (w // 2) * (h // 2)
-                head_end = b.find(b"\n") + 1
-                # slice each kept frame at its PARSED (hdr, body)
-                # offsets — parameterized frame headers (longer than
-                # the bare 'FRAME\n') are preserved byte-exact
-                out = [b[:head_end]] + [
-                    b[hdr : body + frame_sz]
-                    for f, (hdr, body) in enumerate(offs)
-                    if f % every_n == 0
-                ]
-                nb = b"".join(out)
-                ids.append(int(mid))
-                mtypes.append("video")
-                payloads.append(nb)
-                metas.append(
-                    {
-                        "mime": "video/x-yuv4mpeg",
-                        "n_bytes": len(nb),
-                        "source": f"subsampled/{every_n}",
-                    }
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
+    def _sub(b, ym):
+        w, h, _n, offs = ym
+        frame_sz = w * h + 2 * (w // 2) * (h // 2)
+        head_end = b.find(b"\n") + 1
+        # slice each kept frame at its PARSED (hdr, body) offsets —
+        # parameterized frame headers (longer than the bare 'FRAME\n')
+        # are preserved byte-exact
+        nb = b"".join(
+            [b[:head_end]]
+            + [
+                b[hdr : body + frame_sz]
+                for f, (hdr, body) in enumerate(offs)
+                if f % every_n == 0
+            ]
+        )
+        return _media_row("video", "video/x-yuv4mpeg", nb, f"subsampled/{every_n}")
 
-    return media.mapInPandas(_sub, schema=MEDIA_SCHEMA)
+    return _strict_codec_map(media, b"YUV4MPEG2", _parse_y4m, MEDIA_SCHEMA, _sub)
 
 
 def pad_wav(media: DataFrame, multiple: int = 1024) -> DataFrame:
@@ -1014,60 +844,22 @@ def pad_wav(media: DataFrame, multiple: int = 1024) -> DataFrame:
     (strict-codec contract); linear mapInPandas, no shuffle; bytes
     grow by at most one frame per clip.
     """
-    import numpy as np
-
-    from adhesive_spark.sources.registry import ensure_parallelism
-
     if multiple < 1:
         raise ValueError("multiple must be >= 1")
-    media = ensure_parallelism(_codec_prefilter(media, b'RIFF'))
 
-    def _pad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, metas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                wv = _parse_wav(b)
-                if wv is None:
-                    continue
-                _dur, n_samples, rate, data_off, blk, ch, bits = wv
-                if bits % 8 or blk != ch * (bits // 8):
-                    continue  # layout the wave writer can't re-emit
-                pad = (-n_samples) % multiple
-                blocks = np.frombuffer(
-                    b, dtype=np.uint8, count=n_samples * blk, offset=data_off
-                )
-                out = io.BytesIO()
-                with wave.open(out, "wb") as w:
-                    w.setnchannels(ch)
-                    w.setsampwidth(bits // 8)
-                    w.setframerate(rate)
-                    w.writeframes(blocks.tobytes() + b"\x00" * (pad * blk))
-                nb = out.getvalue()
-                ids.append(int(mid))
-                mtypes.append("audio")
-                payloads.append(nb)
-                metas.append(
-                    {
-                        "mime": "audio/wav",
-                        "n_bytes": len(nb),
-                        "source": f"padded/{multiple}",
-                    }
-                )
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": metas,
-                }
+    def _pad(b, wv):
+        _dur, n_samples, rate, data_off, blk, ch, bits = wv
+        if bits % 8 or blk != ch * (bits // 8):
+            return None  # layout the wave writer can't re-emit
+        pad = (-n_samples) % multiple
+        out = io.BytesIO()
+        with wave.open(out, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(bits // 8)
+            w.setframerate(rate)
+            w.writeframes(
+                b[data_off : data_off + n_samples * blk] + b"\x00" * (pad * blk)
             )
+        return _media_row("audio", "audio/wav", out.getvalue(), f"padded/{multiple}")
 
-    return media.mapInPandas(_pad, schema=MEDIA_SCHEMA)
+    return _strict_codec_map(media, b"RIFF", _parse_wav, MEDIA_SCHEMA, _pad)

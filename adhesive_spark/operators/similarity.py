@@ -29,8 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.sql.window import Window
 
+from adhesive_spark.operators.curation import cap_per_group
 from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
 
 
@@ -55,6 +55,14 @@ def cosine(a, b):
     null through the zip_with/aggregate fold; NaN elements propagate
     NaN. Identical to plain division for every nonzero-norm pair."""
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+
+
+def _rank_top_k(scored: DataFrame, k: int, query_id_col: str, id_col: str):
+    """The ``k`` best (query, id, sim, rank) rows per query: sim DESC,
+    ties broken by id — the ranking every kNN path shares."""
+    return cap_per_group(
+        scored, query_id_col, [F.col("sim").desc(), F.col(id_col)], k
+    ).select(query_id_col, id_col, "sim", "rank")
 
 
 def knn_bruteforce(
@@ -270,14 +278,7 @@ def _knn_bruteforce_vectorized(
             F.round(F.col("__sim"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_top_k(scored, k, query_id_col, id_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -329,12 +330,7 @@ def knn_lsh(
         id_col,
         F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias("sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_top_k(scored, k, query_id_col, id_col)
 
 
 def build_ivf_index(
@@ -402,9 +398,21 @@ def build_ivf_index(
             )
             .localCheckpoint(eager=True)
         )
-    # Argmax-as-aggregate (max over struct(sim, -cid)): map-side partial
-    # combining beats a rank-1 window's full sort of the corpus×k rows.
-    scored = ensure_parallelism(corpus, id_col).select(
+    assigned = _nearest_centroid(
+        ensure_parallelism(corpus, id_col), centroids, id_col, vec_col
+    )
+    return centroids, assigned
+
+
+def _nearest_centroid(
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, centroid_id): each vector's nearest centroid
+    (``centroids`` = (centroid_id, cvec), broadcast), lowest id on ties
+    — the IVF assignment of the batch build and the streaming ingest.
+    Argmax-as-aggregate (max over struct(sim, -cid)): map-side partial
+    combining beats a rank-1 window's full sort of the corpus×k rows."""
+    scored = vectors.select(
         F.col(id_col), F.col(vec_col).alias("__vec")
     ).crossJoin(F.broadcast(centroids)).select(
         id_col,
@@ -414,12 +422,54 @@ def build_ivf_index(
             (-F.col("centroid_id")).alias("neg_cid"),
         ).alias("__cand"),
     )
-    assigned = (
+    return (
         scored.groupBy(id_col)
         .agg(F.first("__vec").alias(vec_col), F.max("__cand").alias("__best"))
         .select(id_col, vec_col, (-F.col("__best.neg_cid")).alias("centroid_id"))
     )
-    return centroids, assigned
+
+
+def _ivf_probes(
+    queries: DataFrame,
+    centroids: DataFrame,
+    n_probe: int,
+    query_id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query, __qvec, centroid_id): each query's ``n_probe`` nearest
+    inverted lists (centroid sim DESC, lowest centroid id on ties)."""
+    qscored = queries.select(
+        F.col(query_id_col), F.col(vec_col).alias("__qvec")
+    ).crossJoin(F.broadcast(centroids)).select(
+        query_id_col,
+        "__qvec",
+        "centroid_id",
+        F.round(cosine(F.col("__qvec"), F.col("cvec")), 6).alias("__csim"),
+    )
+    return cap_per_group(
+        qscored,
+        query_id_col,
+        [F.col("__csim").desc(), F.col("centroid_id")],
+        n_probe,
+    ).select(query_id_col, "__qvec", "centroid_id")
+
+
+def _ivf_search(
+    assigned: DataFrame,
+    probes: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Top-k over the probed lists only: ``probes`` is broadcast and
+    equi-joined to the index on centroid_id, every candidate scored."""
+    cand = assigned.join(F.broadcast(probes), "centroid_id").select(
+        query_id_col,
+        F.col(id_col),
+        F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("sim"),
+    )
+    return _rank_top_k(cand, k, query_id_col, id_col)
 
 
 def knn_ivf(
@@ -458,35 +508,8 @@ def knn_ivf(
         vec_col=vec_col,
         refine_iters=refine_iters,
     )
-    qscored = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    ).crossJoin(F.broadcast(centroids)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        F.round(cosine(F.col("__qvec"), F.col("cvec")), 6).alias("__csim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("__csim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        qscored.withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= n_probe)
-        .select(query_id_col, "__qvec", "centroid_id")
-    )
-    cand = assigned.join(F.broadcast(probes), "centroid_id").select(
-        query_id_col,
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    probes = _ivf_probes(queries, centroids, n_probe, query_id_col, vec_col)
+    return _ivf_search(assigned, probes, k, id_col, vec_col, query_id_col)
 
 
 def persist_ivf_index(
@@ -508,18 +531,10 @@ def persist_ivf_index(
     DYNAMIC partition pruning (the probe join's broadcast result prunes
     the scan at runtime — no driver round-trip, no index rebuild).
     """
-    spark = corpus.sparkSession
-    # With the default in-memory catalog a rebuilt session forgets the
-    # table but NOT its warehouse directory; saveAsTable then refuses the
-    # "new" name. Drop both so rebuild-the-index is idempotent.
-    from adhesive_spark.sources.fsutil import hadoop_fs
+    from adhesive_spark.sources.fsutil import reset_table
 
-    wh = spark.conf.get("spark.sql.warehouse.dir")
     for t in (table, f"{table}__centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        fs, loc, _ = hadoop_fs(spark, f"{wh}/{t}")
-        if fs.exists(loc):
-            fs.delete(loc, True)
+        reset_table(corpus.sparkSession, t)
     centroids, assigned = build_ivf_index(
         corpus, n_lists=n_lists, id_col=id_col, vec_col=vec_col
     )
@@ -555,23 +570,14 @@ def knn_ivf_probe(
     with zero Exchange on the index side and ZERO driver round-trip
     (the former ``.isin(collect())`` literal-pruning path is gone).
     """
-    assigned = spark.table(table)
-    centroids = spark.table(f"{table}__centroids")
-    qscored = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
-    ).crossJoin(F.broadcast(centroids)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        F.round(cosine(F.col("__qvec"), F.col("cvec")), 6).alias("__csim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("__csim").desc(), F.col("centroid_id")
-    )
     probes = (
-        qscored.withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= n_probe)
-        .select(query_id_col, "__qvec", "centroid_id")
+        _ivf_probes(
+            queries,
+            spark.table(f"{table}__centroids"),
+            n_probe,
+            query_id_col,
+            vec_col,
+        )
         # materialize the ≤ n_queries·n_probe probe set once (cuts its
         # tiny ranking window out of every downstream plan) ...
         .localCheckpoint(eager=True)
@@ -581,21 +587,8 @@ def knn_ivf_probe(
         # when the pruning side carries a filter predicate)
         .where(F.col("centroid_id") >= 0)
     )
-    cand = (
-        assigned.join(F.broadcast(probes), "centroid_id")
-        .select(
-            query_id_col,
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    return _ivf_search(
+        spark.table(table), probes, k, id_col, vec_col, query_id_col
     )
 
 
@@ -624,7 +617,7 @@ def quantize_embeddings(
     s_expr = F.array_max(F.transform(v, lambda x: F.abs(x)))
 
     # Bind scale (and then the code array) ONCE per row via the
-    # single-element-transform scope (the minhash_signature pattern):
+    # single-element-transform scope:
     # a projected column would be re-inlined into the lambdas by
     # CollapseProject and the array_max scan would run per element —
     # O(d²) per row (verified in the optimized plan).

@@ -13,6 +13,10 @@ oracle twins reproduce the sketch BIT-FOR-BIT — estimates included.
 The estimator constant is a fixed ppm literal on both sides, keeping
 the driver's type-strict value hash exact.
 
+HLL has one register builder (:func:`_registers`), one estimator
+(:func:`_estimate`) and one DuckDB oracle (:func:`hll_oracle_sql`),
+grouped or not: the ungrouped functions are the zero-group-column case.
+
 Reference parity note: the reference engine (milenkovicm/adhesive,
 src/fusion.rs) delegates all relational work to DataFusion and ships
 no sketching; this module is SURVEY §2.3 extension surface.
@@ -47,18 +51,30 @@ def hash60(col: Column) -> Column:
     ).cast("long")
 
 
-def hll_registers(df: DataFrame, col: str) -> DataFrame:
-    """The 64-row HLL register table (bucket, m_j) for ``df[col]`` —
-    the mergeable state: registers from ANY partition of the stream
-    max-merge into the whole-stream registers (property-tested), which
-    is what makes this a one-aggregate distributed/streaming sketch."""
+def _registers(
+    df: DataFrame,
+    col: str,
+    group_cols=(),
+    *,
+    carry=(),
+    extra=(),
+) -> DataFrame:
+    """HLL registers ``(group_cols…, bucket, m_j)`` of ``df[col]``.
+
+    bucket = h mod m; rho = leading-zero rank of the remaining bits
+    (via ``length(bin(x))``, identical in Spark and DuckDB); m_j =
+    ``max(rho)`` per (group, bucket). ``carry`` columns ride through
+    the rho projection for the ``extra`` aggregates."""
     h = hash60(F.col(col))
+    keep = [*group_cols, *carry]
     return (
         df.select(
+            *keep,
             (h % F.lit(HLL_M)).alias("bucket"),
             F.shiftright(h, HLL_P).alias("_rem"),
         )
         .select(
+            *keep,
             "bucket",
             F.when(F.col("_rem") == 0, F.lit(HLL_SCALE).cast("long"))
             .otherwise(
@@ -67,16 +83,24 @@ def hll_registers(df: DataFrame, col: str) -> DataFrame:
             )
             .alias("rho"),
         )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("m_j"))
+        .groupBy(*group_cols, "bucket")
+        .agg(F.max("rho").alias("m_j"), *extra)
     )
 
 
-def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
-    """One-row (m, nonempty, s_scaled, est_hll) from a register table —
-    the estimator half of :func:`hll_estimate`, shared with the
-    streaming register maintainer (streaming/ops.py)."""
-    summed = regs.agg(
+def _estimate(regs: DataFrame, group_cols=(), *, exact=None) -> DataFrame:
+    """The estimator over a register table, per group: nonempty,
+    s_scaled = Σ 2^(SCALE − m_j) with empty registers counted at
+    2^SCALE, and est_hll. alpha · m² · 2^SCALE overflows BIGINT, so the
+    numerator is carried in DECIMAL(38,0) (HUGEINT on the oracle side)
+    and BOTH divisions happen last — the early-division factoring loses
+    the whole estimate to truncation (2^SCALE div S is a single-digit
+    quotient here). The ungrouped estimate leads with ``m``; ``exact``
+    (an aggregate aliased ``exact_distinct``) rides the register sum."""
+    keys = [*group_cols] or ["m"]
+    head = [*group_cols] or [F.lit(HLL_M).cast("long").alias("m")]
+    tail = [] if exact is None else ["exact_distinct"]
+    summed = regs.groupBy(*group_cols).agg(
         F.count("*").cast("long").alias("nonempty"),
         F.sum(
             F.expr(
@@ -85,44 +109,53 @@ def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
         )
         .cast("long")
         .alias("s_nonempty"),
+        *([] if exact is None else [exact]),
     )
     return summed.select(
-        F.lit(HLL_M).cast("long").alias("m"),
+        *head,
         "nonempty",
         (
             F.col("s_nonempty")
             + (F.lit(HLL_M) - F.col("nonempty"))
             * F.lit(1 << HLL_SCALE).cast("long")
         ).alias("s_scaled"),
+        *tail,
     ).select(
-        "m",
+        *keys,
         "nonempty",
         "s_scaled",
-        # alpha * m^2 * 2^SCALE overflows BIGINT, so the numerator is
-        # carried in DECIMAL(38,0) (HUGEINT on the oracle side) and
-        # BOTH divisions happen last — the early-division factoring
-        # loses the whole estimate to truncation (2^SCALE div S is a
-        # single-digit quotient here).
         F.expr(
             f"CAST(((CAST({HLL_ALPHA_PPM} AS DECIMAL(38,0))"
             f" * {HLL_M} * {HLL_M} * {1 << HLL_SCALE})"
             f" div s_scaled) div 1000000 AS BIGINT)"
         ).alias("est_hll"),
+        *tail,
     )
+
+
+def hll_registers(df: DataFrame, col: str) -> DataFrame:
+    """The 64-row HLL register table (bucket, m_j) for ``df[col]`` —
+    the mergeable state: registers from ANY partition of the stream
+    max-merge into the whole-stream registers (property-tested), which
+    is what makes this a one-aggregate distributed/streaming sketch."""
+    return _registers(df, col)
+
+
+def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
+    """One-row (m, nonempty, s_scaled, est_hll) from a register table —
+    the estimator half of :func:`hll_estimate`, shared with the
+    streaming register maintainer (streaming/ops.py)."""
+    return _estimate(regs)
 
 
 def hll_estimate(df: DataFrame, col: str) -> DataFrame:
     """One-row HyperLogLog cardinality estimate over ``df[col]``.
 
-    bucket = h mod 64; rho = leading-zero rank of the remaining 54
-    bits (via ``length(bin(x))``, identical in Spark and DuckDB);
-    registers are ``max(rho)`` per bucket — a single hash aggregate to
-    64 rows, mergeable across any partitioning. The raw estimator
-    alpha*m^2 / Σ2^-M_j runs in scaled-integer form: empty registers
-    contribute 2^SCALE each, and the oversized numerator
-    alpha_ppm * m^2 * 2^SCALE (~1e26) is carried in DECIMAL(38,0) /
-    HUGEINT with both divisions last, so no precision is lost to
-    intermediate truncation.
+    Registers are ``max(rho)`` per bucket — a single hash aggregate to
+    64 rows, mergeable across any partitioning (:func:`_registers`).
+    The raw estimator alpha*m^2 / Σ2^-M_j runs in scaled-integer form
+    (:func:`_estimate`): empty registers contribute 2^SCALE each, and
+    no precision is lost to intermediate truncation.
 
     No small-range (linear-counting) correction is applied — callers
     profiling columns with <2.5*m distinct values should read
@@ -143,58 +176,13 @@ def hll_estimate(df: DataFrame, col: str) -> DataFrame:
     # null group, max(rho)=NULL drops out of the sum) — so the per-row
     # count() below must count keys, not rows.
     keys = df.select(F.col(col).cast("string").alias("__k")).distinct()
-    h = hash60(F.col("__k"))
-    pre = keys.select(
-        "__k",
-        (h % F.lit(HLL_M)).alias("bucket"),
-        F.shiftright(h, HLL_P).alias("_rem"),
-    ).select(
-        "__k",
-        "bucket",
-        F.when(F.col("_rem") == 0, F.lit(HLL_SCALE).cast("long"))
-        .otherwise(
-            F.lit(HLL_SCALE).cast("long")
-            - F.length(F.bin(F.col("_rem"))).cast("long")
-        )
-        .alias("rho"),
+    per_bucket = _registers(
+        keys, "__k", carry=["__k"], extra=[F.count("__k").alias("__cnt")]
     )
-    per_bucket = pre.groupBy("bucket").agg(
-        F.max("rho").alias("m_j"),
-        F.count("__k").alias("__cnt"),
+    exact = (
+        F.coalesce(F.sum("__cnt"), F.lit(0)).cast("long").alias("exact_distinct")
     )
-    summed = per_bucket.agg(
-        F.count("*").cast("long").alias("nonempty"),
-        F.sum(
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST({HLL_SCALE} - m_j AS INT))"
-            )
-        )
-        .cast("long")
-        .alias("s_nonempty"),
-        F.coalesce(F.sum("__cnt"), F.lit(0))
-        .cast("long")
-        .alias("exact_distinct"),
-    )
-    return summed.select(
-        F.lit(HLL_M).cast("long").alias("m"),
-        "nonempty",
-        (
-            F.col("s_nonempty")
-            + (F.lit(HLL_M) - F.col("nonempty"))
-            * F.lit(1 << HLL_SCALE).cast("long")
-        ).alias("s_scaled"),
-        "exact_distinct",
-    ).select(
-        "m",
-        "nonempty",
-        "s_scaled",
-        F.expr(
-            f"CAST(((CAST({HLL_ALPHA_PPM} AS DECIMAL(38,0))"
-            f" * {HLL_M} * {HLL_M} * {1 << HLL_SCALE})"
-            f" div s_scaled) div 1000000 AS BIGINT)"
-        ).alias("est_hll"),
-        "exact_distinct",
-    ).select(
+    return _estimate(per_bucket, exact=exact).select(
         "*",
         F.expr(
             "CAST(abs(est_hll - exact_distinct) * 1000000"
@@ -203,11 +191,16 @@ def hll_estimate(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def hll_oracle_sql(source_sql: str, col: str) -> str:
-    """DuckDB twin of :func:`hll_estimate` over ``source_sql``."""
+def hll_oracle_sql(source_sql: str, col: str, group_cols=()) -> str:
+    """DuckDB twin of :func:`hll_estimate` over ``source_sql``; with
+    ``group_cols``, of :func:`hll_estimate_grouped` plus the per-group
+    ``exact_distinct`` and ``err_ppm``, ordered by the group columns."""
+    g = "".join(f"{c}, " for c in group_cols)
+    by = ", ".join(group_cols)
+    head = g or f"CAST({HLL_M} AS BIGINT) AS m, "
     return f"""
     WITH hashed AS (
-      SELECT h % {HLL_M} AS bucket,
+      SELECT {g}h % {HLL_M} AS bucket,
              CASE WHEN (h >> {HLL_P}) = 0
                   THEN CAST({HLL_SCALE} AS BIGINT)
                   ELSE CAST({HLL_SCALE} AS BIGINT)
@@ -215,44 +208,40 @@ def hll_oracle_sql(source_sql: str, col: str) -> str:
              END AS rho,
              raw
       FROM (
-        SELECT CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1,
+        SELECT {g}CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1,
                                     {_HASH_HEX_CHARS})) AS BIGINT) AS h,
                CAST({col} AS VARCHAR) AS raw
         FROM ({source_sql})
       )
     ),
     regs AS (
-      SELECT bucket, MAX(rho) AS m_j FROM hashed GROUP BY bucket
+      SELECT {g}bucket, MAX(rho) AS m_j, COUNT(DISTINCT raw) AS n_raw
+      FROM hashed GROUP BY {g}bucket
     ),
     summed AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS nonempty,
+      SELECT {g}CAST(COUNT(*) AS BIGINT) AS nonempty,
              CAST(SUM(CAST(1 AS BIGINT) << CAST({HLL_SCALE} - m_j AS INT))
-                  AS BIGINT) AS s_nonempty
-      FROM regs
-    ),
-    exact AS (
-      SELECT CAST(COUNT(DISTINCT raw) AS BIGINT) AS exact_distinct
-      FROM hashed
-    ),
-    wide AS (
-      SELECT CAST({HLL_M} AS BIGINT) AS m, nonempty,
-             s_nonempty + ({HLL_M} - nonempty)
-               * (CAST(1 AS BIGINT) << {HLL_SCALE}) AS s_scaled,
-             exact_distinct
-      FROM summed CROSS JOIN exact
+                  AS BIGINT) AS s_nonempty,
+             CAST(COALESCE(SUM(n_raw), 0) AS BIGINT) AS exact_distinct
+      FROM regs {f"GROUP BY {by}" if group_cols else ""}
     ),
     est AS (
-      SELECT m, nonempty, s_scaled,
+      SELECT {head}nonempty, s_scaled,
              CAST(((CAST({HLL_ALPHA_PPM} AS HUGEINT)
                     * {HLL_M} * {HLL_M} * {1 << HLL_SCALE})
                    // s_scaled) // 1000000 AS BIGINT) AS est_hll,
              exact_distinct
-      FROM wide
+      FROM (
+        SELECT *, s_nonempty + ({HLL_M} - nonempty)
+                    * (CAST(1 AS BIGINT) << {HLL_SCALE}) AS s_scaled
+        FROM summed
+      )
     )
-    SELECT m, nonempty, s_scaled, est_hll, exact_distinct,
+    SELECT {g or "m, "}nonempty, s_scaled, est_hll, exact_distinct,
            CAST(abs(est_hll - exact_distinct) * 1000000
                 // exact_distinct AS BIGINT) AS err_ppm
     FROM est
+    {f"ORDER BY {by}" if group_cols else ""}
     """
 
 
@@ -354,51 +343,4 @@ def hll_estimate_grouped(
     (the mergeable-HLL rollup q90 demonstrates with DataSketches, here
     rebuilt at register level). Output per group: nonempty, s_scaled,
     est_hll — exact-twin columns are the caller's to add."""
-    h = hash60(F.col(col))
-    regs = (
-        df.select(
-            *group_cols,
-            (h % F.lit(HLL_M)).alias("bucket"),
-            F.shiftright(h, HLL_P).alias("_rem"),
-        )
-        .select(
-            *group_cols,
-            "bucket",
-            F.when(F.col("_rem") == 0, F.lit(HLL_SCALE).cast("long"))
-            .otherwise(
-                F.lit(HLL_SCALE).cast("long")
-                - F.length(F.bin(F.col("_rem"))).cast("long")
-            )
-            .alias("rho"),
-        )
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
-    summed = regs.groupBy(*group_cols).agg(
-        F.count("*").cast("long").alias("nonempty"),
-        F.sum(
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST({HLL_SCALE} - m_j AS INT))"
-            )
-        )
-        .cast("long")
-        .alias("s_nonempty"),
-    )
-    return summed.select(
-        *group_cols,
-        "nonempty",
-        (
-            F.col("s_nonempty")
-            + (F.lit(HLL_M) - F.col("nonempty"))
-            * F.lit(1 << HLL_SCALE).cast("long")
-        ).alias("s_scaled"),
-    ).select(
-        *group_cols,
-        "nonempty",
-        "s_scaled",
-        F.expr(
-            f"CAST(((CAST({HLL_ALPHA_PPM} AS DECIMAL(38,0))"
-            f" * {HLL_M} * {HLL_M} * {1 << HLL_SCALE})"
-            f" div s_scaled) div 1000000 AS BIGINT)"
-        ).alias("est_hll"),
-    )
+    return _estimate(_registers(df, col, group_cols), group_cols)

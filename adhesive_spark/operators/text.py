@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from adhesive_spark.operators.curation import cap_per_group
 from adhesive_spark.sources.registry import checkpoint_corpus
 
 #: Tiny per-language marker lexicons for the heuristic language scorer.
@@ -228,8 +230,6 @@ def tfidf_top_terms(
     the score ROUNDED to 6 decimals with token tie-break so the order is
     reproducible across engines (raw float ordering is not).
     """
-    from pyspark.sql.window import Window
-
     # ONE tokenize+explode pass: tf is the (doc, token) grain, and the
     # doc frequency is exactly one count per tf row (tf holds one row
     # per distinct (doc, token)), so the former second explode over
@@ -266,16 +266,9 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy("id").orderBy(
-        F.col("score").desc(), F.col("token")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_n)
-        .select(
-            F.col("id").alias(id_col), "token", "tf", "df", "score", "rank"
-        )
-    )
+    return cap_per_group(
+        scored, "id", [F.col("score").desc(), F.col("token")], top_n
+    ).select(F.col("id").alias(id_col), "token", "tf", "df", "score", "rank")
 
 
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -470,16 +463,9 @@ def persist_inverted_index(
     is paid ONCE; every probe afterwards is bucket-pruned IO with no
     shuffle and no rebuild."""
     from adhesive_spark.sources.formats import write_bucketed_table
-    from adhesive_spark.sources.fsutil import hadoop_fs
+    from adhesive_spark.sources.fsutil import reset_table
 
-    spark = docs.sparkSession
-    # in-memory catalog: drop the table AND its leftover warehouse dir
-    # so rebuild-the-index is idempotent (persist_ivf_index pattern)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    fs, loc, _ = hadoop_fs(spark, f"{wh}/{table}")
-    if fs.exists(loc):
-        fs.delete(loc, True)
+    reset_table(docs.sparkSession, table)
     postings = (
         docs.select(
             F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")

@@ -1942,14 +1942,10 @@ def q238_bucketed_colocated_join(spark, sf_dir):
 
     Output: exact revenue cents and line counts per order priority."""
     from adhesive_spark.sources.formats import write_bucketed_table
-    from adhesive_spark.sources.fsutil import hadoop_fs
+    from adhesive_spark.sources.fsutil import reset_table
 
-    wh = spark.conf.get("spark.sql.warehouse.dir")
     for tbl in ("q238_orders_b", "q238_lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        fs, loc, _ = hadoop_fs(spark, f"{wh}/{tbl}")
-        if fs.exists(loc):
-            fs.delete(loc, True)
+        reset_table(spark, tbl)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )

@@ -1062,71 +1062,9 @@ def q249_hll_per_group(spark, sf_dir):
 
 SKETCH_QUERIES["q249_hll_per_group"] = q249_hll_per_group
 
-
-def _hll_grouped_oracle(group: str) -> str:
-    from adhesive_spark.operators.sketches import (
-        _HASH_HEX_CHARS,
-        HLL_ALPHA_PPM,
-        HLL_M,
-        HLL_P,
-        HLL_SCALE,
-    )
-
-    return f"""
-    WITH hashed AS (
-      SELECT {group}, h % {HLL_M} AS bucket,
-             CASE WHEN (h >> {HLL_P}) = 0
-                  THEN CAST({HLL_SCALE} AS BIGINT)
-                  ELSE CAST({HLL_SCALE} AS BIGINT)
-                       - CAST(length(bin(h >> {HLL_P})) AS BIGINT)
-             END AS rho,
-             raw
-      FROM (
-        SELECT {group},
-               CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1,
-                                    {_HASH_HEX_CHARS})) AS BIGINT) AS h,
-               CAST(l_partkey AS VARCHAR) AS raw
-        FROM lineitem
-      )
-    ),
-    regs AS (
-      SELECT {group}, bucket, MAX(rho) AS m_j
-      FROM hashed GROUP BY {group}, bucket
-    ),
-    summed AS (
-      SELECT {group}, CAST(COUNT(*) AS BIGINT) AS nonempty,
-             CAST(SUM(CAST(1 AS BIGINT) << CAST({HLL_SCALE} - m_j AS INT))
-                  AS BIGINT) AS s_nonempty
-      FROM regs GROUP BY {group}
-    ),
-    wide AS (
-      SELECT {group}, nonempty,
-             s_nonempty + ({HLL_M} - nonempty)
-               * (CAST(1 AS BIGINT) << {HLL_SCALE}) AS s_scaled
-      FROM summed
-    ),
-    est AS (
-      SELECT {group}, nonempty, s_scaled,
-             CAST(((CAST({HLL_ALPHA_PPM} AS HUGEINT)
-                    * {HLL_M} * {HLL_M} * {1 << HLL_SCALE})
-                   // s_scaled) // 1000000 AS BIGINT) AS est_hll
-      FROM wide
-    ),
-    exact AS (
-      SELECT {group}, CAST(COUNT(DISTINCT raw) AS BIGINT)
-               AS exact_distinct
-      FROM hashed GROUP BY {group}
-    )
-    SELECT e.{group}, e.nonempty, e.s_scaled, e.est_hll,
-           x.exact_distinct,
-           CAST(abs(e.est_hll - x.exact_distinct) * 1000000
-                // x.exact_distinct AS BIGINT) AS err_ppm
-    FROM est e JOIN exact x USING ({group})
-    ORDER BY e.{group}
-    """
-
-
-SKETCH_ORACLES["q249_hll_per_group"] = _hll_grouped_oracle("l_suppkey")
+SKETCH_ORACLES["q249_hll_per_group"] = hll_oracle_sql(
+    "SELECT l_suppkey, l_partkey FROM lineitem", "l_partkey", ["l_suppkey"]
+)
 
 
 # --- q250: basket affinity (co-visitation) -----------------------------------

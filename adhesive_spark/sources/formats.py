@@ -20,38 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 _READERS = ("parquet", "csv", "json", "orc", "avro")
 
 
-def _avro_available(spark: SparkSession) -> bool:
-    """The Avro datasource lives in the separate ``spark-avro`` artifact
-    (not in pyspark's bundled jars — only avro-core is, for Spark's own
-    shuffle use). Gate on its presence instead of failing with Spark's
-    generic FAILED_FIND_DATA_SOURCE.
-
-    A control probe against the always-present parquet source guards the
-    probe itself: if even parquet fails to resolve, the reflective API
-    has changed and we must NOT report "avro absent" (the real operation
-    will produce the accurate error instead)."""
-    try:
-        lookup = (
-            spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource
-        )
-        conf = spark._jsparkSession.sessionState().conf()
-    except Exception:
-        # probe API itself unavailable — assume present and let the
-        # actual read/write surface the accurate error
-        return True
-    try:
-        lookup("avro", conf)
-        return True
-    except Exception:
-        try:
-            lookup("parquet", conf)
-        except Exception:
-            # probe API broken, not avro missing — assume available and
-            # let the actual read/write surface the real error
-            return True
-        return False
-
-
 def read_any(
     spark: SparkSession,
     path: str,
@@ -61,12 +29,6 @@ def read_any(
 ) -> DataFrame:
     if fmt not in _READERS:
         raise ValueError(f"unsupported format {fmt!r}; one of {_READERS}")
-    if fmt == "avro" and not _avro_available(spark):
-        raise ValueError(
-            "avro requires the spark-avro package on the classpath "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark version>); "
-            "it is not bundled with pyspark and not vendored here"
-        )
     reader = spark.read.format(fmt)
     if fmt == "csv":
         # header+schema, never inferSchema on big data (it double-scans)
@@ -92,12 +54,6 @@ def write_any(
     compression: str | None = None,
     **options,
 ) -> None:
-    if fmt == "avro" and not _avro_available(df.sparkSession):
-        raise ValueError(
-            "avro requires the spark-avro package on the classpath "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark version>); "
-            "it is not bundled with pyspark and not vendored here"
-        )
     writer = df.write.format(fmt).mode(mode)
     if fmt == "csv":
         writer = writer.option("header", "true")

@@ -16,3 +16,16 @@ def hadoop_fs(spark, path_str: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path_str)
     fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
     return fs, hpath, jvm
+
+
+def reset_table(spark, table: str) -> None:
+    """Drop ``table`` AND delete its warehouse directory.
+
+    With the default in-memory catalog a rebuilt session forgets the
+    table but not its warehouse directory, and saveAsTable then refuses
+    the "new" name; dropping both makes every rebuild idempotent."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    fs, loc, _ = hadoop_fs(spark, f"{wh}/{table}")
+    if fs.exists(loc):
+        fs.delete(loc, True)

@@ -386,7 +386,7 @@ def streaming_index_ingest(
     """Continuously maintain an IVF ANN index from a stream of new
     embeddings: each micro-batch is assigned to its nearest centroid
     (argmax-as-aggregate against the broadcast ``centroids_table``, the
-    same math as the batch ``build_ivf_index``) and appended under
+    batch ``build_ivf_index``'s own assignment) and appended under
     ``output_path/__epoch=<id>`` PARTITIONED BY centroid_id — directory
     partitioning plays the bucket role for appended data, so a probe
     that filters ``centroid_id IN (<probes>)`` reads only the probed
@@ -400,37 +400,15 @@ def streaming_index_ingest(
     per epoch, and a periodic compaction folds epochs into the bucketed
     base table.
     """
-    from adhesive_spark.operators.similarity import cosine
+    from adhesive_spark.operators.similarity import _nearest_centroid
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epochs = _committed_epochs(spark, output_path)
         if epochs and epochs[-1] >= epoch_id:
             return  # replayed micro-batch: epoch dir already committed
-        cents = spark.table(centroids_table)
-        scored = batch_df.select(
-            F.col(id_col), F.col(vec_col).alias("__vec")
-        ).crossJoin(F.broadcast(cents)).select(
-            id_col,
-            "__vec",
-            F.struct(
-                F.round(cosine(F.col("__vec"), F.col("cvec")), 6).alias(
-                    "sim"
-                ),
-                (-F.col("centroid_id")).alias("neg_cid"),
-            ).alias("__cand"),
-        )
-        assigned = (
-            scored.groupBy(id_col)
-            .agg(
-                F.first("__vec").alias(vec_col),
-                F.max("__cand").alias("__best"),
-            )
-            .select(
-                id_col,
-                vec_col,
-                (-F.col("__best.neg_cid")).alias("centroid_id"),
-            )
+        assigned = _nearest_centroid(
+            batch_df, spark.table(centroids_table), id_col, vec_col
         )
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{output_path}/__epoch={epoch_id}"
@@ -551,7 +529,7 @@ def compact_streamed_index(
     nothing lost, and the next compaction converges.
     """
     from adhesive_spark.sources.formats import write_bucketed_table
-    from adhesive_spark.sources.fsutil import hadoop_fs
+    from adhesive_spark.sources.fsutil import reset_table
 
     epochs = _committed_epochs(spark, output_path)
     if not epochs:
@@ -571,11 +549,7 @@ def compact_streamed_index(
         merged = base.unionByName(fresh)
     else:
         merged = fresh
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    fs, loc, _ = hadoop_fs(spark, f"{wh}/{table}")
-    if fs.exists(loc):
-        fs.delete(loc, True)
+    reset_table(spark, table)
     write_bucketed_table(
         merged, table, bucket_cols=["centroid_id"], n_buckets=n_buckets
     )

@@ -7,7 +7,8 @@ for row. Not collected by pytest (no ``test_`` prefix).
 
 - :func:`knn_bruteforce_hof` — ``similarity.knn_bruteforce``;
 - :func:`assign_hof` — the k-means ``clustering._assign`` step;
-- :func:`minhash_sig_hof` — the signatures of
+- :func:`minhash_sig_hof` (over :func:`minhash_signature` and
+  :func:`minhash_signature_from_base`) — the signatures of
   ``dedup.minhash_base_and_bands``;
 - :func:`gopher_repetition_report_hof` —
   ``training_queries.gopher_repetition_report``;
@@ -21,7 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from adhesive_spark.operators.dedup import minhash_signature
+from adhesive_spark.operators.dedup import (
+    _MERSENNE,
+    _perm_coeffs,
+    portable_hash32,
+    word_shingles,
+)
 from adhesive_spark.operators.similarity import cosine
 from adhesive_spark.operators.text import normalize_text, tokens
 from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
@@ -80,6 +86,65 @@ def assign_hof(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
         scored.groupBy("vec_id")
         .agg(F.first("v").alias("v"), F.max("__cand").alias("__best"))
         .select("vec_id", "v", (-F.col("__best.neg_cid")).alias("cid"))
+    )
+
+
+def _coeff_array(num_perm: int, seed: int = 42):
+    """The permutation coefficients as ONE literal array<struct<a,b>>
+    column, so the whole signature is a single nested higher-order
+    expression — NOT num_perm copies of the transform. 64 unrolled
+    copies were observed to produce a codegen unit whose first-run
+    Janino+JIT compile cost tens of seconds; the HOF form is a loop in
+    one tiny compiled class with identical per-row work."""
+    return F.array(
+        *[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for a, b in _perm_coeffs(num_perm, seed)
+        ]
+    )
+
+
+def minhash_signature_from_base(base_col, num_perm: int = 64, seed: int = 42):
+    """Array<long> MinHash signature over an already-materialized column
+    of base hashes (array<long>).
+
+    ``base_col`` MUST be a plain column reference (cached/projected), not
+    a subtree: it is referenced inside the per-coefficient lambda, so an
+    inline expression would be re-evaluated num_perm times.
+    """
+    return F.transform(
+        _coeff_array(num_perm, seed),
+        lambda c: F.array_min(
+            F.transform(
+                base_col, lambda h: (h * c["a"] + c["b"]) % _MERSENNE
+            )
+        ),
+    )
+
+
+def minhash_signature(
+    col,
+    num_perm: int = 64,
+    shingle_n: int = 3,
+    seed: int = 42,
+):
+    """Array<long> MinHash signature, entirely in built-in expressions.
+
+    The shingle set is hashed ONCE (portable md5-prefix hash) into a
+    named lambda variable (so it is NOT recomputed per permutation);
+    each permutation is an affine transform (a*h+b) mod M₃₁ over the
+    base hashes."""
+    shingles = word_shingles(col, shingle_n)
+    base = F.transform(shingles, lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE)))
+    # Bind base once via a single-element transform scope: the outer
+    # lambda variable `bs` is evaluated once per row, then reused by all
+    # num_perm inner scans.
+    return F.element_at(
+        F.transform(
+            F.array(base),
+            lambda bs: minhash_signature_from_base(bs, num_perm, seed),
+        ),
+        1,
     )
 
 

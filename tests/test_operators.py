@@ -1201,6 +1201,58 @@ def test_pad_wav_roundtrip_through_strict_codec(spark, sf_dir):
         assert p.duration_ms >= o.duration_ms
 
 
+_STRICT_KERNELS = {
+    "image_channel_stats": ("ppm", (), [
+        "media_id", "width", "height",
+        "mean_r_milli", "mean_g_milli", "mean_b_milli",
+    ]),
+    "video_luma_stats": ("y4m", (), [
+        "media_id", "n_frames", "first_luma_milli", "max_delta_milli",
+    ]),
+    "wav_head_energy": ("wav", (), ["media_id", "n_samples", "head_mean_abs"]),
+    "resample_wav": ("wav", (2,), None),
+    "downscale_ppm": ("ppm", (2,), None),
+    "grayscale_ppm": ("ppm", (), None),
+    "subsample_y4m": ("y4m", (2,), None),
+    "pad_wav": ("wav", (1024,), None),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_STRICT_KERNELS))
+def test_strict_codec_drop_contract(spark, kernel):
+    """Every strict-codec kernel drops null payloads, payloads of the
+    wrong magic and right-magic payloads that do not parse (truncated),
+    and emits the one valid payload; an input where every row is
+    dropped gives an empty frame with the kernel's schema, not an
+    error."""
+    from adhesive_spark.operators import multimodal as mm
+
+    codec, args, columns = _STRICT_KERNELS[kernel]
+    payloads = {
+        "wav": mm.wav_bytes(800, 8000, seed=1),
+        "ppm": mm.ppm_bytes(6, 5, seed=1),
+        "y4m": mm.y4m_bytes(4, 4, 3, seed=1),
+    }
+    good = payloads[codec]
+    wrong = [b for c, b in sorted(payloads.items()) if c != codec]
+    dropped = [None, b"not a media payload", *wrong, good[: len(good) // 2]]
+    rows = [
+        (i, "x", bytearray(b) if b is not None else None, None)
+        for i, b in enumerate([*dropped, good])
+    ]
+    fn = getattr(mm, kernel)
+    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
+    out = fn(media, *args)
+    assert [r.media_id for r in out.collect()] == [len(dropped)]
+
+    none_left = fn(media.where(F.col("media_id") < len(dropped)), *args)
+    assert none_left.collect() == []
+    if columns is None:
+        assert none_left.schema == mm.MEDIA_SCHEMA
+    else:
+        assert none_left.columns == columns
+
+
 def test_minhash_kernel_matches_hof_twin(spark, sf_dir):
     """The Arrow minhash-signature kernel must produce bit-identical
     array<long> signatures to the pure-Catalyst HOF twin

@@ -7,10 +7,11 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from _twins import minhash_signature
+
 from adhesive_spark.operators.dedup import (
     _MERSENNE,
     _perm_coeffs,
-    minhash_signature,
     portable_hash32,
     portable_hash63,
 )

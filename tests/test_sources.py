@@ -103,22 +103,24 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path_factory):
 
 
 def test_avro_gated_on_package_presence(spark, tmp_path_factory):
-    """Avro is a separate spark-avro artifact: when absent the reader
-    must fail with the actionable package hint, never Spark's generic
-    FAILED_FIND_DATA_SOURCE; when present it must round-trip."""
+    """Avro is a separate spark-avro artifact: when it is absent, both
+    the writer and the reader fail with Spark's own error, which names
+    the missing module; when present, a round trip keeps every row."""
     import pytest
-
-    from adhesive_spark.sources.formats import _avro_available
+    from pyspark.errors import AnalysisException
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     path = str(tmp_path_factory.mktemp("avro") / "t")
-    if _avro_available(spark):
+    missing = "Failed to find data source: avro"
+    try:
         write_any(df, path, fmt="avro")
-        back = read_any(spark, path, fmt="avro")
-        assert sorted((r.id, r.s) for r in back.collect()) == [(1, "a"), (2, "b")]
-    else:
-        with pytest.raises(ValueError, match="spark-avro"):
+    except AnalysisException as e:
+        assert missing in str(e), str(e)
+        with pytest.raises(AnalysisException, match=missing):
             read_any(spark, path, fmt="avro")
+        return
+    back = read_any(spark, path, fmt="avro")
+    assert sorted((r.id, r.s) for r in back.collect()) == [(1, "a"), (2, "b")]
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path_factory):

@@ -292,10 +292,11 @@ def main() -> None:
     # parallel 32-node paths (diameter 31), a cost axis that replicating
     # wide/flat dedup graphs never exercises. Large-star/small-star
     # (graph.py connected_components) converges in ~7 alternating
-    # rounds where diameter-bound label propagation would need 31;
-    # max_rounds=10 makes that a hard assert on rungs whose edge set is
-    # above the local-finish gate (1M edges) — below it one driver-side
-    # union-find pass answers.
+    # rounds where diameter-bound label propagation would need 31.
+    # local_threshold=0 switches the driver-side union-find finish off,
+    # so every rung times the star rounds and max_rounds=10 is a hard
+    # assert at every size (with the default gate, rungs under 1M edges
+    # would be answered by one local pass and run no round at all).
     from adhesive_spark.operators.graph import connected_components
 
     chain_len = 32
@@ -310,7 +311,9 @@ def main() -> None:
     )
 
     def _cc_star():
-        labels = connected_components(path_edges, max_rounds=10)
+        labels = connected_components(
+            path_edges, max_rounds=10, local_threshold=0
+        )
         # sanity INSIDE the stress: every 32-node path collapses to one
         # component labeled by its min node — wrong round accounting
         # would surface as a component-count mismatch here
