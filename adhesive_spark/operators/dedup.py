@@ -137,8 +137,9 @@ def _perm_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
 def portable_hash32(s):
     """32-bit hash = first 8 hex chars of md5, parsed as an integer.
 
-    Engine-portable by construction (DuckDB reconstructs it from the
-    same hex pairs), which is what lets the banded-LSH pipeline be
+    Engine-portable by construction (its DuckDB twin is
+    ``queries.oracle_fragments._h32``, which parses the same 8 hex
+    digits), which is what lets the banded-LSH pipeline be
     oracle-checked end-to-end instead of rows-only; xxhash64 would be
     faster per shingle but exists only in Spark.
     """

@@ -136,31 +136,27 @@ def quality_score(col) -> Column:
     return fround(0.4 * length_ok + 0.4 * stop_component + 0.2 * (1 - noise), 4)
 
 
-def lang_scores(col) -> dict[str, Column]:
-    """Marker-hit count per language over the token set."""
-    toks = tokens(col)
-    out = {}
+def lang_id_tokens(toks) -> Column:
+    """Argmax language by marker hits over the token array ``toks``;
+    ties broken by the fixed language order in LANG_MARKERS; 'und'
+    (undetermined) when no marker hits."""
+    scores = {}
     for lang, markers in LANG_MARKERS.items():
         marks = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(marks, t)))
-    return out
-
-
-def lang_id(col, min_hits: int = 1) -> Column:
-    """Argmax language by marker hits; ties broken by the fixed language
-    order in LANG_MARKERS; 'und' (undetermined) below ``min_hits``."""
-    scores = lang_scores(col)
-    langs = list(scores)
-    best = None
+        scores[lang] = F.size(F.filter(toks, lambda t: F.array_contains(marks, t)))
     # Build a strictly-greater chain so the FIRST language wins ties.
     expr = F.lit("und")
     best_score = F.lit(-1)
-    for lang in reversed(langs):
+    for lang in reversed(list(scores)):
         s = scores[lang]
-        cond = (s >= min_hits) & (s >= best_score)
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
+        expr = F.when((s >= 1) & (s >= best_score), F.lit(lang)).otherwise(expr)
         best_score = F.greatest(s, best_score)
     return expr
+
+
+def lang_id(col) -> Column:
+    """``lang_id_tokens`` over the whitespace tokens of ``col``."""
+    return lang_id_tokens(tokens(col))
 
 
 def fingerprint(col) -> Column:

@@ -19,10 +19,13 @@ from adhesive_spark.operators.grouped import (
 )
 from adhesive_spark.operators.text import fround, lang_id, quality_score, scaled_long
 from adhesive_spark.queries.oracle_fragments import (
+    _FP,
     _NORM,
     _PAIR_CTES,
     _TOKS,
-    _byte_from_hex,
+    _hex_int,
+    _lang_sql,
+    _norm,
     _quality_sql,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
@@ -1197,41 +1200,11 @@ ADVANCED_QUERIES = {
     "q110_scd2_history": q110_scd2_history,
 }
 
-def _lang_sql() -> str:
-    from adhesive_spark.operators.text import LANG_MARKERS
-
-    def score(lang: str) -> str:
-        markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
-        return f"len(list_filter(toks, t -> t IN ({markers})))"
-
-    return f"""
-        CASE WHEN {score('en')} >= 1
-                  AND {score('en')} >= greatest({score('de')}, {score('fr')}, {score('es')})
-             THEN 'en'
-             WHEN {score('de')} >= 1
-                  AND {score('de')} >= greatest({score('fr')}, {score('es')})
-             THEN 'de'
-             WHEN {score('fr')} >= 1 AND {score('fr')} >= {score('es')}
-             THEN 'fr'
-             WHEN {score('es')} >= 1 THEN 'es'
-             ELSE 'und' END
-    """
-
-
-def _md5_byte(hexpr: str, pos: int) -> str:
-    """DuckDB int value of hex pair ``pos`` (1-based) of md5(expr)."""
-    return _byte_from_hex(f"md5(CAST({hexpr} AS VARCHAR))", pos)
-
-
-_PH_B1 = _md5_byte("doc_id", 1)
-_PH_B2 = _md5_byte("doc_id", 2)
-
-
 def _media_embed_sql() -> str:
     """8-dim content-hash embedding over image media rows (mirrors
     multimodal.synthesize_media + decode_media + media_embedding)."""
     dims = ", ".join(
-        f"{_byte_from_hex('sha', i + 1)} / 255.0" for i in range(8)
+        f"{_hex_int('sha', 2 * i + 1, 2)} / 255.0" for i in range(8)
     )
     return f"""
         m AS (
@@ -1683,12 +1656,11 @@ ADVANCED_ORACLES = {
                COUNT(*) AS n
         FROM lineitem GROUP BY l_returnflag
     """,
-    # 16-bit md5 prefix as integer: byte1*256 + byte2 (DuckDB has no
-    # base-16 conv; reconstruct from hex-pair bytes).
+    # 16-bit md5 prefix as integer
     "q67_dataset_split": f"""
         WITH d AS (
           SELECT source,
-                 ({_PH_B1} * 256 + {_PH_B2}) % 100 AS bucket
+                 {_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 4)} % 100 AS bucket
           FROM documents
         )
         SELECT source,
@@ -2323,11 +2295,10 @@ ADVANCED_ORACLES["q123_mad_outliers"] = """
     WHERE d.dev > mad.mad * 1.4826 * 3.0
 """
 
-ADVANCED_ORACLES["q124_top_p_sources"] = """
+ADVANCED_ORACLES["q124_top_p_sources"] = f"""
     WITH per AS (
       SELECT source,
-             CAST(SUM(len(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')))
+             CAST(SUM(len({_TOKS}))
                AS BIGINT) AS tokens
       FROM documents GROUP BY source
     ),
@@ -2460,17 +2431,17 @@ ADVANCED_ORACLES["q128_winsorize"] = """
     WHERE e.event_id % 7 = 0
 """
 
-ADVANCED_ORACLES["q129_corpus_diff"] = """
+ADVANCED_ORACLES["q129_corpus_diff"] = f"""
     WITH o AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_old
+             {_FP} AS fp_old
       FROM documents WHERE doc_id % 3 != 2
     ),
     n AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(
-               CASE WHEN doc_id % 5 = 0 THEN text || ' [rev2]'
-                    ELSE text END), '\\s+', ' ', 'g'))) AS fp_new
+             md5({_norm(
+               "CASE WHEN doc_id % 5 = 0 THEN text || ' [rev2]' ELSE text END"
+             )}) AS fp_new
       FROM documents WHERE doc_id % 3 != 0
     ),
     j AS (

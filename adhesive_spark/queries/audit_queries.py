@@ -27,12 +27,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.queries.oracle_fragments import (
+    _FP,
     _NORM,
     _PAIR_CTES,
     _TOKS,
-    _byte_from_hex,
     _h32,
+    _hex_int,
     _quality_sql,
+    _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
@@ -995,10 +997,10 @@ AUDIT_QUERIES["q313_dedup_threshold_calibration"] = (
 
 AUDIT_ORACLES["q313_dedup_threshold_calibration"] = f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks FROM documents
+      SELECT doc_id, {_TOKS} AS toks FROM documents
     ),
     mut AS (
-      SELECT doc_id, norm, toks, kk.k,
+      SELECT doc_id, toks, kk.k,
              list_transform(
                list_filter(generate_series(1, len(toks)),
                            i -> i % kk.k <> 0),
@@ -1007,18 +1009,8 @@ AUDIT_ORACLES["q313_dedup_threshold_calibration"] = f"""
     ),
     grams AS (
       SELECT doc_id, k,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1],
-                                        toks[i+2])))
-                  ELSE [norm] END AS g1,
-             CASE WHEN len(toks2) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks2) - 2 + 1),
-                         i -> concat_ws(' ', toks2[i], toks2[i+1],
-                                        toks2[i+2])))
-                  ELSE [array_to_string(toks2, ' ')] END AS g2
+             {_shingles(3)} AS g1,
+             {_shingles(3, "toks2")} AS g2
       FROM mut
     ),
     j AS (
@@ -1342,28 +1334,18 @@ def _bbit_oracle() -> str:
     coeff_rows = ", ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
     )
-    h32 = (
-        f"({_byte_from_hex('h', 1)} * 16777216 "
-        f"+ {_byte_from_hex('h', 2)} * 65536 "
-        f"+ {_byte_from_hex('h', 3)} * 256 "
-        f"+ {_byte_from_hex('h', 4)})"
-    )
     return f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+      SELECT doc_id, {_TOKS} AS toks
       FROM documents WHERE doc_id < 600
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     hx AS (SELECT doc_id, md5(unnest(grams)) AS h FROM g),
-    bhr AS (SELECT doc_id, {h32} % {_MERSENNE} AS base FROM hx),
+    bhr AS (SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx),
     co(i, a, b) AS (VALUES {coeff_rows}),
     sig AS (
       SELECT bhr.doc_id, co.i,
@@ -2567,10 +2549,9 @@ def q327_hll_precision_ladder(spark, sf_dir):
 
 AUDIT_QUERIES["q327_hll_precision_ladder"] = q327_hll_precision_ladder
 
-AUDIT_ORACLES["q327_hll_precision_ladder"] = """
+AUDIT_ORACLES["q327_hll_precision_ladder"] = f"""
     WITH h AS (
-      SELECT CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))
-                  AS BIGINT) AS h,
+      SELECT {_hex_int("md5(CAST(l_orderkey AS VARCHAR))", 1, 15)} AS h,
              l_orderkey AS key
       FROM lineitem
     ),
@@ -2738,8 +2719,7 @@ def _cms_ladder_oracle() -> str:
     lanes(cfg, r, w) AS (VALUES {", ".join(lane_rows)}),
     counters AS (
       SELECT l.cfg, l.r,
-             CAST(('0x' || substr(md5('cms' || CAST(l.r AS VARCHAR)
-                                       || ev.key), 1, 8)) AS BIGINT)
+             {_h32("md5('cms' || CAST(l.r AS VARCHAR) || ev.key)")}
                % l.w AS c,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM ev CROSS JOIN lanes l
@@ -2751,8 +2731,7 @@ def _cms_ladder_oracle() -> str:
       CROSS JOIN lanes p
       JOIN counters co
         ON co.cfg = p.cfg AND co.r = p.r
-       AND co.c = CAST(('0x' || substr(md5('cms' || CAST(p.r AS VARCHAR)
-                                            || e.key), 1, 8)) AS BIGINT)
+       AND co.c = {_h32("md5('cms' || CAST(p.r AS VARCHAR) || e.key)")}
                   % p.w
       GROUP BY 1, 2, 3
     ),
@@ -3263,7 +3242,7 @@ AUDIT_QUERIES["q333_ingest_dedup_pressure"] = q333_ingest_dedup_pressure
 
 AUDIT_ORACLES["q333_ingest_dedup_pressure"] = f"""
     WITH d AS (
-      SELECT doc_id, md5({_NORM}) AS fp FROM documents
+      SELECT doc_id, {_FP} AS fp FROM documents
     ),
     first AS (SELECT fp, MIN(doc_id) AS first_id FROM d GROUP BY fp),
     mx AS (SELECT MAX(doc_id) AS max_id FROM d)
@@ -3370,24 +3349,14 @@ def _perm_ladder_oracle() -> str:
     coeff_rows = ", ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
     )
-    h32 = (
-        f"({_byte_from_hex('h', 1)} * 16777216 "
-        f"+ {_byte_from_hex('h', 2)} * 65536 "
-        f"+ {_byte_from_hex('h', 3)} * 256 "
-        f"+ {_byte_from_hex('h', 4)})"
-    )
     return f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+      SELECT doc_id, {_TOKS} AS toks
       FROM documents WHERE doc_id < 200
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
@@ -3409,7 +3378,7 @@ def _perm_ladder_oracle() -> str:
       WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.2
     ),
     hx AS (SELECT doc_id, md5(unnest(grams)) AS h FROM g),
-    bhr AS (SELECT doc_id, {h32} % {_MERSENNE} AS base FROM hx),
+    bhr AS (SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx),
     co(i, a, b) AS (VALUES {coeff_rows}),
     sig AS (
       SELECT bhr.doc_id, co.i,

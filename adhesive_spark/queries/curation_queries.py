@@ -36,12 +36,15 @@ from adhesive_spark.operators.text import (
     tokens,
 )
 from adhesive_spark.queries.oracle_fragments import (
-    _NORM,
+    _FP,
     _TOKS,
-    _byte_from_hex,
+    _h32,
+    _hex_int,
+    _lang_sql,
     _quality_sql,
+    _shingles,
 )
-from adhesive_spark.sources.registry import load_table
+from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 def _injected_text():
     """Deterministic PII injection: the synthetic corpus carries no PII,
@@ -476,9 +479,6 @@ CURATION_QUERIES = {
 
 # --- oracles -----------------------------------------------------------------
 
-from adhesive_spark.queries.advanced_queries import _lang_sql  # noqa: E402
-from adhesive_spark.sources.registry import checkpoint_corpus
-
 _PII_SQL = {name: PII_PATTERNS[name].replace("'", "''") for name in PII_ORDER}
 
 _INJECTED_SQL = (
@@ -505,27 +505,17 @@ _redact_ssn = _redact_sql("it", 3)
 def _shingle8_cte(pred: str, alias: str) -> str:
     """8-gram shingle CTE mirroring word_shingles(n=8) for docs matching
     ``pred``."""
-    grams = ", ".join(f"toks[i+{j}]" for j in range(8))
     return f"""
         {alias}_t AS (
-          SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
-          FROM documents WHERE {pred}
+          SELECT doc_id, {_TOKS} AS toks FROM documents WHERE {pred}
         ),
-        {alias}_g AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) - 7 >= 1
-                      THEN list_distinct(list_transform(
-                             range(1, len(toks) - 7 + 1),
-                             i -> concat_ws(' ', {grams})))
-                      ELSE [norm] END AS grams
-          FROM {alias}_t
-        ),
+        {alias}_g AS (SELECT doc_id, {_shingles(8)} AS grams FROM {alias}_t),
         {alias}_x AS (SELECT doc_id, unnest(grams) AS shingle FROM {alias}_g)
     """
 
 
-_B1 = _byte_from_hex("md5(CAST(doc_id AS VARCHAR))", 1)
-_B2 = _byte_from_hex("md5(CAST(doc_id AS VARCHAR))", 2)
+# 16-bit md5 prefix of doc_id as integer
+_B16 = _hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 4)
 
 CURATION_ORACLES = {
     "q56_pii_redact": f"""
@@ -549,24 +539,11 @@ CURATION_ORACLES = {
     "q69_contamination_check": f"""
         WITH {_shingle8_cte("TRUE", "tr")},
         be_n AS (
-          -- excerpt of the already-normalized token stream: norm is the
-          -- excerpt itself (normalization is idempotent on it)
-          SELECT doc_id,
-                 array_to_string(({_TOKS})[5:34], ' ') AS norm,
-                 ({_TOKS})[5:34] AS toks
+          -- excerpt of the already-normalized token stream
+          SELECT doc_id, ({_TOKS})[5:34] AS toks
           FROM documents WHERE doc_id % 50 = 0
         ),
-        be_g AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) - 7 >= 1
-                      THEN list_distinct(list_transform(
-                             range(1, len(toks) - 7 + 1),
-                             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                                            toks[i+3], toks[i+4], toks[i+5],
-                                            toks[i+6], toks[i+7])))
-                      ELSE [norm] END AS grams
-          FROM be_n
-        ),
+        be_g AS (SELECT doc_id, {_shingles(8)} AS grams FROM be_n),
         be_x AS (SELECT doc_id, unnest(grams) AS shingle FROM be_g),
         rare AS (
           SELECT shingle FROM tr_x GROUP BY shingle HAVING COUNT(*) <= 1000
@@ -588,7 +565,7 @@ CURATION_ORACLES = {
     "q70_stratified_sample": f"""
         SELECT doc_id, source, n_chars
         FROM documents
-        WHERE ({_B1} * 256 + {_B2}) % 10000 <
+        WHERE {_B16} % 10000 <
               CASE source WHEN 'src0' THEN 10000
                           WHEN 'src1' THEN 5000
                           WHEN 'src2' THEN 2500
@@ -643,7 +620,7 @@ CURATION_ORACLES = {
         )
         SELECT d.source, COUNT(*) AS n_kept
         FROM documents d JOIN rates r ON d.source = r.source
-        WHERE ({_B1} * 256 + {_B2}) % 10000 < floor(r.rate * 10000)
+        WHERE {_B16} % 10000 < floor(r.rate * 10000)
         GROUP BY d.source
     """,
     "q76_token_shards": f"""
@@ -695,7 +672,7 @@ CURATION_ORACLES = {
           SELECT doc_id, source,
                  {_lang_sql()} AS lang_pred,
                  CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s,
-                 md5({_NORM}) AS fp,
+                 {_FP} AS fp,
                  len(toks) AS n_tokens
           FROM t
         ),
@@ -715,10 +692,10 @@ CURATION_ORACLES = {
     """,
     # Same normalization/tokenization as the Spark side; chunk_id is the
     # window ordinal (start/stride); INTs match Spark's 32-bit size/pos.
-    "q85_doc_chunking": """
+    "q85_doc_chunking": f"""
         WITH d AS (
           SELECT doc_id,
-                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+                 {_TOKS} AS toks
           FROM documents WHERE doc_id < 300
         ),
         s AS (SELECT doc_id, toks, len(toks) AS n FROM d),
@@ -733,10 +710,10 @@ CURATION_ORACLES = {
                array_to_string(toks[start + 1 : start + 64], ' ') AS chunk_text
         FROM st
     """,
-    "q86_incremental_dedup": """
+    "q86_incremental_dedup": f"""
         WITH fp AS (
           SELECT doc_id,
-                 md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS doc_fp
+                 {_FP} AS doc_fp
           FROM documents
         ),
         index_fp AS (SELECT DISTINCT doc_fp FROM fp WHERE doc_id < 250),
@@ -748,10 +725,10 @@ CURATION_ORACLES = {
         SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
         FROM fresh GROUP BY doc_fp
     """,
-    "q87_sequence_packing": """
+    "q87_sequence_packing": f"""
         WITH d AS (
           SELECT doc_id, source,
-                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+                 {_TOKS} AS toks
           FROM documents WHERE doc_id < 300
         ),
         s AS (SELECT doc_id, source, toks, len(toks) AS n FROM d),
@@ -782,10 +759,10 @@ CURATION_ORACLES = {
     """,
 }
 
-CURATION_ORACLES["q93_repetition_quality"] = """
+CURATION_ORACLES["q93_repetition_quality"] = f"""
     WITH d AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+             {_TOKS} AS toks
       FROM documents WHERE doc_id < 300
     ),
     m AS (
@@ -824,7 +801,7 @@ CURATION_ORACLES["q100_corpus_report"] = f"""
       SELECT doc_id, source,
              {_lang_sql()} AS lang_pred,
              CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s,
-             md5({_NORM}) AS fp,
+             {_FP} AS fp,
              len(toks) AS n_tok
       FROM t
     )
@@ -840,10 +817,10 @@ CURATION_ORACLES["q100_corpus_report"] = f"""
 # q102: the composed pipeline — exact dedup (min-id survivor), the q93
 # repetition filter, q85-style chunking (stride = size, no overlap), the
 # q87 packing window, and the shard summary, all unrolled in one SQL.
-CURATION_ORACLES["q102_curation_pipeline"] = """
+CURATION_ORACLES["q102_curation_pipeline"] = f"""
     WITH f AS (
       SELECT doc_id, source, text,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS doc_fp
+             {_FP} AS doc_fp
       FROM documents
     ),
     surv AS (
@@ -855,7 +832,7 @@ CURATION_ORACLES["q102_curation_pipeline"] = """
     ),
     d AS (
       SELECT doc_id, source,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+             {_TOKS} AS toks
       FROM surv
     ),
     m AS (
@@ -1006,7 +983,7 @@ def q126_temperature_mixture(spark, sf_dir):
 
 CURATION_QUERIES["q126_temperature_mixture"] = q126_temperature_mixture
 
-CURATION_ORACLES["q126_temperature_mixture"] = """
+CURATION_ORACLES["q126_temperature_mixture"] = f"""
     WITH mass AS (
       SELECT source, SUM(CAST(n_chars AS BIGINT)) AS m
       FROM documents GROUP BY source
@@ -1019,7 +996,8 @@ CURATION_ORACLES["q126_temperature_mixture"] = """
            CAST(SUM(CAST(d.n_chars AS BIGINT)) AS BIGINT) AS chars_kept,
            MIN(d.doc_id) AS first_doc
     FROM documents d JOIN rates r ON d.source = r.source
-    WHERE (((strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 2, 1)) - 1)) * 256 + ((strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 3, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 4, 1)) - 1))) % 10000 < floor(r.rate * 10000)
+    WHERE {_hex_int("md5(CAST(d.doc_id AS VARCHAR))", 1, 4)} % 10000
+          < floor(r.rate * 10000)
     GROUP BY d.source
 """
 
@@ -1087,23 +1065,9 @@ def q130_boilerplate_spans(spark, sf_dir):
 
 CURATION_QUERIES["q130_boilerplate_spans"] = q130_boilerplate_spans
 
-CURATION_ORACLES["q130_boilerplate_spans"] = """
-    WITH t AS (
-      SELECT doc_id, source,
-             trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
-      FROM documents
-    ),
-    g AS (
-      SELECT doc_id, source,
-             CASE WHEN len(toks) - 4 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 4 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                                        toks[i+3], toks[i+4])))
-                  ELSE [norm] END AS grams
-      FROM t
-    ),
+CURATION_ORACLES["q130_boilerplate_spans"] = f"""
+    WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
+    g AS (SELECT doc_id, source, {_shingles(5)} AS grams FROM t),
     x AS (SELECT doc_id, source, unnest(grams) AS gram FROM g),
     dfc AS (
       SELECT gram, COUNT(DISTINCT doc_id) AS gram_docs
@@ -1145,11 +1109,10 @@ def q133_paragraph_dedup(spark, sf_dir):
 
 CURATION_QUERIES["q133_paragraph_dedup"] = q133_paragraph_dedup
 
-CURATION_ORACLES["q133_paragraph_dedup"] = """
+CURATION_ORACLES["q133_paragraph_dedup"] = f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                          ' ') AS toks
+             {_TOKS} AS toks
       FROM documents
     ),
     spans AS (
@@ -1216,11 +1179,9 @@ def q134_vocab_growth(spark, sf_dir):
 
 CURATION_QUERIES["q134_vocab_growth"] = q134_vocab_growth
 
-CURATION_ORACLES["q134_vocab_growth"] = """
+CURATION_ORACLES["q134_vocab_growth"] = f"""
     WITH w AS (
-      SELECT source, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS word
+      SELECT source, unnest({_TOKS}) AS word
       FROM documents
     ),
     wc AS (
@@ -1295,12 +1256,10 @@ def q136_length_bucketing(spark, sf_dir):
 
 CURATION_QUERIES["q136_length_bucketing"] = q136_length_bucketing
 
-CURATION_ORACLES["q136_length_bucketing"] = """
+CURATION_ORACLES["q136_length_bucketing"] = f"""
     WITH t AS (
       SELECT doc_id,
-             len(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS n_tok
+             len({_TOKS}) AS n_tok
       FROM documents
     ),
     lay AS (
@@ -1370,11 +1329,9 @@ def q141_inverted_index(spark, sf_dir):
 
 CURATION_QUERIES["q141_inverted_index"] = q141_inverted_index
 
-CURATION_ORACLES["q141_inverted_index"] = """
+CURATION_ORACLES["q141_inverted_index"] = f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS token
+      SELECT doc_id, unnest({_TOKS}) AS token
       FROM documents
     ),
     per_doc AS (
@@ -1424,12 +1381,10 @@ def q142_freq_spectrum(spark, sf_dir):
 
 CURATION_QUERIES["q142_freq_spectrum"] = q142_freq_spectrum
 
-CURATION_ORACLES["q142_freq_spectrum"] = """
+CURATION_ORACLES["q142_freq_spectrum"] = f"""
     WITH wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt FROM (
-        SELECT doc_id, unnest(string_split(
-                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                 ' ')) AS word
+        SELECT doc_id, unnest({_TOKS}) AS word
         FROM documents
       ) GROUP BY doc_id, word
     )
@@ -1511,11 +1466,9 @@ def q146_rarity_score(spark, sf_dir):
 
 CURATION_QUERIES["q146_rarity_score"] = q146_rarity_score
 
-CURATION_ORACLES["q146_rarity_score"] = """
+CURATION_ORACLES["q146_rarity_score"] = f"""
     WITH tok AS (
-      SELECT doc_id, source, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS word
+      SELECT doc_id, source, unnest({_TOKS}) AS word
       FROM documents
     ),
     vocab AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
@@ -1589,13 +1542,11 @@ def q147_leakage_safe_split(spark, sf_dir):
 
 CURATION_QUERIES["q147_leakage_safe_split"] = q147_leakage_safe_split
 
-CURATION_ORACLES["q147_leakage_safe_split"] = """
+CURATION_ORACLES["q147_leakage_safe_split"] = f"""
     WITH tagged AS (
       SELECT doc_id, source,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             CASE WHEN CAST(
-                    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-                    AS BIGINT) % 100 < 90
+             {_FP} AS fp,
+             CASE WHEN {_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 4)} % 100 < 90
                   THEN 'train' ELSE 'test' END AS split
       FROM documents
     ),
@@ -1667,16 +1618,16 @@ def q148_deletion_propagation(spark, sf_dir):
 
 CURATION_QUERIES["q148_deletion_propagation"] = q148_deletion_propagation
 
-CURATION_ORACLES["q148_deletion_propagation"] = """
+CURATION_ORACLES["q148_deletion_propagation"] = f"""
     WITH deny AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+             {_FP} AS fp
       FROM documents
       WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'a'
     ),
     docs_fp AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+             {_FP} AS fp
       FROM documents
     ),
     removed_docs AS (
@@ -1797,11 +1748,9 @@ def q150_drift_monitor(spark, sf_dir):
 
 CURATION_QUERIES["q150_drift_monitor"] = q150_drift_monitor
 
-CURATION_ORACLES["q150_drift_monitor"] = """
+CURATION_ORACLES["q150_drift_monitor"] = f"""
     WITH tok AS (
-      SELECT source, doc_id % 2 = 0 AS even, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS word
+      SELECT source, doc_id % 2 = 0 AS even, unnest({_TOKS}) AS word
       FROM documents
     ),
     wc AS (
@@ -1888,11 +1837,9 @@ def q156_oov_rate(spark, sf_dir):
 
 CURATION_QUERIES["q156_oov_rate"] = q156_oov_rate
 
-CURATION_ORACLES["q156_oov_rate"] = """
+CURATION_ORACLES["q156_oov_rate"] = f"""
     WITH tok AS (
-      SELECT source, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS word
+      SELECT source, unnest({_TOKS}) AS word
       FROM documents
     ),
     vocab AS (
@@ -1932,9 +1879,9 @@ def q160_dup_cluster_sizes(spark, sf_dir):
 
 CURATION_QUERIES["q160_dup_cluster_sizes"] = q160_dup_cluster_sizes
 
-CURATION_ORACLES["q160_dup_cluster_sizes"] = """
+CURATION_ORACLES["q160_dup_cluster_sizes"] = f"""
     WITH c AS (
-      SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
+      SELECT {_FP} AS fp,
              COUNT(*) AS k
       FROM documents GROUP BY fp
     )
@@ -2041,16 +1988,15 @@ def q162_cdc_chunking(spark, sf_dir):
 
 CURATION_QUERIES["q162_cdc_chunking"] = q162_cdc_chunking
 
-CURATION_ORACLES["q162_cdc_chunking"] = """
+CURATION_ORACLES["q162_cdc_chunking"] = f"""
     WITH t AS (
       SELECT doc_id, source,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                          ' ') AS toks
+             {_TOKS} AS toks
       FROM documents
     ),
     tok AS (
       SELECT doc_id, source, i - 1 AS pos,
-             CASE WHEN CAST(('0x' || substr(md5(toks[i]), 1, 8)) AS BIGINT)
+             CASE WHEN {_h32("md5(toks[i])")}
                        % 16 = 0
                   THEN 1 ELSE 0 END AS is_boundary
       FROM t, LATERAL (SELECT unnest(range(1, len(toks) + 1)) AS i)
@@ -2130,7 +2076,7 @@ CURATION_ORACLES["q164_quality_dup_deciles"] = f"""
     s AS (
       SELECT doc_id,
              CAST(ROUND(({_quality_sql()}) * 10000, 0) AS BIGINT) AS q_s,
-             md5({_NORM}) AS fp
+             {_FP} AS fp
       FROM t
     ),
     k AS (SELECT fp, COUNT(*) AS k FROM s GROUP BY fp),
@@ -2175,11 +2121,10 @@ def q165_span_savings(spark, sf_dir):
 
 CURATION_QUERIES["q165_span_savings"] = q165_span_savings
 
-CURATION_ORACLES["q165_span_savings"] = """
+CURATION_ORACLES["q165_span_savings"] = f"""
     WITH t AS (
       SELECT doc_id, source,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                          ' ') AS toks
+             {_TOKS} AS toks
       FROM documents
     ),
     spans AS (
@@ -2289,24 +2234,9 @@ def q167_boilerplate_position(spark, sf_dir):
 
 CURATION_QUERIES["q167_boilerplate_position"] = q167_boilerplate_position
 
-CURATION_ORACLES["q167_boilerplate_position"] = """
-    WITH t AS (
-      SELECT doc_id,
-             trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                          ' ') AS toks
-      FROM documents
-    ),
-    g AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) - 4 >= 1
-                  THEN list_transform(
-                         range(1, len(toks) - 4 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                                        toks[i+3], toks[i+4]))
-                  ELSE [norm] END AS grams
-      FROM t
-    ),
+CURATION_ORACLES["q167_boilerplate_position"] = f"""
+    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    g AS (SELECT doc_id, {_shingles(5, distinct=False)} AS grams FROM t),
     x AS (
       SELECT doc_id, i - 1 AS idx, grams[i] AS gram,
              len(grams) AS n_windows
@@ -2366,10 +2296,10 @@ def q178_syndication(spark, sf_dir):
 
 CURATION_QUERIES["q178_syndication"] = q178_syndication
 
-CURATION_ORACLES["q178_syndication"] = """
+CURATION_ORACLES["q178_syndication"] = f"""
     WITH fps AS (
       SELECT source,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+             {_FP} AS fp
       FROM documents
     ),
     multi AS (
@@ -2462,11 +2392,10 @@ def q181_bigram_lm(spark, sf_dir):
 
 CURATION_QUERIES["q181_bigram_lm"] = q181_bigram_lm
 
-CURATION_ORACLES["q181_bigram_lm"] = """
+CURATION_ORACLES["q181_bigram_lm"] = f"""
     WITH t AS (
       SELECT source,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-                               'g')), ' ') AS l
+             {_TOKS} AS l
       FROM documents
     ),
     b AS (
@@ -2536,11 +2465,10 @@ def q186_bigram_familiarity(spark, sf_dir):
 
 CURATION_QUERIES["q186_bigram_familiarity"] = q186_bigram_familiarity
 
-CURATION_ORACLES["q186_bigram_familiarity"] = """
+CURATION_ORACLES["q186_bigram_familiarity"] = f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-                               'g')), ' ') AS l
+             {_TOKS} AS l
       FROM documents
     ),
     b AS (
@@ -2607,10 +2535,9 @@ def q190_bpe_merge_step(spark, sf_dir):
 
 CURATION_QUERIES["q190_bpe_merge_step"] = q190_bpe_merge_step
 
-CURATION_ORACLES["q190_bpe_merge_step"] = """
+CURATION_ORACLES["q190_bpe_merge_step"] = f"""
     WITH words AS (
-      SELECT unnest(string_split(trim(regexp_replace(lower(text),
-               '\\s+', ' ', 'g')), ' ')) AS word
+      SELECT unnest({_TOKS}) AS word
       FROM documents
     ),
     freqs AS (
@@ -2694,15 +2621,13 @@ def q196_feature_hashing(spark, sf_dir):
 
 CURATION_QUERIES["q196_feature_hashing"] = q196_feature_hashing
 
-CURATION_ORACLES["q196_feature_hashing"] = """
+CURATION_ORACLES["q196_feature_hashing"] = f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' ')) AS tok
+      SELECT doc_id, unnest({_TOKS}) AS tok
       FROM documents WHERE doc_id < 50
     )
     SELECT doc_id,
-           CAST(('0x' || substr(md5(tok), 1, 4)) AS BIGINT) % 256
+           {_hex_int("md5(tok)", 1, 4)} % 256
              AS bucket,
            COUNT(*) AS cnt
     FROM tok GROUP BY 1, 2
@@ -2754,11 +2679,10 @@ def q199_source_copy_matrix(spark, sf_dir):
 
 CURATION_QUERIES["q199_source_copy_matrix"] = q199_source_copy_matrix
 
-CURATION_ORACLES["q199_source_copy_matrix"] = """
+CURATION_ORACLES["q199_source_copy_matrix"] = f"""
     WITH fps AS (
       SELECT doc_id, source,
-             md5(array_to_string((string_split(trim(regexp_replace(
-                 lower(text), '\\s+', ' ', 'g')), ' '))[1:20], ' ')) AS fp
+             md5(array_to_string(({_TOKS})[1:20], ' ')) AS fp
       FROM documents
     ),
     origin AS (
@@ -2830,12 +2754,10 @@ CURATION_QUERIES["q200_governed_release"] = q200_governed_release
 CURATION_ORACLES["q200_governed_release"] = f"""
     WITH t AS (
       SELECT doc_id, lang, source, text,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-             len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-                 'g')), ' ')) AS n_tok,
+             {_FP} AS fp,
+             len({_TOKS}) AS n_tok,
              ({_quality_sql()}) AS q
-      FROM (SELECT *, string_split(trim(regexp_replace(lower(text), '\\s+',
-                      ' ', 'g')), ' ') AS toks FROM documents)
+      FROM (SELECT *, {_TOKS} AS toks FROM documents)
     ),
     base AS (SELECT * FROM t WHERE q >= 0.3),
     surv AS (
@@ -2847,7 +2769,7 @@ CURATION_ORACLES["q200_governed_release"] = f"""
     released AS (
       SELECT substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS pseudonym,
              lang, source, n_tok,
-             CAST(('0x' || substr(md5(fp), 1, 4)) AS BIGINT) % 8 AS shard
+             {_hex_int("md5(fp)", 1, 4)} % 8 AS shard
       FROM (
         SELECT *, COUNT(*) OVER (PARTITION BY lang, source) AS class_n
         FROM surv
@@ -3067,12 +2989,10 @@ def q209_ablation_ladder(spark, sf_dir):
 
 CURATION_QUERIES["q209_ablation_ladder"] = q209_ablation_ladder
 
-CURATION_ORACLES["q209_ablation_ladder"] = """
+CURATION_ORACLES["q209_ablation_ladder"] = f"""
     WITH base AS (
-      SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-                  AS BIGINT) % 10000 AS b,
-             len(string_split(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g')), ' ')) AS n_tok,
+      SELECT {_hex_int("md5(CAST(doc_id AS VARCHAR))", 1, 4)} % 10000 AS b,
+             len({_TOKS}) AS n_tok,
              source
       FROM documents
     )

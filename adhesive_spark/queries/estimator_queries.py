@@ -29,10 +29,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.queries.oracle_fragments import (
+    _FP,
     _NORM,
     _TOKS,
     _h32,
     _quality_sql,
+    _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
@@ -516,7 +518,7 @@ def _bloom_oracle() -> str:
     pos_probe = _h32("md5('bf' || CAST(h AS VARCHAR) || ':' || pf)")
     return f"""
     WITH geoms(m, k) AS (VALUES {grid_rows}),
-    fps AS (SELECT DISTINCT md5({_NORM}) AS fp FROM documents),
+    fps AS (SELECT DISTINCT {_FP} AS fp FROM documents),
     bits AS (
       SELECT DISTINCT g.m, g.k, ({pos_member}) % g.m AS pos
       FROM fps CROSS JOIN geoms g
@@ -869,21 +871,9 @@ def q366_ngram_novelty(spark, sf_dir):
 
 ESTIMATOR_QUERIES["q366_ngram_novelty"] = q366_ngram_novelty
 
-_G5 = ", ".join(f"toks[i+{j}]" for j in range(5))
-
 ESTIMATOR_ORACLES["q366_ngram_novelty"] = f"""
-    WITH t AS (
-      SELECT source, {_NORM} AS norm, {_TOKS} AS toks FROM documents
-    ),
-    g AS (
-      SELECT source,
-             CASE WHEN len(toks) - 4 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 4 + 1),
-                         i -> concat_ws(' ', {_G5})))
-                  ELSE [norm] END AS grams
-      FROM t
-    ),
+    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
+    g AS (SELECT source, {_shingles(5)} AS grams FROM t),
     grams AS (
       SELECT DISTINCT source, UNNEST(grams) AS g FROM g
     ),
@@ -1431,7 +1421,7 @@ ESTIMATOR_QUERIES["q370_hash_uniformity"] = q370_hash_uniformity
 def _uniformity_oracle() -> str:
     bkt = _h32("md5('bk:' || fp)")
     return f"""
-    WITH fps AS (SELECT DISTINCT md5({_NORM}) AS fp FROM documents),
+    WITH fps AS (SELECT DISTINCT {_FP} AS fp FROM documents),
     obs AS (
       SELECT ({bkt}) % 64 AS b, CAST(COUNT(*) AS BIGINT) AS o
       FROM fps GROUP BY 1
@@ -1896,7 +1886,7 @@ def _birthday_oracle() -> str:
     return f"""
     WITH fps AS (
       SELECT ({h}) AS h
-      FROM (SELECT DISTINCT md5({_NORM}) AS fp FROM documents)
+      FROM (SELECT DISTINCT {_FP} AS fp FROM documents)
     ),
     bspine AS (SELECT UNNEST([16, 20, 24]) AS b),
     slots AS (
@@ -5576,7 +5566,6 @@ ESTIMATOR_QUERIES["q407_shingle_size_ladder"] = q407_shingle_size_ladder
 
 def _shingle_ladder_oracle() -> str:
     def rung(n):
-        grams = ", ".join(f"toks[i+{j}]" for j in range(n))
         return f"""
       SELECT {n} AS shingle_n, CAST(COUNT(*) AS BIGINT) AS candidate_pairs,
              CAST(COUNT(*) FILTER (WHERE jacc_ppm >= 500000) AS BIGINT)
@@ -5600,24 +5589,16 @@ def _shingle_ladder_oracle() -> str:
       )"""
 
     def sh_cte(n):
-        grams = ", ".join(f"toks[i+{j}]" for j in range(n))
         return f"""
     sh_{n} AS (
       SELECT DISTINCT doc_id, s FROM (
-        SELECT doc_id,
-               UNNEST(CASE WHEN len(toks) - {n - 1} >= 1
-                 THEN list_distinct(list_transform(
-                        range(1, len(toks) - {n - 1} + 1),
-                        i -> concat_ws(' ', {grams})))
-                 ELSE [norm] END) AS s
-        FROM t
+        SELECT doc_id, UNNEST({_shingles(n)}) AS s FROM t
       )
     )"""
 
     return f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 200
+      SELECT doc_id, {_TOKS} AS toks FROM documents WHERE doc_id < 200
     ),
     {sh_cte(2)},
     {sh_cte(3)},

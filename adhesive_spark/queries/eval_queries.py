@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 EVAL_QUERIES: dict = {}
@@ -335,12 +336,11 @@ def q258_bloom_join_prefilter(spark, sf_dir):
 
 EVAL_QUERIES["q258_bloom_join_prefilter"] = q258_bloom_join_prefilter
 
-_BLOOM_POS_SQL = """
-      SELECT {key} AS key, CAST(
-               CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' ||
-                                    CAST({key} AS VARCHAR)), 1, 8))
-                    AS BIGINT) % {bits} AS BIGINT) AS pos
-      FROM {src} CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS i)
+_BLOOM_POS_SQL = f"""
+      SELECT {{key}} AS key, CAST(
+               {_h32("md5(CAST(i AS VARCHAR) || ':' || CAST({key} AS VARCHAR))")}
+                 % {{bits}} AS BIGINT) AS pos
+      FROM {{src}} CROSS JOIN (SELECT UNNEST([0, 1, 2]) AS i)
 """
 
 EVAL_ORACLES["q258_bloom_join_prefilter"] = f"""
@@ -1145,11 +1145,10 @@ def q266_abtest_srm(spark, sf_dir):
 
 EVAL_QUERIES["q266_abtest_srm"] = q266_abtest_srm
 
-EVAL_ORACLES["q266_abtest_srm"] = """
+EVAL_ORACLES["q266_abtest_srm"] = f"""
     WITH per_user AS (
       SELECT user_id,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 2 AS arm,
+             {_h32("md5(CAST(user_id AS VARCHAR))")} % 2 AS arm,
              CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                   AS BIGINT) AS purchases
       FROM events GROUP BY 1, 2
@@ -1229,7 +1228,7 @@ def q267_negative_sampling(spark, sf_dir):
 
 EVAL_QUERIES["q267_negative_sampling"] = q267_negative_sampling
 
-EVAL_ORACLES["q267_negative_sampling"] = """
+EVAL_ORACLES["q267_negative_sampling"] = f"""
     WITH clicks AS (
       SELECT DISTINCT user_id,
              CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)
@@ -1250,9 +1249,9 @@ EVAL_ORACLES["q267_negative_sampling"] = """
       SELECT user_id, item,
              ROW_NUMBER() OVER (
                PARTITION BY user_id
-               ORDER BY CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)
-                              || ':' || CAST(item AS VARCHAR)), 1, 8))
-                             AS BIGINT), item
+               ORDER BY {_h32(
+                 "md5(CAST(user_id AS VARCHAR) || ':' || CAST(item AS VARCHAR))"
+               )}, item
              ) AS neg_rank
       FROM cand
     )
@@ -1468,12 +1467,11 @@ def q269_vocab_coverage(spark, sf_dir):
 
 EVAL_QUERIES["q269_vocab_coverage"] = q269_vocab_coverage
 
-EVAL_ORACLES["q269_vocab_coverage"] = """
+EVAL_ORACLES["q269_vocab_coverage"] = f"""
     WITH types AS (
       SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM (
-        SELECT unnest(string_split(
-                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+        SELECT unnest({_TOKS})
                AS tok
         FROM documents
       ) GROUP BY tok
@@ -1817,10 +1815,9 @@ def q272_quantile_treatment_effect(spark, sf_dir):
 
 EVAL_QUERIES["q272_quantile_treatment_effect"] = q272_quantile_treatment_effect
 
-EVAL_ORACLES["q272_quantile_treatment_effect"] = """
+EVAL_ORACLES["q272_quantile_treatment_effect"] = f"""
     WITH per AS (
-      SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 2 AS arm,
+      SELECT {_h32("md5(CAST(user_id AS VARCHAR))")} % 2 AS arm,
              CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM events WHERE event_type = 'purchase'

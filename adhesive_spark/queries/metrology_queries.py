@@ -28,11 +28,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.queries.oracle_fragments import (
-    _NORM,
+    _FP,
     _PAIR_CTES,
     _TOKS,
     _h32,
+    _hex_int,
+    _lang_sql,
     _quality_sql,
+    _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
@@ -481,16 +484,12 @@ METROLOGY_QUERIES["q339_containment_pairs"] = q339_containment_pairs
 
 METROLOGY_ORACLES["q339_containment_pairs"] = f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+      SELECT doc_id, {_TOKS} AS toks
       FROM documents WHERE doc_id < 1000
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
@@ -1526,28 +1525,6 @@ METROLOGY_ORACLES["q346_permutation_test"] = f"""
 # --- q347: within-document code-switching audit ---------------------------------
 
 
-def _lang_id_arr(toks_col):
-    """lang_id over a token-ARRAY column (operators.text.lang_id takes
-    raw text): same marker sets, same min_hits=1, same first-language
-    tie-break chain, so half-document IDs are comparable to whole-
-    document IDs."""
-    from adhesive_spark.operators.text import LANG_MARKERS
-
-    scores = {}
-    for lang, markers in LANG_MARKERS.items():
-        marks = F.array(*[F.lit(m) for m in markers])
-        scores[lang] = F.size(
-            F.filter(toks_col, lambda t: F.array_contains(marks, t))
-        )
-    expr = F.lit("und")
-    best = F.lit(-1)
-    for lang in reversed(list(scores)):
-        s = scores[lang]
-        expr = F.when((s >= 1) & (s >= best), F.lit(lang)).otherwise(expr)
-        best = F.greatest(s, best)
-    return expr
-
-
 def q347_code_switch_audit(spark, sf_dir):
     """Within-document language-mix (code-switching) audit: language-ID
     the first and second HALF of each document separately (same marker
@@ -1560,7 +1537,7 @@ def q347_code_switch_audit(spark, sf_dir):
     Scale shape: one stateless per-row pass (slice + marker counting on
     bound arrays) collapsing straight to a per-source aggregate —
     corpus-linear, no joins, no windows."""
-    from adhesive_spark.operators.text import tokens
+    from adhesive_spark.operators.text import lang_id_tokens, tokens
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1577,8 +1554,8 @@ def q347_code_switch_audit(spark, sf_dir):
     )
     labeled = halved.select(
         "source",
-        _lang_id_arr(F.col("h1")).alias("l1"),
-        _lang_id_arr(F.col("h2")).alias("l2"),
+        lang_id_tokens(F.col("h1")).alias("l1"),
+        lang_id_tokens(F.col("h2")).alias("l2"),
     )
     return labeled.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1600,29 +1577,6 @@ def q347_code_switch_audit(spark, sf_dir):
 METROLOGY_QUERIES["q347_code_switch_audit"] = q347_code_switch_audit
 
 
-def _lang_sql_arr(toks: str) -> str:
-    """DuckDB twin of _lang_id_arr over a list expression."""
-    from adhesive_spark.operators.text import LANG_MARKERS
-
-    def score(lang: str) -> str:
-        markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
-        return f"len(list_filter({toks}, t -> t IN ({markers})))"
-
-    return f"""
-        CASE WHEN {score('en')} >= 1
-                  AND {score('en')} >= greatest({score('de')},
-                                                {score('fr')}, {score('es')})
-             THEN 'en'
-             WHEN {score('de')} >= 1
-                  AND {score('de')} >= greatest({score('fr')}, {score('es')})
-             THEN 'de'
-             WHEN {score('fr')} >= 1 AND {score('fr')} >= {score('es')}
-             THEN 'fr'
-             WHEN {score('es')} >= 1 THEN 'es'
-             ELSE 'und' END
-    """
-
-
 def _codeswitch_oracle() -> str:
     return f"""
     WITH t AS (
@@ -1636,8 +1590,8 @@ def _codeswitch_oracle() -> str:
     ),
     labeled AS (
       SELECT source,
-             ({_lang_sql_arr("h1")}) AS l1,
-             ({_lang_sql_arr("h2")}) AS l2
+             {_lang_sql("h1")} AS l1,
+             {_lang_sql("h2")} AS l2
       FROM halved
     )
     SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2087,15 +2041,11 @@ METROLOGY_QUERIES["q351_corpus_saturation"] = q351_corpus_saturation
 
 METROLOGY_ORACLES["q351_corpus_saturation"] = f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks FROM documents
+      SELECT doc_id, {_TOKS} AS toks FROM documents
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
@@ -2735,8 +2685,7 @@ def _hll_union_oracle() -> str:
              END AS rho
       FROM (
         SELECT source,
-               CAST(('0x' || substr(md5(t.tok), 1, {_HASH_HEX_CHARS}))
-                    AS BIGINT) AS h
+               {_hex_int("md5(t.tok)", 1, _HASH_HEX_CHARS)} AS h
         FROM (SELECT source, unnest({_TOKS}) AS tok FROM documents) t
       )
     ),
@@ -3012,7 +2961,7 @@ METROLOGY_QUERIES["q358_capture_recapture"] = q358_capture_recapture
 
 METROLOGY_ORACLES["q358_capture_recapture"] = f"""
     WITH fps AS (
-      SELECT DISTINCT md5({_NORM}) AS fp FROM documents
+      SELECT DISTINCT {_FP} AS fp FROM documents
     ),
     flagged AS (
       SELECT fp,

@@ -32,25 +32,21 @@ from adhesive_spark.operators.similarity import (
     knn_bruteforce,
     knn_lsh,
 )
-from adhesive_spark.operators.text import LANG_MARKERS, STOPWORDS_EN, text_profile
+from adhesive_spark.operators.text import text_profile
 from adhesive_spark.queries.oracle_fragments import (
+    _FP,
     _NORM,
+    _PUNCT_RATIO,
+    _STOP_RATIO,
     _TOKS,
-    _byte_from_hex,
+    _UPPER_RATIO,
+    _h32,
+    _hex_int,
+    _lang_sql,
+    _quality_sql,
+    _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
-
-# --- shared SQL fragments (DuckDB dialect) -----------------------------------
-
-
-def _sql_in_list(words) -> str:
-    return ", ".join(f"'{w}'" for w in words)
-
-
-def _sql_lang_score(lang: str) -> str:
-    markers = _sql_in_list(LANG_MARKERS[lang])
-    return f"len(list_filter(toks, t -> t IN ({markers})))"
-
 
 # --- queries -----------------------------------------------------------------
 
@@ -242,31 +238,20 @@ def _minhash_oracle_sql(
     coeff_rows = ", ".join(
         f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
     )
-    # 32-bit value from the first 4 hex pairs of an md5 hex string `h`
-    h32 = (
-        f"({_byte_from_hex('h', 1)} * 16777216 "
-        f"+ {_byte_from_hex('h', 2)} * 65536 "
-        f"+ {_byte_from_hex('h', 3)} * 256 "
-        f"+ {_byte_from_hex('h', 4)})"
-    )
     return f"""
         WITH t AS (
-          SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks FROM documents
+          SELECT doc_id, {_TOKS} AS toks FROM documents
         ),
         g AS (
           SELECT doc_id,
-                 CASE WHEN len(toks) - 2 >= 1
-                      THEN list_distinct(list_transform(
-                             range(1, len(toks) - 2 + 1),
-                             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                      ELSE [norm] END AS grams
+                 {_shingles(3)} AS grams
           FROM t
         ),
         hx AS (
           SELECT doc_id, md5(unnest(grams)) AS h FROM g
         ),
         bhr AS (
-          SELECT doc_id, {h32} % {_MERSENNE} AS base FROM hx
+          SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx
         ),
         co(i, a, b) AS (VALUES {coeff_rows}),
         sig AS (
@@ -304,7 +289,7 @@ PIPELINE_ORACLES = {
     "q30_dedup_exact": f"""
         SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
         FROM documents
-        GROUP BY md5({_NORM})
+        GROUP BY {_FP}
     """,
     "q31_text_profile": f"""
         WITH t AS (
@@ -313,12 +298,9 @@ PIPELINE_ORACLES = {
         ),
         r AS (
           SELECT doc_id, text, norm, toks,
-                 floor(len(list_filter(toks, t -> t IN ({_sql_in_list(STOPWORDS_EN)})))
-                       / greatest(len(toks), 1) * 10000) / 10000 AS stop_ratio,
-                 floor(length(regexp_replace(text, '[^.,!?;:]', '', 'g'))
-                       / greatest(length(text), 1) * 10000) / 10000 AS p_punct,
-                 floor(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                       / greatest(length(text), 1) * 10000) / 10000 AS p_upper,
+                 {_STOP_RATIO} AS stop_ratio,
+                 {_PUNCT_RATIO} AS p_punct,
+                 {_UPPER_RATIO} AS p_upper,
                  floor(list_sum(list_transform(toks, t -> length(t)))
                        / greatest(len(toks), 1) * 100) / 100 AS mean_wlen
           FROM t
@@ -328,37 +310,19 @@ PIPELINE_ORACLES = {
                greatest(CAST(ceil(length(norm) / 4.0) AS BIGINT),
                         CAST(len(toks) AS BIGINT)) AS n_tokens_bpe,
                stop_ratio, p_punct, p_upper, mean_wlen,
-               floor((0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000
-                                  THEN 1.0 ELSE 0.3 END)
-                      + 0.4 * least(stop_ratio * 4, 1.0)
-                      + 0.2 * (1 - least(p_punct * 5 + p_upper * 2, 1.0)))
-                     * 10000) / 10000 AS quality,
-               CASE WHEN {_sql_lang_score('en')} >= 1
-                         AND {_sql_lang_score('en')} >= greatest({_sql_lang_score('de')}, {_sql_lang_score('fr')}, {_sql_lang_score('es')})
-                    THEN 'en'
-                    WHEN {_sql_lang_score('de')} >= 1
-                         AND {_sql_lang_score('de')} >= greatest({_sql_lang_score('fr')}, {_sql_lang_score('es')})
-                    THEN 'de'
-                    WHEN {_sql_lang_score('fr')} >= 1
-                         AND {_sql_lang_score('fr')} >= {_sql_lang_score('es')}
-                    THEN 'fr'
-                    WHEN {_sql_lang_score('es')} >= 1 THEN 'es'
-                    ELSE 'und' END AS lang_pred,
+               {_quality_sql("stop_ratio", "p_punct", "p_upper")} AS quality,
+               {_lang_sql()} AS lang_pred,
                md5(norm) AS doc_fp
         FROM r
     """,
     "q33_ngram_jaccard": f"""
         WITH t AS (
-          SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+          SELECT doc_id, {_TOKS} AS toks
           FROM documents WHERE doc_id < 200
         ),
         g AS (
           SELECT doc_id,
-                 CASE WHEN len(toks) - 2 >= 1
-                      THEN list_distinct(list_transform(
-                             range(1, len(toks) - 2 + 1),
-                             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                      ELSE [norm] END AS grams
+                 {_shingles(3)} AS grams
           FROM t
         ),
         x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
@@ -424,21 +388,20 @@ PIPELINE_ORACLES = {
                octet_length(encode(substring(text, 1, 256))) AS n_bytes,
                substr({_SHA}, 1, 16) AS content_sha,
                CASE WHEN {_MTYPE} IN ('image', 'video')
-                    THEN 64 + {_byte_from_hex(_SHA, 1)} % 192 END AS width,
+                    THEN 64 + {_hex_int(_SHA, 1, 2)} % 192 END AS width,
                CASE WHEN {_MTYPE} IN ('image', 'video')
-                    THEN 64 + {_byte_from_hex(_SHA, 2)} % 192 END AS height,
+                    THEN 64 + {_hex_int(_SHA, 3, 2)} % 192 END AS height,
                CASE WHEN {_MTYPE} = 'video'
-                    THEN 1 + {_byte_from_hex(_SHA, 3)} % 120 END AS n_frames,
+                    THEN 1 + {_hex_int(_SHA, 5, 2)} % 120 END AS n_frames,
                CASE WHEN {_MTYPE} = 'audio'
-                    THEN 1000 + ({_byte_from_hex(_SHA, 4)} * 256
-                                 + {_byte_from_hex(_SHA, 5)}) % 60000
+                    THEN 1000 + {_hex_int(_SHA, 7, 4)} % 60000
                END AS duration_ms
         FROM documents
     """,
     "q41_frame_sample": f"""
         SELECT doc_id AS media_id,
-               1 + {_byte_from_hex(_SHA, 3)} % 120 AS n_frames,
-               CAST(floor((1 + {_byte_from_hex(_SHA, 3)} % 120 - 1) / 10) + 1
+               1 + {_hex_int(_SHA, 5, 2)} % 120 AS n_frames,
+               CAST(floor((1 + {_hex_int(_SHA, 5, 2)} % 120 - 1) / 10) + 1
                     AS BIGINT) AS n_sampled
         FROM documents
         WHERE {_MTYPE} = 'video'
@@ -494,14 +457,8 @@ def _simhash_oracle_sql(*, max_hamming: int = 3) -> str:
     (order-independent → engine-identical), and candidates come from the
     same 4x16-bit chunk banding. Reproduces the pandas-UDF bit-vote
     kernel exactly because every step is integer arithmetic."""
-    hi = (
-        f"(({_byte_from_hex('m', 1)} * 16777216 + {_byte_from_hex('m', 2)} * 65536"
-        f" + {_byte_from_hex('m', 3)} * 256 + {_byte_from_hex('m', 4)}) & 2147483647)"
-    )
-    lo = (
-        f"({_byte_from_hex('m', 5)} * 16777216 + {_byte_from_hex('m', 6)} * 65536"
-        f" + {_byte_from_hex('m', 7)} * 256 + {_byte_from_hex('m', 8)})"
-    )
+    hi = f"({_hex_int('m', 1, 8)} & 2147483647)"
+    lo = _hex_int("m", 9, 8)
     return f"""
         WITH t AS (
           SELECT doc_id, {_TOKS} AS toks FROM documents
@@ -608,8 +565,7 @@ PIPELINE_QUERIES["q81_audio_chunks"] = q81_audio_chunks
 PIPELINE_ORACLES["q81_audio_chunks"] = f"""
     WITH a AS (
       SELECT doc_id AS media_id,
-             1000 + ({_byte_from_hex(_SHA, 4)} * 256
-                     + {_byte_from_hex(_SHA, 5)}) % 60000 AS duration_ms
+             1000 + {_hex_int(_SHA, 7, 4)} % 60000 AS duration_ms
       FROM documents
       WHERE {_MTYPE} = 'audio'
     )
@@ -644,31 +600,23 @@ def q103_bloom_incremental_dedup(spark, sf_dir):
 
 PIPELINE_QUERIES["q103_bloom_incremental_dedup"] = q103_bloom_incremental_dedup
 
-# Same md5-carving as the Spark side: one md5 of the fingerprint yields
-# four 32-bit probe positions; 32-bit words in BIGINTs keep every bit op
-# inside positive signed range in both engines.
+# Same md5-carving as the Spark side: one md5 `m` of the fingerprint
+# yields four 32-bit probe positions; 32-bit words in BIGINTs keep every
+# bit op inside positive signed range in both engines.
 _BLOOM_BITS = 256 * 32
-
-
-def _bloom_pos_sql(i: int) -> str:
-    """DuckDB 32-bit probe value i (0-based) from md5 hex `m`."""
-    return (
-        f"(({_byte_from_hex('m', 4 * i + 1)} * 16777216 "
-        f"+ {_byte_from_hex('m', 4 * i + 2)} * 65536 "
-        f"+ {_byte_from_hex('m', 4 * i + 3)} * 256 "
-        f"+ {_byte_from_hex('m', 4 * i + 4)}) % {_BLOOM_BITS})"
-    )
-
+_BLOOM_POS = ", ".join(
+    f"{_hex_int('m', 8 * i + 1, 8)} % {_BLOOM_BITS}" for i in range(4)
+)
 
 PIPELINE_ORACLES["q103_bloom_incremental_dedup"] = f"""
     WITH f AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS doc_fp
+             {_FP} AS doc_fp
       FROM documents
     ),
     idx AS (SELECT DISTINCT doc_fp FROM f WHERE doc_id < 250),
     ipos AS (
-      SELECT unnest([{", ".join(_bloom_pos_sql(i) for i in range(4))}]) AS pos
+      SELECT unnest([{_BLOOM_POS}]) AS pos
       FROM (SELECT md5(doc_fp) AS m FROM idx)
     ),
     words AS (
@@ -679,7 +627,7 @@ PIPELINE_ORACLES["q103_bloom_incremental_dedup"] = f"""
     batch AS (SELECT doc_id, doc_fp FROM f WHERE doc_id >= 250),
     bpos AS (
       SELECT doc_id, doc_fp,
-             unnest([{", ".join(_bloom_pos_sql(i) for i in range(4))}]) AS pos
+             unnest([{_BLOOM_POS}]) AS pos
       FROM (SELECT doc_id, doc_fp, md5(doc_fp) AS m FROM batch)
     ),
     hits AS (
@@ -772,16 +720,12 @@ PIPELINE_QUERIES["q116_ppjoin_pairs"] = q116_ppjoin_pairs
 # mirror of the prefix filter (see q116 docstring)
 PIPELINE_ORACLES["q116_ppjoin_pairs"] = f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+      SELECT doc_id, {_TOKS} AS toks
       FROM documents WHERE doc_id < 600
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
@@ -899,10 +843,10 @@ PIPELINE_QUERIES["q143_media_batch_plan"] = q143_media_batch_plan
 PIPELINE_ORACLES["q143_media_batch_plan"] = f"""
     WITH d AS (
       SELECT doc_id AS media_id, {_MTYPE} AS media_type,
-             64 + {_byte_from_hex(_SHA, 1)} % 192 AS width,
-             64 + {_byte_from_hex(_SHA, 2)} % 192 AS height,
+             64 + {_hex_int(_SHA, 1, 2)} % 192 AS width,
+             64 + {_hex_int(_SHA, 3, 2)} % 192 AS height,
              CASE WHEN {_MTYPE} = 'video'
-                  THEN 1 + {_byte_from_hex(_SHA, 3)} % 120 END AS n_frames
+                  THEN 1 + {_hex_int(_SHA, 5, 2)} % 120 END AS n_frames
       FROM documents
       WHERE {_MTYPE} IN ('image', 'video')
     ),
@@ -1557,7 +1501,7 @@ def q188_rrf_fusion(spark, sf_dir):
 
 PIPELINE_QUERIES["q188_rrf_fusion"] = q188_rrf_fusion
 
-PIPELINE_ORACLES["q188_rrf_fusion"] = """
+PIPELINE_ORACLES["q188_rrf_fusion"] = f"""
     WITH dense AS (
       SELECT query_id, cand_id, rnk AS rank_dense FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -1573,9 +1517,7 @@ PIPELINE_ORACLES["q188_rrf_fusion"] = """
       ) WHERE rnk <= 50
     ),
     tok AS (
-      SELECT doc_id, unnest(list_distinct(string_split(
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-               ' '))) AS tok
+      SELECT doc_id, unnest(list_distinct({_TOKS})) AS tok
       FROM documents
     ),
     overlap AS (
@@ -1664,16 +1606,12 @@ PIPELINE_QUERIES["q206_neardup_evidence"] = q206_neardup_evidence
 
 PIPELINE_ORACLES["q206_neardup_evidence"] = f"""
     WITH t AS (
-      SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks
+      SELECT doc_id, {_TOKS} AS toks
       FROM documents WHERE doc_id < 200
     ),
     g AS (
       SELECT doc_id,
-             CASE WHEN len(toks) - 2 >= 1
-                  THEN list_distinct(list_transform(
-                         range(1, len(toks) - 2 + 1),
-                         i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
-                  ELSE [norm] END AS grams
+             {_shingles(3)} AS grams
       FROM t
     ),
     x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),

@@ -20,7 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import tokens
-from adhesive_spark.queries.oracle_fragments import _TOKS, _quality_sql
+from adhesive_spark.queries.oracle_fragments import _TOKS, _h32, _hex_int, _quality_sql
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SCALE_QUERIES: dict = {}
@@ -869,11 +869,10 @@ def q226_watermark_lateness_audit(spark, sf_dir):
 
 SCALE_QUERIES["q226_watermark_lateness_audit"] = q226_watermark_lateness_audit
 
-SCALE_ORACLES["q226_watermark_lateness_audit"] = """
+SCALE_ORACLES["q226_watermark_lateness_audit"] = f"""
     WITH ev AS (
       SELECT event_type,
-             CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 4))
-                  AS BIGINT) % 600 AS delay_s
+             {_hex_int("md5(CAST(event_id AS VARCHAR))", 1, 4)} % 600 AS delay_s
       FROM events
     ),
     spine AS (
@@ -1292,9 +1291,10 @@ SCALE_ORACLES["q230_masked_span_plan"] = f"""
     t AS (SELECT lang, doc_id, pos FROM toks WHERE tok <> ''),
     marked AS (
       SELECT lang, doc_id, pos // 3 AS run,
-             (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                    || CAST(pos // 3 AS VARCHAR)), 1, 4)) AS BIGINT)
-              % 20) < 3 AS masked
+             ({_hex_int(
+               "md5(CAST(doc_id AS VARCHAR) || ':' || CAST(pos // 3 AS VARCHAR))",
+               1, 4,
+             )} % 20) < 3 AS masked
       FROM t
     )
     SELECT lang,
@@ -1845,7 +1845,7 @@ def _q236_oracle() -> str:
     ),
     base AS (
       SELECT DISTINCT source,
-             CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS h
+             {_h32("md5(tok)")} AS h
       FROM (SELECT DISTINCT source, tok FROM toks WHERE tok <> '')
     ),
     coeffs(perm, a, b) AS (VALUES {coeff_rows}),

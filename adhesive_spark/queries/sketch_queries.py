@@ -26,7 +26,7 @@ from adhesive_spark.operators.sketches import (
     hll_oracle_sql,
 )
 from adhesive_spark.operators.text import tokens
-from adhesive_spark.queries.oracle_fragments import _TOKS
+from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SKETCH_QUERIES: dict = {}
@@ -128,8 +128,7 @@ SKETCH_ORACLES["q242_cms_heavyhitters"] = f"""
     ),
     sketch AS (
       SELECT CAST(s.r AS BIGINT) AS r,
-             CAST(('0x' || substr(md5(s.salt || c.tok), 1, 8))
-                  AS BIGINT) % {CMS_WIDTH} AS c,
+             {_h32("md5(s.salt || c.tok)")} % {CMS_WIDTH} AS c,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM clean c CROSS JOIN salts s
       GROUP BY 1, 2
@@ -141,8 +140,7 @@ SKETCH_ORACLES["q242_cms_heavyhitters"] = f"""
     ),
     probe AS (
       SELECT t.tok, t.true_cnt, CAST(s.r AS BIGINT) AS r,
-             CAST(('0x' || substr(md5(s.salt || t.tok), 1, 8))
-                  AS BIGINT) % {CMS_WIDTH} AS c
+             {_h32("md5(s.salt || t.tok)")} % {CMS_WIDTH} AS c
       FROM top t CROSS JOIN salts s
     ),
     est AS (
@@ -1412,8 +1410,8 @@ def q253_delta_join_view(spark, sf_dir):
 SKETCH_QUERIES["q253_delta_join_view"] = q253_delta_join_view
 
 _Q253_HASH = (
-    "CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || ':' ||"
-    " CAST(c_custkey AS VARCHAR)), 1, 8)) AS BIGINT) % 2147483647"
+    _h32("md5(CAST(o_orderkey AS VARCHAR) || ':' || CAST(c_custkey AS VARCHAR))")
+    + " % 2147483647"
 )
 
 SKETCH_ORACLES["q253_delta_join_view"] = f"""

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
+from adhesive_spark.queries.oracle_fragments import _NORM, _TOKS, _h32, _hex_int
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 TRAINING_QUERIES: dict = {}
@@ -260,8 +260,7 @@ TRAINING_QUERIES["q281_gopher_repetition"] = q281_gopher_repetition
 TRAINING_ORACLES["q281_gopher_repetition"] = f"""
     WITH t AS (
       SELECT doc_id, source,
-             CAST(length(trim(regexp_replace(lower(text), '\\s+', ' ',
-                                             'g'))) AS BIGINT) AS n_chars,
+             CAST(length({_NORM}) AS BIGINT) AS n_chars,
              {_TOKS} AS l
       FROM documents
     ),
@@ -381,18 +380,15 @@ def q282_shard_manifest(spark, sf_dir):
 
 TRAINING_QUERIES["q282_shard_manifest"] = q282_shard_manifest
 
-TRAINING_ORACLES["q282_shard_manifest"] = """
+TRAINING_ORACLES["q282_shard_manifest"] = f"""
     WITH docs AS (
       SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-             CAST(length(trim(regexp_replace(lower(text), '\\s+', ' ',
-                                             'g'))) AS BIGINT) AS n_chars
+             CAST(length({_NORM}) AS BIGINT) AS n_chars
       FROM documents
     ),
     b AS (
       SELECT *,
-             CAST((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16
-                  + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1)
-                  AS INTEGER) AS bucket
+             CAST({_hex_int("h", 1, 2)} AS INTEGER) AS bucket
       FROM docs
     ),
     sharded AS (
@@ -840,8 +836,7 @@ TRAINING_QUERIES["q287_tokenizer_fertility"] = q287_tokenizer_fertility
 TRAINING_ORACLES["q287_tokenizer_fertility"] = f"""
     WITH d AS (
       SELECT lang,
-             CAST(length(trim(regexp_replace(lower(text), '\\s+', ' ',
-                                             'g'))) AS BIGINT) AS chars,
+             CAST(length({_NORM}) AS BIGINT) AS chars,
              CAST(len({_TOKS}) AS BIGINT) AS toks
       FROM documents
     ),
@@ -1311,14 +1306,12 @@ def q293_context_overflow(spark, sf_dir):
 
 TRAINING_QUERIES["q293_context_overflow"] = q293_context_overflow
 
-TRAINING_ORACLES["q293_context_overflow"] = """
+TRAINING_ORACLES["q293_context_overflow"] = f"""
     WITH d AS (
       SELECT source,
              GREATEST(
-               CAST(CEIL(length(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g'))) / 4.0) AS BIGINT),
-               CAST(len(string_split(trim(regexp_replace(lower(text),
-                 '\\s+', ' ', 'g')), ' ')) AS BIGINT)) AS toks
+               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
+               CAST(len({_TOKS}) AS BIGINT)) AS toks
       FROM documents
     )
     SELECT source,
@@ -1409,14 +1402,12 @@ def q294_mixture_waterfill(spark, sf_dir):
 
 TRAINING_QUERIES["q294_mixture_waterfill"] = q294_mixture_waterfill
 
-TRAINING_ORACLES["q294_mixture_waterfill"] = """
+TRAINING_ORACLES["q294_mixture_waterfill"] = f"""
     WITH supply AS (
       SELECT source,
              CAST(SUM(GREATEST(
-               CAST(CEIL(length(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g'))) / 4.0) AS BIGINT),
-               CAST(len(string_split(trim(regexp_replace(lower(text),
-                 '\\s+', ' ', 'g')), ' ')) AS BIGINT))) AS BIGINT)
+               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
+               CAST(len({_TOKS}) AS BIGINT))) AS BIGINT)
                AS supply_tokens
       FROM documents GROUP BY source
     ),
@@ -1497,14 +1488,12 @@ def q295_epoch_budget(spark, sf_dir):
 
 TRAINING_QUERIES["q295_epoch_budget"] = q295_epoch_budget
 
-TRAINING_ORACLES["q295_epoch_budget"] = """
+TRAINING_ORACLES["q295_epoch_budget"] = f"""
     WITH supply AS (
       SELECT source,
              CAST(SUM(GREATEST(
-               CAST(CEIL(length(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g'))) / 4.0) AS BIGINT),
-               CAST(len(string_split(trim(regexp_replace(lower(text),
-                 '\\s+', ' ', 'g')), ' ')) AS BIGINT))) AS BIGINT)
+               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
+               CAST(len({_TOKS}) AS BIGINT))) AS BIGINT)
                AS supply_tokens
       FROM documents GROUP BY source
     ),
@@ -2013,8 +2002,7 @@ TRAINING_ORACLES["q300_training_funnel"] = f"""
       SELECT doc_id, source, md5(text) AS h_exact,
              md5(array_to_string(list_sort({_TOKS}), ' ')) AS h_bow,
              GREATEST(
-               CAST(CEIL(length(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g'))) / 4.0) AS BIGINT),
+               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
                CAST(len({_TOKS}) AS BIGINT)) AS toks
       FROM documents
     ),
@@ -2282,14 +2270,12 @@ def q303_token_gini(spark, sf_dir):
 
 TRAINING_QUERIES["q303_token_gini"] = q303_token_gini
 
-TRAINING_ORACLES["q303_token_gini"] = """
+TRAINING_ORACLES["q303_token_gini"] = f"""
     WITH d AS (
       SELECT source,
              GREATEST(
-               CAST(CEIL(length(trim(regexp_replace(lower(text), '\\s+',
-                 ' ', 'g'))) / 4.0) AS BIGINT),
-               CAST(len(string_split(trim(regexp_replace(lower(text),
-                 '\\s+', ' ', 'g')), ' ')) AS BIGINT)) AS toks
+               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
+               CAST(len({_TOKS}) AS BIGINT)) AS toks
       FROM documents
     ),
     u AS (

@@ -94,8 +94,11 @@ def build_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the singleton SparkSession — the JVM-singleton analog
-    (src/jvm.rs:27 ``OnceCell``: one engine per process)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    (src/jvm.rs:27 ``OnceCell``: one engine per process).
+
+    The default master is ``local[n]`` with n from ``SPARK_GRAFT_CPUS``,
+    else the number of CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONFIGS)

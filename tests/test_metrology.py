@@ -261,7 +261,7 @@ def test_lang_id_arr_matches_markers(spark):
     """Half-document lang-id: clear marker sets resolve to their
     language; a marker-free half is 'und'; an en/de half-and-half doc
     is exactly what q347 counts as mixed."""
-    from adhesive_spark.queries.metrology_queries import _lang_id_arr
+    from adhesive_spark.operators.text import lang_id_tokens
 
     df = spark.createDataFrame(
         [
@@ -271,7 +271,7 @@ def test_lang_id_arr_matches_markers(spark):
         ],
         ["toks"],
     )
-    got = [r.l for r in df.select(_lang_id_arr(F.col("toks")).alias("l")).collect()]
+    got = [r.l for r in df.select(lang_id_tokens(F.col("toks")).alias("l")).collect()]
     assert got == ["en", "de", "und"]
 
 

@@ -9,6 +9,7 @@ deltas, which subtract the box noise that both members of a pair share.
 
 Usage:
     python tools/ab_bench.py <spec.py> [sf_dir] [pairs]
+    python tools/ab_bench.py --help
 
 The spec module must define ``VARIANTS: dict[str, Callable[[spark,
 sf_dir], DataFrame]]`` with exactly two entries; insertion order names
@@ -19,6 +20,7 @@ Prints one JSON line per run plus a summary.
 
 from __future__ import annotations
 
+import argparse
 import importlib.util
 import json
 import os
@@ -33,11 +35,22 @@ from adhesive_spark.session import build_spark  # noqa: E402
 
 
 def main() -> None:
-    spec_path = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    pairs = int(sys.argv[3]) if len(sys.argv) > 3 else 5
+    parser = argparse.ArgumentParser(
+        description="Time two variants of one query interleaved in one session."
+    )
+    parser.add_argument("spec", help="Python file defining VARIANTS (two entries)")
+    parser.add_argument(
+        "sf_dir", nargs="?", default="/root/testdata/sf0.1", help="testdata dir"
+    )
+    parser.add_argument(
+        "pairs", nargs="?", type=int, default=5, help="interleaved pairs"
+    )
+    args = parser.parse_args()
+    spec_path, sf_dir, pairs = args.spec, args.sf_dir, args.pairs
 
     spec = importlib.util.spec_from_file_location("ab_spec", spec_path)
+    if spec is None or not os.path.isfile(spec_path):
+        parser.error(f"no Python spec file at {spec_path}")
     mod = importlib.util.module_from_spec(spec)
     sys.modules["ab_spec"] = mod
     spec.loader.exec_module(mod)
