@@ -12,18 +12,23 @@ Embeddings are ``array<float>`` columns. Two paths:
   the 100 TB path: candidate generation is an equi-join on band keys.
 
 Dot products use built-in higher-order functions (``zip_with`` +
-``aggregate`` — JVM-side, no Python in the loop).
+``aggregate`` — JVM-side, no Python in the loop); :func:`cosine_sims`
+is the one Arrow kernel that replays the same fold for a block of
+vectors (kNN queries, k-means centroids).
 """
 
 from __future__ import annotations
 
 import random
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     IntegerType,
     StructField,
@@ -80,14 +85,10 @@ def knn_bruteforce(
     the contract (the corpus is the scale side).  Ranking window
     partitioned by query id; ties broken by corpus id for determinism.
 
-    The query block is materialized into the kernel's closure (the same
-    driver-side footprint a broadcast implies) and each corpus vector is
-    shipped over Arrow ONCE, scored against every query inside a numpy
-    kernel whose per-dimension loop replays the Catalyst HOF cosine
-    fold's IEEE operation order exactly — bit-equality with that fold
-    (the crossJoin reference in tests/_twins.py) is machine-checked in
-    test_scale_ops, and the kernel measured 4× faster at the 1000×
-    ladder rung (2 M × 25 pairs: 32.8 s HOF → 8.1 s).
+    The query block is collected into :func:`cosine_sims`, which scores
+    each corpus vector against every query in one Arrow trip; its sims
+    are bit-equal to the Catalyst HOF cosine fold (the crossJoin
+    reference in tests/_twins.py, machine-checked in test_scale_ops).
     NOTE: the query block is collected EAGERLY at plan-construction
     time (a Spark job runs inside this call), so upstream errors
     surface here and later changes to the ``queries`` DataFrame's
@@ -95,15 +96,11 @@ def knn_bruteforce(
     snapshot semantics, matching what broadcasting a collected block
     implies. Zero queries return an empty frame with the same columns.
 
-    Corner-input semantics (equal to the reference; see
-    test_scale_ops::test_knn_corner_inputs_match_hof): null or ragged
-    vectors — on either side — and zero-norm pairs score ``sim = null``
-    (ranked last under the DESC ordering); the one documented delta is
-    a null ELEMENT inside an otherwise non-null corpus vector, which
-    Arrow hands the kernel as NaN (sim NaN, ranked first like any NaN)
-    while the HOF fold yields null. Sims are computed in float64
-    regardless of the stored element width, so array<float> callers
-    get the reference's sims.
+    Corner inputs score as the HOF fold does (test_scale_ops): a null
+    or ragged vector, a null element on either side and a zero-norm
+    pair give ``sim = null`` (ranked last); a NaN element gives NaN
+    (ranked first). Sims are computed in float64 whatever the stored
+    element width.
     """
     q = queries.select(
         F.col(query_id_col),
@@ -122,134 +119,8 @@ def knn_bruteforce(
                 ]
             ),
         )
-    return _knn_bruteforce_vectorized(
-        corpus, qrows, k=k, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col,
-    )
-
-
-def _knn_bruteforce_vectorized(
-    corpus, qrows, *, k, id_col, vec_col, query_id_col
-):
-    """Batched scorer behind knn_bruteforce:
-    one Arrow trip per CORPUS vector (not per pair), all queries scored
-    in-kernel, positions mapped back to query ids via a literal array.
-
-    Bit-exactness with the HOF fold: the kernel accumulates dot and
-    both norms dimension-by-dimension in the same order as the left
-    fold (``acc += A[:, j] * B[:, j]`` for j ascending), so every
-    float64 add/mul happens in the identical IEEE sequence and the
-    rounded sims are byte-identical.
-
-    Corner inputs mirror the HOF fold (r10 ADVICE): null queries, null
-    or ragged corpus rows, and zero-norm pairs all emit ``null`` sims
-    instead of crashing ``np.stack``/``list(...)`` or leaking kernel
-    NaNs where the fold yields null. Rows are grouped by length and
-    each group scored against the same-length query block with the
-    identical fold, so the homogeneous fast path (every committed
-    caller) is byte-for-byte the original kernel."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType
-
-    qids = [r[0] for r in qrows]
-    qn = len(qids)
-    # queries grouped by vector length; a null query joins no group and
-    # therefore scores null against every corpus row (the HOF result)
-    qgroups: dict[int, list[int]] = {}
-    for idx, r in enumerate(qrows):
-        if r[1] is not None:
-            qgroups.setdefault(len(r[1]), []).append(idx)
-    qmats = {
-        L: (
-            np.array([list(qrows[i][1]) for i in cols], dtype=np.float64),
-            np.array(cols),
-        )
-        for L, cols in qgroups.items()
-    }
-
-    def _score_block(A: "np.ndarray", Q: "np.ndarray") -> "np.ndarray":
-        # the HOF fold replay: j-ascending, identical IEEE sequence
-        n, d = A.shape
-        bn = Q.shape[0]
-        acc = np.zeros((n, bn))
-        na = np.zeros(n)
-        nq = np.zeros(bn)
-        for j in range(d):
-            acc += A[:, j : j + 1] * Q[None, :, j]
-            na += A[:, j] * A[:, j]
-            nq += Q[:, j] * Q[:, j]
-        denom = np.sqrt(na)[:, None] * np.sqrt(nq)[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = acc / denom
-        # try_divide semantics: zero denominator -> null, not NaN/inf
-        sims[denom == 0.0] = np.nan
-        return sims
-
-    all_queries_one_group = (
-        len(qmats) == 1
-        and next(iter(qmats.values()))[1].shape[0] == qn
-    )
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def _sims(cv: pd.Series) -> pd.Series:
-        vals = cv.values
-        n = len(vals)
-        lens = np.fromiter(
-            (v.shape[0] if v is not None else -1 for v in vals),
-            dtype=np.int64,
-            count=n,
-        )
-        if all_queries_one_group and n:
-            # FAST PATH (every committed caller): homogeneous batch,
-            # no nulls, no zero norms — byte-identical to the original
-            # kernel, zero per-element Python.
-            L0 = next(iter(qmats))
-            Q, _ = qmats[L0]
-            if (lens == L0).all():
-                A = np.stack(vals).astype(np.float64, copy=False)
-                # sum-of-squares == 0 iff the vector is all-zero (order
-                # independent for non-negative addends) — mask only
-                if (
-                    ((A * A).sum(axis=1) != 0.0).all()
-                    and ((Q * Q).sum(axis=1) != 0.0).all()
-                ):
-                    return pd.Series(list(_score_block(A, Q)))
-        # SLOW PATH (corner inputs only): per-length groups, null sims
-        # for null/ragged/zero-norm pairs — the HOF fold's semantics.
-        out = np.full((n, qn), np.nan)
-        valid = np.zeros((n, qn), dtype=bool)
-        for L in np.unique(lens):
-            pair = qmats.get(int(L))
-            if pair is None:
-                continue  # null/ragged rows: no same-length queries
-            Q, cols = pair
-            ridx = np.nonzero(lens == L)[0]
-            A = np.stack([vals[i] for i in ridx]).astype(
-                np.float64, copy=False
-            )
-            out[np.ix_(ridx, cols)] = _score_block(A, Q)
-            # zero-norm pairs are null (try_divide), never NaN — but a
-            # NaN produced by NaN ELEMENTS stays a value, so the mask
-            # comes from the norms, not from isnan(sims)
-            zero = ((A * A).sum(axis=1)[:, None] == 0.0) | (
-                (Q * Q).sum(axis=1)[None, :] == 0.0
-            )
-            v = np.ones_like(zero)
-            v[zero] = False
-            valid[np.ix_(ridx, cols)] = v
-        return pd.Series(
-            [
-                [
-                    float(out[i, j]) if valid[i, j] else None
-                    for j in range(qn)
-                ]
-                for i in range(n)
-            ]
-        )
-
-    qid_lit = F.array(*[F.lit(i) for i in qids])
+    qid_lit = F.array(*[F.lit(r[0]) for r in qrows])
+    sims = cosine_sims([r[1] for r in qrows])
     # by_size: AQE sizes the kernel stage's fanout from the measured
     # shuffle bytes — a ~1 MB corpus scores in ONE task (32 fixed-width
     # tasks cost ~0.4 s of per-task Python overhead to score 2k rows,
@@ -259,7 +130,7 @@ def _knn_bruteforce_vectorized(
         ensure_parallelism(corpus, id_col, by_size=True)
         .select(
             F.col(id_col),
-            _sims(F.col(vec_col).cast("array<double>")).alias("__sims"),
+            sims(F.col(vec_col).cast("array<double>")).alias("__sims"),
         )
         .select(
             F.col(id_col),
@@ -279,6 +150,76 @@ def _knn_bruteforce_vectorized(
         )
     )
     return _rank_top_k(scored, k, query_id_col, id_col)
+
+
+def _score_block(A: np.ndarray, Q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sims, valid) of every row of ``A`` against every row of ``Q``.
+
+    Dot and both norms accumulate dimension by dimension, j ascending,
+    as the HOF fold does, so every float64 add and multiply happens in
+    the same IEEE sequence and the sims are bit-equal to :func:`cosine`.
+    A zero denominator is invalid (``try_divide``'s null); a NaN from
+    NaN elements stays a valid value."""
+    n, d = A.shape
+    acc = np.zeros((n, Q.shape[0]))
+    na = np.zeros(n)
+    nq = np.zeros(Q.shape[0])
+    for j in range(d):
+        acc += A[:, j : j + 1] * Q[None, :, j]
+        na += A[:, j] * A[:, j]
+        nq += Q[:, j] * Q[:, j]
+    denom = np.sqrt(na)[:, None] * np.sqrt(nq)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / denom, denom != 0.0
+
+
+def cosine_sims(qvecs: list):
+    """Arrow UDF ``array<double> -> array<double>``: the :func:`cosine`
+    of a vector against each of ``qvecs`` (a small block collected on
+    the driver: kNN queries, k-means centroids), one entry per block
+    vector in block order.
+
+    The kernel reads the column's offsets, flat values and null bitmaps
+    directly, groups rows by length (one group for homogeneous
+    embeddings) and scores each group against the same-length block
+    vectors with :func:`_score_block`. A pair is null where the HOF fold
+    is null: a null or ragged vector, a null element on either side, or
+    a zero denominator."""
+    groups: dict[int, list[int]] = {}
+    for i, q in enumerate(qvecs):
+        if q is not None and None not in q:
+            groups.setdefault(len(q), []).append(i)
+    blocks = [
+        (np.array([qvecs[i] for i in cols], dtype=np.float64), cols)
+        for cols in groups.values()
+    ]
+    qn = len(qvecs)
+
+    @arrow_udf(ArrayType(DoubleType()))
+    def _sims(cv: pa.Array) -> pa.Array:
+        n = len(cv)
+        off = cv.offsets.to_numpy()
+        flat = cv.values.to_numpy(zero_copy_only=False)
+        nulls_upto = np.concatenate(
+            ([0], np.cumsum(cv.values.is_null().to_numpy(zero_copy_only=False)))
+        )
+        ok = cv.is_valid().to_numpy(zero_copy_only=False) & (
+            nulls_upto[off[1:]] == nulls_upto[off[:-1]]
+        )
+        out = np.zeros((n, qn))
+        valid = np.zeros((n, qn), dtype=bool)
+        for Q, cols in blocks:
+            L = Q.shape[1]
+            rows = np.nonzero(ok & (np.diff(off) == L))[0]
+            sims, v = _score_block(flat[off[rows, None] + np.arange(L)], Q)
+            out[np.ix_(rows, cols)] = sims
+            valid[np.ix_(rows, cols)] = v
+        return pa.ListArray.from_arrays(
+            np.arange(n + 1, dtype=np.int32) * qn,
+            pa.array(out.ravel(), mask=~valid.ravel()),
+        )
+
+    return _sims
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:

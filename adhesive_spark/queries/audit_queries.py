@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.queries.oracle_fragments import (
+    _BPE,
     _FP,
     _NORM,
     _PAIR_CTES,
@@ -883,8 +884,7 @@ AUDIT_QUERIES["q312_packing_policy_ladder"] = q312_packing_policy_ladder
 
 AUDIT_ORACLES["q312_packing_policy_ladder"] = f"""
     WITH d AS (
-      SELECT greatest(CAST(ceil(length({_NORM}) / 4.0) AS BIGINT),
-                      CAST(len({_TOKS}) AS BIGINT)) AS l
+      SELECT {_BPE} AS l
       FROM documents
     ),
     ctx AS (SELECT UNNEST([2048, 4096, 8192]) AS c),

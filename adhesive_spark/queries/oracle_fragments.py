@@ -7,6 +7,7 @@ it out, so a change to the operator has one fragment to follow it:
 - ``_norm(expr)``, ``_NORM`` — ``operators.text.normalize_text``
 - ``_TOKS`` — ``operators.text.tokens``
 - ``_FP`` — ``operators.text.fingerprint``
+- ``_bpe(norm, toks)``, ``_BPE`` — ``operators.text.token_estimate_bpe``
 - ``_hex_int(hexpr, start, n)`` — ``conv(substring(hexpr, start, n), 16, 10)``
 - ``_h32(hexpr)`` — ``operators.dedup.portable_hash32``
 - ``_shingles(n, toks)`` — ``operators.dedup.word_shingles``
@@ -25,13 +26,27 @@ from adhesive_spark.operators.text import LANG_MARKERS, STOPWORDS_EN
 
 
 def _norm(expr: str) -> str:
-    """Lowercase, whitespace-collapse and trim the string ``expr``."""
-    return f"trim(regexp_replace(lower({expr}), '\\s+', ' ', 'g'))"
+    """Lowercase, whitespace-collapse and trim the string ``expr``. The
+    class is Java's ``\\s`` written out: RE2's ``\\s`` lacks the
+    vertical tab."""
+    return f"trim(regexp_replace(lower({expr}), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
 
 
 _NORM = _norm("text")
 _TOKS = f"string_split({_NORM}, ' ')"
 _FP = f"md5({_NORM})"
+
+
+def _bpe(norm: str = _NORM, toks: str = _TOKS) -> str:
+    """BPE-ish token estimate from the normalized text ``norm`` and its
+    token list ``toks``."""
+    return (
+        f"greatest(CAST(ceil(length({norm}) / 4.0) AS BIGINT), "
+        f"CAST(len({toks}) AS BIGINT))"
+    )
+
+
+_BPE = _bpe()
 
 
 def _hex_int(hexpr: str, start: int, n: int) -> str:

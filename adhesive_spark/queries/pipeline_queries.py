@@ -40,6 +40,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _STOP_RATIO,
     _TOKS,
     _UPPER_RATIO,
+    _bpe,
     _h32,
     _hex_int,
     _lang_sql,
@@ -307,8 +308,7 @@ PIPELINE_ORACLES = {
         )
         SELECT doc_id,
                len(toks) AS n_tokens,
-               greatest(CAST(ceil(length(norm) / 4.0) AS BIGINT),
-                        CAST(len(toks) AS BIGINT)) AS n_tokens_bpe,
+               {_bpe("norm", "toks")} AS n_tokens_bpe,
                stop_ratio, p_punct, p_upper, mean_wlen,
                {_quality_sql("stop_ratio", "p_punct", "p_upper")} AS quality,
                {_lang_sql()} AS lang_pred,

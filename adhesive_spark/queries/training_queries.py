@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.queries.oracle_fragments import _NORM, _TOKS, _h32, _hex_int
+from adhesive_spark.queries.oracle_fragments import _BPE, _NORM, _TOKS, _h32, _hex_int
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 TRAINING_QUERIES: dict = {}
@@ -1309,9 +1309,7 @@ TRAINING_QUERIES["q293_context_overflow"] = q293_context_overflow
 TRAINING_ORACLES["q293_context_overflow"] = f"""
     WITH d AS (
       SELECT source,
-             GREATEST(
-               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
-               CAST(len({_TOKS}) AS BIGINT)) AS toks
+             {_BPE} AS toks
       FROM documents
     )
     SELECT source,
@@ -1405,9 +1403,7 @@ TRAINING_QUERIES["q294_mixture_waterfill"] = q294_mixture_waterfill
 TRAINING_ORACLES["q294_mixture_waterfill"] = f"""
     WITH supply AS (
       SELECT source,
-             CAST(SUM(GREATEST(
-               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
-               CAST(len({_TOKS}) AS BIGINT))) AS BIGINT)
+             CAST(SUM({_BPE}) AS BIGINT)
                AS supply_tokens
       FROM documents GROUP BY source
     ),
@@ -1491,9 +1487,7 @@ TRAINING_QUERIES["q295_epoch_budget"] = q295_epoch_budget
 TRAINING_ORACLES["q295_epoch_budget"] = f"""
     WITH supply AS (
       SELECT source,
-             CAST(SUM(GREATEST(
-               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
-               CAST(len({_TOKS}) AS BIGINT))) AS BIGINT)
+             CAST(SUM({_BPE}) AS BIGINT)
                AS supply_tokens
       FROM documents GROUP BY source
     ),
@@ -2001,9 +1995,7 @@ TRAINING_ORACLES["q300_training_funnel"] = f"""
     WITH docs AS (
       SELECT doc_id, source, md5(text) AS h_exact,
              md5(array_to_string(list_sort({_TOKS}), ' ')) AS h_bow,
-             GREATEST(
-               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
-               CAST(len({_TOKS}) AS BIGINT)) AS toks
+             {_BPE} AS toks
       FROM documents
     ),
     flagged AS (
@@ -2273,9 +2265,7 @@ TRAINING_QUERIES["q303_token_gini"] = q303_token_gini
 TRAINING_ORACLES["q303_token_gini"] = f"""
     WITH d AS (
       SELECT source,
-             GREATEST(
-               CAST(CEIL(length({_NORM}) / 4.0) AS BIGINT),
-               CAST(len({_TOKS}) AS BIGINT)) AS toks
+             {_BPE} AS toks
       FROM documents
     ),
     u AS (

@@ -26,6 +26,7 @@ INPUTS = [
     "que el la",  # fr and es tie at 2: the first language wins
     "the und",  # en and de tie at 1
     "WOW!!! THIS, IS; GREAT?! BUY: NOW. the and of",
+    "a\x0bb",  # a vertical tab: in Java's \s, not in RE2's
 ]
 
 # fragment SQL over ``text``/``toks`` -> Spark twin over a text column
@@ -33,6 +34,7 @@ TWINS = {
     "norm": (frag._NORM, text.normalize_text),
     "toks": (frag._TOKS, text.tokens),
     "fp": (frag._FP, text.fingerprint),
+    "bpe": (frag._BPE, text.token_estimate_bpe),
     "h32": (frag._h32("md5(text)"), dedup.portable_hash32),
     "hex_9_4": (
         frag._hex_int("md5(text)", 9, 4),
@@ -76,13 +78,30 @@ def test_fragment_equals_spark_twin(name, duck_rows, spark_rows):
         assert got == want, (name, s)
 
 
+def test_norm_lowercases_dotted_capital_i_differently(spark):
+    """A documented divergence of ``_norm`` from ``normalize_text``:
+    Spark's ``lower`` is Java's ``toLowerCase``, which follows Unicode's
+    special casing and maps U+0130 (İ) to two code points, ``i`` plus
+    U+0307 (combining dot above); DuckDB's ``lower`` maps one code point
+    to one and gives ``i``. The seeded corpora hold no U+0130, so the
+    gap is pinned here rather than patched into ``_norm``."""
+    s = "İstanbul"
+    duck = duckdb.connect().execute(f"SELECT {frag._norm('?')}", [s]).fetchone()[0]
+    df = spark.createDataFrame([(s,)], "text STRING")
+    sp = df.select(text.normalize_text(F.col("text"))).first()[0]
+    assert duck == "istanbul"
+    assert sp == "i\u0307stanbul"
+
+
 QUERIES = Path(frag.__file__).parent
 
 # hand-written copies of a fragment: the whitespace-collapse regex of
-# _norm, the strpos hex alphabet, a word-shingle fallback, and one query
-# module reaching into another for a twin
+# _norm (either spelling), the strpos hex alphabet, the ~4 chars/token
+# division of _bpe, a word-shingle fallback, and one query module
+# reaching into another for a twin
 COPIES = {
-    "whitespace-collapse regex": re.compile(r"\\\\s\+|\\s\+"),
+    "whitespace-collapse regex": re.compile(r"\\\\s\+|\\s\+|\\\\?x0B"),
+    "bpe division": re.compile(r"/\s*4\.0\)"),
     "hex alphabet": re.compile(r"0123456789abcdef"),
     "shingle fallback": re.compile(r"ELSE\s*\[\s*norm\s*\]\s*END"),
     "query-module import": re.compile(

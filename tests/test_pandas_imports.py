@@ -1,0 +1,42 @@
+"""A ratchet on the modules of the package that import pandas.
+
+The package's own kernels move data to Python as Arrow. Each module
+still allowed to import pandas is listed with its reason; a module not
+on the list fails the scan, and so does a listed module that no longer
+imports pandas (strike it from the list). Moving a kernel to Arrow
+shrinks the list."""
+
+import re
+from pathlib import Path
+
+import adhesive_spark
+
+ALLOWED = {
+    "operators/dedup.py": "minhash_signature_kernel and a scalar pandas_udf"
+    " not yet moved to arrow_udf",
+    "operators/text.py": "gopher_masses_kernel, a pandas_udf not yet moved"
+    " to arrow_udf",
+    "operators/multimodal.py": "_strict_codec_map's mapInPandas, not yet"
+    " moved to mapInArrow",
+    "operators/graph.py": "the union-find finish collects the edges with"
+    " toPandas on the driver and builds its result from a pandas frame",
+    "operators/inference.py": "batch_infer's model receives a pd.Series",
+    "operators/grouped.py": "the pandas GROUPED_AGG and applyInPandas"
+    " demonstration",
+    "streaming/stateful.py": "applyInPandasWithState has no Arrow form",
+}
+
+PANDAS_IMPORT = re.compile(r"^\s*(?:import|from)\s+pandas\b", re.M)
+
+
+def test_only_listed_modules_import_pandas():
+    root = Path(adhesive_spark.__file__).parent
+    importing = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        if PANDAS_IMPORT.search(path.read_text())
+    }
+    assert importing == set(ALLOWED), (
+        f"not listed: {sorted(importing - set(ALLOWED))}, "
+        f"listed but pandas-free: {sorted(set(ALLOWED) - importing)}"
+    )

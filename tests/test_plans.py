@@ -387,6 +387,7 @@ def test_plans_md_shuffle_ratchet(spark):
     from pathlib import Path
 
     import __spark_entry__ as entry_mod
+    from tools.plan_report import plan_columns
 
     plans_md = Path(__file__).resolve().parents[1] / "PLANS.md"
     text = plans_md.read_text()
@@ -426,21 +427,15 @@ def test_plans_md_shuffle_ratchet(spark):
         ]
         if bad_cols:
             complex_out[name] = bad_cols
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        got_shuffles = len(re.findall(r"\bExchange\b", plan))
-        got_smj = plan.count("SortMergeJoin")
-        got_bnl = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
+        got = plan_columns(df._jdf.queryExecution().executedPlan().toString())
         rec = recorded[name]
-        from tools.plan_report import dup_python_eval
-
-        got_dup = dup_python_eval(plan)
-        if got_shuffles > rec["shuffles"]:
-            worse[name] = ("shuffles", rec["shuffles"], got_shuffles)
-        elif got_smj > rec["smj"]:
-            worse[name] = ("smj-flip", rec["smj"], got_smj)
-        elif got_bnl and not rec["bnl"]:
+        if got["shuffles"] > rec["shuffles"]:
+            worse[name] = ("shuffles", rec["shuffles"], got["shuffles"])
+        elif got["smj"] > rec["smj"]:
+            worse[name] = ("smj-flip", rec["smj"], got["smj"])
+        elif got["bnl"] and not rec["bnl"]:
             worse[name] = ("new-BNL", False, True)
-        elif got_dup and rec["dup_py"] is False:
+        elif got["dup_py"] and rec["dup_py"] is False:
             # a dup-free recording must stay dup-free: a duplicated
             # EvalPython node means a kernel silently re-evaluating
             # (the r11 q35 class)

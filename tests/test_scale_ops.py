@@ -658,6 +658,64 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
     assert vec32 == hof32 and len(vec32) == 3
 
 
+def test_knn_and_assign_nan_and_null_elements_match_hof(spark):
+    """A NaN element and a null element, in a corpus row and in a query
+    or centroid row, score as the HOF twin scores them: NaN sims stay
+    NaN (ranked first, won by the argmax), null elements give null
+    sims. NaN is compared equal to NaN."""
+    import math
+
+    from _twins import assign_hof, knn_bruteforce_hof
+    from adhesive_spark.operators.clustering import _assign
+    from adhesive_spark.operators.similarity import knn_bruteforce
+
+    nan = float("nan")
+
+    def same(x):
+        return "nan" if isinstance(x, float) and math.isnan(x) else x
+
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [nan, 1.0]),   # NaN element
+            (3, [0.5, None]),  # null element
+            (4, [0.6, 0.8]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(10, [1.0, 1.0]), (11, [0.3, nan]), (12, [None, 2.0])],
+        "query_id long, embedding array<double>",
+    )
+
+    def rows(knn):
+        return sorted(
+            (r.query_id, r.rank, r.vec_id, same(r.sim))
+            for r in knn(corpus, queries, k=4).collect()
+        )
+
+    vec, hof = rows(knn_bruteforce), rows(knn_bruteforce_hof)
+    assert vec == hof and len(vec) == 12
+    byq = {}
+    for qid, _, vid, sim in vec:
+        byq.setdefault(qid, {})[vid] = sim
+    assert byq[10][2] == "nan" and byq[10][3] is None
+    assert byq[10][1] not in (None, "nan") and byq[10][4] not in (None, "nan")
+    assert byq[11] == {1: "nan", 2: "nan", 3: None, 4: "nan"}
+    assert byq[12] == {1: None, 2: None, 3: None, 4: None}
+
+    vectors = corpus.withColumnRenamed("embedding", "v")
+    for cents in (
+        [(7, [1.0, 1.0]), (8, [0.0, 1.0]), (9, [nan, 0.5])],
+        [(7, [1.0, 1.0]), (8, [0.0, 1.0]), (9, [None, 0.5])],
+        [(7, [None, 1.0]), (8, [0.0, 1.0])],
+    ):
+        c = spark.createDataFrame(cents, "cid long, cv array<double>")
+        got = {r.vec_id: r.cid for r in _assign(vectors, c).collect()}
+        want = {r.vec_id: r.cid for r in assign_hof(vectors, c).collect()}
+        assert got == want and len(got) == 4, cents
+
+
 def test_knn_and_assign_zero_inputs_return_empty_frames(spark):
     """Zero queries (knn_bruteforce) and zero centroids (k-means
     _assign) return an empty frame with the usual column names and

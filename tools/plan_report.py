@@ -51,6 +51,19 @@ def dup_python_eval(plan: str) -> bool:
     return False
 
 
+def plan_columns(plan: str) -> dict:
+    """The PLANS.md columns read off an executed plan's string: shuffles
+    (Exchange nodes), BHJ and SMJ join counts, BNL (a nested-loop or
+    cartesian join is present) and dupPy (:func:`dup_python_eval`)."""
+    return {
+        "shuffles": len(re.findall(r"\bExchange\b", plan)),
+        "bhj": plan.count("BroadcastHashJoin"),
+        "smj": plan.count("SortMergeJoin"),
+        "bnl": "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan,
+        "dup_py": dup_python_eval(plan),
+    }
+
+
 def detect_cap(fn) -> str:
     """Grep a query callable's source for an INPUT cap: a strict
     upper-bound literal on an id column (``doc_id < 300``). Caps keep
@@ -140,18 +153,13 @@ def main() -> None:
         fmt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        shuffles = len(re.findall(r"\bExchange\b", plan))
-        bhj = plan.count("BroadcastHashJoin")
-        smj = plan.count("SortMergeJoin")
+        c = plan_columns(plan)
         pushed = bool(re.search(r"PushedFilters: \[[^\]]+\]", fmt))
-        nl = (
-            "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-        )
-        dup = dup_python_eval(plan)
         print(
-            f"| {name} | {shuffles} | {bhj} | {smj} "
-            f"| {'yes' if pushed else '-'} | {'yes (bounded scoring)' if nl else 'no'} "
-            f"| {caps[name]} | {'YES' if dup else 'no'} |"
+            f"| {name} | {c['shuffles']} | {c['bhj']} | {c['smj']} "
+            f"| {'yes' if pushed else '-'} "
+            f"| {'yes (bounded scoring)' if c['bnl'] else 'no'} "
+            f"| {caps[name]} | {'YES' if c['dup_py'] else 'no'} |"
         )
 
 
