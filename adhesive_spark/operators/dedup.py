@@ -7,12 +7,15 @@ Five strategies, all shuffle-conscious:
 - :func:`minhash_lsh_pairs` / :func:`dedup_minhash` — shingle → minhash
   signature → banded LSH → bucket self-join → exact-Jaccard verify.
   Candidate generation touches only same-band buckets (no O(n²) pair
-  space); all signature math is built-in expressions (JVM-side).
+  space). Shingle hashing is built-in expressions (JVM-side); the
+  permutation minimums are one Arrow UDF (numpy over the batch's flat
+  hash buffer).
 - :func:`simhash_signatures` / :func:`simhash_pairs` — 64-bit SimHash
   with chunk-banding for candidate generation and ``bit_count`` Hamming
-  verify. Token hashing JVM-side; bit-vote aggregation via a vectorized
-  Arrow-batched pandas UDF (64 per-bit array passes in SQL would scan
-  the token array 64×; one numpy pass is the scale-sane choice).
+  verify. Token hashing JVM-side; the bit-vote fold is one Arrow UDF
+  (64 per-bit array passes in SQL would scan the token array 64×; one
+  numpy pass per bit over the batch's flat hashes is the scale-sane
+  choice).
 - :func:`ngram_jaccard_pairs` — exact n-gram Jaccard via explode +
   equi-join on shingle (the fully SQL-expressible fuzzy-dup baseline —
   used as the correctness oracle for the approximate methods).
@@ -28,12 +31,14 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType
 
 from adhesive_spark.operators.text import fingerprint, normalize_text
 from adhesive_spark.sources.registry import checkpoint_corpus, ensure_parallelism
@@ -161,40 +166,53 @@ def portable_hash63(s):
     return hi * F.lit(4294967296) + lo
 
 
+def _row_segments(lists: pa.Array):
+    """``(ok, bounds, values)`` for an ``array<long>`` column, sliced or
+    not. ``ok`` marks the non-null, non-empty rows (``reduceat`` gives
+    an empty segment its start element). ``values`` is the flat int64
+    buffer plus one trailing slot, so a segment end is always a valid
+    index. ``bounds`` interleaves each ok row's start and end, so
+    ``ufunc.reduceat(values, bounds)[::2]`` reduces exactly each row:
+    without the ends a segment would run on into a null row's elements
+    or past the slice. A null element raises (no caller makes one)."""
+    off = lists.offsets.to_numpy()
+    ok = lists.is_valid().to_numpy(zero_copy_only=False) & (off[1:] > off[:-1])
+    bounds = np.stack([off[:-1][ok], off[1:][ok]], axis=1).ravel()
+    return ok, bounds, np.append(lists.values.to_numpy(), np.int64(0))
+
+
 def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
-    """The package's MinHash engine: the affine-permutation minimum
-    over materialized base hashes, computed as one int64 numpy matrix
-    op per document instead of num_perm interpreted HOF scans. The HOF
-    formulation (``minhash_signature`` / ``minhash_signature_from_base``)
-    is the equality reference in ``tests/_twins.py``.
+    """The package's MinHash engine: an Arrow UDF ``array<long> ->
+    array<long>`` giving the affine-permutation minimum over
+    materialized base hashes. It reads the list column's offsets, flat
+    values and validity (:func:`_row_segments`), and per permutation
+    runs one int64 affine pass over the batch's values and one
+    ``np.minimum.reduceat`` over the rows, instead of num_perm
+    interpreted HOF scans per document. The HOF formulation (``minhash_signature`` /
+    ``minhash_signature_from_base``) is the equality reference in
+    ``tests/_twins.py``.
 
     Exactness is structural, not approximate: base hashes are < 2³¹ and
     coefficients a < 2³⁰, so h·a+b < 2⁶² fits int64 with no overflow,
     `%` on non-negatives equals pmod, and min over ints is order-free —
     the signature longs are IDENTICAL to the HOF form's (machine-checked
     bit-equal, tests/test_operators.py). Null/empty shingle sets yield
-    the HOF plan's [null]×num_perm. Measured 1.9× on the full 1.5 M-doc
-    signature stage (61.1 s → 32.8 s — the shared md5 shingle-hash
-    checkpoint is included in both; STRESS.md round 10)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType
+    the HOF plan's [null]×num_perm."""
+    coeffs = _perm_coeffs(num_perm, seed)
 
-    coeffs = np.array(_perm_coeffs(num_perm, seed), dtype=np.int64)
-    A = coeffs[:, 0][:, None]
-    B = coeffs[:, 1][:, None]
-
-    @pandas_udf(ArrayType(LongType()))
-    def _sig(base_s: pd.Series) -> pd.Series:
-        none_sig = [None] * num_perm
-        out = []
-        for base in base_s:
-            if base is None or len(base) == 0:
-                out.append(none_sig)
-                continue
-            h = np.asarray(base, dtype=np.int64)[None, :]
-            out.append(((h * A + B) % _MERSENNE).min(axis=1).tolist())
-        return pd.Series(out)
+    @arrow_udf(ArrayType(LongType()))
+    def _sig(base: pa.Array) -> pa.Array:
+        n = len(base)
+        ok, bounds, h = _row_segments(base)
+        sig = np.zeros((n, num_perm), dtype=np.int64)
+        if bounds.size:
+            for p, (a, b) in enumerate(coeffs):
+                perm = (h * a + b) % _MERSENNE
+                sig[ok, p] = np.minimum.reduceat(perm, bounds)[::2]
+        return pa.ListArray.from_arrays(
+            np.arange(n + 1, dtype=np.int32) * num_perm,
+            pa.array(sig.ravel(), mask=np.repeat(~ok, num_perm)),
+        )
 
     return _sig
 
@@ -217,9 +235,7 @@ def minhash_base_and_bands(
 
     The permutation minimums come from :func:`minhash_signature_kernel`
     — the same longs as the HOF scans of ``minhash_signature`` in
-    ``tests/_twins.py`` (``minhash_sig_hof``), 1.9× on
-    the signature pass (61.1 s→32.8 s at the 1.5 M-doc rung — the one
-    measured number, see :func:`minhash_signature_kernel`).  The md5
+    ``tests/_twins.py`` (``minhash_sig_hof``).  The md5
     shingle hashing stays JVM-side (it is what keeps the pipeline
     oracle-portable)."""
     rows_per_band = num_perm // bands
@@ -407,26 +423,23 @@ def dedup_minhash(
 
 # --- SimHash -----------------------------------------------------------------
 
-@F.pandas_udf(LongType())
-def _simhash_from_hashes(hashes: pd.Series) -> pd.Series:
-    """64-bit SimHash from an array<long> of token hashes (Arrow-batched;
-    one numpy pass per batch instead of 64 SQL array scans)."""
-    import numpy as np
-
-    out = np.zeros(len(hashes), dtype=np.int64)
-    bit_idx = np.arange(64, dtype=np.uint64)
-    for i, hs in enumerate(hashes):
-        if hs is None or len(hs) == 0:
-            continue
-        arr = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-        bits = (arr[:, None] >> bit_idx) & np.uint64(1)
-        # signed accumulator: uint64 would underflow when ones < n/2
-        votes = bits.sum(axis=0).astype(np.int64) * 2 - len(arr)
-        sim = np.uint64(0)
-        for b in np.nonzero(votes > 0)[0]:
-            sim |= np.uint64(1) << np.uint64(b)
-        out[i] = np.int64(sim)
-    return pd.Series(out)
+@arrow_udf(LongType())
+def _simhash_from_hashes(hashes: pa.Array) -> pa.Array:
+    """64-bit SimHash from an array<long> of token hashes: bit b is set
+    when more than half of the row's hashes have bit b set (a tie stays
+    clear). One ``np.add.reduceat`` per bit over the batch's flat
+    values; a null or empty row gives 0."""
+    ok, bounds, values = _row_segments(hashes)
+    sim = np.zeros(len(hashes), dtype=np.uint64)
+    if bounds.size:
+        h = values.view(np.uint64)
+        n = (bounds[1::2] - bounds[::2]).astype(np.uint64)
+        acc = np.zeros(len(n), dtype=np.uint64)
+        for b in range(64):
+            ones = np.add.reduceat((h >> np.uint64(b)) & np.uint64(1), bounds)[::2]
+            acc |= (2 * ones > n).astype(np.uint64) << np.uint64(b)
+        sim[ok] = acc
+    return pa.array(sim.view(np.int64))
 
 
 def simhash_signatures(

@@ -78,12 +78,13 @@ def _solve_components_locally(e: DataFrame) -> DataFrame:
     and Python code-point order agree for strings, so min is
     engine-identical) — and return a (node, component) DataFrame.
     Self-loops and duplicate/bidirectional edges are tolerated."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pdf = e.toPandas()
-    a_vals = pdf.iloc[:, 0].tolist()
-    b_vals = pdf.iloc[:, 1].tolist()
+    edges = e.toArrow()
+    a_vals = edges.column(0).to_pylist()
+    b_vals = edges.column(1).to_pylist()
     parent: dict = {}
 
     def find(x):
@@ -115,18 +116,19 @@ def _solve_components_locally(e: DataFrame) -> DataFrame:
         if m is None or x < m:
             comp_min[r] = x
     nodes_out = list(seen)
-    out = pd.DataFrame(
-        {
-            "node": nodes_out,
-            "component": [comp_min[find(x)] for x in nodes_out],
-        }
-    )
     node_t = e.schema[0].dataType
     schema = T.StructType(
         [
             T.StructField("node", node_t, False),
             T.StructField("component", node_t, False),
         ]
+    )
+    out = pa.Table.from_pydict(
+        {
+            "node": nodes_out,
+            "component": [comp_min[find(x)] for x in nodes_out],
+        },
+        schema=to_arrow_schema(schema),
     )
     return e.sparkSession.createDataFrame(out, schema=schema)
 

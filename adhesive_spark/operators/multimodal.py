@@ -8,10 +8,11 @@ scale (payload stays columnar, metadata prunable/pushdown-able):
         media_id: long, media_type: string, payload: binary,
         meta: struct<mime: string, n_bytes: long, source: string>>
 
-Decode / feature-extract run as Arrow-batched ``mapInPandas`` — the
-correct shape for per-item Python compute over large binary columns
-(no row-at-a-time pickling; batches bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch``).
+Decode / feature-extract run as ``mapInArrow`` — the correct shape for
+per-item Python compute over large binary columns (no row-at-a-time
+pickling; batches bounded by
+``spark.sql.execution.arrow.maxRecordsPerBatch``). Each kernel builds
+its output batch against ``to_arrow_schema`` of its Spark schema.
 
 ``decode_media`` genuinely parses three public, codec-free byte
 formats in pure stdlib Python (struct/wave):
@@ -31,7 +32,7 @@ the default) so the plumbing stays exercisable on arbitrary binaries.
 The eight single-codec kernels (three feature extractors, five
 ``MEDIA_SCHEMA`` transforms) are strict: a payload that does not parse
 is dropped, never featurized or re-emitted. That contract, with the
-batch loop, the typed output frame and the ``mapInPandas`` call, lives
+batch loop, the typed output batch and the ``mapInArrow`` call, lives
 in one helper, :func:`_strict_codec_map`; each kernel supplies only its
 magic, parser, schema and a per-payload row function.
 """
@@ -44,11 +45,12 @@ import struct
 import wave
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -115,52 +117,28 @@ def synthesize_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     - video (id%3==2): Y4M C420, w = 2*(2+id%29), h = 2*(2+(id//3)%29),
       n_frames = 1 + id%12
 
-    Built per-row in Arrow-batched mapInPandas — the shape a real
-    binary-ingest source (blob store reader) would have."""
+    Built per-row in ``mapInArrow`` — the shape a real binary-ingest
+    source (blob store reader) would have."""
+    schema = to_arrow_schema(MEDIA_SCHEMA)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, payloads, mimes, nbytes, srcs = [], [], [], [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                m = did % 3
-                if m == 1:
-                    b = wav_bytes(800 + (did % 64) * 8, 8000, seed=did)
-                    mtypes.append("audio")
-                    mimes.append("audio/wav")
-                elif m == 0:
-                    b = ppm_bytes(4 + did % 60, 4 + (did // 7) % 60, seed=did)
-                    mtypes.append("image")
-                    mimes.append("image/x-portable-pixmap")
-                else:
-                    b = y4m_bytes(
-                        2 * (2 + did % 29),
-                        2 * (2 + (did // 3) % 29),
-                        1 + did % 12,
-                        seed=did,
-                    )
-                    mtypes.append("video")
-                    mimes.append("video/x-yuv4mpeg")
-                ids.append(did)
-                payloads.append(b)
-                nbytes.append(len(b))
-                srcs.append("synthetic-real")
-            if not ids:
-                # a batch whose rows were all dropped: yield NOTHING —
-                # an empty object column cannot be serialized as the
-                # meta struct (pyarrow 'Expected struct array')
-                continue
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "media_type": mtypes,
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": mi, "n_bytes": nb, "source": s}
-                        for mi, nb, s in zip(mimes, nbytes, srcs)
-                    ],
-                }
-            )
+    def _media(did: int):
+        """(media_type, mime, payload) for one id."""
+        if did % 3 == 1:
+            b = wav_bytes(800 + (did % 64) * 8, 8000, seed=did)
+            return "audio", "audio/wav", b
+        if did % 3 == 0:
+            b = ppm_bytes(4 + did % 60, 4 + (did // 7) % 60, seed=did)
+            return "image", "image/x-portable-pixmap", b
+        w, h = 2 * (2 + did % 29), 2 * (2 + (did // 3) % 29)
+        return "video", "video/x-yuv4mpeg", y4m_bytes(w, h, 1 + did % 12, seed=did)
+
+    def _synth(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [
+                (did, *_media_row(*_media(did), "synthetic-real"))
+                for did in batch.column(0).to_pylist()
+            ]
+            yield _rows_batch(rows, schema)
 
     from adhesive_spark.sources.registry import ensure_parallelism
 
@@ -172,7 +150,7 @@ def synthesize_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # Repartitioning the bare id column costs ~8 bytes/row and makes
     # both a no-op; at 100 TB input splits already exceed core count
     # and this IS a no-op.
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
+    return ensure_parallelism(df.select(id_col)).mapInArrow(
         _synth, schema=MEDIA_SCHEMA
     )
 
@@ -390,7 +368,7 @@ def _codec_prefilter(media: DataFrame, magic: bytes) -> DataFrame:
 
 
 def decode_media(df: DataFrame, *, codec: str = "auto") -> DataFrame:
-    """Decode payloads to typed features via Arrow-batched mapInPandas.
+    """Decode payloads to typed features via ``mapInArrow``.
 
     ``codec="auto"`` (default) sniffs magic bytes and genuinely parses
     WAV / PPM / Y4M payloads (pure stdlib — see the module docstring);
@@ -406,78 +384,54 @@ def decode_media(df: DataFrame, *, codec: str = "auto") -> DataFrame:
     from adhesive_spark.sources.registry import ensure_parallelism
 
     df = ensure_parallelism(df)
+    schema = to_arrow_schema(DECODED_SCHEMA)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            shas, widths, heights, frames, sizes, durs = [], [], [], [], [], []
-            for payload, mtype in zip(pdf["payload"], pdf["media_type"]):
-                if payload is None:
-                    shas.append(None)
-                    widths.append(None)
-                    heights.append(None)
-                    frames.append(None)
-                    sizes.append(None)
-                    durs.append(None)
-                    continue
-                b = bytes(payload)
-                h = hashlib.sha256(b).digest()
-                sizes.append(len(b))
-                shas.append(h.hex()[:16])
-                wv = pp = ym = None
-                if codec != "stub":
-                    wv = _parse_wav(b)
-                    pp = _parse_ppm(b) if wv is None else None
-                    ym = _parse_y4m(b) if wv is None and pp is None else None
-                if wv is not None:
-                    widths.append(None)
-                    heights.append(None)
-                    frames.append(None)
-                    durs.append(wv[0])
-                elif pp is not None:
-                    widths.append(pp[0])
-                    heights.append(pp[1])
-                    frames.append(None)
-                    durs.append(None)
-                elif ym is not None:
-                    widths.append(ym[0])
-                    heights.append(ym[1])
-                    frames.append(ym[2])
-                    durs.append(None)
-                elif codec == "real":
-                    # strict mode: unrecognized bytes are undecodable
-                    widths.append(None)
-                    heights.append(None)
-                    frames.append(None)
-                    durs.append(None)
-                else:
-                    # Deterministic pseudo-dimensions from the content
-                    # hash — the fallback for formats needing codecs.
-                    widths.append(
-                        64 + h[0] % 192 if mtype in ("image", "video") else None
-                    )
-                    heights.append(
-                        64 + h[1] % 192 if mtype in ("image", "video") else None
-                    )
-                    frames.append(1 + h[2] % 120 if mtype == "video" else None)
-                    durs.append(
-                        1000 + (h[3] * 256 + h[4]) % 60000
-                        if mtype == "audio"
-                        else None
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pd.array(sizes, dtype="Int64"),
-                    "content_sha": shas,
-                    "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                    "n_frames": pd.array(frames, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int32"),
-                }
+    def _features(b: bytes | None, mtype: str) -> tuple:
+        """(n_bytes, content_sha, width, height, n_frames, duration_ms)."""
+        if b is None:
+            return (None,) * 6
+        h = hashlib.sha256(b).digest()
+        wv = pp = ym = None
+        if codec != "stub":
+            wv = _parse_wav(b)
+            pp = _parse_ppm(b) if wv is None else None
+            ym = _parse_y4m(b) if wv is None and pp is None else None
+        if wv is not None:
+            dims = (None, None, None, wv[0])
+        elif pp is not None:
+            dims = (pp[0], pp[1], None, None)
+        elif ym is not None:
+            dims = (ym[0], ym[1], ym[2], None)
+        elif codec == "real":
+            # strict mode: unrecognized bytes are undecodable
+            dims = (None,) * 4
+        else:
+            # Deterministic pseudo-dimensions from the content hash —
+            # the fallback for formats needing codecs.
+            visual = mtype in ("image", "video")
+            dims = (
+                64 + h[0] % 192 if visual else None,
+                64 + h[1] % 192 if visual else None,
+                1 + h[2] % 120 if mtype == "video" else None,
+                (1000 + (h[3] * 256 + h[4]) % 60000)
+                if mtype == "audio"
+                else None,
             )
+        return (len(b), h.hex()[:16], *dims)
 
-    return df.mapInPandas(_decode, schema=DECODED_SCHEMA)
+    def _decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            mids, types, payloads = (
+                batch.column(c).to_pylist()
+                for c in ("media_id", "media_type", "payload")
+            )
+            rows = [
+                (mid, t, *_features(b, t))
+                for mid, t, b in zip(mids, types, payloads)
+            ]
+            yield _rows_batch(rows, schema)
+
+    return df.mapInArrow(_decode, schema=DECODED_SCHEMA)
 
 
 def _strict_codec_map(
@@ -493,43 +447,43 @@ def _strict_codec_map(
     payload the kernel cannot use. A kernel never featurizes or
     re-emits bytes it could not decode.
 
-    ``LongType`` columns of ``schema`` are built as int64, the others
-    are handed to Arrow as lists. A batch whose rows were all dropped
-    yields nothing (an empty object column cannot be serialized as the
-    ``meta`` struct: pyarrow 'Expected struct array'), so an input
-    where every row is dropped gives an empty frame with ``schema``.
+    A batch whose rows were all dropped is an empty typed batch
+    (:func:`_rows_batch`), so an input where every row is dropped gives
+    an empty frame with ``schema``.
     The batch function carries ``row_fn``'s name, which is the name
-    the kernel's ``MapInPandas`` node shows in the plan."""
+    the kernel's ``MapInArrow`` node shows in the plan."""
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    names = schema.fieldNames()
-    longs = {f.name for f in schema.fields if isinstance(f.dataType, T.LongType)}
+    arrow_schema = to_arrow_schema(schema)
 
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
+            mids = batch.column("media_id").to_pylist()
+            for mid, b in zip(mids, batch.column("payload").to_pylist()):
+                if b is None:
                     continue
-                b = bytes(payload)
                 parsed = parse(b)
                 if parsed is None:
                     continue
                 row = row_fn(b, parsed)
                 if row is not None:
-                    rows.append((int(mid), *row))
-            if not rows:
-                continue
-            yield pd.DataFrame(
-                {
-                    n: pd.array(list(c), dtype="int64") if n in longs else list(c)
-                    for n, c in zip(names, zip(*rows))
-                }
-            )
+                    rows.append((mid, *row))
+            yield _rows_batch(rows, arrow_schema)
 
     _kernel.__name__ = row_fn.__name__
-    return ensure_parallelism(_codec_prefilter(media, magic)).mapInPandas(
+    return ensure_parallelism(_codec_prefilter(media, magic)).mapInArrow(
         _kernel, schema=schema
+    )
+
+
+def _rows_batch(rows: list, schema: pa.Schema) -> pa.RecordBatch:
+    """One ``mapInArrow`` output batch from row tuples in ``schema``'s
+    field order (``schema`` is ``to_arrow_schema`` of the kernel's
+    Spark schema); no rows give an empty batch of the same types."""
+    columns = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, schema)], schema=schema
     )
 
 
@@ -581,7 +535,7 @@ def video_luma_stats(media: DataFrame) -> DataFrame:
     of a C420 frame) to its exact milli-scaled mean, and emit per-video
     temporal statistics — the scene-change-detection shape of a video
     curation stage (frame-sample → luma trajectory → cut score), all in
-    one linear mapInPandas pass with NO shuffle.
+    one linear mapInArrow pass with NO shuffle.
 
     Output per video: n_frames, first_luma_milli, and max_delta_milli =
     max |mean(f) − mean(f−1)| (0 for single-frame clips). Non-Y4M
@@ -679,14 +633,14 @@ def audio_chunk_plan(decoded: DataFrame, chunk_ms: int = 5000) -> DataFrame:
 
 
 def frame_sample_plan(decoded: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plan for videos: one row per sampled frame index —
-    pure built-ins (sequence + explode), no Python."""
+    """Frame-sampling plan for videos: one row per sampled frame index,
+    carrying the video's decoded columns — pure built-ins (sequence +
+    explode), no Python."""
     vids = decoded.where(
         (F.col("media_type") == "video") & F.col("n_frames").isNotNull()
     )
     return vids.select(
-        "media_id",
-        "n_frames",
+        "*",
         F.explode(
             F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
         ).alias("frame_idx"),
@@ -705,7 +659,7 @@ def resample_wav(media: DataFrame, factor: int = 2) -> DataFrame:
     audio, fewer samples), sample count divides exactly by the
     decimation arithmetic, and non-WAV payloads are dropped.
 
-    Scale shape: one linear mapInPandas pass, no shuffle; payload size
+    Scale shape: one linear mapInArrow pass, no shuffle; payload size
     shrinks ~factor× so the stage REDUCES bytes in flight for every
     stage after it.
     """
@@ -745,7 +699,7 @@ def downscale_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
     of :func:`resample_wav`. Output dimensions are exactly
     ``ceil(w/factor) x ceil(h/factor)`` (closed-form for the oracle);
     non-PPM payloads are dropped (strict-codec contract). Linear
-    mapInPandas, no shuffle, and bytes shrink ~factor²× for every
+    mapInArrow, no shuffle, and bytes shrink ~factor²× for every
     stage downstream.
     """
     import numpy as np
@@ -780,7 +734,7 @@ def grayscale_ppm(media: DataFrame) -> DataFrame:
     UNCHANGED; after the transform the three channel means are equal by
     construction, which is the q301 audit's closed-form oracle.  One
     numpy pass per image, non-PPM payloads dropped (strict-codec
-    contract), linear mapInPandas, no shuffle."""
+    contract), linear mapInArrow, no shuffle."""
     import numpy as np
 
     def _gray(b, pp):
@@ -807,7 +761,7 @@ def subsample_y4m(media: DataFrame, every_n: int = 2) -> DataFrame:
     family. Frames are sliced by exact raster offsets (never substring
     search); kept frames = ceil(n/every_n), closed-form for the
     oracle. Non-Y4M payloads are dropped (strict-codec contract);
-    linear mapInPandas, no shuffle, bytes shrink ~every_n×.
+    linear mapInArrow, no shuffle, bytes shrink ~every_n×.
     """
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
@@ -841,7 +795,7 @@ def pad_wav(media: DataFrame, multiple: int = 1024) -> DataFrame:
     blocks) appended after the PARSED data offset, so valid-but-
     noncanonical layouts survive; padded count = ceil(n/multiple)·
     multiple, closed-form for the oracle. Non-WAV payloads are dropped
-    (strict-codec contract); linear mapInPandas, no shuffle; bytes
+    (strict-codec contract); linear mapInArrow, no shuffle; bytes
     grow by at most one frame per clip.
     """
     if multiple < 1:

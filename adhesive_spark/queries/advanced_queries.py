@@ -753,7 +753,7 @@ def q63_analytic_functions(spark, sf_dir):
 
 
 def q64_media_knn(spark, sf_dir):
-    """End-to-end multimodal pipeline: synthesize media → mapInPandas
+    """End-to-end multimodal pipeline: synthesize media → mapInArrow
     decode → content-hash feature vectors → cosine top-3 among images —
     the decode→embed→search composition a multimodal corpus needs,
     with every stage oracle-reproducible (stub encoder)."""

@@ -153,7 +153,7 @@ def q37_minhash_pairs(spark, sf_dir):
 def q38_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs (Hamming ≤ 3) — fully oracle-checked: the
     portable token hash plus integer (order-independent) bit votes let
-    DuckDB reproduce the pandas-UDF kernel's signatures exactly."""
+    DuckDB reproduce the Arrow-UDF kernel's signatures exactly."""
     docs = load_table(spark, sf_dir, "documents")
     return simhash_pairs(docs, "text", "doc_id", max_hamming=3).orderBy(
         "id_a", "id_b"
@@ -176,8 +176,8 @@ def q39_knn_lsh(spark, sf_dir):
 
 
 def q40_multimodal_decode(spark, sf_dir):
-    """Multimodal plumbing end-to-end: synthesize media rows → Arrow
-    mapInPandas decode (stub codec, deterministic sha-derived dims)."""
+    """Multimodal plumbing end-to-end: synthesize media rows →
+    mapInArrow decode (stub codec, deterministic sha-derived dims)."""
     docs = load_table(spark, sf_dir, "documents")
     return decode_media(synthesize_media(docs))
 
@@ -455,7 +455,7 @@ def _simhash_oracle_sql(*, max_hamming: int = 3) -> str:
     """DuckDB mirror of simhash_pairs: the portable 63-bit token hash is
     reconstructed from md5 hex pairs, the bit votes are integer sums
     (order-independent → engine-identical), and candidates come from the
-    same 4x16-bit chunk banding. Reproduces the pandas-UDF bit-vote
+    same 4x16-bit chunk banding. Reproduces the Arrow-UDF bit-vote
     kernel exactly because every step is integer arithmetic."""
     hi = f"({_hex_int('m', 1, 8)} & 2147483647)"
     lo = _hex_int("m", 9, 8)
@@ -1697,9 +1697,11 @@ def q211_ppm_decode_real(spark, sf_dir):
 
 def q212_y4m_decode_real(spark, sf_dir):
     """Genuine Y4M (YUV4MPEG2 C420) decode: frame-walked n_frames +
-    header W/H off valid uncompressed video bytes, joined to the
-    frame-sampling plan (every 4th frame) — decode → sample, the first
-    two stages of a video-training ingest."""
+    header W/H off valid uncompressed video bytes, with the sample
+    count of the frame-sampling plan (every 4th frame) — decode →
+    sample, the first two stages of a video-training ingest. The plan
+    carries each video's decoded columns, so one decode pass feeds both
+    the count and the dimensions."""
     from adhesive_spark.operators.multimodal import synthesize_real_media
 
     docs = load_table(spark, sf_dir, "documents").where(
@@ -1707,17 +1709,14 @@ def q212_y4m_decode_real(spark, sf_dir):
     )
     decoded = decode_media(synthesize_real_media(docs), codec="real")
     plan = frame_sample_plan(decoded, every_n=4)
-    return plan.groupBy("media_id").agg(
-        F.max(F.col("n_frames")).cast("long").alias("n_frames"),
-        F.count("*").alias("n_sampled"),
-    ).join(
-        decoded.select(
-            "media_id",
-            F.col("width").cast("long").alias("width"),
-            F.col("height").cast("long").alias("height"),
-            F.col("n_bytes").cast("long").alias("n_bytes"),
-        ),
+    dims = ("n_frames", "width", "height", "n_bytes")
+    return plan.groupBy("media_id", *dims).agg(
+        F.count("*").alias("n_sampled")
+    ).select(
         "media_id",
+        F.col("n_frames").cast("long").alias("n_frames"),
+        "n_sampled",
+        *[F.col(c).cast("long").alias(c) for c in dims[1:]],
     )
 
 
@@ -1868,7 +1867,7 @@ PIPELINE_ORACLES["q214_image_channel_stats"] = """
 def q215_video_scene_stats(spark, sf_dir):
     """Genuine temporal video features: per-frame luma means off REAL
     Y4M rasters reduced to scene-change statistics (max inter-frame
-    luma delta), one linear mapInPandas pass, zero shuffles. The oracle
+    luma delta), one linear mapInArrow pass, zero shuffles. The oracle
     recomputes every frame's luma sum with the CLOSED FORM of the
     modular run sum sum_{i<n}(a+i)%251 — no byte access at all — so
     Spark's parse of the actual raster must agree with pure number
@@ -2029,7 +2028,7 @@ def q316_wav_pad_align_audit(spark, sf_dir):
     the silence tail. Oracle is closed-form byte arithmetic off the
     synthesized n_samples (800 + (id%64)*8 at 8 kHz).
 
-    Scale shape: one linear mapInPandas pass, no shuffle; payload bytes
+    Scale shape: one linear mapInArrow pass, no shuffle; payload bytes
     never shuffled; growth bounded by one frame per clip."""
     from adhesive_spark.operators.multimodal import (
         pad_wav,

@@ -2054,7 +2054,7 @@ def q301_ppm_grayscale_audit(spark, sf_dir):
     (doc_id + i) % 251 by construction, the q214 contract).  A
     transform that mis-indexes even one channel byte hash-fails.
 
-    Scale shape: one linear mapInPandas transform + one linear
+    Scale shape: one linear mapInArrow transform + one linear
     featurize, payload bytes never shuffled."""
     from adhesive_spark.operators.multimodal import (
         grayscale_ppm,

@@ -10,6 +10,8 @@ for row. Not collected by pytest (no ``test_`` prefix).
 - :func:`minhash_sig_hof` (over :func:`minhash_signature` and
   :func:`minhash_signature_from_base`) — the signatures of
   ``dedup.minhash_base_and_bands``;
+- :func:`simhash_fold` — ``dedup._simhash_from_hashes``, one row's
+  bit-vote fold in pure Python;
 - :func:`gopher_repetition_report_hof` —
   ``training_queries.gopher_repetition_report``;
 - :func:`apply_cdc_agg` — ``incremental.apply_cdc`` (without ``base``);
@@ -166,6 +168,20 @@ def minhash_sig_hof(
             "sig"
         ),
     )
+
+
+def simhash_fold(hashes) -> int:
+    """The SimHash of one row of signed 64-bit token hashes: bit b is
+    set when more than half of the hashes have bit b set, so a tied vote
+    leaves it clear; a null or empty row gives 0."""
+    if not hashes:
+        return 0
+    sim = 0
+    for b in range(64):
+        ones = sum((h >> b) & 1 for h in hashes)
+        if 2 * ones > len(hashes):
+            sim |= 1 << b
+    return sim - (1 << 64) if sim >> 63 else sim
 
 
 def _run_masses(grams):

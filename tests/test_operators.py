@@ -1283,6 +1283,101 @@ def test_minhash_kernel_matches_hof_twin(spark, sf_dir):
     assert h == v and len(h) == both.count()
 
 
+def _list_input(rows, value_type, pad, *, sliced):
+    """``rows`` as a ``pa.ListArray``. Sliced: a ``pad`` row before and
+    after is sliced off, and each null row's offsets still span a copy
+    of ``pad``, so ``.values`` holds elements no row of the slice owns."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not sliced:
+        return pa.array(rows, type=pa.list_(value_type))
+    cells = [pad, *(pad if r is None else r for r in rows), pad]
+    offsets = np.cumsum([0] + [len(c) for c in cells]).astype(np.int32)
+    values = pa.array([e for c in cells for e in c], type=value_type)
+    mask = pa.array([False, *(r is None for r in rows), False])
+    arr = pa.ListArray.from_arrays(offsets, values, mask=mask)
+    return arr.slice(1, len(rows))
+
+
+@pytest.mark.parametrize("sliced", [False, True], ids=["plain", "sliced"])
+def test_arrow_kernels_on_edge_lists(spark, sliced):
+    """The MinHash, SimHash and Gopher Arrow UDF bodies, called on a
+    batch of null, empty, one-element and longer rows, and on the same
+    rows as a slice of a wider array: each row equals its reference
+    (the HOF twins, the pure-Python SimHash fold)."""
+    import pyarrow as pa
+
+    from _twins import _lane_masses, minhash_signature_from_base, simhash_fold
+    from adhesive_spark.operators.dedup import (
+        _simhash_from_hashes,
+        minhash_signature_kernel,
+    )
+    from adhesive_spark.operators.text import gopher_masses_kernel
+
+    pad = list(range(1, 41))
+    base = [None, [], [7], [3, 2**31 - 2, 5, 3], [0]]
+    got = minhash_signature_kernel(8).func(
+        _list_input(base, pa.int64(), pad, sliced=sliced)
+    )
+    want = spark.createDataFrame(
+        list(enumerate(base)), "i int, base array<long>"
+    ).select("i", minhash_signature_from_base(F.col("base"), 8).alias("sig"))
+    assert got.to_pylist() == [r.sig for r in want.orderBy("i").collect()]
+    assert got.to_pylist()[:2] == [[None] * 8] * 2
+
+    hashes = [None, [], [7], [(1 << 62) | 5, 3], [-1, 0, -1], [1 << 62] * 2 + [0] * 2]
+    got = _simhash_from_hashes.func(
+        _list_input(hashes, pa.int64(), pad, sliced=sliced)
+    )
+    assert got.to_pylist() == [simhash_fold(h) for h in hashes]
+
+    toks = [None, [], ["a"], ["a", "b", "a", "b", "a"], ["x"] * 9]
+    got = gopher_masses_kernel().func(
+        _list_input(toks, pa.string(), ["p"] * 9, sliced=sliced)
+    )
+    lanes = spark.createDataFrame(
+        list(enumerate(toks)), "i int, toks array<string>"
+    ).select("i", _lane_masses(F.col("toks")).alias("m"))
+    want = [
+        [v for n in range(2, 8) for v in (r.m[f"m{n}"].top, r.m[f"m{n}"].dup)]
+        for r in lanes.orderBy("i").collect()
+    ]
+    assert got.to_pylist() == want
+    assert want[0] == [0] * 12
+
+
+def test_simhash_matches_python_fold(spark):
+    """``simhash_signatures`` against the pure-Python bit-vote fold
+    (tests/_twins.py) over the same portable token hashes: null text,
+    empty text, one token, two tokens (every differing bit tied, so
+    clear) and hashes with bit 62 set."""
+    from _twins import simhash_fold
+    from adhesive_spark.operators.dedup import portable_hash63
+    from adhesive_spark.operators.text import normalize_text
+
+    # md5-prefix hashes: "delta", "echo", "golf", "hotel" and "" have
+    # bit 62 set, "alpha" and "beta" do not
+    texts = [None, "", "delta", "alpha beta", "alpha delta", "delta echo golf hotel"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sims = {r.id: r.simhash for r in simhash_signatures(df).collect()}
+    toks = F.split(normalize_text(F.col("text")), " ")
+    hashes = {
+        r.doc_id: r.h
+        for r in df.select(
+            "doc_id", F.transform(toks, portable_hash63).alias("h")
+        ).collect()
+    }
+    assert sims == {i: simhash_fold(h) for i, h in hashes.items()}
+    assert sims[0] == 0 and hashes[0] is None
+    assert sims[2] == hashes[2][0] and sims[2] >> 62 & 1
+    a, b = hashes[3]
+    assert a != b and sims[3] == a & b
+    assert hashes[4][1] >> 62 & 1 and not hashes[4][0] >> 62 & 1
+    assert not sims[4] >> 62 & 1
+    assert sims[5] >> 62 & 1
+
+
 def test_apply_cdc_agg_matches_window_twin(spark, sf_dir):
     """apply_cdc's window engine must produce IDENTICAL snapshots to
     the map-combinable max(struct) twin (tests/_twins.py; the measured

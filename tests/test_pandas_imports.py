@@ -12,14 +12,6 @@ from pathlib import Path
 import adhesive_spark
 
 ALLOWED = {
-    "operators/dedup.py": "minhash_signature_kernel and a scalar pandas_udf"
-    " not yet moved to arrow_udf",
-    "operators/text.py": "gopher_masses_kernel, a pandas_udf not yet moved"
-    " to arrow_udf",
-    "operators/multimodal.py": "_strict_codec_map's mapInPandas, not yet"
-    " moved to mapInArrow",
-    "operators/graph.py": "the union-find finish collects the edges with"
-    " toPandas on the driver and builds its result from a pandas frame",
     "operators/inference.py": "batch_infer's model receives a pd.Series",
     "operators/grouped.py": "the pandas GROUPED_AGG and applyInPandas"
     " demonstration",

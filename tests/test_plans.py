@@ -555,6 +555,60 @@ def test_knn_vectorized_single_kernel_evaluation(spark, sf):
     assert final.count("ArrowEvalPython") == 1, final
 
 
+@pytest.mark.parametrize(
+    "plan, dup",
+    [
+        (
+            "MapInArrow _decode(media_id#1L, payload#3)#9, [media_id#10L], false\n"
+            "+- Exchange RoundRobinPartitioning(4)\n"
+            "MapInArrow _decode(media_id#21L, payload#23)#29, [media_id#30L], false",
+            True,
+        ),
+        (
+            "ArrowEvalPython [_sig(base#5)#7], [pythonUDF0#30], 200\n"
+            "+- Exchange hashpartitioning(id#1L, 4)\n"
+            "ArrowEvalPython [_sig(base#15)#17], [pythonUDF0#31], 200",
+            True,
+        ),
+        (
+            "MapInPandas _synth(doc_id#1L)#2, [media_id#3L], false\n"
+            "MapInArrow _decode(media_id#3L)#4, [media_id#5L], false\n"
+            "ArrowEvalPython [_sig(base#6)#7], [pythonUDF0#8], 200",
+            False,
+        ),
+        (
+            "ArrowEvalPython [_sims(v#1)#2, _sims(v#3)#4], "
+            "[pythonUDF0#5, pythonUDF1#6], 200",
+            False,
+        ),
+    ],
+    ids=["map-twice", "eval-twice", "distinct", "repeat-in-node"],
+)
+def test_dup_python_eval_on_canned_plans(plan, dup):
+    """dupPy counts EvalPython nodes by UDF name and MapInPandas /
+    MapInArrow nodes by batch-function name; a name repeated inside one
+    node is one pass."""
+    from tools.plan_report import dup_python_eval
+
+    assert dup_python_eval(plan) is dup
+
+
+def test_y4m_decode_runs_each_kernel_once(spark, sf):
+    """q212 reads its decoded videos through one pass: the executed
+    plan holds one ``_synth`` and one ``_decode`` map node (two uses of
+    ``decoded`` ran each kernel twice, sharing only the exchange
+    below them)."""
+    from adhesive_spark.queries.pipeline_queries import q212_y4m_decode_real
+
+    df = q212_y4m_decode_real(spark, sf)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split(
+        "Initial Plan"
+    )[0]
+    assert final.count("MapInArrow _synth(") == 1, final
+    assert final.count("MapInArrow _decode(") == 1, final
+
+
 def test_minhash_pairs_single_kernel_evaluation(spark, sf):
     """The banded self-join must read ONE ReusedExchange at runtime so
     the signature kernel — the pipeline's most expensive stage —

@@ -4,10 +4,14 @@ given scale factor; compare row count, column names, and
 order-insensitive values (exact, like a value hash would).
 
 Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
+(``--help`` prints the arguments). Each query prints one line that
+starts with ``OK``, ``FAIL`` or ``ROWS``.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import time
 
@@ -140,13 +144,34 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = build_spark(app_name="correctness-check", shuffle_partitions=8)
+    parser = argparse.ArgumentParser(
+        description="Check registered queries against their DuckDB oracles."
+    )
+    parser.add_argument(
+        "sf_dir",
+        nargs="?",
+        default="/root/testdata/sf0.01",
+        help="scale-factor directory holding the <table>.parquet files",
+    )
+    parser.add_argument(
+        "queries", nargs="*", help="query names to check (default: all)"
+    )
+    args = parser.parse_args()
+    sf_dir, only = args.sf_dir, set(args.queries)
+    if not os.path.isdir(sf_dir):
+        parser.error(f"no scale-factor directory at {sf_dir}")
+    qs = entry_mod.queries()
+    if only - set(qs):
+        parser.error(f"no registered query named {sorted(only - set(qs))}")
+    # no console progress bars: they share stdout with the result lines
+    spark = build_spark(
+        app_name="correctness-check",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     n_bad = 0
     for name, fn in qs.items():

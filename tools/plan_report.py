@@ -27,24 +27,29 @@ _CAP_RE = re.compile(
 )
 
 
-_PY_EVAL_NODE_RE = re.compile(r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]")
+_PY_EVAL_NODE_RE = re.compile(
+    r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]|MapIn(?:Pandas|Arrow) (\w+\()"
+)
 _PY_EVAL_NAME_RE = re.compile(r"(\w+)\(")
 
 
 def dup_python_eval(plan: str) -> bool:
-    """True when the SAME Python UDF name appears in more than one
-    (Arrow|Batch)EvalPython node in the plan — the double-evaluation
-    signature (r11 q35 root cause: InferFiltersFromGenerate pushed a
-    posexplode size-filter below an exchange and the scoring kernel ran
-    twice over the corpus). Every name in each node's bracket list is
-    counted, not just the first, so a duplicate kernel that rides second
-    in one node ([udfA, udfB] vs [udfB]) cannot escape (r11 ADVICE). A
-    name repeated WITHIN one node is a single pass over the input and is
-    deduped per node. A plan recorded dup-free must stay dup-free
-    (ratcheted by tests/test_plans.py)."""
+    """True when the SAME Python function name appears in more than one
+    Python node in the plan — an (Arrow|Batch)EvalPython node, or a
+    MapInPandas / MapInArrow node, named by its batch function. That is
+    the double-evaluation signature (r11 q35 root cause:
+    InferFiltersFromGenerate pushed a posexplode size-filter below an
+    exchange and the scoring kernel ran twice over the corpus; a map
+    kernel under two uses of one DataFrame runs once per use). Every
+    name in each EvalPython node's bracket list is counted, not just the
+    first, so a duplicate kernel that rides second in one node ([udfA,
+    udfB] vs [udfB]) cannot escape (r11 ADVICE). A name repeated WITHIN
+    one node is a single pass over the input and is deduped per node. A
+    plan recorded dup-free must stay dup-free (ratcheted by
+    tests/test_plans.py)."""
     seen: set[str] = set()
-    for node in _PY_EVAL_NODE_RE.findall(plan.split("Initial Plan")[0]):
-        names = set(_PY_EVAL_NAME_RE.findall(node))
+    for groups in _PY_EVAL_NODE_RE.findall(plan.split("Initial Plan")[0]):
+        names = set(_PY_EVAL_NAME_RE.findall("".join(groups)))
         if names & seen:
             return True
         seen |= names
@@ -130,11 +135,13 @@ def main() -> None:
     print("tools/stress.py replication ladder (STRESS.md). Enforced by")
     print("tests/test_plans.py::test_cap_manifest_matches_code.")
     print()
-    print("dupPy = the same Python UDF heads MORE THAN ONE EvalPython node")
-    print("in the ANALYZED (pre-AQE) plan — the double-evaluation signature")
-    print("(the r11 q35 class: InferFiltersFromGenerate pushing a generator")
-    print("size-filter below an exchange re-ran the kernel over the whole")
-    print("corpus). Caveat: consumers of the minhash machinery share the")
+    print("dupPy = the same Python function heads MORE THAN ONE Python node")
+    print("(an EvalPython node by UDF name, a MapInPandas/MapInArrow node by")
+    print("batch-function name) in the ANALYZED (pre-AQE) plan — the")
+    print("double-evaluation signature (the r11 q35 class: InferFiltersFromGenerate")
+    print("pushing a generator size-filter below an exchange re-ran the kernel")
+    print("over the whole corpus; a map kernel under two uses of one DataFrame")
+    print("runs once per use). Caveat: consumers of the minhash machinery share the")
     print("signature kernel through an id-keyed exchange (unskewable key, so")
     print("AQE skew-splitting on the band joins stays armed) that pre-AQE")
     print("plans print once per consumer side; runtime stage-reuse")
