@@ -11,11 +11,18 @@ This is the Spark-native analog of the metrics side-channel a native
 engine would thread through its operators; the reference has no
 counterpart (its 6-row demo prints results directly), so this module is
 extension surface (SURVEY §2.3 — pipeline operations).
+
+The event-series monitors sit here too: :func:`daily_purchase_rev` is
+the per-day purchase revenue that the batch forecast, seasonality and
+change-point queries read and that ``streaming.ops.streaming_cusum_daily``
+maintains per micro-batch, and :func:`cusum_alarms` is the CUSUM
+readout that the batch query (q259) and ``streaming.ops.read_cusum_alarms``
+share. Their DuckDB twin is ``queries.oracle_fragments._DAILY_REV``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -72,3 +79,37 @@ def observed_write(
     observed, obs = attach_metrics(df, metrics)
     observed.write.mode(mode).parquet(path)
     return dict(obs.get)
+
+
+def daily_purchase_rev(events: DataFrame) -> DataFrame:
+    """(day, rev): purchase revenue per epoch day (``unix_micros(ts) div
+    86400000000``, no engine calendar functions), in cents quantized per
+    row before the sum, so the integers are engine-exact. The result is
+    additive across any split of the events."""
+    return (
+        events.where(F.col("event_type") == "purchase")
+        .select(
+            F.expr("unix_micros(ts) div 86400000000").alias("day"),
+            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
+        )
+        .groupBy("day")
+        .agg(F.sum("cents").cast("long").alias("rev"))
+    )
+
+
+def cusum_alarms(daily: DataFrame, top: int = 5) -> DataFrame:
+    """(day, rev, cusum_cents) for the ``top`` days of largest |CUSUM|
+    (ties to the earlier day) over a (day, rev) series: the running sum
+    of each day's revenue minus the integer mean revenue."""
+    mean = daily.agg(
+        F.expr("CAST(sum(rev) div count(*) AS BIGINT)").alias("mean_rev")
+    )
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    cusum = daily.crossJoin(F.broadcast(mean)).select(
+        "day",
+        "rev",
+        F.sum(F.col("rev") - F.col("mean_rev")).over(w).alias("cusum_cents"),
+    )
+    return cusum.orderBy(
+        F.abs(F.col("cusum_cents")).desc(), F.col("day")
+    ).limit(top)

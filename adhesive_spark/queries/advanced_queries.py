@@ -24,6 +24,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _PAIR_CTES,
     _TOKS,
     _hex_int,
+    _ivf_ctes,
     _lang_sql,
     _norm,
     _quality_sql,
@@ -1328,32 +1329,8 @@ ADVANCED_ORACLES = {
         FROM events e JOIN user_stats u ON e.user_id = u.user_id
         GROUP BY e.event_type
     """,
-    "q49_knn_ivf": """
-        WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        corpus AS (SELECT vec_id, v FROM emb WHERE vec_id >= 10),
-        queries AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 10),
-        centroids AS (
-          SELECT vec_id AS centroid_id, v AS cv FROM corpus
-          ORDER BY vec_id LIMIT 16
-        ),
-        assigned AS (
-          SELECT vec_id, v, centroid_id FROM (
-            SELECT c.vec_id, c.v, t.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                     ORDER BY round(list_cosine_similarity(c.v, t.cv), 6) DESC,
-                              t.centroid_id) AS r
-            FROM corpus c CROSS JOIN centroids t
-          ) WHERE r = 1
-        ),
-        probes AS (
-          SELECT query_id, qv, centroid_id FROM (
-            SELECT q.query_id, q.qv, t.centroid_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.query_id
-                     ORDER BY round(list_cosine_similarity(q.qv, t.cv), 6) DESC,
-                              t.centroid_id) AS r
-            FROM queries q CROSS JOIN centroids t
-          ) WHERE r <= 4
-        )
+    "q49_knn_ivf": f"""
+        WITH {_ivf_ctes(4)}
         SELECT query_id, vec_id, sim, rank FROM (
           SELECT p.query_id, a.vec_id,
                  round(list_cosine_similarity(a.v, p.qv), 6) AS sim,
@@ -2781,32 +2758,8 @@ def q152_ann_recall(spark, sf_dir):
 
 ADVANCED_QUERIES["q152_ann_recall"] = q152_ann_recall
 
-ADVANCED_ORACLES["q152_ann_recall"] = """
-    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    corpus AS (SELECT vec_id, v FROM emb WHERE vec_id >= 10),
-    queries AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 10),
-    centroids AS (
-      SELECT vec_id AS centroid_id, v AS cv FROM corpus
-      ORDER BY vec_id LIMIT 16
-    ),
-    assigned AS (
-      SELECT vec_id, v, centroid_id FROM (
-        SELECT c.vec_id, c.v, t.centroid_id,
-               ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                 ORDER BY round(list_cosine_similarity(c.v, t.cv), 6) DESC,
-                          t.centroid_id) AS r
-        FROM corpus c CROSS JOIN centroids t
-      ) WHERE r = 1
-    ),
-    probes AS (
-      SELECT query_id, qv, centroid_id FROM (
-        SELECT q.query_id, q.qv, t.centroid_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY round(list_cosine_similarity(q.qv, t.cv), 6) DESC,
-                          t.centroid_id) AS r
-        FROM queries q CROSS JOIN centroids t
-      ) WHERE r <= 4
-    ),
+ADVANCED_ORACLES["q152_ann_recall"] = f"""
+    WITH {_ivf_ctes(4)},
     ivf AS (
       SELECT query_id, vec_id FROM (
         SELECT p.query_id, a.vec_id,

@@ -29,12 +29,18 @@ from pyspark.sql import functions as F
 from adhesive_spark.queries.oracle_fragments import (
     _BPE,
     _FP,
+    _JACCARD,
     _NORM,
     _PAIR_CTES,
     _TOKS,
     _h32,
     _hex_int,
+    _ivf_ctes,
+    _lsh_bucket,
+    _minhash_sig,
+    _pair_counts,
     _quality_sql,
+    _shingle_sets,
     _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
@@ -1327,32 +1333,8 @@ def q317_bbit_minhash_audit(spark, sf_dir):
 
 AUDIT_QUERIES["q317_bbit_minhash_audit"] = q317_bbit_minhash_audit
 
-
-def _bbit_oracle() -> str:
-    from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-    coeffs = _perm_coeffs(64, 42)
-    coeff_rows = ", ".join(
-        f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
-    )
-    return f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 600
-    ),
-    g AS (
-      SELECT doc_id,
-             {_shingles(3)} AS grams
-      FROM t
-    ),
-    hx AS (SELECT doc_id, md5(unnest(grams)) AS h FROM g),
-    bhr AS (SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx),
-    co(i, a, b) AS (VALUES {coeff_rows}),
-    sig AS (
-      SELECT bhr.doc_id, co.i,
-             MIN((bhr.base * co.a + co.b) % {_MERSENNE}) AS s
-      FROM bhr CROSS JOIN co
-      GROUP BY bhr.doc_id, co.i
-    ),
+AUDIT_ORACLES["q317_bbit_minhash_audit"] = f"""
+    WITH {_shingle_sets("doc_id < 600")},{_minhash_sig(64)},
     bk AS (
       SELECT doc_id, CAST(i // 4 AS INT) AS band_idx,
              md5(string_agg(CAST(s AS VARCHAR), '_' ORDER BY i)) AS k2f,
@@ -1390,9 +1372,6 @@ def _bbit_oracle() -> str:
            (c4.n - cf.n) * 1000000 // greatest(cf.n, 1)
     FROM cf, c4
 """
-
-
-AUDIT_ORACLES["q317_bbit_minhash_audit"] = _bbit_oracle()
 
 
 # --- q318: per-source quantile-matched quality filtering -------------------------
@@ -2316,25 +2295,11 @@ AUDIT_QUERIES["q325_multiprobe_lsh"] = q325_multiprobe_lsh
 
 
 def _multiprobe_oracle() -> str:
-    from adhesive_spark.operators.similarity import _hyperplanes
-
-    dim, n_planes, k, seed = 64, 8, 5, 42
-
-    def bucket(vexpr: str) -> str:
-        terms = []
-        for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-            plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-            dot = (
-                f"list_reduce(list_transform(range(1, {dim} + 1), "
-                f"j -> ({vexpr})[j] * ({plit})[j]), (x, y) -> x + y)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
-        return " + ".join(terms)
-
+    n_planes, k = 8, 5
     flips = ", ".join(f"xor(b0, {1 << i})" for i in range(n_planes))
     return f"""
     WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v, {bucket('v')} AS bucket FROM emb),
+    b AS (SELECT vec_id, v, {_lsh_bucket('v', 64, n_planes)} AS bucket FROM emb),
     c AS (SELECT vec_id, v, bucket FROM b WHERE vec_id >= 10),
     q AS (SELECT vec_id AS query_id, v AS qv, bucket AS b0 FROM b
           WHERE vec_id < 10),
@@ -2923,33 +2888,8 @@ def q330_ivf_nprobe_ladder(spark, sf_dir):
 
 AUDIT_QUERIES["q330_ivf_nprobe_ladder"] = q330_ivf_nprobe_ladder
 
-AUDIT_ORACLES["q330_ivf_nprobe_ladder"] = """
-    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    corpus AS (SELECT vec_id, v FROM emb WHERE vec_id >= 10),
-    queries AS (SELECT vec_id AS query_id, v AS qv FROM emb
-                WHERE vec_id < 10),
-    centroids AS (
-      SELECT vec_id AS centroid_id, v AS cv FROM corpus
-      ORDER BY vec_id LIMIT 16
-    ),
-    assigned AS (
-      SELECT vec_id, v, centroid_id FROM (
-        SELECT c.vec_id, c.v, t.centroid_id,
-               ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                 ORDER BY round(list_cosine_similarity(c.v, t.cv), 6) DESC,
-                          t.centroid_id) AS r
-        FROM corpus c CROSS JOIN centroids t
-      ) WHERE r = 1
-    ),
-    probes AS (
-      SELECT query_id, qv, centroid_id, rq FROM (
-        SELECT q.query_id, q.qv, t.centroid_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                 ORDER BY round(list_cosine_similarity(q.qv, t.cv), 6) DESC,
-                          t.centroid_id) AS rq
-        FROM queries q CROSS JOIN centroids t
-      ) WHERE rq <= 8
-    ),
+AUDIT_ORACLES["q330_ivf_nprobe_ladder"] = f"""
+    WITH {_ivf_ctes(8)},
     cand AS (
       SELECT p.query_id, a.vec_id, p.rq,
              round(list_cosine_similarity(a.v, p.qv), 6) AS sim
@@ -3342,50 +3282,14 @@ def q334_minhash_perm_ladder(spark, sf_dir):
 
 AUDIT_QUERIES["q334_minhash_perm_ladder"] = q334_minhash_perm_ladder
 
-
-def _perm_ladder_oracle() -> str:
-    from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-    coeffs = _perm_coeffs(64, 42)
-    coeff_rows = ", ".join(
-        f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
-    )
-    return f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    g AS (
-      SELECT doc_id,
-             {_shingles(3)} AS grams
-      FROM t
-    ),
-    x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-    sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-    rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-    xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
-    cmn AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-      FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+AUDIT_ORACLES["q334_minhash_perm_ladder"] = f"""
+    WITH {_pair_counts("doc_id < 200")},
     pairs AS (
       SELECT id_a, id_b,
-             CAST(round(round(n_common / (sa.n_sh + sb.n_sh - n_common), 4)
-                        * 1000000, 0) AS BIGINT) AS j_ppm
-      FROM cmn
-      JOIN sz sa ON cmn.id_a = sa.doc_id
-      JOIN sz sb ON cmn.id_b = sb.doc_id
-      WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.2
-    ),
-    hx AS (SELECT doc_id, md5(unnest(grams)) AS h FROM g),
-    bhr AS (SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx),
-    co(i, a, b) AS (VALUES {coeff_rows}),
-    sig AS (
-      SELECT bhr.doc_id, co.i,
-             MIN((bhr.base * co.a + co.b) % {_MERSENNE}) AS s
-      FROM bhr CROSS JOIN co
-      GROUP BY bhr.doc_id, co.i
-    ),
+             CAST(round(round({_JACCARD}, 4) * 1000000, 0) AS BIGINT) AS j_ppm
+      FROM c
+      WHERE round({_JACCARD}, 4) >= 0.2
+    ),{_minhash_sig(64)},
     matches AS (
       SELECT p.id_a, p.id_b, p.j_ppm,
              SUM(CASE WHEN sa.i < 16 AND sa.s = sb.s THEN 1 ELSE 0 END)
@@ -3411,6 +3315,3 @@ def _perm_ladder_oracle() -> str:
            CAST(MAX(abs(est_ppm - j_ppm)) AS BIGINT) AS max_abs_err_ppm
     FROM lanes GROUP BY p
 """
-
-
-AUDIT_ORACLES["q334_minhash_perm_ladder"] = _perm_ladder_oracle()

@@ -42,6 +42,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _hex_int,
     _lang_sql,
     _quality_sql,
+    _rare,
     _shingles,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
@@ -544,12 +545,7 @@ CURATION_ORACLES = {
           FROM documents WHERE doc_id % 50 = 0
         ),
         be_g AS (SELECT doc_id, {_shingles(8)} AS grams FROM be_n),
-        be_x AS (SELECT doc_id, unnest(grams) AS shingle FROM be_g),
-        rare AS (
-          SELECT shingle FROM tr_x GROUP BY shingle HAVING COUNT(*) <= 1000
-        ),
-        trf AS (SELECT tr_x.doc_id, tr_x.shingle
-                FROM tr_x JOIN rare USING (shingle)),
+        be_x AS (SELECT doc_id, unnest(grams) AS shingle FROM be_g),{_rare("tr_x", "trf")},
         bsz AS (SELECT doc_id, len(grams) AS bench_n_sh FROM be_g),
         ov AS (
           SELECT t.doc_id AS train_id, b.doc_id AS bench_id,

@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
+from adhesive_spark.operators.monitoring import cusum_alarms, daily_purchase_rev
+from adhesive_spark.queries.oracle_fragments import _DAILY_REV, _TOKS, _h32
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 EVAL_QUERIES: dict = {}
@@ -405,42 +406,13 @@ def q259_cusum_changepoint(spark, sf_dir):
     top-5 all run on that ~30-row series. Output: the 5 largest
     |CUSUM| days (tie-broken by day) — the alarm shortlist.
     """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
-    mean = daily.agg(
-        F.expr("CAST(sum(rev) div count(*) AS BIGINT)").alias("mean_rev")
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cusum = (
-        daily.crossJoin(F.broadcast(mean))
-        .select(
-            "day",
-            "rev",
-            F.sum(F.col("rev") - F.col("mean_rev")).over(w).alias(
-                "cusum_cents"
-            ),
-        )
-    )
-    return cusum.orderBy(
-        F.abs(F.col("cusum_cents")).desc(), F.col("day")
-    ).limit(5)
+    return cusum_alarms(daily_purchase_rev(load_table(spark, sf_dir, "events")))
 
 
 EVAL_QUERIES["q259_cusum_changepoint"] = q259_cusum_changepoint
 
-EVAL_ORACLES["q259_cusum_changepoint"] = """
-    WITH daily AS (
-      SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS rev
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
+EVAL_ORACLES["q259_cusum_changepoint"] = f"""
+    WITH {_DAILY_REV},
     mean AS (
       SELECT CAST(SUM(rev) // COUNT(*) AS BIGINT) AS mean_rev FROM daily
     ),
@@ -949,13 +921,7 @@ def q264_dow_seasonality(spark, sf_dir):
     aggregate; the weekday rollup and the 1-row totals broadcast run on
     that ~30-row table. Output: 7 rows.
     """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
+    daily = daily_purchase_rev(load_table(spark, sf_dir, "events"))
     daily = daily.localCheckpoint(eager=True)  # feeds rollup + totals
     tot = daily.agg(
         F.sum("rev").cast("long").alias("total"),
@@ -984,14 +950,8 @@ def q264_dow_seasonality(spark, sf_dir):
 
 EVAL_QUERIES["q264_dow_seasonality"] = q264_dow_seasonality
 
-EVAL_ORACLES["q264_dow_seasonality"] = """
-    WITH daily AS (
-      SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS rev
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
+EVAL_ORACLES["q264_dow_seasonality"] = f"""
+    WITH {_DAILY_REV},
     tot AS (
       SELECT CAST(SUM(rev) AS BIGINT) AS total,
              CAST(COUNT(*) AS BIGINT) AS n_days_total
@@ -1277,13 +1237,7 @@ def q268_changepoint_segments(spark, sf_dir):
     CUSUMs are windows over that table only. Output: 2 rows
     (segment 0 = up to and including the split day).
     """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
+    daily = daily_purchase_rev(load_table(spark, sf_dir, "events"))
     daily = daily.localCheckpoint(eager=True)  # feeds split + segments
     mean = daily.agg(
         F.expr("CAST(sum(rev) div count(*) AS BIGINT)").alias("mean_rev")
@@ -1341,14 +1295,8 @@ def q268_changepoint_segments(spark, sf_dir):
 
 EVAL_QUERIES["q268_changepoint_segments"] = q268_changepoint_segments
 
-EVAL_ORACLES["q268_changepoint_segments"] = """
-    WITH daily AS (
-      SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS rev
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
+EVAL_ORACLES["q268_changepoint_segments"] = f"""
+    WITH {_DAILY_REV},
     mean AS (
       SELECT CAST(SUM(rev) // COUNT(*) AS BIGINT) AS mean_rev FROM daily
     ),
@@ -1886,13 +1834,7 @@ def q275_theil_sen_trend(spark, sf_dir):
     never corpus-bounded. Output: one row (n_days, n_pairs,
     slope_micro_per_day, ols companion from the same spine).
     """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
+    daily = daily_purchase_rev(load_table(spark, sf_dir, "events"))
     daily = daily.localCheckpoint(eager=True)  # tiny; feeds pairs + count
     a, b = daily.alias("a"), daily.alias("b")
     slopes = (
@@ -1926,14 +1868,8 @@ def q275_theil_sen_trend(spark, sf_dir):
 
 EVAL_QUERIES["q275_theil_sen_trend"] = q275_theil_sen_trend
 
-EVAL_ORACLES["q275_theil_sen_trend"] = """
-    WITH daily AS (
-      SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS rev
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
+EVAL_ORACLES["q275_theil_sen_trend"] = f"""
+    WITH {_DAILY_REV},
     slopes AS (
       SELECT CAST((b.rev - a.rev) * 1000000 // (b.day - a.day) AS BIGINT)
                AS slope_micro

@@ -34,6 +34,7 @@ from adhesive_spark.queries.oracle_fragments import (
     _h32,
     _hex_int,
     _lang_sql,
+    _pair_counts,
     _quality_sql,
     _shingles,
 )
@@ -483,35 +484,15 @@ def q339_containment_pairs(spark, sf_dir):
 METROLOGY_QUERIES["q339_containment_pairs"] = q339_containment_pairs
 
 METROLOGY_ORACLES["q339_containment_pairs"] = f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 1000
-    ),
-    g AS (
-      SELECT doc_id,
-             {_shingles(3)} AS grams
-      FROM t
-    ),
-    x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-    sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-    rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-    xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
-    c AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_pair_counts("doc_id < 1000")}
     SELECT id_a, id_b,
-           CAST(n_common * 1000000 // sa.n_sh AS BIGINT) AS cont_ab_ppm,
-           CAST(n_common * 1000000 // sb.n_sh AS BIGINT) AS cont_ba_ppm,
-           CAST(n_common * 1000000 // (sa.n_sh + sb.n_sh - n_common)
+           CAST(n_common * 1000000 // n_a AS BIGINT) AS cont_ab_ppm,
+           CAST(n_common * 1000000 // n_b AS BIGINT) AS cont_ba_ppm,
+           CAST(n_common * 1000000 // (n_a + n_b - n_common)
                 AS BIGINT) AS jaccard_ppm
     FROM c
-    JOIN sz sa ON c.id_a = sa.doc_id
-    JOIN sz sb ON c.id_b = sb.doc_id
-    WHERE n_common * 1000000 // sa.n_sh >= 250000
-       OR n_common * 1000000 // sb.n_sh >= 250000
+    WHERE n_common * 1000000 // n_a >= 250000
+       OR n_common * 1000000 // n_b >= 250000
 """
 
 

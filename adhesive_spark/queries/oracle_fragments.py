@@ -16,12 +16,28 @@ it out, so a change to the operator has one fragment to follow it:
 - ``_PUNCT_RATIO`` — ``operators.text.punct_ratio``
 - ``_UPPER_RATIO`` — ``operators.text.uppercase_ratio``
 - ``_quality_sql()`` — ``operators.text.quality_score``
+- ``_shingle_sets(where)`` — ``operators.dedup.word_shingles`` (n=3) per
+  document
+- ``_rare(x, out)`` — the ``max_shingle_df=1000`` cap of
+  ``operators.dedup.ngram_jaccard_pairs``, ``containment_pairs`` and
+  ``operators.curation.contamination_pairs``
+- ``_pair_counts(where, rare)``, ``_JACCARD`` — the shared-shingle pair
+  counts of ``operators.dedup.ngram_jaccard_pairs``, ``containment_pairs``
+  and ``ppjoin_pairs``
 - ``_PAIR_CTES`` — ``operators.dedup.ngram_jaccard_pairs`` plus the
-  component closure
+  component closure (``operators.graph.connected_components``)
+- ``_minhash_sig(num_perm, src, key, item)`` —
+  ``operators.dedup.minhash_signature_kernel``
+- ``_lsh_bucket(vexpr, dim, n_planes)`` — ``operators.similarity.lsh_bucket``
+- ``_ivf_ctes(n_probe)`` — ``operators.similarity.build_ivf_index``
+  (``_nearest_centroid``) and ``_ivf_probes``
+- ``_DAILY_REV`` — ``operators.monitoring.daily_purchase_rev``
 """
 
 from __future__ import annotations
 
+from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
+from adhesive_spark.operators.similarity import _hyperplanes
 from adhesive_spark.operators.text import LANG_MARKERS, STOPWORDS_EN
 
 
@@ -121,31 +137,51 @@ def _quality_sql(
     """
 
 
-# n-gram-Jaccard pair edges (mirrors operators.dedup.ngram_jaccard_pairs
-# and the q33 oracle, parameterized) — input CTEs for the recursive
-# closure oracles.
-_PAIR_CTES = f"""
-        t AS (
-          SELECT doc_id, {_TOKS} AS toks
-          FROM documents WHERE doc_id < 300
-        ),
-        g AS (SELECT doc_id, {_shingles(3)} AS grams FROM t),
+def _shingle_sets(where: str = "TRUE") -> str:
+    """CTEs ``t`` (doc_id, toks) and ``g`` (doc_id, grams): the word
+    3-gram sets of the documents matching ``where``."""
+    return f"""
+        t AS (SELECT doc_id, {_TOKS} AS toks FROM documents WHERE {where}),
+        g AS (SELECT doc_id, {_shingles(3)} AS grams FROM t)"""
+
+
+def _rare(x: str, out: str) -> str:
+    """CTEs ``rare`` and ``out``: the (doc_id, shingle) rows of CTE ``x``
+    whose shingle sits in at most 1000 of them (``max_shingle_df=1000``:
+    hot shingles leave the candidate join only)."""
+    return f"""
+        rare AS (SELECT shingle FROM {x} GROUP BY shingle HAVING COUNT(*) <= 1000),
+        {out} AS (SELECT {x}.doc_id, {x}.shingle FROM {x} JOIN rare USING (shingle))"""
+
+
+def _pair_counts(where: str = "TRUE", rare: bool = True) -> str:
+    """CTEs t → g → x → sz → [rare → xf] → c over the documents matching
+    ``where``: ``c`` holds (id_a, id_b, n_common, n_a, n_b) for every
+    pair that shares a shingle, with both full set sizes. ``rare=False``
+    counts every shared shingle (the exact, uncapped intersection)."""
+    j = "xf" if rare else "x"
+    return f"""{_shingle_sets(where)},
         x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-        sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-        rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-        xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
+        sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),{_rare("x", "xf") + "," if rare else ""}
         c AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-          FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ),
-        pairs AS (
-          SELECT id_a, id_b
-          FROM c
-          JOIN sz sa ON c.id_a = sa.doc_id
-          JOIN sz sb ON c.id_b = sb.doc_id
-          WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.1
-        ),
+          SELECT p.*, sa.n_sh AS n_a, sb.n_sh AS n_b FROM (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
+            FROM {j} a JOIN {j} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+          ) p
+          JOIN sz sa ON p.id_a = sa.doc_id
+          JOIN sz sb ON p.id_b = sb.doc_id
+        )"""
+
+
+# the Jaccard of a ``c`` row: 3-gram sets are distinct, so
+# |A∪B| = n_a + n_b − n_common
+_JACCARD = "n_common / (n_a + n_b - n_common)"
+
+# n-gram-Jaccard (>= 0.1) pair graph of doc_id < 300 plus its component
+# closure: ``pairs``, ``e``, ``reach``, ``comp`` (node, component)
+_PAIR_CTES = f"""{_pair_counts("doc_id < 300")},
+        pairs AS (SELECT id_a, id_b FROM c WHERE {_JACCARD} >= 0.1),
         e AS (
           SELECT id_a AS a, id_b AS b FROM pairs
           UNION ALL
@@ -160,3 +196,95 @@ _PAIR_CTES = f"""
           SELECT node, MIN(r) AS component FROM reach GROUP BY node
         )
 """
+
+
+def _minhash_sig(
+    num_perm: int = 64,
+    src: str = "g",
+    key: str = "doc_id",
+    item: str = "unnest(grams)",
+) -> str:
+    """CTEs hx → bhr → co → sig: ``sig`` holds (``key``, i, s), the
+    ``num_perm`` permutation minima per ``key`` of relation ``src`` over
+    the md5 base hashes of its ``item`` strings, with the coefficients
+    ``_perm_coeffs(num_perm, 42)`` that the Spark kernel uses. The
+    minima are one hash aggregate over (row, permutation) pairs, not
+    nested list lambdas (about 170x faster at sf0.01)."""
+    coeff_rows = ", ".join(
+        f"({i}, {a}::BIGINT, {b}::BIGINT)"
+        for i, (a, b) in enumerate(_perm_coeffs(num_perm, 42))
+    )
+    return f"""
+        hx AS (SELECT {key}, md5({item}) AS h FROM {src}),
+        bhr AS (SELECT {key}, {_h32('h')} % {_MERSENNE} AS base FROM hx),
+        co(i, a, b) AS (VALUES {coeff_rows}),
+        sig AS (
+          SELECT bhr.{key}, co.i,
+                 MIN((bhr.base * co.a + co.b) % {_MERSENNE}) AS s
+          FROM bhr CROSS JOIN co
+          GROUP BY bhr.{key}, co.i
+        )"""
+
+
+def _lsh_bucket(vexpr: str, dim: int, n_planes: int) -> str:
+    """Sign-bit bucket key of the DOUBLE[] ``vexpr`` against the seed-42
+    hyperplanes. The dot product is a left fold over the element
+    products, the order of Spark's ``F.aggregate``, so each bit is
+    decided on the same double."""
+    terms = []
+    for i, plane in enumerate(_hyperplanes(dim, n_planes, 42)):
+        plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
+        dot = (
+            f"list_reduce(list_transform(range(1, {dim} + 1), "
+            f"j -> ({vexpr})[j] * ({plit})[j]), (x, y) -> x + y)"
+        )
+        terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
+    return " + ".join(terms)
+
+
+def _ivf_ctes(n_probe: int) -> str:
+    """CTEs emb → corpus, queries → centroids → assigned → probes of the
+    16-list IVF index over ``embeddings``: vec_id >= 10 is the corpus
+    (vec_id, v), the rest the queries (query_id, qv); the 16 lowest-id
+    corpus vectors are the centroids (centroid_id, cv). ``assigned``
+    gives each corpus vector its nearest centroid, and ``probes``
+    (query_id, qv, centroid_id, rq) each query's ``n_probe`` nearest,
+    ``rq`` the rank; ties go to the lower centroid id."""
+    return f"""
+        emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        corpus AS (SELECT vec_id, v FROM emb WHERE vec_id >= 10),
+        queries AS (SELECT vec_id AS query_id, v AS qv FROM emb WHERE vec_id < 10),
+        centroids AS (
+          SELECT vec_id AS centroid_id, v AS cv FROM corpus
+          ORDER BY vec_id LIMIT 16
+        ),
+        assigned AS (
+          SELECT vec_id, v, centroid_id FROM (
+            SELECT c.vec_id, c.v, t.centroid_id,
+                   ROW_NUMBER() OVER (PARTITION BY c.vec_id
+                     ORDER BY round(list_cosine_similarity(c.v, t.cv), 6) DESC,
+                              t.centroid_id) AS r
+            FROM corpus c CROSS JOIN centroids t
+          ) WHERE r = 1
+        ),
+        probes AS (
+          SELECT query_id, qv, centroid_id, rq FROM (
+            SELECT q.query_id, q.qv, t.centroid_id,
+                   ROW_NUMBER() OVER (PARTITION BY q.query_id
+                     ORDER BY round(list_cosine_similarity(q.qv, t.cv), 6) DESC,
+                              t.centroid_id) AS rq
+            FROM queries q CROSS JOIN centroids t
+          ) WHERE rq <= {n_probe}
+        )"""
+
+
+# CTE ``daily`` (day, rev): purchase revenue per epoch day, in cents
+# quantized per row
+_DAILY_REV = """
+    daily AS (
+      SELECT epoch_us(ts) // 86400000000 AS day,
+             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
+               AS rev
+      FROM events WHERE event_type = 'purchase'
+      GROUP BY 1
+    )"""

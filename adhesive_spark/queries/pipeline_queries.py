@@ -35,17 +35,20 @@ from adhesive_spark.operators.similarity import (
 from adhesive_spark.operators.text import text_profile
 from adhesive_spark.queries.oracle_fragments import (
     _FP,
+    _JACCARD,
     _NORM,
     _PUNCT_RATIO,
     _STOP_RATIO,
     _TOKS,
     _UPPER_RATIO,
     _bpe,
-    _h32,
     _hex_int,
     _lang_sql,
+    _lsh_bucket,
+    _minhash_sig,
+    _pair_counts,
     _quality_sql,
-    _shingles,
+    _shingle_sets,
 )
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
@@ -214,57 +217,20 @@ _MTYPE = "(['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1]"
 
 
 def _minhash_oracle_sql(
-    *,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.2,
-    seed: int = 42,
-    final_select: str | None = None,
+    final_select: str = "SELECT id_a, id_b, jaccard FROM v WHERE jaccard >= 0.2",
+    ctes: str = _shingle_sets(),
 ) -> str:
-    """Full DuckDB mirror of minhash_lsh_pairs: same md5-prefix base
-    hash, the SAME permutation coefficients (interpolated from the one
-    Python generator both sides share), same band keys, same exact
-    verify — signatures and candidates match bit-for-bit.
-
-    VECTORIZED formulation: the (doc, shingle-hash) pairs are UNNESTED to
-    rows and cross-joined with a 64-row coefficient table, so the
-    per-permutation minima are one hash aggregate instead of nested list
-    lambdas — result-identical (verified old-vs-new at sf0.001/sf0.01)
-    and ~170x faster (50s -> 0.3s at sf0.01), which matters because this
-    oracle runs inside every full correctness sweep."""
-    from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-
-    coeffs = _perm_coeffs(num_perm, seed)
-    rows = num_perm // bands
-    coeff_rows = ", ".join(
-        f"({i}, {a}::BIGINT, {b}::BIGINT)" for i, (a, b) in enumerate(coeffs)
-    )
+    """Full DuckDB mirror of minhash_lsh_pairs (64 permutations, 16
+    bands, seed 42): the ``_minhash_sig`` signatures, same band keys,
+    same exact verify — signatures and candidates match bit-for-bit.
+    ``ctes`` must define ``g`` (doc_id, grams) and may add CTEs for
+    ``final_select``."""
     return f"""
-        WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks FROM documents
-        ),
-        g AS (
-          SELECT doc_id,
-                 {_shingles(3)} AS grams
-          FROM t
-        ),
-        hx AS (
-          SELECT doc_id, md5(unnest(grams)) AS h FROM g
-        ),
-        bhr AS (
-          SELECT doc_id, {_h32('h')} % {_MERSENNE} AS base FROM hx
-        ),
-        co(i, a, b) AS (VALUES {coeff_rows}),
-        sig AS (
-          SELECT bhr.doc_id, co.i,
-                 MIN((bhr.base * co.a + co.b) % {_MERSENNE}) AS s
-          FROM bhr CROSS JOIN co
-          GROUP BY bhr.doc_id, co.i
-        ),
+        WITH {ctes},{_minhash_sig(64)},
         bk AS (
-          SELECT doc_id, CAST(i // {rows} AS INT) AS band_idx,
+          SELECT doc_id, CAST(i // 4 AS INT) AS band_idx,
                  md5(string_agg(CAST(s AS VARCHAR), '_' ORDER BY i)) AS key
-          FROM sig GROUP BY doc_id, CAST(i // {rows} AS INT)
+          FROM sig GROUP BY doc_id, CAST(i // 4 AS INT)
         ),
         cand AS (
           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -281,8 +247,7 @@ def _minhash_oracle_sql(
           JOIN g sa ON cand.id_a = sa.doc_id
           JOIN g sb ON cand.id_b = sb.doc_id
         )
-        {final_select or
-         f"SELECT id_a, id_b, jaccard FROM v WHERE jaccard >= {threshold}"}
+        {final_select}
     """
 
 
@@ -316,34 +281,12 @@ PIPELINE_ORACLES = {
         FROM r
     """,
     "q33_ngram_jaccard": f"""
-        WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks
-          FROM documents WHERE doc_id < 200
-        ),
-        g AS (
-          SELECT doc_id,
-                 {_shingles(3)} AS grams
-          FROM t
-        ),
-        x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-        sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-        -- mirror of max_shingle_df=1000: hot shingles leave the
-        -- candidate join only; denominators keep full sizes
-        rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-        xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
-        c AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-          FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT id_a, id_b,
-               round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
+        WITH {_pair_counts("doc_id < 200")}
+        SELECT id_a, id_b, round({_JACCARD}, 4) AS jaccard
         FROM c
-        JOIN sz sa ON c.id_a = sa.doc_id
-        JOIN sz sb ON c.id_b = sb.doc_id
         -- filter on the ROUNDED value, mirroring the Spark side
         -- (ngram_jaccard_pairs rounds to 4 places before thresholding)
-        WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.2
+        WHERE round({_JACCARD}, 4) >= 0.2
     """,
     "q34_embedding_neardup": """
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -379,9 +322,7 @@ PIPELINE_ORACLES = {
                         FROM events WHERE event_type = 'click') c
           ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
-    "q37_minhash_pairs": _minhash_oracle_sql(
-        num_perm=64, bands=16, threshold=0.2, seed=42
-    ),
+    "q37_minhash_pairs": _minhash_oracle_sql(),
     "q40_multimodal_decode": f"""
         SELECT doc_id AS media_id,
                {_MTYPE} AS media_type,
@@ -409,46 +350,23 @@ PIPELINE_ORACLES = {
 }
 
 
-def _knn_lsh_oracle_sql(*, dim: int = 64, k: int = 5, n_planes: int = 8,
-                        seed: int = 42) -> str:
-    """DuckDB mirror of knn_lsh: the hyperplanes are the SAME Python
-    literals the Spark operator embeds (similarity._hyperplanes), and
-    the dot product is a left fold over the element products —
-    bit-identical to Spark's F.aggregate fold — so bucket keys match
-    exactly."""
-    from adhesive_spark.operators.similarity import _hyperplanes
-
-    def bucket(vexpr: str) -> str:
-        terms = []
-        for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-            plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-            dot = (
-                f"list_reduce(list_transform(range(1, {dim} + 1), "
-                f"j -> ({vexpr})[j] * ({plit})[j]), (x, y) -> x + y)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
-        return " + ".join(terms)
-
-    return f"""
-        WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {bucket('v')} AS bucket FROM emb),
-        c AS (SELECT vec_id, v, bucket FROM b WHERE vec_id >= 10),
-        q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b
-              WHERE vec_id < 10)
-        SELECT query_id, vec_id, sim, rank FROM (
-          SELECT q.query_id, c.vec_id,
-                 round(list_cosine_similarity(c.v, q.qv), 6) AS sim,
-                 ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY round(list_cosine_similarity(c.v, q.qv), 6) DESC,
-                            c.vec_id) AS rank
-          FROM c JOIN q ON c.bucket = q.bucket
-        ) WHERE rank <= {k}
-    """
-
-
-PIPELINE_ORACLES["q39_knn_lsh"] = _knn_lsh_oracle_sql(
-    dim=64, k=5, n_planes=8, seed=42
-)
+# the bucket keys are _lsh_bucket's: the same hyperplane literals and
+# fold order as similarity.lsh_bucket, so buckets match exactly
+PIPELINE_ORACLES["q39_knn_lsh"] = f"""
+    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    b AS (SELECT vec_id, v, {_lsh_bucket('v', 64, 8)} AS bucket FROM emb),
+    c AS (SELECT vec_id, v, bucket FROM b WHERE vec_id >= 10),
+    q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b
+          WHERE vec_id < 10)
+    SELECT query_id, vec_id, sim, rank FROM (
+      SELECT q.query_id, c.vec_id,
+             round(list_cosine_similarity(c.v, q.qv), 6) AS sim,
+             ROW_NUMBER() OVER (PARTITION BY q.query_id
+               ORDER BY round(list_cosine_similarity(c.v, q.qv), 6) DESC,
+                        c.vec_id) AS rank
+      FROM c JOIN q ON c.bucket = q.bucket
+    ) WHERE rank <= 5
+"""
 
 
 def _simhash_oracle_sql(*, max_hamming: int = 3) -> str:
@@ -518,35 +436,15 @@ def q80_embedding_neardup_lsh(spark, sf_dir):
 PIPELINE_QUERIES["q80_embedding_neardup_lsh"] = q80_embedding_neardup_lsh
 
 
-def _neardup_lsh_oracle_sql(*, dim: int = 64, n_planes: int = 8,
-                            seed: int = 42, threshold: float = 0.4) -> str:
-    from adhesive_spark.operators.similarity import _hyperplanes
-
-    def bucket(vexpr: str) -> str:
-        terms = []
-        for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-            plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-            dot = (
-                f"list_reduce(list_transform(range(1, {dim} + 1), "
-                f"j -> ({vexpr})[j] * ({plit})[j]), (x, y) -> x + y)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
-        return " + ".join(terms)
-
-    return f"""
-        WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {bucket('v')} AS bucket FROM emb)
-        SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
-               round(list_cosine_similarity(a.v, b2.v), 6) AS cos_sim
-        FROM b a JOIN b b2
-          ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-        WHERE round(list_cosine_similarity(a.v, b2.v), 6) >= {threshold}
-    """
-
-
-PIPELINE_ORACLES["q80_embedding_neardup_lsh"] = _neardup_lsh_oracle_sql(
-    dim=64, n_planes=8, seed=42, threshold=0.4
-)
+PIPELINE_ORACLES["q80_embedding_neardup_lsh"] = f"""
+    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    b AS (SELECT vec_id, v, {_lsh_bucket('v', 64, 8)} AS bucket FROM emb)
+    SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
+           round(list_cosine_similarity(a.v, b2.v), 6) AS cos_sim
+    FROM b a JOIN b b2
+      ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
+    WHERE round(list_cosine_similarity(a.v, b2.v), 6) >= 0.4
+"""
 
 
 def q81_audio_chunks(spark, sf_dir):
@@ -719,28 +617,10 @@ PIPELINE_QUERIES["q116_ppjoin_pairs"] = q116_ppjoin_pairs
 # ground truth: unfiltered exact all-pairs Jaccard — deliberately NOT a
 # mirror of the prefix filter (see q116 docstring)
 PIPELINE_ORACLES["q116_ppjoin_pairs"] = f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 600
-    ),
-    g AS (
-      SELECT doc_id,
-             {_shingles(3)} AS grams
-      FROM t
-    ),
-    x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-    sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-    c AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-      FROM x a JOIN x b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT id_a, id_b,
-           round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
+    WITH {_pair_counts("doc_id < 600", rare=False)}
+    SELECT id_a, id_b, round({_JACCARD}, 4) AS jaccard
     FROM c
-    JOIN sz sa ON c.id_a = sa.doc_id
-    JOIN sz sb ON c.id_b = sb.doc_id
-    WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.3
+    WHERE {_JACCARD} >= 0.3
 """
 
 
@@ -1235,23 +1115,13 @@ def q163_lsh_banding_eval(spark, sf_dir):
 
 PIPELINE_QUERIES["q163_lsh_banding_eval"] = q163_lsh_banding_eval
 
+# the truth count is the exact shared-shingle count per pair: 3-gram
+# sets are distinct, so |A∪B| = n_a + n_b - n_common, the same integers
+# a list intersection/union of the two sets would give
 PIPELINE_ORACLES["q163_lsh_banding_eval"] = _minhash_oracle_sql(
-    threshold=0.2,
-    final_select="""
-        , xg AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        tp AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM xg a JOIN xg b
-            ON a.gram = b.gram AND a.doc_id < b.doc_id
-        ),
-        tj AS (
-          SELECT tp.id_a, tp.id_b
-          FROM tp
-          JOIN g sa ON tp.id_a = sa.doc_id
-          JOIN g sb ON tp.id_b = sb.doc_id
-          WHERE round(len(list_intersect(sa.grams, sb.grams))
-                      / len(list_distinct(sa.grams || sb.grams)), 4) >= 0.2
-        )
+    ctes=_pair_counts(rare=False),
+    final_select=f"""
+        , tj AS (SELECT id_a, id_b FROM c WHERE round({_JACCARD}, 4) >= 0.2)
         SELECT (SELECT COUNT(*) FROM cand) AS n_candidates,
                (SELECT COUNT(*) FROM tj) AS n_truth,
                (SELECT COUNT(*) FROM v WHERE jaccard >= 0.2) AS n_verified,
@@ -1605,31 +1475,8 @@ def q206_neardup_evidence(spark, sf_dir):
 PIPELINE_QUERIES["q206_neardup_evidence"] = q206_neardup_evidence
 
 PIPELINE_ORACLES["q206_neardup_evidence"] = f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    g AS (
-      SELECT doc_id,
-             {_shingles(3)} AS grams
-      FROM t
-    ),
-    x AS (SELECT doc_id, unnest(grams) AS shingle FROM g),
-    sz AS (SELECT doc_id, len(grams) AS n_sh FROM g),
-    rare AS (SELECT shingle FROM x GROUP BY shingle HAVING COUNT(*) <= 1000),
-    xf AS (SELECT x.doc_id, x.shingle FROM x JOIN rare USING (shingle)),
-    c AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-      FROM xf a JOIN xf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM c
-      JOIN sz sa ON c.id_a = sa.doc_id
-      JOIN sz sb ON c.id_b = sb.doc_id
-      WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.2
-    ),
+    WITH {_pair_counts("doc_id < 200")},
+    pairs AS (SELECT id_a, id_b FROM c WHERE round({_JACCARD}, 4) >= 0.2),
     dfc AS (SELECT shingle, COUNT(*) AS global_df FROM x GROUP BY shingle),
     shared AS (
       SELECT p.id_a, p.id_b, a.shingle, d.global_df

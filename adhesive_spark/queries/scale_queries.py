@@ -20,7 +20,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import tokens
-from adhesive_spark.queries.oracle_fragments import _TOKS, _h32, _hex_int, _quality_sql
+from adhesive_spark.queries.oracle_fragments import (
+    _TOKS,
+    _hex_int,
+    _minhash_sig,
+    _quality_sql,
+)
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SCALE_QUERIES: dict = {}
@@ -1833,39 +1838,27 @@ def q236_source_minhash_matrix(spark, sf_dir):
 SCALE_QUERIES["q236_source_minhash_matrix"] = q236_source_minhash_matrix
 
 
-def _q236_oracle() -> str:
-    from adhesive_spark.operators.dedup import _MERSENNE, _perm_coeffs
-
-    coeff_rows = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_perm_coeffs(32))
-    )
-    return f"""
+# the Spark side takes minima over the raw 32-bit hash, _minhash_sig
+# over the hash mod 2^31-1: the residues mod 2^31-1 are the same, so
+# the signatures are too
+SCALE_ORACLES["q236_source_minhash_matrix"] = f"""
     WITH toks AS (
       SELECT source, unnest({_TOKS}) AS tok FROM documents
-    ),
-    base AS (
-      SELECT DISTINCT source,
-             {_h32("md5(tok)")} AS h
-      FROM (SELECT DISTINCT source, tok FROM toks WHERE tok <> '')
-    ),
-    coeffs(perm, a, b) AS (VALUES {coeff_rows}),
-    sig AS (
-      SELECT source, perm, MIN((h * a + b) % {_MERSENNE}) AS mh
-      FROM base CROSS JOIN coeffs
-      GROUP BY source, perm
-    )
+    ),{_minhash_sig(
+        32,
+        src="(SELECT DISTINCT source, tok FROM toks WHERE tok <> '')",
+        key="source",
+        item="tok",
+    )}
     SELECT s1.source AS source_a, s2.source AS source_b,
-           CAST(SUM(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS BIGINT)
+           CAST(SUM(CASE WHEN s1.s = s2.s THEN 1 ELSE 0 END) AS BIGINT)
              AS agree,
-           CAST(CAST(SUM(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END)
+           CAST(CAST(SUM(CASE WHEN s1.s = s2.s THEN 1 ELSE 0 END)
                 AS BIGINT) * 1000 // 32 AS BIGINT) AS est_jaccard_milli
     FROM sig s1 JOIN sig s2
-      ON s1.perm = s2.perm AND s1.source < s2.source
+      ON s1.i = s2.i AND s1.source < s2.source
     GROUP BY s1.source, s2.source
 """
-
-
-SCALE_ORACLES["q236_source_minhash_matrix"] = _q236_oracle()
 
 
 # --- q237: Simpson behavioral diversity ---------------------------------------------

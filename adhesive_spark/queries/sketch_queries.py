@@ -26,7 +26,8 @@ from adhesive_spark.operators.sketches import (
     hll_oracle_sql,
 )
 from adhesive_spark.operators.text import tokens
-from adhesive_spark.queries.oracle_fragments import _TOKS, _h32
+from adhesive_spark.operators.monitoring import daily_purchase_rev
+from adhesive_spark.queries.oracle_fragments import _DAILY_REV, _TOKS, _h32
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 SKETCH_QUERIES: dict = {}
@@ -1193,13 +1194,7 @@ def q251_forecast_eval(spark, sf_dir):
     single aggregate; the lag-7 window and the error aggregate run on
     that ~30-row table. The eval is one row — the dashboard scalar.
     """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
+    daily = daily_purchase_rev(load_table(spark, sf_dir, "events"))
     w = Window.orderBy("day")
     scored = daily.select(
         "day", "rev", F.lag("rev", 7).over(w).alias("fc")
@@ -1217,14 +1212,8 @@ def q251_forecast_eval(spark, sf_dir):
 
 SKETCH_QUERIES["q251_forecast_eval"] = q251_forecast_eval
 
-SKETCH_ORACLES["q251_forecast_eval"] = """
-    WITH daily AS (
-      SELECT epoch_us(ts) // 86400000000 AS day,
-             CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT)
-               AS rev
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY 1
-    ),
+SKETCH_ORACLES["q251_forecast_eval"] = f"""
+    WITH {_DAILY_REV},
     scored AS (
       SELECT day, rev, LAG(rev, 7) OVER (ORDER BY day) AS fc
       FROM daily

@@ -21,7 +21,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.queries.oracle_fragments import _BPE, _NORM, _TOKS, _h32, _hex_int
+from adhesive_spark.queries.oracle_fragments import (
+    _BPE,
+    _NORM,
+    _TOKS,
+    _h32,
+    _hex_int,
+    _lsh_bucket,
+)
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
 TRAINING_QUERIES: dict = {}
@@ -1864,23 +1871,10 @@ def q299_lsh_label_purity(spark, sf_dir):
 TRAINING_QUERIES["q299_lsh_label_purity"] = q299_lsh_label_purity
 
 
-def _q299_oracle() -> str:
-    from adhesive_spark.operators.similarity import _hyperplanes
-
-    dim, n_planes, seed = 64, 8, 42
-    terms = []
-    for i, plane in enumerate(_hyperplanes(dim, n_planes, seed)):
-        plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        dot = (
-            f"list_reduce(list_transform(range(1, {dim} + 1), "
-            f"j -> v[j] * ({plit})[j]), (x, y) -> x + y)"
-        )
-        terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
-    bucket = " + ".join(terms)
-    return f"""
+TRAINING_ORACLES["q299_lsh_label_purity"] = f"""
         WITH emb AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
         bl AS (
-          SELECT {bucket} AS bucket, label, CAST(COUNT(*) AS BIGINT) AS n
+          SELECT {_lsh_bucket('v', 64, 8)} AS bucket, label, CAST(COUNT(*) AS BIGINT) AS n
           FROM emb GROUP BY 1, 2
         ),
         per_bucket AS (
@@ -1898,10 +1892,7 @@ def _q299_oracle() -> str:
                              ELSE 0 END) * 1000000 // SUM(bucket_n)
                     AS BIGINT) AS pure_bucket_mass_ppm
         FROM per_bucket
-    """
-
-
-TRAINING_ORACLES["q299_lsh_label_purity"] = _q299_oracle()
+"""
 
 
 # --- q300: training-data funnel capstone ----------------------------------------

@@ -8,12 +8,18 @@ streaming op has a batch twin (q22 is the batch twin of
 
 All operators take/return streaming DataFrames and are tested with the
 file source + ``availableNow`` trigger + memory sink (tests/test_streaming.py).
+:func:`streaming_cusum_daily`'s batch twin is
+``operators.monitoring.daily_purchase_rev``: each micro-batch's delta is
+that function over the batch, and :func:`read_cusum_alarms` is the same
+``cusum_alarms`` readout as the batch q259.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from adhesive_spark.operators.monitoring import cusum_alarms, daily_purchase_rev
 from adhesive_spark.sources.registry import checkpoint_corpus
 
 
@@ -809,17 +815,7 @@ def streaming_cusum_daily(
     """
 
     def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = (
-            batch_df.where(F.col("event_type") == "purchase")
-            .select(
-                F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias(
-                    "cents"
-                ),
-            )
-            .groupBy("day")
-            .agg(F.sum("cents").cast("long").alias("rev"))
-        )
+        delta = daily_purchase_rev(batch_df)
         if prev is None:
             return delta
         return (
@@ -843,26 +839,7 @@ def read_cusum_alarms(spark, state_path: str, top: int = 5) -> DataFrame:
     — the identical integer arithmetic as the batch q259 (exact-cents
     mean, running residual sum, |cusum| shortlist), so stream-then-read
     equals the batch detector row-for-row (test)."""
-    from pyspark.sql import Window
-
-    daily = read_rollup_state(spark, state_path)
-    mean = daily.agg(
-        F.expr("CAST(sum(rev) div count(*) AS BIGINT)").alias("mean_rev")
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cusum = (
-        daily.crossJoin(F.broadcast(mean))
-        .select(
-            "day",
-            "rev",
-            F.sum(F.col("rev") - F.col("mean_rev")).over(w).alias(
-                "cusum_cents"
-            ),
-        )
-    )
-    return cusum.orderBy(
-        F.abs(F.col("cusum_cents")).desc(), F.col("day")
-    ).limit(top)
+    return cusum_alarms(read_rollup_state(spark, state_path), top)
 
 
 def streaming_grid_cells(

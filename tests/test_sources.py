@@ -456,3 +456,60 @@ def test_python_datasource_filter_pushdown(spark):
     b = load(False)
     assert b.filter("doc_id < 10").count() == 10
     assert b.count() == 1000
+
+
+# ns values with sub-microsecond remainders on both sides of the epoch:
+# DuckDB's ns -> us cast truncates toward zero, like Spark's ``div``
+_NS_TS = [
+    -86_400_000_000_001,
+    -1_500,
+    -1,
+    0,
+    1_500,
+    1_700_000_000_123_456_789,
+]
+
+
+def test_load_table_truncates_ns_timestamps_like_duckdb(spark, tmp_path):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampType
+
+    ids = list(range(len(_NS_TS)))
+    pq.write_table(
+        pa.table({"id": ids, "ts": pa.array(_NS_TS, pa.timestamp("ns"))}),
+        tmp_path / "ns_events.parquet",
+    )
+    raw = spark.read.parquet(str(tmp_path / "ns_events.parquet"))
+    assert isinstance(raw.schema["ts"].dataType, LongType)  # the ns branch
+    df = load_table(spark, str(tmp_path), "ns_events")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    got = [
+        tuple(r)
+        for r in df.select("id", F.unix_micros("ts")).orderBy("id").collect()
+    ]
+    want = duckdb.connect().execute(
+        "SELECT id, epoch_us(CAST(ts AS TIMESTAMP)) FROM read_parquet(?) "
+        "ORDER BY id",
+        [str(tmp_path / "ns_events.parquet")],
+    ).fetchall()
+    assert got == want
+    assert [us for _, us in got][:3] == [-86_400_000_000, -1, 0]
+
+
+def test_load_table_passes_us_timestamps_through(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    us = [-1, 0, 1_700_000_000_123_456]
+    pq.write_table(
+        pa.table({"id": [0, 1, 2], "ts": pa.array(us, pa.timestamp("us"))}),
+        tmp_path / "us_events.parquet",
+    )
+    df = load_table(spark, str(tmp_path), "us_events")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    assert df.schema == spark.read.parquet(str(tmp_path / "us_events.parquet")).schema
+    got = df.select(F.unix_micros("ts")).orderBy("id").collect()
+    assert [r[0] for r in got] == us

@@ -5,7 +5,8 @@ order-insensitive values (exact, like a value hash would).
 
 Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
 (``--help`` prints the arguments). Each query prints one line that
-starts with ``OK``, ``FAIL`` or ``ROWS``.
+starts with ``OK``, ``FAIL`` or ``ROWS`` and ends with the seconds each
+engine took, e.g. ``[spark 10.1s, oracle 108.0s]``.
 """
 
 from __future__ import annotations
@@ -181,24 +182,29 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}")
+            print(f"FAIL  {name}: spark error: {str(e)[:300]} "
+                  f"[spark {time.time()-t0:.1f}s]")
             n_bad += 1
             continue
+        spark_s = f"spark {time.time()-t0:.1f}s"
         if name not in oracles:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{spark_s}]")
             continue
+        t1 = time.time()
         try:
             odf = con.execute(oracles[name]).fetchdf()
         except Exception as e:
-            print(f"FAIL  {name}: oracle error: {str(e)[:300]}")
+            print(f"FAIL  {name}: oracle error: {str(e)[:300]} "
+                  f"[{spark_s}, oracle {time.time()-t1:.1f}s]")
             n_bad += 1
             continue
+        times = f"[{spark_s}, oracle {time.time()-t1:.1f}s]"
         problems = compare(name, sdf, odf)
         if problems:
             n_bad += 1
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems) + f" {times}")
         else:
-            print(f"OK    {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"OK    {name}: {len(sdf)} rows {times}")
     print(f"\n{'ALL OK' if n_bad == 0 else f'{n_bad} FAILURES'}")
     return 1 if n_bad else 0
 
