@@ -18,6 +18,11 @@ change-point queries read and that ``streaming.ops.streaming_cusum_daily``
 maintains per micro-batch, and :func:`cusum_alarms` is the CUSUM
 readout that the batch query (q259) and ``streaming.ops.read_cusum_alarms``
 share. Their DuckDB twin is ``queries.oracle_fragments._DAILY_REV``.
+Likewise :func:`arm_purchases` and :func:`srm_readout` are the A/B
+state and readout of q266 and ``streaming.ops.streaming_srm_counts``/
+``read_srm_guard`` (q272 splits by the same :func:`parity_arm`), and
+:func:`grid_cell` is the density grid of q260 and
+``streaming.ops.streaming_grid_cells``.
 """
 
 from __future__ import annotations
@@ -113,3 +118,74 @@ def cusum_alarms(daily: DataFrame, top: int = 5) -> DataFrame:
     return cusum.orderBy(
         F.abs(F.col("cusum_cents")).desc(), F.col("day")
     ).limit(top)
+
+
+def parity_arm() -> Column:
+    """The md5-parity experiment arm (0 or 1) of ``user_id``: the low
+    bit of its portable 32-bit hash — the deterministic stand-in for an
+    assignment service."""
+    from adhesive_spark.operators.dedup import portable_hash32
+
+    return portable_hash32(F.col("user_id").cast("string")) % 2
+
+
+def arm_purchases(events: DataFrame) -> DataFrame:
+    """(user_id, arm, purchases): each user's parity arm and purchase
+    count. Additive across any split of the events."""
+    return (
+        events.select(
+            "user_id",
+            parity_arm().alias("arm"),
+            F.when(F.col("event_type") == "purchase", 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("is_purch"),
+        )
+        .groupBy("user_id", "arm")
+        .agg(F.sum("is_purch").cast("long").alias("purchases"))
+    )
+
+
+def srm_readout(per_user: DataFrame) -> DataFrame:
+    """One-row two-arm A/B readout over (user_id, arm, purchases): users
+    and purchases per arm, the sample-ratio-mismatch chi-square against
+    a 50/50 split via ``(u0 - u1)² / (u0 + u1)`` in milli, and per-arm
+    purchase rates and their delta in ppm. Integers only, division
+    last."""
+    # materialize the 2-row arm table once: the a0/a1 pivot sides would
+    # each re-run the per-user aggregate
+    arms = per_user.groupBy("arm").agg(
+        F.count("*").cast("long").alias("users"),
+        F.sum("purchases").cast("long").alias("purchases"),
+    ).localCheckpoint(eager=True)
+    a0 = arms.where(F.col("arm") == 0).select(
+        F.col("users").alias("u0"), F.col("purchases").alias("p0")
+    )
+    a1 = arms.where(F.col("arm") == 1).select(
+        F.col("users").alias("u1"), F.col("purchases").alias("p1")
+    )
+    return a0.crossJoin(F.broadcast(a1)).select(
+        "u0",
+        "u1",
+        "p0",
+        "p1",
+        F.expr(
+            "CAST((u0 - u1) * (u0 - u1) * 1000 div (u0 + u1) AS BIGINT)"
+        ).alias("srm_chi2_milli"),
+        F.expr("CAST(p0 * 1000000 div u0 AS BIGINT)").alias("rate0_ppm"),
+        F.expr("CAST(p1 * 1000000 div u1 AS BIGINT)").alias("rate1_ppm"),
+        F.expr(
+            "CAST(p0 * 1000000 div u0 - p1 * 1000000 div u1 AS BIGINT)"
+        ).alias("rate_delta_ppm"),
+    )
+
+
+def grid_cell(expr: str, cell_milli: int) -> Column:
+    """Grid cell index of the SQL expression ``expr`` for
+    ``cell_milli``-wide cells: exact milli integers, shifted by +1e6 so
+    the ids stay positive and every engine's integer division agrees
+    (no floor-vs-truncate hazard)."""
+    return F.expr(
+        f"(CAST(ROUND(CAST({expr} AS DOUBLE) * 1000, 0) AS BIGINT)"
+        f" + 1000000) div {cell_milli}"
+    )

@@ -23,7 +23,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adhesive_spark.operators.monitoring import cusum_alarms, daily_purchase_rev
+from adhesive_spark.operators.monitoring import (
+    arm_purchases,
+    cusum_alarms,
+    daily_purchase_rev,
+    grid_cell,
+    parity_arm,
+    srm_readout,
+)
 from adhesive_spark.queries.oracle_fragments import _DAILY_REV, _TOKS, _h32
 from adhesive_spark.sources.registry import checkpoint_corpus, load_table
 
@@ -456,14 +463,8 @@ def q260_grid_density_clusters(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
-        F.expr(
-            "(CAST(ROUND(CAST(element_at(embedding, 1) AS DOUBLE) * 1000, 0)"
-            f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
-        ).alias("cx"),
-        F.expr(
-            "(CAST(ROUND(CAST(element_at(embedding, 2) AS DOUBLE) * 1000, 0)"
-            f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
-        ).alias("cy"),
+        grid_cell("element_at(embedding, 1)", _GRID_CELL_MILLI).alias("cx"),
+        grid_cell("element_at(embedding, 2)", _GRID_CELL_MILLI).alias("cy"),
     )
     core = (
         pts.groupBy("cx", "cy")
@@ -1057,50 +1058,7 @@ def q266_abtest_srm(spark, sf_dir):
     Scale shape: one per-user aggregate (arm is a pure hash column),
     one 2-row arm rollup, one 1-row pivot. No floats, division last.
     """
-    ev = load_table(spark, sf_dir, "events")
-    per_user = (
-        ev.select(
-            "user_id",
-            F.expr(
-                "conv(substring(md5(CAST(user_id AS STRING)), 1, 8),"
-                " 16, 10) % 2"
-            )
-            .cast("long")
-            .alias("arm"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("is_purch"),
-        )
-        .groupBy("user_id", "arm")
-        .agg(F.sum("is_purch").cast("long").alias("purchases"))
-    )
-    # materialize the 2-row arm table once: the a0/a1 pivot sides each
-    # re-ran the full per-user aggregate over the event stream
-    arms = per_user.groupBy("arm").agg(
-        F.count("*").cast("long").alias("users"),
-        F.sum("purchases").cast("long").alias("purchases"),
-    ).localCheckpoint(eager=True)
-    a0 = arms.where(F.col("arm") == 0).select(
-        F.col("users").alias("u0"), F.col("purchases").alias("p0")
-    )
-    a1 = arms.where(F.col("arm") == 1).select(
-        F.col("users").alias("u1"), F.col("purchases").alias("p1")
-    )
-    return a0.crossJoin(F.broadcast(a1)).select(
-        "u0",
-        "u1",
-        "p0",
-        "p1",
-        F.expr(
-            "CAST((u0 - u1) * (u0 - u1) * 1000 div (u0 + u1) AS BIGINT)"
-        ).alias("srm_chi2_milli"),
-        F.expr("CAST(p0 * 1000000 div u0 AS BIGINT)").alias("rate0_ppm"),
-        F.expr("CAST(p1 * 1000000 div u1 AS BIGINT)").alias("rate1_ppm"),
-        F.expr(
-            "CAST(p0 * 1000000 div u0 - p1 * 1000000 div u1 AS BIGINT)"
-        ).alias("rate_delta_ppm"),
-    )
+    return srm_readout(arm_purchases(load_table(spark, sf_dir, "events")))
 
 
 EVAL_QUERIES["q266_abtest_srm"] = q266_abtest_srm
@@ -1709,12 +1667,7 @@ def q272_quantile_treatment_effect(spark, sf_dir):
         F.col("event_type") == "purchase"
     )
     per = ev.select(
-        F.expr(
-            "conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)"
-            " % 2"
-        )
-        .cast("long")
-        .alias("arm"),
+        parity_arm().alias("arm"),
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
     ).groupBy("arm", "cents").agg(F.count("*").cast("long").alias("cnt"))
     w = (

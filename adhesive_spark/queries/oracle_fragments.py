@@ -228,15 +228,15 @@ def _minhash_sig(
 
 def _lsh_bucket(vexpr: str, dim: int, n_planes: int) -> str:
     """Sign-bit bucket key of the DOUBLE[] ``vexpr`` against the seed-42
-    hyperplanes. The dot product is a left fold over the element
-    products, the order of Spark's ``F.aggregate``, so each bit is
-    decided on the same double."""
+    hyperplanes. The dot product is one left-associative sum of the
+    element products, the order of Spark's ``F.aggregate``, so each bit
+    is decided on the same double; an out-of-range ``vexpr[j]`` is NULL,
+    as ``zip_with`` pads it. The weights are exponent literals, which
+    DuckDB reads as the exact DOUBLE (a plain ``0.123…`` is a DECIMAL)."""
     terms = []
     for i, plane in enumerate(_hyperplanes(dim, n_planes, 42)):
-        plit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        dot = (
-            f"list_reduce(list_transform(range(1, {dim} + 1), "
-            f"j -> ({vexpr})[j] * ({plit})[j]), (x, y) -> x + y)"
+        dot = " + ".join(
+            f"({vexpr})[{j}] * {float(w):.16e}" for j, w in enumerate(plane, 1)
         )
         terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << i} ELSE 0 END)")
     return " + ".join(terms)

@@ -8,6 +8,38 @@ streaming op has a batch twin (q22 is the batch twin of
 
 All operators take/return streaming DataFrames and are tested with the
 file source + ``availableNow`` trigger + memory sink (tests/test_streaming.py).
+
+The ``streaming_*`` sinks share one epoch-commit protocol, written once
+here (:func:`_start`, :func:`_guarded`, :func:`_snapshot`,
+:func:`_read_committed`, :func:`_delete_epochs`, :func:`_fold`). Each
+micro-batch runs through ``foreachBatch`` and lands in a fresh
+``<path>/__epoch=<id>`` directory (a distributed write; no row reaches
+the driver, so key cardinality is unbounded):
+
+- Commit marker. An epoch is committed when the ``_SUCCESS`` file of
+  its marker directory lands. A sink that writes several directories
+  per epoch writes the marker directory last, so a crash between the
+  writes leaves the epoch uncommitted.
+- Replay skip. ``foreachBatch`` is at-least-once: a micro-batch whose
+  epoch id is <= the last committed epoch was already applied and is
+  skipped, so a replay never applies a batch twice (an additive state
+  would double).
+- Torn epochs. A crash mid-write leaves a directory without
+  ``_SUCCESS``. Readers union only committed epochs, so a torn one is
+  invisible, and the replay of that epoch overwrites it.
+- Retention. A snapshot sink reads the previous committed epoch, writes
+  the new one and then deletes the older ones, so the previous epoch
+  stays readable for in-flight readers and for
+  ``read_rollup_state(epoch=...)``. An append-only sink keeps every
+  epoch (its state is their union) until a compaction folds them.
+
+Algebraic states (HLL, CMS, CUSUM, grid, SRM, MoM) merge through one
+fold: the batch's delta and the previous state regroup by the state's
+keys, each column under its own aggregate. Per-batch cost is the
+batch's aggregate plus a merge with the state, never a rescan of
+history. A table format with transactional MERGE is the production
+hardening of the same shape.
+
 :func:`streaming_cusum_daily`'s batch twin is
 ``operators.monitoring.daily_purchase_rev``: each micro-batch's delta is
 that function over the batch, and :func:`read_cusum_alarms` is the same
@@ -19,7 +51,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from adhesive_spark.operators.monitoring import cusum_alarms, daily_purchase_rev
+from adhesive_spark.operators.monitoring import (
+    arm_purchases,
+    cusum_alarms,
+    daily_purchase_rev,
+    grid_cell,
+    srm_readout,
+)
+from adhesive_spark.sources.fsutil import hadoop_fs
 from adhesive_spark.sources.registry import checkpoint_corpus
 
 
@@ -163,18 +202,15 @@ def enrich_with_static(
     return events.join(d, on=key, how=how)
 
 
-def _state_fs(spark, path_str: str):
-    """Hadoop FileSystem handle for ``path_str`` (shared incantation)."""
-    from adhesive_spark.sources.fsutil import hadoop_fs
-
-    return hadoop_fs(spark, path_str)
+def _epoch_dir(path: str, epoch: int) -> str:
+    """The directory of ``epoch`` under ``path``."""
+    return f"{path}/__epoch={epoch}"
 
 
 def _committed_epochs(spark, state_path: str) -> list[int]:
     """Epoch ids under ``state_path`` whose write COMPLETED (has the
-    committer's _SUCCESS marker). A crash mid-write leaves a dir without
-    the marker; it is invisible here and safely overwritten on replay."""
-    fs, root, jvm = _state_fs(spark, state_path)
+    committer's _SUCCESS marker), ascending."""
+    fs, root, jvm = hadoop_fs(spark, state_path)
     if not fs.exists(root):
         return []
     out = []
@@ -187,69 +223,127 @@ def _committed_epochs(spark, state_path: str) -> list[int]:
     return sorted(out)
 
 
+def _read_committed(
+    spark,
+    path: str,
+    epochs: list[int] | None = None,
+    *,
+    missing: str = "",
+    partitioned: bool = False,
+) -> DataFrame:
+    """Union of the ``epochs`` directories under ``path`` — by default
+    every committed one. A caller whose commit marker lives under
+    another path, or that acts on the same list afterwards, passes the
+    list it read. An empty list raises ``FileNotFoundError(missing)``.
+    ``partitioned`` reads with ``path`` as basePath, so ``__epoch`` and
+    a writer's ``partitionBy`` columns come back as columns."""
+    if epochs is None:
+        epochs = _committed_epochs(spark, path)
+    if not epochs:
+        raise FileNotFoundError(missing or f"no committed epochs under {path}")
+    reader = spark.read.option("basePath", path) if partitioned else spark.read
+    return reader.parquet(*[_epoch_dir(path, e) for e in epochs])
+
+
+def _delete_epochs(spark, path: str, epochs: list[int]) -> None:
+    """Delete the ``epochs`` directories under ``path``."""
+    fs, _, jvm = hadoop_fs(spark, path)
+    for e in epochs:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_epoch_dir(path, e)), True)
+
+
+def _guarded(marker_path: str, body):
+    """foreachBatch function that runs ``body(batch_df, epoch_id,
+    epochs)`` once per epoch: a batch whose epoch id is not past the
+    last committed epoch under ``marker_path`` is a replay and is
+    skipped. ``epochs`` are the committed epochs when the batch starts;
+    ``body`` must write the ``marker_path`` epoch last."""
+
+    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
+        epochs = _committed_epochs(batch_df.sparkSession, marker_path)
+        if epochs and epochs[-1] >= epoch_id:
+            return  # replayed micro-batch: already committed
+        body(batch_df, epoch_id, epochs)
+
+    return _fn
+
+
+def _snapshot(state_path: str, merge_fn):
+    """foreachBatch function of a snapshot state: the previous committed
+    epoch (None on the first) and the batch go through ``merge_fn(
+    batch_df, prev) -> DataFrame``, the result is the new epoch, and the
+    epochs before the previous one are deleted."""
+
+    def _body(batch_df: DataFrame, epoch_id: int, epochs: list[int]) -> None:
+        spark = batch_df.sparkSession
+        prev = _read_committed(spark, state_path, epochs[-1:]) if epochs else None
+        merge_fn(batch_df, prev).write.mode("overwrite").parquet(
+            _epoch_dir(state_path, epoch_id)
+        )
+        _delete_epochs(spark, state_path, epochs[:-1])
+
+    return _guarded(state_path, _body)
+
+
+def _fold(delta_fn, keys: list[str], merge: dict[str, str]):
+    """``merge_fn`` of an algebraic state: the batch's
+    ``delta_fn(batch_df)`` and the previous state regroup by ``keys``,
+    each column in ``merge`` under its aggregate (``"sum"`` or
+    ``"max"``), cast back to the delta's type."""
+
+    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        delta = delta_fn(batch_df)
+        if prev is None:
+            return delta
+        return (
+            delta.unionByName(prev)
+            .groupBy(*keys)
+            .agg(
+                *[
+                    getattr(F, how)(c).cast(delta.schema[c].dataType).alias(c)
+                    for c, how in merge.items()
+                ]
+            )
+        )
+
+    return _merge
+
+
+def _start(stream: DataFrame, batch_fn, checkpoint_path: str):
+    """Start ``stream`` into the foreachBatch function ``batch_fn`` with
+    its progress in ``checkpoint_path``; returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def read_rollup_state(
     spark, state_path: str, *, epoch: int | None = None
 ) -> DataFrame:
-    """Read a committed rollup/snapshot state (one epoch directory) —
-    the latest by default, or TIME-TRAVEL to a specific retained
-    ``epoch`` (the maintenance writers keep the previous epoch until
-    the next commit, so "current" and "as of the prior epoch" are
-    always both readable — the two versions an incident rollback or an
-    A/B diff actually needs; a table format with full history is the
-    production extension of the same layout).
-
-    Readers never race the writer: each epoch is a fresh directory, the
-    previous epoch is retained until the next merge, and only
-    _SUCCESS-marked epochs are visible.
-    """
+    """Read a committed snapshot state (one epoch directory) — the
+    latest by default, or TIME-TRAVEL to a specific retained ``epoch``
+    (the snapshot sinks keep the previous epoch until the next commit,
+    so "current" and "as of the prior epoch" are always both readable —
+    the two versions an incident rollback or an A/B diff actually
+    needs; a table format with full history is the production extension
+    of the same layout)."""
     epochs = _committed_epochs(spark, state_path)
-    if not epochs:
-        raise FileNotFoundError(f"no committed rollup state under {state_path}")
-    if epoch is not None:
+    if epoch is not None and epochs:
         if epoch not in epochs:
             raise FileNotFoundError(
                 f"epoch {epoch} is not committed/retained under "
                 f"{state_path}; retained epochs: {epochs}"
             )
-        return spark.read.parquet(f"{state_path}/__epoch={epoch}")
-    return spark.read.parquet(f"{state_path}/__epoch={epochs[-1]}")
-
-
-def _epoch_guarded_snapshot(state_path: str, merge_fn):
-    """foreachBatch body factory for SNAPSHOT-style state maintainers
-    (rollup merge, CDC apply) — the crash-semantics-critical machinery
-    lives ONCE: replay skip on already-committed epochs, previous
-    committed snapshot in, fresh ``__epoch=<id>`` dir out (the write
-    never touches the dir a reader — or the merge's own input — is
-    scanning), previous epoch retained for in-flight readers, older
-    epochs deleted. ``merge_fn(batch_df, prev_state_or_None) ->
-    DataFrame`` supplies only the merge semantics. (The dedup ingest
-    and quality router do NOT fit this shape: they maintain
-    append-only epoch unions / paired sinks, not a rolling snapshot.)
-    """
-
-    def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epochs = _committed_epochs(spark, state_path)
-        if epochs and epochs[-1] >= epoch_id:
-            return  # replayed micro-batch: already applied
-        prev = (
-            spark.read.parquet(f"{state_path}/__epoch={epochs[-1]}")
-            if epochs
-            else None
-        )
-        out = merge_fn(batch_df, prev)
-        out.write.mode("overwrite").parquet(
-            f"{state_path}/__epoch={epoch_id}"
-        )
-        fs, _, jvm = _state_fs(spark, state_path)
-        for old in epochs[:-1]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{state_path}/__epoch={old}"),
-                True,
-            )
-
-    return _fn
+        epochs = [epoch]
+    return _read_committed(
+        spark,
+        state_path,
+        epochs[-1:],
+        missing=f"no committed rollup state under {state_path}",
+    )
 
 
 def streaming_rollup_maintenance(
@@ -261,22 +355,12 @@ def streaming_rollup_maintenance(
 ):
     """Streaming materialized view: maintain the algebraic rollup state
     (operators/incremental.py) by merging EACH micro-batch's partial
-    aggregate into a parquet state table via ``foreachBatch`` — the
-    streaming twin of q68's batch merge.
+    aggregate into the snapshot state — the streaming twin of q68's
+    batch merge. Per micro-batch cost is `state ⊕ batch-partial`, never
+    a rescan of history.
 
-    Per micro-batch cost is `state ⊕ batch-partial`, never a rescan of
-    history, so a 100 TB/day stream maintains a rollup with bounded
-    work. The state is VERSIONED: each epoch writes a fresh
-    ``state_path/__epoch=<id>`` directory (distributed write, nothing is
-    ever collected on the driver — key cardinality is unbounded), the
-    previous epoch is kept for in-flight readers, older epochs are
-    deleted. foreachBatch is at-least-once: a replayed micro-batch is
-    detected by its epoch id being <= the latest COMMITTED (_SUCCESS)
-    epoch and skipped; a crash mid-write leaves no _SUCCESS, so the
-    replay overwrites the torn directory. (A table format with
-    transactional MERGE is the production hardening of the same shape.)
-
-    Returns the started StreamingQuery; read the state with
+    Commit path: ``state_path``, one snapshot write per epoch. Returns
+    the started StreamingQuery; read the state with
     :func:`read_rollup_state` after (or during) the run.
     """
     from adhesive_spark.operators.incremental import merge_rollup, rollup_events
@@ -285,14 +369,7 @@ def streaming_rollup_maintenance(
         delta = rollup_events(batch_df, keys)
         return merge_rollup(prev, delta, keys) if prev is not None else delta
 
-    return (
-        events.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(events, _snapshot(state_path, _merge), checkpoint_path)
 
 
 def streaming_incremental_dedup(
@@ -308,36 +385,26 @@ def streaming_incremental_dedup(
     WITHIN the batch (min-id survivor) and against the fingerprints of
     everything already accepted, then append the survivors and their
     fingerprints — the streaming twin of operators.dedup.dedup_incremental.
+    The per-batch cost is one anti equi-join of the batch against the
+    narrow (fingerprint) store — production buckets the store on the
+    fingerprint to keep that join co-located.
 
-    State is the epoch-directory pattern of
-    :func:`streaming_rollup_maintenance`, but append-only: every epoch's
-    accepted fingerprints land in ``state_path/__epoch=<id>`` and the
-    store is the UNION of all committed epochs (partition discovery);
-    accepted documents land in ``output_path/__epoch=<id>``. Replayed
-    micro-batches are skipped via the committed-epoch high-water mark, so
-    at-least-once delivery never double-accepts. Nothing is collected on
-    the driver; the per-batch cost is one anti equi-join of the batch
-    against the narrow (fingerprint) store — production buckets the store
-    on the fingerprint to keep that join co-located.
+    Commit path: ``state_path``, append-only (the fingerprint store is
+    the union of its committed epochs). Write order: accepted documents
+    to ``output_path``, then the fingerprints to ``state_path``.
     """
     from adhesive_spark.operators.text import fingerprint
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epochs = _committed_epochs(spark, state_path)
-        if epochs and epochs[-1] >= epoch_id:
-            return  # replayed micro-batch
+    def _apply(batch_df: DataFrame, epoch_id: int, epochs: list[int]) -> None:
         b = batch_df.withColumn("__fp", fingerprint(F.col(text_col)))
         if epochs:
             # ONLY committed epoch dirs: blind partition discovery would
             # also read a torn (no-_SUCCESS) dir from a crashed attempt
             # of THIS epoch and anti-join the replay's own docs away
-            store = spark.read.parquet(
-                *[f"{state_path}/__epoch={e}" for e in epochs]
-            ).select("doc_fp")
-            b = b.join(
-                store.withColumnRenamed("doc_fp", "__fp"), "__fp", "left_anti"
-            )
+            store = _read_committed(
+                batch_df.sparkSession, state_path, epochs
+            ).select(F.col("doc_fp").alias("__fp"))
+            b = b.join(store, "__fp", "left_anti")
         keep = b.groupBy("__fp").agg(F.min(id_col).alias(id_col))
         # a batch holding several copies of the same (id, text) row would
         # match keep once PER COPY — collapse to one survivor per
@@ -348,36 +415,29 @@ def streaming_incremental_dedup(
             .transform(checkpoint_corpus)
         )
         survivors.drop("__fp").write.mode("overwrite").parquet(
-            f"{output_path}/__epoch={epoch_id}"
+            _epoch_dir(output_path, epoch_id)
         )
-        # fingerprints LAST: their _SUCCESS is the commit marker, so a
-        # crash between the two writes replays into an overwrite
         survivors.select(F.col("__fp").alias("doc_fp")).write.mode(
             "overwrite"
-        ).parquet(f"{state_path}/__epoch={epoch_id}")
+        ).parquet(_epoch_dir(state_path, epoch_id))
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs, _guarded(state_path, _apply), checkpoint_path)
 
 
 def read_accepted_docs(spark, output_path: str, state_path: str) -> DataFrame:
     """All documents accepted by :func:`streaming_incremental_dedup` —
-    output epochs whose state commit (the _SUCCESS of the fingerprint
-    write, which happens LAST in the epoch) landed; a crash between the
-    two writes leaves an output dir that is invisible here and
-    overwritten on replay."""
-    epochs = _committed_epochs(spark, state_path)
-    if not epochs:
-        raise FileNotFoundError(
+    the output epochs whose fingerprint write (the commit marker)
+    landed."""
+    return _read_committed(
+        spark,
+        output_path,
+        _committed_epochs(spark, state_path),
+        missing=(
             f"no committed epochs in the state store {state_path} (the "
             f"fingerprint _SUCCESS is the commit marker), so no readable "
             f"output under {output_path}"
-        )
-    return spark.read.parquet(*[f"{output_path}/__epoch={e}" for e in epochs])
+        ),
+    )
 
 
 def streaming_index_ingest(
@@ -392,53 +452,39 @@ def streaming_index_ingest(
     """Continuously maintain an IVF ANN index from a stream of new
     embeddings: each micro-batch is assigned to its nearest centroid
     (argmax-as-aggregate against the broadcast ``centroids_table``, the
-    batch ``build_ivf_index``'s own assignment) and appended under
-    ``output_path/__epoch=<id>`` PARTITIONED BY centroid_id — directory
-    partitioning plays the bucket role for appended data, so a probe
-    that filters ``centroid_id IN (<probes>)`` reads only the probed
-    lists of every epoch (partition pruning at the scan).
+    batch ``build_ivf_index``'s own assignment) and appended PARTITIONED
+    BY centroid_id — directory partitioning plays the bucket role for
+    appended data, so a probe that filters ``centroid_id IN (<probes>)``
+    reads only the probed lists of every epoch (partition pruning at the
+    scan). At 100 TB this is the index freshness path — the bulk build
+    is paid once, new vectors flow in per epoch, and
+    :func:`compact_streamed_index` periodically folds the epochs into
+    the bucketed base table.
 
-    Epoch-committed exactly like :func:`streaming_incremental_dedup`:
-    a replayed micro-batch (at-least-once delivery) overwrites its own
-    epoch dir instead of double-appending, and readers only union dirs
-    whose ``_SUCCESS`` landed.  At 100 TB this is the index
-    freshness path — the bulk build is paid once, new vectors flow in
-    per epoch, and a periodic compaction folds epochs into the bucketed
-    base table.
+    Commit path: ``output_path``, append-only, one write per epoch.
     """
     from adhesive_spark.operators.similarity import _nearest_centroid
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epochs = _committed_epochs(spark, output_path)
-        if epochs and epochs[-1] >= epoch_id:
-            return  # replayed micro-batch: epoch dir already committed
+    def _apply(batch_df: DataFrame, epoch_id: int, _epochs: list[int]) -> None:
         assigned = _nearest_centroid(
-            batch_df, spark.table(centroids_table), id_col, vec_col
+            batch_df, batch_df.sparkSession.table(centroids_table), id_col, vec_col
         )
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            f"{output_path}/__epoch={epoch_id}"
+            _epoch_dir(output_path, epoch_id)
         )
 
-    return (
-        embeddings.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(embeddings, _guarded(output_path, _apply), checkpoint_path)
 
 
 def read_streamed_index(spark, output_path: str) -> DataFrame:
     """Union of all committed epoch dirs of
     :func:`streaming_index_ingest` — filter ``centroid_id`` before an
     action and partition pruning skips every non-probed list."""
-    epochs = _committed_epochs(spark, output_path)
-    if not epochs:
-        raise FileNotFoundError(
-            f"no committed index epochs under {output_path}"
-        )
-    return spark.read.option("basePath", output_path).parquet(
-        *[f"{output_path}/__epoch={e}" for e in epochs]
+    return _read_committed(
+        spark,
+        output_path,
+        missing=f"no committed index epochs under {output_path}",
+        partitioned=True,
     )
 
 
@@ -456,61 +502,45 @@ def streaming_quality_router(
     expressions, no Python) and fan the batch out to an accepted sink
     and a quarantine sink carrying the score and a reject reason — the
     standard ingest topology where rejects stay inspectable instead of
-    vanishing in a filter.
+    vanishing in a filter. The batch is localCheckpoint'ed once so
+    scoring runs once, not once per sink. At 100 TB each side is a
+    straight append — no shuffle, no state store, and back-pressure is
+    per-epoch file IO.
 
-    Epoch-committed like :func:`streaming_incremental_dedup`: both
-    sides land under ``<path>/__epoch=<id>``; the ACCEPT write happens
-    LAST so its ``_SUCCESS`` is the epoch's commit marker (readers of
-    either side trust only accept-committed epochs; a crash between
-    the two writes replays into an overwrite). The batch is
-    localCheckpoint'ed once so scoring runs once, not once per sink.
-    At 100 TB each side is a straight partitioned append — no
-    shuffle, no state store, and back-pressure is per-epoch file IO.
+    Commit path: ``accept_path``, append-only; it commits the epoch for
+    both sides. Write order: rejects to ``reject_path``, then accepts.
     """
     from adhesive_spark.operators.text import quality_score
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epochs = _committed_epochs(spark, accept_path)
-        if epochs and epochs[-1] >= epoch_id:
-            return  # replayed micro-batch: epoch already committed
+    def _apply(batch_df: DataFrame, epoch_id: int, _epochs: list[int]) -> None:
         scored = batch_df.withColumn(
             "quality", quality_score(F.col(text_col))
         ).transform(checkpoint_corpus)
         ok = F.col("quality") >= min_quality
         scored.where(~ok).withColumn(
             "reject_reason", F.lit("low_quality")
-        ).write.mode("overwrite").parquet(
-            f"{reject_path}/__epoch={epoch_id}"
-        )
-        # accept side LAST: its _SUCCESS commits the epoch for BOTH sides
+        ).write.mode("overwrite").parquet(_epoch_dir(reject_path, epoch_id))
         scored.where(ok).write.mode("overwrite").parquet(
-            f"{accept_path}/__epoch={epoch_id}"
+            _epoch_dir(accept_path, epoch_id)
         )
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(docs, _guarded(accept_path, _apply), checkpoint_path)
 
 
 def read_routed(
     spark, side_path: str, accept_path: str
 ) -> DataFrame:
     """Rows landed by :func:`streaming_quality_router` on one side
-    (pass ``accept_path`` twice to read the accepted side) — unions
-    only epochs whose accept-side ``_SUCCESS`` (the commit marker)
-    landed, so a torn epoch from a crashed attempt is invisible."""
-    epochs = _committed_epochs(spark, accept_path)
-    if not epochs:
-        raise FileNotFoundError(
+    (pass ``accept_path`` twice to read the accepted side) — the epochs
+    whose accept-side write (the commit marker) landed."""
+    return _read_committed(
+        spark,
+        side_path,
+        _committed_epochs(spark, accept_path),
+        missing=(
             f"no committed router epochs under {accept_path} (the accept-"
             f"side _SUCCESS is the commit marker for both sides)"
-        )
-    return spark.read.parquet(
-        *[f"{side_path}/__epoch={e}" for e in epochs]
+        ),
     )
 
 
@@ -540,31 +570,22 @@ def compact_streamed_index(
     epochs = _committed_epochs(spark, output_path)
     if not epochs:
         return 0
-    fresh = (
-        spark.read.option("basePath", output_path)
-        .parquet(*[f"{output_path}/__epoch={e}" for e in epochs])
-        # the epoch id is commit bookkeeping, not index data — folding
-        # it into the base would fragment the schema per compaction
-        .drop("__epoch")
-    )
-    base = None
+    # the epoch id is commit bookkeeping, not index data — folding it
+    # into the base would fragment the schema per compaction
+    fresh = _read_committed(
+        spark, output_path, epochs, partitioned=True
+    ).drop("__epoch")
     if spark.catalog.tableExists(table):
         # materialize the current base OUT of the table before the
         # overwrite (reading the table while overwriting it is illegal)
-        base = spark.table(table).transform(checkpoint_corpus)
-        merged = base.unionByName(fresh)
+        merged = spark.table(table).transform(checkpoint_corpus).unionByName(fresh)
     else:
         merged = fresh
     reset_table(spark, table)
     write_bucketed_table(
         merged, table, bucket_cols=["centroid_id"], n_buckets=n_buckets
     )
-    fs, root, _ = _state_fs(spark, output_path)
-    for e in epochs:
-        p = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{output_path}/__epoch={e}"
-        )
-        fs.delete(p, True)
+    _delete_epochs(spark, output_path, epochs)
     return len(epochs)
 
 
@@ -582,23 +603,14 @@ def streaming_cdc_apply(
     CDC stream by applying each micro-batch through
     :func:`adhesive_spark.operators.incremental.apply_cdc` — latest op
     per key wins within the batch, the batch supersedes the snapshot,
-    surviving deletes drop their key. The streaming twin of q180, and
-    the third member of the epoch-committed foreachBatch family
-    (rollup maintenance ⊕, dedup ingest, CDC apply).
+    surviving deletes drop their key. The streaming twin of q180.
+    Per-batch cost is one window over the BATCH plus one anti-join
+    against the snapshot — history is touched once per epoch, never per
+    row.
 
-    State layout and crash semantics are identical to
-    :func:`streaming_rollup_maintenance`: each epoch writes a fresh
-    ``state_path/__epoch=<id>`` snapshot (distributed write, driver
-    never sees a row), ``_SUCCESS`` is the commit marker, replayed
-    micro-batches (epoch <= last committed) are skipped, the previous
-    epoch is retained for in-flight readers. Per-batch cost is one
-    window over the BATCH plus one anti-join against the snapshot —
-    history is touched once per epoch, never per row. A table format
-    with transactional MERGE (Delta/Iceberg) is the production
-    hardening of this exact shape.
-
-    Returns the started StreamingQuery; read the snapshot with
-    :func:`read_rollup_state` (same epoch-dir layout).
+    Commit path: ``state_path``, one snapshot write per epoch. Returns
+    the started StreamingQuery; read the snapshot with
+    :func:`read_rollup_state`.
     """
     from adhesive_spark.operators.incremental import apply_cdc
 
@@ -612,14 +624,7 @@ def streaming_cdc_apply(
             delete_op=delete_op,
         )
 
-    return (
-        log.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _apply)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(log, _snapshot(state_path, _apply), checkpoint_path)
 
 
 def streaming_session_spans(
@@ -633,8 +638,7 @@ def streaming_session_spans(
 ):
     """Streaming gap-sessionization: maintain per-key merged session
     ISLANDS from an event stream — the streaming twin of
-    :func:`adhesive_spark.operators.asof.session_spans` (q409/q410) and
-    the fourth member of the epoch-committed foreachBatch family.
+    :func:`adhesive_spark.operators.asof.session_spans` (q409/q410).
 
     State = the islands themselves: one row ``(key, __s, __e, __n)``
     per open-or-closed session span, bounded by SESSION count, never
@@ -651,12 +655,9 @@ def streaming_session_spans(
     event that retroactively BRIDGES two already-materialized sessions
     into one (``F.session_window`` must drop such an event once the
     watermark passes; a snapshot re-merge just fuses the islands).
-    Crash/replay semantics are inherited unchanged from
-    :func:`_epoch_guarded_snapshot`.
 
-    Per-epoch cost: one sweep over (batch events + current islands) —
-    state the batch supersedes is touched once per epoch, never per
-    row. Read the per-key rollup with :func:`read_session_spans`.
+    Commit path: ``state_path``, one snapshot write per epoch. Read the
+    per-key rollup with :func:`read_session_spans`.
     """
     from adhesive_spark.operators.asof import _islands
 
@@ -675,14 +676,7 @@ def streaming_session_spans(
             )
         return _islands(base, [key_col], "__s", "__e", measure_cols=["__n"])
 
-    return (
-        events.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(events, _snapshot(state_path, _merge), checkpoint_path)
 
 
 def read_session_spans(
@@ -711,42 +705,20 @@ def streaming_hll_registers(
 ):
     """Streaming cardinality sketch: maintain the 64-register
     HyperLogLog state (operators/sketches.py) across micro-batches by
-    MAX-merging each batch's registers into the snapshot — the fourth
-    member of the epoch-committed foreachBatch family (rollup ⊕, dedup
-    ingest, CDC apply, HLL max-merge).
+    MAX-merging each batch's registers into the snapshot — the
+    streaming payoff of register mergeability: per-batch cost is one
+    aggregate over the BATCH to ≤64 rows plus a 64-row merge, so a
+    stream of any size keeps its distinct-count profile in constant
+    state. Max-merge is idempotent, but the replay skip still keeps the
+    write amplification at one dir per NEW epoch.
 
-    This is the streaming payoff of register mergeability: per-batch
-    cost is one aggregate over the BATCH to ≤64 rows plus a 64-row
-    merge — a stream of any size maintains its distinct-count profile
-    with constant state and no key-level shuffle. Crash/replay
-    semantics are the `_epoch_guarded_snapshot` contract (committed
-    epoch dirs, replayed batches skipped). Replay-safety needs no
-    special casing here: max-merge is idempotent, but the epoch guard
-    still skips replays so the state write amplification stays one dir
-    per NEW epoch.
-
-    Read the estimate with :func:`read_hll_estimate`.
+    Commit path: ``state_path``, one snapshot write per epoch. Read the
+    estimate with :func:`read_hll_estimate`.
     """
     from adhesive_spark.operators.sketches import hll_registers
 
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = hll_registers(batch_df, col)
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("bucket")
-            .agg(F.max("m_j").alias("m_j"))
-        )
-
-    return (
-        keys.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(lambda b: hll_registers(b, col), ["bucket"], {"m_j": "max"})
+    return _start(keys, _snapshot(state_path, merge), checkpoint_path)
 
 
 def read_hll_estimate(spark, state_path: str) -> DataFrame:
@@ -768,34 +740,19 @@ def streaming_cms_counters(
     checkpoint_path: str,
 ):
     """Streaming Count-Min maintenance: each micro-batch's D x W
-    counter table (operators/sketches.py) ADD-merges into the
-    epoch-committed snapshot — the additive sibling of
-    :func:`streaming_hll_registers` (max-merge). Per-batch cost is one
-    map-side-combining aggregate to <=64 counter rows plus a 64-row
-    merge; the frequency profile of an unbounded stream lives in
-    constant state. Probe the committed state with
-    ``operators.sketches.cms_probe`` via :func:`read_rollup_state`.
+    counter table (operators/sketches.py) ADD-merges into the snapshot —
+    the additive sibling of :func:`streaming_hll_registers`. Per-batch
+    cost is one map-side-combining aggregate to <=64 counter rows plus
+    a 64-row merge.
+
+    Commit path: ``state_path``, one snapshot write per epoch. Probe the
+    committed state with ``operators.sketches.cms_probe`` via
+    :func:`read_rollup_state`.
     """
     from adhesive_spark.operators.sketches import cms_build
 
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = cms_build(batch_df, col)
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("r", "c")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-
-    return (
-        items.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(lambda b: cms_build(b, col), ["r", "c"], {"cnt": "sum"})
+    return _start(items, _snapshot(state_path, merge), checkpoint_path)
 
 
 def streaming_cusum_daily(
@@ -808,30 +765,13 @@ def streaming_cusum_daily(
     ADD-merges into a per-day cents table — the additive state behind
     the batch change-point detector (eval_queries q259). State is
     bounded by the CALENDAR (one row per day ever seen), not the
-    stream: per-batch cost is one map-side-combining day aggregate over
-    the batch plus an ~n_days-row merge, under the same
-    `_epoch_guarded_snapshot` replay contract as the rollup/HLL/CMS
-    family. Read the alarm shortlist with :func:`read_cusum_alarms`.
+    stream.
+
+    Commit path: ``state_path``, one snapshot write per epoch. Read the
+    alarm shortlist with :func:`read_cusum_alarms`.
     """
-
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = daily_purchase_rev(batch_df)
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("day")
-            .agg(F.sum("rev").cast("long").alias("rev"))
-        )
-
-    return (
-        events.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(daily_purchase_rev, ["day"], {"rev": "sum"})
+    return _start(events, _snapshot(state_path, merge), checkpoint_path)
 
 
 def read_cusum_alarms(spark, state_path: str, top: int = 5) -> DataFrame:
@@ -852,48 +792,29 @@ def streaming_grid_cells(
     cell_milli: int = 25,
 ):
     """Streaming embedding-density state: each micro-batch's points
-    quantize to the q260 grid (exact milli integers, +1e6 shift) and
-    their per-cell counts ADD-merge into the epoch-committed snapshot.
-    State is bounded by the GRID (occupied cells), not the stream —
-    the additive sibling of the day-state CUSUM: a point stream of any
-    size maintains its density profile in a few hundred rows, and the
-    batch q260 clustering (core filter → components) reads straight
-    off the committed cells. The density drift of an embedding feed —
-    new dense regions appearing between epochs — is a diff of two
-    committed snapshots.
+    quantize to the q260 grid (``operators.monitoring.grid_cell``) and
+    their per-cell counts ADD-merge into the snapshot. State is bounded
+    by the GRID (occupied cells), not the stream, and the batch q260
+    clustering (core filter → components) reads straight off the
+    committed cells. The density drift of an embedding feed — new dense
+    regions appearing between epochs — is a diff of two committed
+    snapshots.
+
+    Commit path: ``state_path``, one snapshot write per epoch.
     """
 
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = (
+    def _cells(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
-                F.expr(
-                    f"(CAST(ROUND(CAST({x_col} AS DOUBLE) * 1000, 0)"
-                    f" AS BIGINT) + 1000000) div {cell_milli}"
-                ).alias("cx"),
-                F.expr(
-                    f"(CAST(ROUND(CAST({y_col} AS DOUBLE) * 1000, 0)"
-                    f" AS BIGINT) + 1000000) div {cell_milli}"
-                ).alias("cy"),
+                grid_cell(x_col, cell_milli).alias("cx"),
+                grid_cell(y_col, cell_milli).alias("cy"),
             )
             .groupBy("cx", "cy")
             .agg(F.count("*").cast("long").alias("n"))
         )
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("cx", "cy")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
 
-    return (
-        points.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(_cells, ["cx", "cy"], {"n": "sum"})
+    return _start(points, _snapshot(state_path, merge), checkpoint_path)
 
 
 def streaming_srm_counts(
@@ -903,80 +824,25 @@ def streaming_srm_counts(
     checkpoint_path: str,
 ):
     """Streaming sample-ratio-mismatch state: per micro-batch, each
-    user's md5-parity arm and purchase count ADD-merge into a per-
+    user's md5-parity arm and purchase count
+    (``operators.monitoring.arm_purchases``) ADD-merge into a per-
     (user, arm) table — the live state behind the q266 A/B guard.
     State is bounded by the user population (not the event stream);
-    the alarm read (:func:`read_srm_guard`) recomputes the exact
-    chi-square identity off the committed state, so the experiment
-    dashboard's SRM bit is live without rescanning any events.
+    :func:`read_srm_guard` recomputes the exact chi-square identity off
+    the committed state, so the experiment dashboard's SRM bit is live
+    without rescanning any events.
+
+    Commit path: ``state_path``, one snapshot write per epoch.
     """
-
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = (
-            batch_df.select(
-                "user_id",
-                F.expr(
-                    "conv(substring(md5(CAST(user_id AS STRING)), 1, 8),"
-                    " 16, 10) % 2"
-                )
-                .cast("long")
-                .alias("arm"),
-                F.when(F.col("event_type") == "purchase", 1)
-                .otherwise(0)
-                .cast("long")
-                .alias("purchases"),
-            )
-            .groupBy("user_id", "arm")
-            .agg(F.sum("purchases").cast("long").alias("purchases"))
-        )
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("user_id", "arm")
-            .agg(F.sum("purchases").cast("long").alias("purchases"))
-        )
-
-    return (
-        events.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(arm_purchases, ["user_id", "arm"], {"purchases": "sum"})
+    return _start(events, _snapshot(state_path, merge), checkpoint_path)
 
 
 def read_srm_guard(spark, state_path: str) -> DataFrame:
-    """One-row A/B readout off the committed per-user state — the
-    identical integer arithmetic as the batch q266 (per-arm users and
-    purchase rates in ppm, SRM chi² via (u0−u1)²/(u0+u1) in milli), so
-    stream-then-read equals the batch readout column-for-column."""
-    per_user = read_rollup_state(spark, state_path)
-    arms = per_user.groupBy("arm").agg(
-        F.count("*").cast("long").alias("users"),
-        F.sum("purchases").cast("long").alias("purchases"),
-    )
-    a0 = arms.where(F.col("arm") == 0).select(
-        F.col("users").alias("u0"), F.col("purchases").alias("p0")
-    )
-    a1 = arms.where(F.col("arm") == 1).select(
-        F.col("users").alias("u1"), F.col("purchases").alias("p1")
-    )
-    return a0.crossJoin(F.broadcast(a1)).select(
-        "u0",
-        "u1",
-        "p0",
-        "p1",
-        F.expr(
-            "CAST((u0 - u1) * (u0 - u1) * 1000 div (u0 + u1) AS BIGINT)"
-        ).alias("srm_chi2_milli"),
-        F.expr("CAST(p0 * 1000000 div u0 AS BIGINT)").alias("rate0_ppm"),
-        F.expr("CAST(p1 * 1000000 div u1 AS BIGINT)").alias("rate1_ppm"),
-        F.expr(
-            "CAST(p0 * 1000000 div u0 - p1 * 1000000 div u1 AS BIGINT)"
-        ).alias("rate_delta_ppm"),
-    )
+    """One-row A/B readout off the committed per-user state — the batch
+    q266's own ``operators.monitoring.srm_readout``, so stream-then-read
+    equals the batch readout column-for-column."""
+    return srm_readout(read_rollup_state(spark, state_path))
 
 
 def streaming_mom_state(
@@ -988,40 +854,18 @@ def streaming_mom_state(
     """Streaming median-of-means monitor state: maintain the 16-row
     (bucket, n, Σcents) MoM partial sums
     (queries/estimator_queries.mom_bucket_sums) across micro-batches by
-    per-bucket ADDITION — the robust-mean sibling of the HLL max-merge
-    member of the epoch-committed foreachBatch family. Addition is not
-    idempotent, so replay-safety leans entirely on the
-    `_epoch_guarded_snapshot` contract (committed epoch dirs, replayed
-    batches skipped) — same as the rollup-⊕ member.
+    per-bucket ADDITION. Addition is not idempotent, so replay safety
+    rests on the replay skip. Constant state at any stream size: the
+    readout (:func:`read_mom_estimate`) is the exact batch q373 row,
+    because (n, Σ) partial sums are mergeable across ANY split of the
+    stream.
 
-    Constant state at any stream size: per-batch cost is one 16-row
-    aggregate over the BATCH plus a 16-row merge; the readout
-    (:func:`read_mom_estimate`) is the exact batch q373 row, because
-    (n, Σ) partial sums are mergeable across ANY split of the stream.
+    Commit path: ``state_path``, one snapshot write per epoch.
     """
     from adhesive_spark.queries.estimator_queries import mom_bucket_sums
 
-    def _merge(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = mom_bucket_sums(batch_df)
-        if prev is None:
-            return delta
-        return (
-            delta.unionByName(prev)
-            .groupBy("b")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s").cast("long").alias("s"),
-            )
-        )
-
-    return (
-        events.writeStream.foreachBatch(
-            _epoch_guarded_snapshot(state_path, _merge)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    merge = _fold(mom_bucket_sums, ["b"], {"n": "sum", "s": "sum"})
+    return _start(events, _snapshot(state_path, merge), checkpoint_path)
 
 
 def read_mom_estimate(spark, state_path: str) -> DataFrame:

@@ -2,8 +2,11 @@
 memory sink, asserting streaming results equal the batch twin.
 """
 
+import os
+import re
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -798,69 +801,63 @@ def test_streaming_grid_cells_match_batch(spark, sf_dir, tmp_path_factory):
     """Streamed per-cell counts must equal the one-pass batch grid
     exactly (cell-count additivity), so the q260 clustering reads the
     same core cells off the committed state."""
-    import shutil
-    import tempfile
-
     from adhesive_spark.sources.registry import load_table
     from adhesive_spark.streaming.ops import (
         read_rollup_state,
         streaming_grid_cells,
     )
 
-    emb_dir = tempfile.mkdtemp(prefix="adhesive_emb_stream_")
-    try:
-        pts_batch = load_table(spark, sf_dir, "embeddings").selectExpr(
-            "vec_id",
-            "CAST(element_at(embedding, 1) AS DOUBLE) AS x",
-            "CAST(element_at(embedding, 2) AS DOUBLE) AS y",
+    emb_dir = str(tmp_path_factory.mktemp("grid_points"))
+    pts_batch = load_table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id",
+        "CAST(element_at(embedding, 1) AS DOUBLE) AS x",
+        "CAST(element_at(embedding, 2) AS DOUBLE) AS y",
+    )
+    pts_batch.repartition(4).write.mode("overwrite").parquet(emb_dir)
+
+    base = tmp_path_factory.mktemp("grid_stream")
+    state, ckpt = str(base / "state"), str(base / "ckpt")
+    stream = (
+        spark.readStream.schema(spark.read.parquet(emb_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(emb_dir)
+    )
+    q = streaming_grid_cells(
+        stream, "x", "y", state, checkpoint_path=ckpt
+    )
+    assert q.awaitTermination(120), "stream did not drain in 120s"
+
+    streamed = {
+        (r.cx, r.cy): r.n
+        for r in read_rollup_state(spark, state).collect()
+    }
+    want = {
+        (r.cx, r.cy): r.n
+        for r in pts_batch.selectExpr(
+            "(CAST(ROUND(x * 1000, 0) AS BIGINT) + 1000000) div 25 AS cx",
+            "(CAST(ROUND(y * 1000, 0) AS BIGINT) + 1000000) div 25 AS cy",
         )
-        pts_batch.repartition(4).write.mode("overwrite").parquet(emb_dir)
-
-        base = tmp_path_factory.mktemp("grid_stream")
-        state, ckpt = str(base / "state"), str(base / "ckpt")
-        stream = (
-            spark.readStream.schema(spark.read.parquet(emb_dir).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(emb_dir)
-        )
-        q = streaming_grid_cells(
-            stream, "x", "y", state, checkpoint_path=ckpt
-        )
-        assert q.awaitTermination(120), "stream did not drain in 120s"
-
-        streamed = {
-            (r.cx, r.cy): r.n
-            for r in read_rollup_state(spark, state).collect()
-        }
-        want = {
-            (r.cx, r.cy): r.n
-            for r in pts_batch.selectExpr(
-                "(CAST(ROUND(x * 1000, 0) AS BIGINT) + 1000000) div 25 AS cx",
-                "(CAST(ROUND(y * 1000, 0) AS BIGINT) + 1000000) div 25 AS cy",
-            )
-            .groupBy("cx", "cy")
-            .agg(F.count("*").cast("long").alias("n"))
-            .collect()
-        }
-        assert streamed == want
-    finally:
-        shutil.rmtree(emb_dir, ignore_errors=True)
+        .groupBy("cx", "cy")
+        .agg(F.count("*").cast("long").alias("n"))
+        .collect()
+    }
+    assert streamed == want
 
 
-def test_streaming_srm_guard_matches_batch(spark, sf_dir, event_stream_dir):
+def test_streaming_srm_guard_matches_batch(
+    spark, sf_dir, event_stream_dir, tmp_path_factory
+):
     """The SRM guard read off ADD-merged streaming state must equal the
     batch q266 readout column-for-column — live experiment monitoring
     with user-bounded state."""
-    import tempfile
-
     from adhesive_spark.queries.eval_queries import q266_abtest_srm
     from adhesive_spark.streaming.ops import (
         read_srm_guard,
         streaming_srm_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="adhesive_srm_")
-    state, ckpt = f"{base}/state", f"{base}/ckpt"
+    base = tmp_path_factory.mktemp("srm_stream")
+    state, ckpt = str(base / "state"), str(base / "ckpt")
     stream = (
         spark.readStream.schema(spark.read.parquet(event_stream_dir).schema)
         .option("maxFilesPerTrigger", 1)
@@ -958,3 +955,187 @@ def test_streaming_session_spans_matches_batch(spark, tmp_path_factory):
     # {0,3}, {30,31}, {60}; the late t=21 fuses {21,30,31} -> 3 sessions
     assert got[1] == (3, 6, 13)  # spans: (3-0)+(31-21)+(60-60) = 13
     assert got[2] == (2, 3, 5)  # {100,105}, {130}: (105-100)+0
+
+
+def _three_files(df, key, src):
+    """Write ``df`` as three single-file appends split on ``key`` % 3,
+    so a ``maxFilesPerTrigger=1`` stream runs epochs 0, 1 and 2."""
+    for i in range(3):
+        df.where(F.col(key) % 3 == i).coalesce(1).write.mode("append").parquet(
+            src
+        )
+    return src
+
+
+def _file_stream(spark, src):
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _mom_sink(spark, sf_dir, root):
+    from adhesive_spark.streaming.ops import read_mom_estimate, streaming_mom_state
+
+    src = _three_files(
+        load_table(spark, sf_dir, "events"), "event_id", str(root / "src")
+    )
+    state = str(root / "state")
+
+    def start():
+        return streaming_mom_state(
+            _file_stream(spark, src), state, checkpoint_path=str(root / "ckpt")
+        )
+
+    return start, lambda: read_mom_estimate(spark, state), [state]
+
+
+def _dedup_sink(spark, sf_dir, root):
+    from adhesive_spark.streaming.ops import (
+        read_accepted_docs,
+        streaming_incremental_dedup,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = _three_files(docs.where("doc_id < 150"), "doc_id", str(root / "src"))
+    state, out = str(root / "state"), str(root / "out")
+
+    def start():
+        return streaming_incremental_dedup(
+            _file_stream(spark, src), state, out, checkpoint_path=str(root / "ckpt")
+        )
+
+    return start, lambda: read_accepted_docs(spark, out, state), [state, out]
+
+
+def _index_sink(spark, sf_dir, root):
+    from adhesive_spark.sources.fsutil import reset_table
+    from adhesive_spark.streaming.ops import (
+        read_streamed_index,
+        streaming_index_ingest,
+    )
+
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .withColumn(
+            "embedding", F.transform("embedding", lambda x: x.cast("double"))
+        )
+        .where(F.col("vec_id") < 150)
+    )
+    reset_table(spark, "t_replay_cents")
+    emb.where("vec_id < 4").select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
+    ).write.format("parquet").saveAsTable("t_replay_cents")
+    src = _three_files(emb, "vec_id", str(root / "src"))
+    out = str(root / "index")
+
+    def start():
+        return streaming_index_ingest(
+            _file_stream(spark, src), "t_replay_cents", out, str(root / "ckpt")
+        )
+
+    def read():
+        return read_streamed_index(spark, out).select("vec_id", "centroid_id")
+
+    return start, read, [out]
+
+
+def _router_sink(spark, sf_dir, root):
+    from adhesive_spark.streaming.ops import read_routed, streaming_quality_router
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = _three_files(docs.where("doc_id < 150"), "doc_id", str(root / "src"))
+    acc, rej = str(root / "acc"), str(root / "rej")
+
+    def start():
+        return streaming_quality_router(
+            _file_stream(spark, src),
+            acc,
+            rej,
+            checkpoint_path=str(root / "ckpt"),
+            min_quality=0.5,
+        )
+
+    def read():
+        return read_routed(spark, acc, acc).unionByName(
+            read_routed(spark, rej, acc), allowMissingColumns=True
+        )
+
+    return start, read, [acc, rej]
+
+
+@pytest.mark.parametrize(
+    "make_sink",
+    [_mom_sink, _dedup_sink, _index_sink, _router_sink],
+    ids=["snapshot-mom", "dedup-ingest", "index-ingest", "quality-router"],
+)
+def test_replayed_epoch_is_skipped_and_torn_epoch_invisible(
+    spark, sf_dir, tmp_path_factory, make_sink
+):
+    """Spark re-runs a micro-batch whose commit record is missing under
+    the same epoch id. The replay must leave every committed directory
+    as it was (no second apply, no rewrite), and an epoch directory
+    without ``_SUCCESS`` in the commit-marker path must stay invisible
+    to the reader."""
+    root = tmp_path_factory.mktemp("replay")
+    start, read, paths = make_sink(spark, sf_dir, root)
+    marker = paths[0]
+
+    def files():
+        return sorted(
+            str(p.relative_to(root))
+            for path in paths
+            for p in Path(path).rglob("*")
+            if p.is_file()
+        )
+
+    def rows():
+        return sorted(tuple(r) for r in read().collect())
+
+    assert start().awaitTermination(180), "sink did not drain in 180s"
+    before_files, before_rows = files(), rows()
+    assert before_rows
+
+    commits = root / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    assert last >= 1, "the source must run several epochs"
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink()
+
+    q = start()
+    assert q.awaitTermination(180), "restarted sink did not drain in 180s"
+    assert last in [p["batchId"] for p in q.recentProgress], "no replay ran"
+    assert files() == before_files
+    assert rows() == before_rows
+
+    # a crash mid-write of the next epoch: every path holds a copy of the
+    # last epoch with each data file doubled, and the marker path's copy
+    # has no _SUCCESS
+    for path in paths:
+        torn = Path(path) / f"__epoch={last + 1}"
+        shutil.copytree(Path(path) / f"__epoch={last}", torn)
+        for dirpath, _, names in os.walk(torn):
+            for name in names:
+                if name.endswith(".parquet"):
+                    shutil.copy(
+                        os.path.join(dirpath, name),
+                        os.path.join(dirpath, "dup-" + name),
+                    )
+    (Path(marker) / f"__epoch={last + 1}" / "_SUCCESS").unlink()
+    assert rows() == before_rows
+
+
+def test_epoch_protocol_written_once():
+    """The epoch-commit protocol of streaming/ops.py is spelled once:
+    one streaming start, one replay comparison, one epoch-directory
+    f-string."""
+    import adhesive_spark.streaming.ops as ops
+
+    src = Path(ops.__file__).read_text()
+    counts = {
+        "writeStream": len(re.findall(r"\bwriteStream\b", src)),
+        ">= epoch_id": len(re.findall(r">=\s*epoch_id\b", src)),
+        "__epoch= f-string": len(re.findall(r"""\bf(["'])[^"'\n]*__epoch=""", src)),
+    }
+    assert counts == dict.fromkeys(counts, 1), counts
